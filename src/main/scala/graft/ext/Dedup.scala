@@ -1150,7 +1150,7 @@ object Dedup {
     * pairs only. t = 0.8, prefix length in exact integers:
     * sz − ⌈4·sz/5⌉ + 1 = sz − (4·sz+4) DIV 5 + 1. */
   def q147PrefixSsjoin(s: SparkSession, dir: String): DataFrame =
-    verifyPairs(s, dir, candidatesForProbe147(s, dir))
+    verifyPairs(s, dir, q147Candidates(s, dir))
       .filter(col("jacc") >= 0.8)
       .select(col("d1"), col("d2"), col("jacc"))
       .orderBy(col("d1"), col("d2"))
@@ -1195,8 +1195,7 @@ object Dedup {
           .localCheckpoint(true))
     }
 
-  /** q147's candidate stage, factored for the stage-timing probe
-    * ([[graft.tools.Q147Probe]]) — two further LOSSLESS prunes from the
+  /** q147's candidate stage — two further LOSSLESS prunes from the
     * PPJoin toolbox, both implied by J ≥ t so no true pair can fail them:
     *  - size filter: I ≥ t·max ∧ I ≤ min ⇒ 5·min(sz) ≥ 4·max(sz)
     *  - position filter: at the FIRST shared prefix shingle (ranks
@@ -1205,7 +1204,7 @@ object Dedup {
     *    α = ⌈t/(1+t)·(szₐ+sz_b)⌉ = (4·(szₐ+sz_b)+8) DIV 9. Later
     *    shared shingles only have smaller bounds, so filtering every
     *    matched row keeps a pair iff its first match passes — safe. */
-  def candidatesForProbe147(s: SparkSession, dir: String): DataFrame = {
+  private def q147Candidates(s: SparkSession, dir: String): DataFrame = {
     val prefix = prefixIndex(s, dir)
     prefix.as("a").join(prefix.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id") &&

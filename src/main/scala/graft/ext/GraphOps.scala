@@ -219,8 +219,8 @@ object GraphOps {
     * orientation caps every out-degree at O(√m) (a node keeps only
     * edges to HIGHER-degree neighbors), so hubs — whose id-canonical
     * out-degree is their full degree — stop dominating the join.
-    * Measured at sf1 by in-session alternation (tools/TriProbe — the
-    * corpus there is DENSE and hub-free, max deg 222 vs avg 120, so the
+    * Measured at sf1 by in-session alternation (the corpus there is
+    * DENSE and hub-free, max deg 222 vs avg 120, so the
     * candidate cut is only 100M→83M): warm rounds 16.4/13.7 s
     * (id-canonical) vs 11.2/9.8 s (oriented), identical counts; the
     * worst-case bound, not this ~25 %, is why the oriented form is the
@@ -237,8 +237,8 @@ object GraphOps {
     // alternation shows it fastest on BOTH corpora — replica sfx10
     // (hub-free, join 3.3-6.2 s vs adj 6.3-9.4 s vs chunked 6.7-7.4 s)
     // and powerlaw 100k/2M (maxdeg 11k, join 1.9 s vs adj 2.4-2.7 s vs
-    // chunked 2.6-2.9 s warm). The round-9 adj swap is reverted; the adj
-    // and hub-guarded chunked forms stay in-tree for TriProbe alternation.
+    // chunked 2.6-2.9 s warm). The round-9 adjacency-array swap and its
+    // hub-guarded chunked variant were reverted for it.
     val tri = triCountJoinForm(orientedEdges(up, deg))
     val wedges = deg.agg(expr("sum(deg * (deg - 1) DIV 2)").as("n_wedges"))
     tri.join(broadcast(wedges)) // both 1-row frames
@@ -248,10 +248,10 @@ object GraphOps {
 
   /** Degree-rank-oriented edge table u→v (rank(u) < rank(v) under the
     * (deg, id) total order), with v's degree riding along. Checkpointed:
-    * both census forms reference it more than once. `up` must be
+    * the census reads it three times. `up` must be
     * id-canonical distinct pairs (p1 < p2); `deg` the symmetric-edge
     * degree table (src, deg). */
-  private[graft] def orientedEdges(up: DataFrame, deg: DataFrame): DataFrame = {
+  private def orientedEdges(up: DataFrame, deg: DataFrame): DataFrame = {
     val withDeg = up
       .join(deg.select(col("src").as("p1"), col("deg").as("d1")), "p1")
       .join(deg.select(col("src").as("p2"), col("deg").as("d2")), "p2")
@@ -265,73 +265,15 @@ object GraphOps {
   }
 
   /** Wedge enumeration as an oriented-edge SELF-JOIN on u plus a rank
-    * filter — the round-8 formulation, kept for in-session alternation
-    * in tools/TriProbe. Two shuffled copies of o meet in the join, and
-    * HALF the joined candidates are discarded by the rank(x) < rank(y)
-    * filter after materializing. */
-  private[graft] def triCountJoinForm(o: DataFrame): DataFrame = {
+    * filter — the round-8 formulation. Two shuffled copies of o meet in
+    * the join, and HALF the joined candidates are discarded by the
+    * rank(x) < rank(y) filter after materializing. */
+  private def triCountJoinForm(o: DataFrame): DataFrame = {
     val e1 = o.select(col("u"), col("v").as("x"), col("dv").as("dx"))
     val e2 = o.select(col("u"), col("v").as("y"), col("dv").as("dy"))
     e1.join(e2, Seq("u"))
       .filter(col("dx") < col("dy") || (col("dx") === col("dy") && col("x") < col("y")))
       .join(o.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
-      .agg(count(lit(1)).as("n_triangles"))
-  }
-
-  /** Wedge enumeration via per-node adjacency lists — the round-9 form:
-    * group o by u into the rank-sorted out-neighbor array (bounded
-    * O(√m) by orientation, so the row is always small), then expand
-    * ordered pairs MAP-SIDE with the same slice/transform idiom as
-    * [[supportedPairs]]. vs the self-join form: one shuffle of o
-    * replaces two join-shuffled copies, and the discarded half of the
-    * candidates (rank(x) > rank(y)) is never generated — array position
-    * IS the rank order, so only the surviving wedges materialize. The
-    * closing edge check stays a hash join on (x, y). */
-  private[graft] def triCountAdjForm(o: DataFrame): DataFrame = {
-    val adj = o.groupBy(col("u"))
-      .agg(sort_array(collect_list(struct(col("dv"), col("v")))).as("ns"))
-    val wedges = adj.select(explode(flatten(transform(col("ns"), (x, i) =>
-        transform(slice(col("ns"), i + lit(2), size(col("ns"))),
-          y => struct(x.getField("v").as("x"), y.getField("v").as("y")))))).as("w"))
-      .select(col("w.x").as("x"), col("w.y").as("y"))
-    wedges.join(o.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
-      .agg(count(lit(1)).as("n_triangles"))
-  }
-
-  /** Hub-guarded adjacency expansion — same census as [[triCountAdjForm]]
-    * with the one scale hazard removed: the round-9 form's
-    * `flatten(transform(…))` allocates the FULL O(outdeg²) wedge array as
-    * one row value before explode, and although orientation bounds outdeg
-    * at O(√m), a √m-degree hub at 100× still means an O(m)-struct single
-    * row (multi-GiB task allocation → OOM) where the join form streams.
-    * Here the neighbor array is expanded per bounded CHUNK PAIR instead:
-    * explode chunk index c1, then c2 ≥ c1 (two scalar sequences, each
-    * ≤ ⌈outdeg/W⌉ long), and only then build the ≤ W² wedge structs
-    * between chunk c1 and chunk c2 (within-chunk pairs keep the i < j
-    * filter; array position IS rank order, so cross-chunk pairs need no
-    * filter at all). No allocation anywhere exceeds max(⌈√m/W⌉, W²)
-    * elements regardless of hub degree, nothing re-shuffles (the chunk
-    * indices generate map-side between the groupBy and the closing join),
-    * and the output is struct-for-struct the round-9 form's. */
-  private[graft] def triCountAdjChunked(o: DataFrame, w: Int = 64): DataFrame = {
-    val adj = o.groupBy(col("u"))
-      .agg(sort_array(collect_list(struct(col("dv"), col("v")))).as("ns"))
-    // Column./ is double division; chunk indices must be integral
-    val lastChunk = ((size(col("ns")) - lit(1)) / lit(w)).cast("int")
-    val withC = adj
-      .select(col("ns"), explode(sequence(lit(0), lastChunk)).as("c1"))
-      .select(col("ns"), col("c1"), explode(sequence(col("c1"), lastChunk)).as("c2"))
-    val ck1 = slice(col("ns"), col("c1") * w + 1, lit(w))
-    val ck2 = slice(col("ns"), col("c2") * w + 1, lit(w))
-    def p(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-      struct(x.getField("v").as("x"), y.getField("v").as("y"))
-    val pairs = when(col("c1") === col("c2"),
-        flatten(transform(ck1, (x, i) =>
-          transform(slice(ck1, i + lit(2), lit(w)), y => p(x, y)))))
-      .otherwise(flatten(transform(ck1, x => transform(ck2, y => p(x, y)))))
-    val wedges = withC.select(explode(pairs).as("wdg"))
-      .select(col("wdg.x").as("x"), col("wdg.y").as("y"))
-    wedges.join(o.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
       .agg(count(lit(1)).as("n_triangles"))
   }
 

@@ -1034,18 +1034,6 @@ object ExtendedQueries {
       |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin
 
   // ---------------------------------------------------------------- q123: weighted median (quantileExactWeighted)
-  /** Exact weighted median: the l_extendedprice at which half the total
-    * QUANTITY is reached (ClickHouse `quantileExactWeighted`), via the
-    * two-pass coarse-bucket refinement in [[weightedQuantileCells]].
-    * Only the crossing PRICE is exposed, and the row-grain crossing row
-    * always sits inside the crossing price cell, so this is provably
-    * equal to the naive row-grain window the oracle still runs. The
-    * scale point: the naive `PARTITION BY l_returnflag` cumsum window
-    * funnels everything through |flags|=3 tasks, and a price-grain
-    * histogram does not bound that funnel (extendedprice is near-unique
-    * at low SF: 594k distinct cells of 600k rows at sf0.1) — the
-    * two-pass shape only ever prefix-sums the DOMAIN-BOUNDED coarse
-    * table and resolves price grain inside the crossing buckets. */
   /** Coarse-bucket width for the two-pass weighted-quantile refinement
     * (q123/q209). Internal to the Spark plan only — the oracle SQL stays
     * the naive row-grain window, so the gate proves any width correct;
@@ -1122,6 +1110,18 @@ object ExtendedQueries {
         col("l_extendedprice").as("q_value"), col("tot"))
   }
 
+  /** Exact weighted median: the l_extendedprice at which half the total
+    * QUANTITY is reached (ClickHouse `quantileExactWeighted`), via the
+    * two-pass coarse-bucket refinement in [[weightedQuantileCells]].
+    * Only the crossing PRICE is exposed, and the row-grain crossing row
+    * always sits inside the crossing price cell, so this is provably
+    * equal to the naive row-grain window the oracle still runs. The
+    * scale point: the naive `PARTITION BY l_returnflag` cumsum window
+    * funnels everything through |flags|=3 tasks, and a price-grain
+    * histogram does not bound that funnel (extendedprice is near-unique
+    * at low SF: 594k distinct cells of 600k rows at sf0.1) — the
+    * two-pass shape only ever prefix-sums the DOMAIN-BOUNDED coarse
+    * table and resolves price grain inside the crossing buckets. */
   def q123WeightedMedian(s: SparkSession, dir: String): DataFrame = {
     // p=50: T = ceil(tot/2), and for integer cum `2·cum ≥ tot ⇔ cum ≥ T`
     // plus `2·(cum−w) < tot ⇔ cum−w < T` — the original crossing test

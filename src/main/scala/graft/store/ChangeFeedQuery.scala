@@ -485,11 +485,11 @@ object ChangeFeedQuery {
     * DELETE WHERE → compact → append, and between every mutation a
     * `Trigger.AvailableNow` catch-up run (each one a RESTART from the
     * shared checkpoint, under `maxFilesPerTrigger` chunking) folds the
-    * feed's signed bucket deltas into the versioned on-disk index. The
+    * feed's signed bucket deltas into the segmented on-disk index. The
     * graded read is the maintained index itself; the oracle REBUILDS the
     * index from scratch over the final state with the same cross-engine
     * hash algebra — so index-after-stream must equal
-    * rebuild-from-scratch exactly: a sign error, a replayed version
+    * rebuild-from-scratch exactly: a sign error, a replayed batch
     * double-count, a missed retraction, a chunk-split compaction pair
     * that fails to net out, or any bucket-key divergence fails the hash
     * gate. The post-compact append pins that maintenance doesn't wedge
@@ -540,7 +540,7 @@ object ChangeFeedQuery {
     * ([[graft.streaming.TraceStream.followIndex]], the index-family twin
     * of `followRollup`): the [[followedIndex]] lifecycle's maintained
     * index read whole, which must equal the oracle's rebuild-from-
-    * scratch exactly — a sign error, a replayed-version double-count, a
+    * scratch exactly — a sign error, a replayed-batch double-count, a
     * missed retraction, a chunk-split compaction pair that fails to net
     * out, or any bucket-key divergence fails the hash gate. */
   def q233FollowIndex(s: SparkSession, dir: String): DataFrame =
@@ -707,7 +707,7 @@ object ChangeFeedQuery {
 
   /** q237 — the FLEET rollup: `followRollup` over TWO stores through
     * one checkpoint (`followFleetRollup`, composing the multi-store
-    * source with the versioned rollup upsert). The fixture bootstraps
+    * source with the segment-store rollup upsert). The fixture bootstraps
     * both stores, erases `error` rows from store A only, compacts
     * store B (must contribute nothing), then appends to B — draining
     * between every mutation, each drain a restart. The graded read is
@@ -716,7 +716,7 @@ object ChangeFeedQuery {
     * error in either store's feed, cross-store leakage of A's
     * maintenance, or a double-counted replay fails the hash gate.
     * Scale: the union rollup of N stores costs N single feeds' changes
-    * + one bounded-cardinality merge per batch — never a cross-store
+    * + one O(delta) segment per batch — never a cross-store
     * shuffle of table data. */
   def q237FleetRollup(s: SparkSession, dir: String): DataFrame = {
     val roll = fleetRolled(s, dir) { (sess, d) =>
@@ -952,10 +952,10 @@ object ChangeFeedQuery {
     * sub-second slots) fails the hash gate, as does any signed error.
     *
     * Scale: the slot key space is time-span-proportional (active slots
-    * ∝ data time span / 250 ms), so unlike q227/q238 the maintainer
-    * stores SEGMENTS, not merged versions — O(delta) appends plus
-    * cadenced base folds (`compactOver = 3` here so the lifecycle
-    * exercises the fold path), read back merge-on-read. */
+    * ∝ data time span / 250 ms); like every maintained table it is a
+    * segment store — O(delta) appends plus cadenced base folds
+    * (`compactOver = 3` here so the lifecycle exercises the fold path),
+    * read back merge-on-read. */
   def q240SlotRollup(s: SparkSession, dir: String): DataFrame = {
     val roll = slotRolled(s, dir) { (sess, d) =>
       val store = graft.util.TmpDirs.scratch("graft-cdc-slot-store")

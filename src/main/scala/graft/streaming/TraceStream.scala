@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger}
 import graft.ingest.TraceIngest
 import graft.schema.TraceSchema
 import graft.store.TraceStore
@@ -80,13 +80,13 @@ object TraceStream {
     *
     * The lineage is the streaming query id Spark writes into the
     * checkpoint's `metadata` file at checkpoint CREATION — a checkpoint
-    * wiped in place gets a fresh UUID, so stale markers/versions keyed by
+    * wiped in place gets a fresh UUID, so stale markers/parts keyed by
     * the old lineage can never suppress the new one's batches (a pure
     * path hash was blind to wipe-in-place: same path, restarted ids).
     * Read via the Hadoop FileSystem API so a non-local checkpoint
     * (HDFS/S3A) resolves the same way Spark itself resolves it. Falls
     * back to a path hash only when the metadata file is unreadable; the
-    * marker/version id guards in [[start]]/[[upsertRollup]] then catch a
+    * marker/part id guards in [[start]]/[[upsertSegment]] then catch a
     * wiped lineage loudly instead of silently. */
   private[streaming] def lineageOf(spark: SparkSession, checkpointDir: String): String = {
     val meta = new org.apache.hadoop.fs.Path(checkpointDir, "metadata")
@@ -105,7 +105,7 @@ object TraceStream {
 
   /** Path-hash fallback lineage (pre-metadata checkpoints, unreadable
     * metadata). Blind to wipe-in-place — which is why every consumer
-    * also id-guards against markers/versions from the future. */
+    * also id-guards against markers/parts from the future. */
   private[streaming] def incarnationOf(checkpointDir: String): String = {
     val abs = java.nio.file.Paths.get(checkpointDir).toAbsolutePath.toString
     val d = java.security.MessageDigest.getInstance("SHA-256")
@@ -230,163 +230,54 @@ object TraceStream {
       .select(col("window.start").as("hour_start"), col("Type"), col("n"))
 
   // ------------------------------------------------------------------ persistent incremental rollup (B6, SummingMergeTree form)
-  /** The maintained rollup's aggregate shape: (ym, Type) → row count +
+  /** The maintained rollup's declared shape: (ym, Type) → row count +
     * severity sum — decomposable measures only, so increments merge by
-    * summation ([[TraceStore.mergeRollups]]). Severity widens to long
-    * before summing: the stored sum keeps growing across merges. */
-  private def rollOf(df: DataFrame): DataFrame =
-    df.groupBy(date_format(col("Time"), "yyyyMM").as("ym"), col("Type"))
-      .agg(count(lit(1)).as("n"), sum(col("Severity").cast("long")).as("sev_sum"))
+    * summation. Severity widens to long before summing: the stored sum
+    * keeps growing across folds. */
+  private val RollupKeys = Seq("ym", "Type")
+  private val RollupMeasures = Seq("n", "sev_sum")
+  /** The slot rollup's keys ([[followSlotRollup]]): the sub-second
+    * window index and Type, with the rollup's measures. */
+  private val SlotKeys = Seq("slot", "Type")
+  private def slotOf(slotMicros: Long): Column =
+    expr(s"unix_micros(Time) div $slotMicros").as("slot")
 
-  /** Complete versions under a rollup root, ascending by batch id. A
-    * version is a `v<batchId>` subdirectory whose parquet commit finished
-    * (_SUCCESS present) — half-written versions are invisible. All file
-    * ops go through the Hadoop FileSystem API: the rollup root may live
-    * on whatever filesystem the store itself writes to (HDFS/S3A), not
-    * just the driver's local disk. */
-  private def rollupVersions(fs: org.apache.hadoop.fs.FileSystem,
-                             root: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("v")) n.drop(1).toLongOption.map(_ -> st.getPath) else None
-      }
-      .sortBy(_._1)
+  /** Fold cadence of every maintained table: a fold runs once the live
+    * segment count would exceed it. */
+  private val DefaultCompactOver = 8
+
+  /** Per-row signed contributions to a rollup-shaped table (the (ym,
+    * Type) rollup and the (slot, Type) slot rollup): `key`, Type, the
+    * sign as the row count and sign × Severity as the severity sum. */
+  private def rollRows(df: DataFrame, key: Column, sign: Column): DataFrame =
+    df.select(key, col("Type"), sign.as("n"),
+      (sign * col("Severity").cast("long")).as("sev_sum"))
 
   private def fsOf(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Read the current (highest complete version) maintained rollup. The
-    * returned DataFrame is lazy; the maintainer's prune keeps a one-extra-
-    * version grace tail, so execute it within roughly one maintenance
-    * cycle (or cache it) — a version three commits stale may be deleted
-    * under a longer-lived handle. */
-  def readRollup(spark: SparkSession, rollupPath: String): DataFrame = {
-    val (fs, root) = fsOf(spark, rollupPath)
-    val vs = rollupVersions(fs, root)
-    require(vs.nonEmpty, s"no complete rollup version under $rollupPath")
-    spark.read.parquet(vs.last._2.toString)
-  }
+  /** Read the current maintained (ym, Type) rollup: merge-on-read over
+    * its segments (see [[readIndex]], which this wraps with the rollup's
+    * declared shape, exactly like [[readSlotRollup]]). */
+  def readRollup(spark: SparkSession, rollupPath: String): DataFrame =
+    readIndex(spark, rollupPath, RollupKeys, RollupMeasures)
 
   /** One maintenance step: fold a normalized micro-batch into the stored
-    * rollup. Crash-safe and replay-idempotent without coordination:
-    *  - each batch writes a NEW version dir `v<batchId>` (never mutates
-    *    the current one), merging from the highest complete version with
-    *    a SMALLER id — so a replayed batch (foreachBatch is
-    *    at-least-once) rebuilds its own version from the same inputs
-    *    instead of double-counting itself;
-    *  - a crash mid-write leaves a version without _SUCCESS, which no
-    *    reader or later merge ever sees;
-    *  - older versions are pruned only after the new write committed
-    *    (the previous version is kept as the replay merge source).
-    * Cost per batch ∝ rollup cardinality + batch size — never the
-    * accumulated raw history. */
+    * rollup as one segment-store step ([[upsertSegment]]): the batch's
+    * (ym, Type) counts land as an O(batch) segment, and every
+    * `compactOver`-th state change folds the table. Crash-safe and
+    * replay-idempotent: parts are `_SUCCESS`-gated dirs named by batch
+    * id, so a replayed batch (foreachBatch is at-least-once) finds its
+    * own part and adds nothing, and a crash mid-write leaves a dir no
+    * reader sees. */
   def upsertRollup(batch: DataFrame, batchId: Long, rollupPath: String,
                    incarnation: String = "default"): Unit =
-    upsertDelta(batch.sparkSession, rollOf(batch), batchId, rollupPath, incarnation)
-
-  /** The shared versioned-merge step behind [[upsertRollup]] (unsigned
-    * micro-batch deltas), [[followRollup]] and [[followIndex]] (signed
-    * change-feed deltas). `delta` must already be aggregated to
-    * `keys ++ measures`; groups whose FIRST measure reaches zero after
-    * the merge (a signed feed deleted every row) leave the table. */
-  private[graft] def upsertDelta(spark: SparkSession, delta: DataFrame, batchId: Long,
-                                 rollupPath: String, incarnation: String,
-                                 keys: Seq[String] = Seq("ym", "Type"),
-                                 measures: Seq[String] = Seq("n", "sev_sum"),
-                                 versionFileBytes: Long = DefaultBaseFileBytes): Unit = {
-    val (fs, root) = fsOf(spark, rollupPath)
-    // Batch ids are only meaningful within ONE checkpoint lineage: a
-    // fresh/wiped checkpoint restarts ids at 0, and treating the old
-    // v0's _SUCCESS as "already done" would silently DROP every new
-    // batch until the id passes the old maximum. Pin the lineage and
-    // fail loudly on a mismatch — the operator must clear rollupPath
-    // (or keep the checkpoint) rather than lose data silently.
-    val incFile = new org.apache.hadoop.fs.Path(root, "_incarnation")
-    if (fs.exists(incFile)) {
-      val in = fs.open(incFile)
-      val prev = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-      require(prev == incarnation,
-        s"rollup at $rollupPath belongs to checkpoint lineage '$prev' but this " +
-        s"query runs under '$incarnation' — batch ids are incomparable across " +
-        "lineages; clear the rollup path or restore the original checkpoint")
-    } else {
-      fs.mkdirs(root)
-      val out = fs.create(incFile, true)
-      try out.write(incarnation.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    val existing = rollupVersions(fs, root)
-    // Second wipe-in-place defense, for when the lineage string itself is
-    // a path-hash fallback (same path, wiped checkpoint → SAME lineage but
-    // restarted ids): within one real lineage only the latest uncommitted
-    // batch replays, so no complete version can ever be AHEAD of the
-    // current batch. A future version means incomparable ids — fail loudly
-    // instead of merging new deltas under a stale current version.
-    require(existing.forall(_._1 <= batchId),
-      s"rollup at $rollupPath has complete version v${existing.lastOption.map(_._1).getOrElse(-1L)} " +
-      s"ahead of batch $batchId — the checkpoint was wiped in place and batch ids " +
-      "restarted; clear the rollup path or restore the original checkpoint")
-    val own = new org.apache.hadoop.fs.Path(root, s"v$batchId")
-    // Replay of an already-committed version: the rewrite would produce
-    // identical rows by construction (same base, same batch), so skip it
-    // rather than overwrite-in-place — an in-place rewrite would delete a
-    // version a concurrent reader may have just resolved as current.
-    if (existing.exists(_._1 == batchId)) return
-    val base = existing.filter(_._1 < batchId).lastOption
-    val merged = base match {
-      case Some((_, p)) => TraceStore.mergeRollups(
-        spark.read.parquet(p.toString), delta, keys, measures)
-      case None => delta
-    }
-    // the version write's parallelism is sized by the PRIOR version's
-    // bytes (an upper-bound proxy for the merged output): a (ym, Type)
-    // rollup stays one file forever, but a wider bounded key space must
-    // not funnel its whole version through one task per batch. (A
-    // time-span-PROPORTIONAL key space — the sub-second slot table —
-    // does not belong in this family at all: [[followSlotRollup]] routes
-    // through [[upsertSegment]] so trickle batches stay O(delta).)
-    // readRollup reads versions as directories, so multi-file versions
-    // are plumbing, exactly like the index family's multi-file bases.
-    val baseBytes = base.map(b => fs.getContentSummary(b._2).getLength).getOrElse(0L)
-    val targetParts = math.max(1L,
-      math.ceil(baseBytes.toDouble / versionFileBytes).toLong).min(Int.MaxValue).toInt
-    val shuffleWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val out = merged.filter(col(measures.head) =!= 0L)
-    val sized =
-      if (targetParts <= shuffleWidth) out.coalesce(targetParts)
-      else out.repartition(targetParts, keys.map(col): _*)
-    sized.write.mode("overwrite").parquet(own.toString)
-    // prune: keep the current version, the replay merge source for the
-    // NEXT batch, and one more as a grace window for readers holding a
-    // lazy DataFrame over a recently-current version (readRollup).
-    // _SUCCESS goes FIRST so a crash mid-delete leaves the dir invisible
-    // to rollupVersions, never a "complete" version missing part-files.
-    rollupVersions(fs, root).dropRight(3).foreach { case (_, p) =>
-      fs.delete(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), false)
-      fs.delete(p, true)
-    }
-    // sweep crash orphans (the index family's compaction-time discipline,
-    // here on every committed version): an incomplete (_SUCCESS-less)
-    // version dir BELOW this batch is a dead mid-write remnant — the only
-    // replayable batch is this one, which just committed, so nothing
-    // running can still claim an older incomplete dir
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        !fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("v") && n.drop(1).toLongOption.exists(_ < batchId)) {
-          fs.delete(st.getPath, true)
-          ()
-        }
-      }
-  }
+    upsertSegment(batch.sparkSession,
+      sumBy(rollRows(batch, date_format(col("Time"), "yyyyMM").as("ym"), lit(1L)),
+        RollupKeys, RollupMeasures),
+      batchId, rollupPath, incarnation, RollupKeys, RollupMeasures, DefaultCompactOver)
 
   /** ROLLING month-scope migration for a maintained rollup — the
     * production "last N months" that ADVANCES. The months spec is part
@@ -396,40 +287,44 @@ object TraceStream {
     *
     *  1. quiesce the old maintainer (drain it to current, stop it);
     *  2. call this — it pins the store's state and writes the NEW
-    *     scope's seed under `newRollupPath` as pre-batch-0 version
-    *     `v-1`: because `ym` is part of the rollup key, the new scope's
-    *     content is PURE SUBTRACTION of the aged-out months from the
-    *     old rollup — a filter of the maintained table; the store is
-    *     never recomputed;
+    *     scope's seed under `newRollupPath` as the `seed-0` part (a
+    *     base older than batch 0, as [[seedIndex]] writes it): because
+    *     `ym` is part of the rollup key, the new scope's content is
+    *     PURE SUBTRACTION of the aged-out months from the old rollup — a
+    *     filter of the maintained table; the store is never recomputed;
     *  3. start a NEW checkpoint: `followRollup(…, months =
     *     Some(newMonths), startingSnapshot = Some(returnedPin))` — the
-    *     seed serves as the merge base for the first batch and the
-    *     stream follows month-pruned changes after the pin;
+    *     seed serves as the base for the first batch and the stream
+    *     follows month-pruned changes after the pin;
     *  4. verify ([[readRollup]] equals the scoped recompute), then
     *     retire the old rollup + checkpoint and drop the pin once the
     *     new stream's offset passes its first complete form.
     *
     * Cost: O(old rollup) — bounded group space, no store scan. Refuses
-    * a non-empty target (migrating onto live versions would make batch
-    * ids incomparable). The seed only equals the scoped truth if the
-    * old maintainer was CURRENT at the pin — hence quiesce-first. */
+    * a target holding any `seg-`/`base-` part (migrating onto live parts
+    * would make batch ids incomparable). The seed only equals the scoped
+    * truth if the old maintainer was CURRENT at the pin — hence
+    * quiesce-first. */
   def migrateRollupMonths(spark: SparkSession, storePath: String,
                           oldRollupPath: String, newRollupPath: String,
                           newMonths: String): String = {
     val (fs, root) = fsOf(spark, newRollupPath)
     // a lone completed seed may be overwritten (a re-run before the new
-    // follow ever started); once the follow has committed versions,
+    // follow ever started); once the follow has committed parts,
     // re-seeding would make batch ids incomparable — refuse
-    require(rollupVersions(fs, root).forall(_._1 == -1L),
+    val (bases, segs) = partsOf(fs, root, newRollupPath)
+    require(segs.isEmpty && bases.forall(_._1 == -1L),
       s"rollup at $newRollupPath already has maintained versions — migrate " +
         "into an empty path (or one holding only an unconsumed seed)")
     // pin FIRST: the new follow's first diff runs against this immutable
     // base, so every change after it (and none before) reaches the seed
     val pin = TraceStore.snapshot(storePath)
-    val scoped = readRollup(spark, oldRollupPath)
+    // completeness is _SUCCESS-gated like every other part: a crashed
+    // seed write leaves an incomplete dir no reader sees
+    readRollup(spark, oldRollupPath)
       .filter(graft.sources.CdcStreamProvider.monthsColumn(newMonths, col("ym")))
-    scoped.coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(root, "v-1").toString)
+      .coalesce(1).write.mode("overwrite")
+      .parquet(new org.apache.hadoop.fs.Path(root, "seed-0").toString)
     pin
   }
 
@@ -470,20 +365,23 @@ object TraceStream {
   /** CDC-DRIVEN rollup maintenance as a running stream — q227's signed
     * algebra made operational: follow a trace STORE's change feed
     * (`format("graft-cdc")`, offsets = pinned snapshots) and fold each
-    * micro-batch's signed increments into the versioned rollup. Unlike
+    * micro-batch's signed increments into the stored rollup. Unlike
     * [[maintainRollup]] (which folds the ingest's append-only
     * micro-batches), this maintainer stays correct across the store's
     * OWN maintenance: DELETE WHERE / retention arrive as negative
     * increments, compaction arrives as an empty batch, and a group whose
     * count reaches zero leaves the rollup. The first batch is the full
-    * table as inserts (`initialLoad`), so the rollup bootstraps itself.
+    * table as inserts (`initialLoad`); a `startingSnapshot` instead
+    * follows changes after that pin over a seeded table
+    * ([[migrateRollupMonths]]).
     *
-    * Same crash/replay story as [[upsertRollup]]: the CDC source replays
-    * a batch as the IDENTICAL snapshot diff (pins are immutable), and
-    * the version-dir guard rebuilds rather than double-counts it. Cost
-    * per batch ∝ changed files + rollup cardinality — never the
-    * accumulated table, which is what makes maintaining a 100 TB store's
-    * rollup a trickle job rather than a recurring full scan. */
+    * Same crash/replay story as every follower ([[follow]]): the CDC
+    * source replays a batch as the IDENTICAL snapshot diff (pins are
+    * immutable), and the segment store finds the batch's own part
+    * instead of double-counting it. Cost per batch ∝ changed files —
+    * never the accumulated table, which is what makes maintaining a
+    * 100 TB store's rollup a trickle job rather than a recurring full
+    * scan. */
   def followRollup(spark: SparkSession, storePath: String, rollupPath: String,
                    checkpointDir: String,
                    trigger: Trigger = Trigger.AvailableNow(),
@@ -491,9 +389,11 @@ object TraceStream {
                    maxBytesPerTrigger: Option[Long] = None,
                    months: Option[String] = None,
                    startingSnapshot: Option[String] = None): StreamingQuery =
-    followRollupFrom(spark,
-      _.option("path", storePath), rollupPath, checkpointDir, trigger,
-      maxFilesPerTrigger, maxBytesPerTrigger, months, startingSnapshot)
+    follow(spark, Feed(Seq(storePath), fleet = false, startingSnapshot.map(Seq(_)),
+        months, maxFilesPerTrigger, maxBytesPerTrigger),
+      "rollup", rollupPath, checkpointDir, trigger, RollupKeys, RollupMeasures) {
+      (batch, sign) => rollRows(batch, col("ym"), sign)
+    }
 
   /** FLEET-wide rollup maintenance: [[followRollup]] over N stores
     * through ONE checkpoint (the multi-store `paths` source,
@@ -507,62 +407,17 @@ object TraceStream {
     * makes chunk slices composable makes store interleavings
     * composable). Per-store pins, admission control, and crash/replay
     * semantics all delegate to the fleet source. */
-  def followRollup(spark: SparkSession, storePaths: Seq[String], rollupPath: String,
-                   checkpointDir: String,
-                   trigger: Trigger,
-                   maxFilesPerTrigger: Option[Int],
-                   maxBytesPerTrigger: Option[Long],
-                   months: Option[String]): StreamingQuery =
-    followRollupFrom(spark,
-      _.option("paths", storePaths.mkString(",")), rollupPath, checkpointDir,
-      trigger, maxFilesPerTrigger, maxBytesPerTrigger, months)
-
-  /** [[followRollup]] fleet overload with the usual defaults (Scala
-    * cannot default-arg two overloads of one name). */
   def followFleetRollup(spark: SparkSession, storePaths: Seq[String],
                         rollupPath: String, checkpointDir: String,
                         trigger: Trigger = Trigger.AvailableNow(),
                         maxFilesPerTrigger: Option[Int] = None,
                         maxBytesPerTrigger: Option[Long] = None,
                         months: Option[String] = None): StreamingQuery =
-    followRollup(spark, storePaths, rollupPath, checkpointDir, trigger,
-      maxFilesPerTrigger, maxBytesPerTrigger, months)
-
-  private def followRollupFrom(spark: SparkSession,
-                               source: org.apache.spark.sql.streaming.DataStreamReader =>
-                                 org.apache.spark.sql.streaming.DataStreamReader,
-                               rollupPath: String, checkpointDir: String,
-                               trigger: Trigger,
-                               maxFilesPerTrigger: Option[Int],
-                               maxBytesPerTrigger: Option[Long],
-                               months: Option[String] = None,
-                               startingSnapshot: Option[String] = None): StreamingQuery = {
-    var inc: String = null   // resolved on first batch — metadata exists by then
-    // a starting pin means the rollup was SEEDED (a migrated scope's
-    // filtered copy, [[migrateRollupMonths]]) — follow changes after the
-    // pin instead of bootstrapping the table the seed already contains
-    val reader = source(spark.readStream.format("graft-cdc"))
-      .option("initialLoad", startingSnapshot.isEmpty.toString)
-    startingSnapshot.foreach(p => reader.option("startingSnapshot", p))
-    months.foreach(m => reader.option("months", m))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    maxBytesPerTrigger.foreach(n => reader.option("maxBytesPerTrigger", n.toString))
-    reader
-      .load()
-      .writeStream
-      .queryName(s"trace-cdc-rollup-${incarnationOf(rollupPath)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (inc == null) inc = lineageOf(batch.sparkSession, checkpointDir)
-        val sign = when(col("_change") === "insert", lit(1L)).otherwise(lit(-1L))
-        val delta = batch
-          .groupBy(col("ym"), col("Type"))
-          .agg(sum(sign).as("n"), sum(sign * col("Severity").cast("long")).as("sev_sum"))
-        upsertDelta(batch.sparkSession, delta, batchId, rollupPath, inc)
-      }
-      .start()
-  }
+    follow(spark, Feed(storePaths, fleet = true, None, months,
+        maxFilesPerTrigger, maxBytesPerTrigger),
+      "rollup", rollupPath, checkpointDir, trigger, RollupKeys, RollupMeasures) {
+      (batch, sign) => rollRows(batch, col("ym"), sign)
+    }
 
   /** SUB-SECOND (micros-mode) rollup maintenance from the change feed —
     * the reference's considered-and-dropped sub-second TODO
@@ -579,19 +434,15 @@ object TraceStream {
     *
     * Lineage pinning, replay idempotence, signed retraction, and
     * emptied-group drop are [[followRollup]]'s semantics with a
-    * different key — but the STORAGE is the index family's SEGMENT
-    * store ([[upsertSegment]]), not the rollup family's merged
-    * versions, because the key space is time-span-proportional:
-    * distinct active slots ∝ data time span / slot width (a multi-year
-    * micros store at 250 ms slots is ~10⁹ groups), and a merged-version
-    * rewrite per trickle batch would cost O(that cardinality) every
-    * batch. Through the segment store each batch appends its signed
-    * slot delta as an O(delta) segment and every `compactOver`-th state
-    * change folds base+segments into a size-targeted multi-file base —
-    * amortized O(delta + slots/compactOver), the exact cost argument
-    * [[followIndex]]'s scaladoc makes for the corpus-proportional
-    * bucket census. Read it back with [[readSlotRollup]] (merge-on-
-    * read, bounded segment count). */
+    * different key. The key space is time-span-proportional: distinct
+    * active slots ∝ data time span / slot width (a multi-year micros
+    * store at 250 ms slots is ~10⁹ groups), which is why every
+    * maintained table is a segment store ([[upsertSegment]]): each
+    * batch appends its signed slot delta as an O(delta) segment and
+    * every `compactOver`-th state change folds base+segments into a
+    * size-targeted multi-file base — amortized O(delta +
+    * slots/compactOver) per batch. Read it back with [[readSlotRollup]]
+    * (merge-on-read, bounded segment count). */
   def followSlotRollup(spark: SparkSession, storePath: String, rollupPath: String,
                        checkpointDir: String,
                        slotMicros: Long = 250000L,
@@ -599,41 +450,22 @@ object TraceStream {
                        maxFilesPerTrigger: Option[Int] = None,
                        maxBytesPerTrigger: Option[Long] = None,
                        months: Option[String] = None,
-                       compactOver: Int = 8,
+                       compactOver: Int = DefaultCompactOver,
                        baseFileBytes: Long = DefaultBaseFileBytes): StreamingQuery = {
     require(slotMicros > 0, s"slotMicros must be positive, got $slotMicros")
-    var inc: String = null   // resolved on first batch — metadata exists by then
-    val reader = spark.readStream.format("graft-cdc")
-      .option("path", storePath)
-      .option("initialLoad", "true")
-    months.foreach(m => reader.option("months", m))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    maxBytesPerTrigger.foreach(n => reader.option("maxBytesPerTrigger", n.toString))
-    reader
-      .load()
-      .writeStream
-      .queryName(s"trace-cdc-slot-rollup-${incarnationOf(rollupPath)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (inc == null) inc = lineageOf(batch.sparkSession, checkpointDir)
-        val sign = when(col("_change") === "insert", lit(1L)).otherwise(lit(-1L))
-        val delta = batch
-          .groupBy(expr(s"unix_micros(Time) div $slotMicros").as("slot"), col("Type"))
-          .agg(sum(sign).as("n"), sum(sign * col("Severity").cast("long")).as("sev_sum"))
-        upsertSegment(batch.sparkSession, delta, batchId, rollupPath, inc,
-          keys = Seq("slot", "Type"), measures = Seq("n", "sev_sum"),
-          compactOver = compactOver, baseFileBytes = baseFileBytes)
-      }
-      .start()
+    follow(spark, Feed(Seq(storePath), fleet = false, None, months,
+        maxFilesPerTrigger, maxBytesPerTrigger),
+      "slot-rollup", rollupPath, checkpointDir, trigger, SlotKeys, RollupMeasures,
+      compactOver, baseFileBytes) {
+      (batch, sign) => rollRows(batch, slotOf(slotMicros), sign)
+    }
   }
 
   /** Read the current [[followSlotRollup]] table (merge-on-read over
     * the slot store's segments — see [[readIndex]], which this wraps
     * with the slot family's declared shape). */
   def readSlotRollup(spark: SparkSession, rollupPath: String): DataFrame =
-    readIndex(spark, rollupPath,
-      keys = Seq("slot", "Type"), measures = Seq("n", "sev_sum"))
+    readIndex(spark, rollupPath, SlotKeys, RollupMeasures)
 
   /** FLEET-wide sub-second rollup: [[followSlotRollup]] over N stores
     * through ONE checkpoint — the slot twin of [[followFleetRollup]].
@@ -651,33 +483,15 @@ object TraceStream {
                             maxFilesPerTrigger: Option[Int] = None,
                             maxBytesPerTrigger: Option[Long] = None,
                             months: Option[String] = None,
-                            compactOver: Int = 8,
+                            compactOver: Int = DefaultCompactOver,
                             baseFileBytes: Long = DefaultBaseFileBytes): StreamingQuery = {
     require(slotMicros > 0, s"slotMicros must be positive, got $slotMicros")
-    var inc: String = null   // resolved on first batch — metadata exists by then
-    val reader = spark.readStream.format("graft-cdc")
-      .option("paths", storePaths.mkString(","))
-      .option("initialLoad", "true")
-    months.foreach(m => reader.option("months", m))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    maxBytesPerTrigger.foreach(n => reader.option("maxBytesPerTrigger", n.toString))
-    reader
-      .load()
-      .writeStream
-      .queryName(s"trace-cdc-fleet-slot-rollup-${incarnationOf(rollupPath)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (inc == null) inc = lineageOf(batch.sparkSession, checkpointDir)
-        val sign = when(col("_change") === "insert", lit(1L)).otherwise(lit(-1L))
-        val delta = batch
-          .groupBy(expr(s"unix_micros(Time) div $slotMicros").as("slot"), col("Type"))
-          .agg(sum(sign).as("n"), sum(sign * col("Severity").cast("long")).as("sev_sum"))
-        upsertSegment(batch.sparkSession, delta, batchId, rollupPath, inc,
-          keys = Seq("slot", "Type"), measures = Seq("n", "sev_sum"),
-          compactOver = compactOver, baseFileBytes = baseFileBytes)
-      }
-      .start()
+    follow(spark, Feed(storePaths, fleet = true, None, months,
+        maxFilesPerTrigger, maxBytesPerTrigger),
+      "fleet-slot-rollup", rollupPath, checkpointDir, trigger, SlotKeys, RollupMeasures,
+      compactOver, baseFileBytes) {
+      (batch, sign) => rollRows(batch, slotOf(slotMicros), sign)
+    }
   }
 
   /** CDC-DRIVEN near-dup-index maintenance as a running stream — q231's
@@ -696,37 +510,35 @@ object TraceStream {
     * batch is the full table as inserts (`initialLoad`), so the index
     * bootstraps itself.
     *
-    * WHY segments, not the rollup family's merged versions: a rollup's
-    * cardinality is bounded by its group space, so rewriting it per
-    * batch is cheap forever — but this index's cardinality grows with
-    * the CORPUS, and a merge-per-batch would make every trickle batch
-    * cost O(index) (a full rewrite of a 100 TB corpus's bucket table,
-    * per batch). Instead each batch appends its delta as an immutable
-    * SEGMENT (`seg-<batchId>`, cost O(changed rows)) and every
-    * `compactOver`-th state change folds base+segments into a new
-    * `base-<batchId>` — the SummingMergeTree parts-and-background-merge
-    * model, amortized O(delta + index/compactOver) per batch. Readers
-    * merge on read ([[readIndex]]): newest base ⊎ later segments,
-    * signed-summed — segment count is bounded by `compactOver`, so the
-    * read never degrades unboundedly.
+    * The index's cardinality grows with the CORPUS, so a merge-per-batch
+    * would make every trickle batch cost O(index) (a full rewrite of a
+    * 100 TB corpus's bucket table, per batch). Instead each batch
+    * appends its delta as an immutable SEGMENT (`seg-<batchId>`, cost
+    * O(changed rows)) and every `compactOver`-th state change folds
+    * base+segments into a new `base-<batchId>` — the SummingMergeTree
+    * parts-and-background-merge model, amortized O(delta +
+    * index/compactOver) per batch. Readers merge on read
+    * ([[readIndex]]): newest base ⊎ later segments, signed-summed —
+    * segment count is bounded by `compactOver`, so the read never
+    * degrades unboundedly.
     *
-    * Same crash/replay story as [[followRollup]]: segments and bases are
-    * `_SUCCESS`-gated dirs named by batch id, so an at-least-once replay
-    * rebuilds ITS OWN segment/base from the same inputs instead of
-    * double-counting (a compaction replay re-reads the prior base +
-    * segments, which pruning keeps until the next batch commits), a
-    * crash mid-write leaves an invisible dir, and batch ids are
-    * lineage-pinned against wiped checkpoints. */
+    * Crash/replay ([[follow]], [[upsertSegment]]): segments and bases
+    * are `_SUCCESS`-gated dirs named by batch id, so an at-least-once
+    * replay finds ITS OWN segment/base instead of double-counting (a
+    * compaction's inputs — the prior base + segments — survive pruning
+    * until the next batch commits), a crash mid-write leaves an
+    * invisible dir, and batch ids are lineage-pinned against wiped
+    * checkpoints. */
   def followIndex(spark: SparkSession, storePath: String, indexPath: String,
                   checkpointDir: String,
                   trigger: Trigger = Trigger.AvailableNow(),
                   maxFilesPerTrigger: Option[Int] = None,
                   maxBytesPerTrigger: Option[Long] = None,
-                  compactOver: Int = 8,
+                  compactOver: Int = DefaultCompactOver,
                   startingSnapshot: Option[String] = None,
                   baseFileBytes: Long = DefaultBaseFileBytes,
                   months: Option[String] = None,
-                  bands: Int = 2): StreamingQuery = {
+                  bands: Int = 2): StreamingQuery =
     // Corpus-scale bootstrap: streaming the initial load through the
     // chunked path re-folds the GROWING index every compactOver-th batch
     // (Σ over compactions of the index-so-far — super-linear in the
@@ -734,36 +546,13 @@ object TraceStream {
     // ONE batch job over a pinned snapshot, then follow from that pin —
     // `startingSnapshot` switches the source to changes-after-pin and
     // the seed serves as the pre-batch-0 base.
-    var inc: String = null   // resolved on first batch — metadata exists by then
-    val reader = spark.readStream.format("graft-cdc")
-      .option("path", storePath)
-      .option("initialLoad", startingSnapshot.isEmpty.toString)
-    startingSnapshot.foreach(p => reader.option("startingSnapshot", p))
-    months.foreach(m => reader.option("months", m))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    maxBytesPerTrigger.foreach(n => reader.option("maxBytesPerTrigger", n.toString))
-    reader
-      .load()
-      .writeStream
-      .queryName(s"trace-cdc-index-${incarnationOf(indexPath)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (inc == null) {
-          inc = lineageOf(batch.sparkSession, checkpointDir)
-          pinBands(batch.sparkSession, indexPath, bands)
-        }
-        val sign = when(col("_change") === "insert", lit(1L)).otherwise(lit(-1L))
-        val delta = graft.store.ChangeFeedQuery
-          .bucketRows(batch.withColumn("_s", sign), carry = Seq("_s"), bands = bands)
-          .groupBy(col("band"), col("bkey"))
-          .agg(sum(col("_s")).as("n"))
-        upsertSegment(batch.sparkSession, delta, batchId, indexPath, inc,
-          keys = Seq("band", "bkey"), measures = Seq("n"), compactOver = compactOver,
-          baseFileBytes = baseFileBytes)
-      }
-      .start()
-  }
+    follow(spark, Feed(Seq(storePath), fleet = false, startingSnapshot.map(Seq(_)),
+        months, maxFilesPerTrigger, maxBytesPerTrigger),
+      "index", indexPath, checkpointDir, trigger, Seq("band", "bkey"), Seq("n"),
+      compactOver, baseFileBytes, onFirstBatch = s => pinBands(s, indexPath, bands)) {
+      (batch, sign) => graft.store.ChangeFeedQuery
+        .bucketRows(batch.withColumn("n", sign), carry = Seq("n"), bands = bands)
+    }
 
   /** CDC-driven maintenance of the index's MEMBERSHIP table — the
     * band-bucket rows THEMSELVES (`(band, bkey, doc)`, doc = the
@@ -778,52 +567,30 @@ object TraceStream {
     * per batch and pair generation costs O(index + candidates).
     *
     * Same segment-store scale story as [[followIndex]] (the membership
-    * is corpus-proportional — strictly bigger than the census — so
-    * merged versions are out): O(delta) appends, cadenced size-targeted
-    * base folds, merge-on-read, lineage pinning, replay idempotence.
-    * An insert adds its `(band, bkey, doc)` rows with +1, a DELETE
-    * WHERE retracts them with −1, and a doc whose count empties leaves
-    * the membership — per-key signed summation IS membership GC. */
+    * is corpus-proportional — strictly bigger than the census): O(delta)
+    * appends, cadenced size-targeted base folds, merge-on-read, lineage
+    * pinning, replay idempotence. An insert adds its `(band, bkey, doc)`
+    * rows with +1, a DELETE WHERE retracts them with −1, and a doc whose
+    * count empties leaves the membership — per-key signed summation IS
+    * membership GC. */
   def followMemberIndex(spark: SparkSession, storePath: String, indexPath: String,
                         checkpointDir: String,
                         trigger: Trigger = Trigger.AvailableNow(),
                         maxFilesPerTrigger: Option[Int] = None,
                         maxBytesPerTrigger: Option[Long] = None,
-                        compactOver: Int = 8,
+                        compactOver: Int = DefaultCompactOver,
                         startingSnapshot: Option[String] = None,
                         baseFileBytes: Long = DefaultBaseFileBytes,
-                        months: Option[String] = None): StreamingQuery = {
-    var inc: String = null   // resolved on first batch — metadata exists by then
-    val reader = spark.readStream.format("graft-cdc")
-      .option("path", storePath)
-      .option("initialLoad", startingSnapshot.isEmpty.toString)
-    startingSnapshot.foreach(p => reader.option("startingSnapshot", p))
-    months.foreach(m => reader.option("months", m))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    maxBytesPerTrigger.foreach(n => reader.option("maxBytesPerTrigger", n.toString))
-    reader
-      .load()
-      .writeStream
-      .queryName(s"trace-cdc-members-${incarnationOf(indexPath)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (inc == null) inc = lineageOf(batch.sparkSession, checkpointDir)
-        val sign = when(col("_change") === "insert", lit(1L)).otherwise(lit(-1L))
-        val keyed = batch
-          .withColumn("_s", sign)
-          .withColumn("doc",
-            concat(col("Machine"), lit("/"), col("Type"), lit("/"), col("ID")))
-        val delta = graft.store.ChangeFeedQuery
-          .bucketRows(keyed, carry = Seq("_s", "doc"))
-          .groupBy(col("band"), col("bkey"), col("doc"))
-          .agg(sum(col("_s")).as("n"))
-        upsertSegment(batch.sparkSession, delta, batchId, indexPath, inc,
-          keys = Seq("band", "bkey", "doc"), measures = Seq("n"),
-          compactOver = compactOver, baseFileBytes = baseFileBytes)
-      }
-      .start()
-  }
+                        months: Option[String] = None): StreamingQuery =
+    follow(spark, Feed(Seq(storePath), fleet = false, startingSnapshot.map(Seq(_)),
+        months, maxFilesPerTrigger, maxBytesPerTrigger),
+      "members", indexPath, checkpointDir, trigger, Seq("band", "bkey", "doc"), Seq("n"),
+      compactOver, baseFileBytes) {
+      (batch, sign) => graft.store.ChangeFeedQuery.bucketRows(
+        batch.withColumn("n", sign).withColumn("doc",
+          concat(col("Machine"), lit("/"), col("Type"), lit("/"), col("ID"))),
+        carry = Seq("n", "doc"))
+    }
 
   /** q26-style candidate pairs generated FROM the maintained membership
     * index ([[followMemberIndex]]) — the operational payoff of keeping
@@ -900,38 +667,82 @@ object TraceStream {
                        trigger: Trigger = Trigger.AvailableNow(),
                        maxFilesPerTrigger: Option[Int] = None,
                        maxBytesPerTrigger: Option[Long] = None,
-                       compactOver: Int = 8,
+                       compactOver: Int = DefaultCompactOver,
                        baseFileBytes: Long = DefaultBaseFileBytes,
                        months: Option[String] = None,
-                       startingSnapshots: Option[Seq[String]] = None): StreamingQuery = {
+                       startingSnapshots: Option[Seq[String]] = None): StreamingQuery =
     // corpus-scale fleet bootstrap: [[seedFleetIndex]] pins every store
     // and builds the shared census in ONE batch job; `startingSnapshots`
     // (positional, one pin per store) switches every child source to
     // changes-after-its-pin, so no streaming bootstrap runs
-    var inc: String = null   // resolved on first batch — metadata exists by then
-    val reader = spark.readStream.format("graft-cdc")
-      .option("paths", storePaths.mkString(","))
-      .option("initialLoad", startingSnapshots.isEmpty.toString)
-    startingSnapshots.foreach(ps => reader.option("startingSnapshots", ps.mkString(",")))
-    months.foreach(m => reader.option("months", m))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    maxBytesPerTrigger.foreach(n => reader.option("maxBytesPerTrigger", n.toString))
-    reader
+    follow(spark, Feed(storePaths, fleet = true, startingSnapshots, months,
+        maxFilesPerTrigger, maxBytesPerTrigger),
+      "fleet-index", indexPath, checkpointDir, trigger, Seq("_store", "band", "bkey"),
+      Seq("n"), compactOver, baseFileBytes) {
+      (batch, sign) => graft.store.ChangeFeedQuery
+        .bucketRows(batch.withColumn("n", sign), carry = Seq("n", "_store"))
+    }
+
+  // ------------------------------------------------------------------ the follow loop
+  /** What a follower reads: one store (`path`,
+    * [[graft.sources.CdcSource]]) or a fleet through one checkpoint
+    * (`paths`, [[graft.sources.CdcMultiSource]]); the pin(s) a seeded
+    * table follows from (positional, one per store, for a fleet); the
+    * month scope; and the admission limits. */
+  private final case class Feed(stores: Seq[String], fleet: Boolean,
+                                pins: Option[Seq[String]], months: Option[String],
+                                maxFiles: Option[Int], maxBytes: Option[Long])
+
+  /** The `graft-cdc` reader over a [[Feed]]. With `initialLoad` the
+    * first batch is the whole table as inserts. */
+  private def cdcReader(spark: SparkSession, feed: Feed,
+                        initialLoad: Boolean): DataStreamReader = {
+    val r = spark.readStream.format("graft-cdc")
+      .option(if (feed.fleet) "paths" else "path", feed.stores.mkString(","))
+      .option("initialLoad", initialLoad.toString)
+    feed.pins.foreach(ps =>
+      r.option(if (feed.fleet) "startingSnapshots" else "startingSnapshot", ps.mkString(",")))
+    feed.months.foreach(m => r.option("months", m))
+    feed.maxFiles.foreach(n => r.option("maxFilesPerTrigger", n.toString))
+    feed.maxBytes.foreach(n => r.option("maxBytesPerTrigger", n.toString))
+    r
+  }
+
+  /** The one follow loop behind every `graft-cdc` maintainer: stream the
+    * feed (bootstrapping with the whole table as inserts unless it
+    * starts from pins) into the segment-store table at `table`. On the
+    * first batch the loop resolves the checkpoint lineage (its
+    * `metadata` file exists only once the query has started) and runs
+    * `onFirstBatch`; every batch maps its change rows through the
+    * family's `rows` — keys plus signed per-row measures, given the ±1
+    * sign of each change — sums them per key and folds the delta in with
+    * [[upsertSegment]]. The source replays a batch as the identical
+    * snapshot diff, and the segment store skips a batch id it already
+    * holds, so replay never double-counts. The query is named
+    * `trace-cdc-<name>-<hash of table>`. */
+  private def follow(spark: SparkSession, feed: Feed, name: String, table: String,
+                     checkpointDir: String, trigger: Trigger,
+                     keys: Seq[String], measures: Seq[String],
+                     compactOver: Int = DefaultCompactOver,
+                     baseFileBytes: Long = DefaultBaseFileBytes,
+                     onFirstBatch: SparkSession => Unit = _ => ())(
+                     rows: (DataFrame, Column) => DataFrame): StreamingQuery = {
+    var inc: String = null
+    cdcReader(spark, feed, initialLoad = feed.pins.isEmpty)
       .load()
       .writeStream
-      .queryName(s"trace-cdc-fleet-index-${incarnationOf(indexPath)}")
+      .queryName(s"trace-cdc-$name-${incarnationOf(table)}")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (inc == null) inc = lineageOf(batch.sparkSession, checkpointDir)
+        val s = batch.sparkSession
+        if (inc == null) {
+          inc = lineageOf(s, checkpointDir)
+          onFirstBatch(s)
+        }
         val sign = when(col("_change") === "insert", lit(1L)).otherwise(lit(-1L))
-        val delta = graft.store.ChangeFeedQuery
-          .bucketRows(batch.withColumn("_s", sign), carry = Seq("_s", "_store"))
-          .groupBy(col("_store"), col("band"), col("bkey"))
-          .agg(sum(col("_s")).as("n"))
-        upsertSegment(batch.sparkSession, delta, batchId, indexPath, inc,
-          keys = Seq("_store", "band", "bkey"), measures = Seq("n"),
-          compactOver = compactOver, baseFileBytes = baseFileBytes)
+        upsertSegment(s, sumBy(rows(batch, sign), keys, measures), batchId, table, inc,
+          keys, measures, compactOver, baseFileBytes)
       }
       .start()
   }
@@ -958,8 +769,8 @@ object TraceStream {
     // completeness is _SUCCESS-gated like every other part: a seed job
     // that crashed mid-write leaves an incomplete dir no reader sees,
     // and a RE-RUN overwrites it instead of wedging on "already has parts"
-    require(partsOf(fs, root, "seg-").isEmpty && partsOf(fs, root, "base-").isEmpty &&
-      !fs.exists(new org.apache.hadoop.fs.Path(root, "seed-0/_SUCCESS")),
+    val (bases, segs) = partsOf(fs, root, indexPath)
+    require(bases.isEmpty && segs.isEmpty,
       s"index at $indexPath already has parts — seedIndex is for an empty index")
     pinBands(spark, indexPath, bands)
     graft.store.ChangeFeedQuery
@@ -1033,8 +844,8 @@ object TraceStream {
     require(storePaths.nonEmpty, "seedFleetIndex needs at least one store")
     require(censusChunk >= 1, s"censusChunk must be positive, got $censusChunk")
     val (fs, root) = fsOf(spark, indexPath)
-    require(partsOf(fs, root, "seg-").isEmpty && partsOf(fs, root, "base-").isEmpty &&
-      !fs.exists(new org.apache.hadoop.fs.Path(root, "seed-0/_SUCCESS")),
+    val (bases, segs) = partsOf(fs, root, indexPath)
+    require(bases.isEmpty && segs.isEmpty,
       s"index at $indexPath already has parts — seedFleetIndex is for an empty index")
     // pin FIRST (all stores), then census: each child's first diff has
     // an immutable base even if a store mutates mid-census
@@ -1068,67 +879,82 @@ object TraceStream {
     pins
   }
 
-  /** The seed (as a base older than every batch id) plus the complete
-    * `base-` parts, ascending. */
-  private def basesOf(fs: org.apache.hadoop.fs.FileSystem,
-                      root: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val seed = new org.apache.hadoop.fs.Path(root, "seed-0")
-    val s = if (fs.exists(new org.apache.hadoop.fs.Path(seed, "_SUCCESS")))
-      Seq((-1L, seed)) else Seq.empty
-    s ++ partsOf(fs, root, "base-")
+  // ------------------------------------------------------------------ the segment store
+  /** The complete (`_SUCCESS`-present) parts of a maintained table, from
+    * one listing of its root: the bases — the seed (`seed-0`, older than
+    * every batch id, so it sorts as -1) and `base-<batchId>` — and the
+    * `seg-<batchId>` segments, each ascending by batch id. A root that
+    * still holds `v<batchId>` version dirs (the retired merged-version
+    * rollup layout) fails loudly: a segment write over it would silently
+    * drop that rollup's history. */
+  private def partsOf(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+                      path: String): (Seq[(Long, org.apache.hadoop.fs.Path)],
+                                      Seq[(Long, org.apache.hadoop.fs.Path)]) =
+    if (!fs.exists(root)) (Seq.empty, Seq.empty)
+    else {
+      val dirs = fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
+      require(!dirs.exists(_.getName.matches("v-?\\d+")),
+        s"$path holds v<batchId> version dirs of the retired merged-version rollup " +
+          "layout, which the segment store cannot read or extend — rebuild the table " +
+          "from the store: clear the path and its checkpoint, then follow again")
+      val complete = dirs.filter(d => fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
+      def ids(prefix: String) = complete.flatMap { d =>
+        val n = d.getName
+        if (n.startsWith(prefix)) n.drop(prefix.length).toLongOption.map(_ -> d) else None
+      }.sortBy(_._1)
+      (complete.filter(_.getName == "seed-0").map(-1L -> _) ++ ids("base-"), ids("seg-"))
+    }
+
+  /** Signed per-key sums: a batch's delta, a fold, and merge-on-read
+    * all aggregate this way. */
+  private def sumBy(df: DataFrame, keys: Seq[String], measures: Seq[String]): DataFrame = {
+    val aggs = measures.map(m => sum(col(m)).as(m))
+    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Complete (`_SUCCESS`-present) parts with the given name prefix
-    * under a segmented-index root, ascending by batch id. */
-  private def partsOf(fs: org.apache.hadoop.fs.FileSystem,
-                      root: org.apache.hadoop.fs.Path,
-                      prefix: String): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(prefix)) n.drop(prefix.length).toLongOption.map(_ -> st.getPath)
-        else None
-      }
-      .sortBy(_._1)
-
-  /** One maintenance step of the SEGMENTED signed index (see
-    * [[followIndex]]): append the batch's signed delta as segment
-    * `seg-<batchId>` (O(delta)), or — when the live segment count would
-    * exceed `compactOver` — fold base + segments + delta into
-    * `base-<batchId>` (the background merge). Lineage-pinned,
-    * future-id-guarded, and replay-idempotent exactly like
-    * [[upsertDelta]]; pruning keeps the previous base and its segment
-    * tail until a LATER state change commits, so the one batch that can
-    * replay always finds its merge inputs. */
   /** Target bytes of merged INPUT per base-part file — sizes the fold's
     * write parallelism (see the compaction branch of [[upsertSegment]]). */
   val DefaultBaseFileBytes: Long = 64L << 20
 
+  /** One maintenance step of a segment-store table — every maintained
+    * table (rollup, slot rollup, index, membership; single-store and
+    * fleet) is one: append the batch's signed delta as segment
+    * `seg-<batchId>` (O(delta)), or — when the live segment count would
+    * exceed `compactOver` — fold base + segments + delta into
+    * `base-<batchId>` (the background merge). `delta` must already be
+    * aggregated to `keys ++ measures`; the FIRST measure is the group's
+    * signed row count, and a group whose count reaches zero leaves the
+    * table at the fold.
+    *
+    * Crash-safe and replay-idempotent without coordination: parts are
+    * `_SUCCESS`-gated dirs named by batch id, so a crash mid-write leaves
+    * a dir no reader sees and a replayed batch finds its own part and
+    * writes nothing; pruning keeps the previous base and its segment
+    * tail until a LATER state change commits, so the one batch that can
+    * replay always finds its merge inputs. Batch ids are only
+    * meaningful within ONE checkpoint lineage, so the table pins its
+    * lineage (`_incarnation`) and refuses another one, and a part AHEAD
+    * of the current batch (a wiped-in-place checkpoint under the
+    * path-hash lineage fallback) fails loudly instead of being merged
+    * under. */
   private[graft] def upsertSegment(spark: SparkSession, delta: DataFrame,
-                                       batchId: Long, indexPath: String,
-                                       incarnation: String, keys: Seq[String],
-                                       measures: Seq[String], compactOver: Int,
-                                       baseFileBytes: Long = DefaultBaseFileBytes): Unit = {
+                                   batchId: Long, indexPath: String,
+                                   incarnation: String, keys: Seq[String],
+                                   measures: Seq[String], compactOver: Int,
+                                   baseFileBytes: Long = DefaultBaseFileBytes): Unit = {
     val (fs, root) = fsOf(spark, indexPath)
+    val (bases, segs) = partsOf(fs, root, indexPath)
     val incFile = new org.apache.hadoop.fs.Path(root, "_incarnation")
-    if (fs.exists(incFile)) {
-      val in = fs.open(incFile)
-      val prev = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-      require(prev == incarnation,
-        s"index at $indexPath belongs to checkpoint lineage '$prev' but this " +
-        s"query runs under '$incarnation' — batch ids are incomparable across " +
-        "lineages; clear the index path or restore the original checkpoint")
-    } else {
-      fs.mkdirs(root)
-      val out = fs.create(incFile, true)
-      try out.write(incarnation.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+    graft.sources.CdcStreamProvider.readPinFile(fs, incFile) match {
+      case Some(prev) =>
+        require(prev == incarnation,
+          s"index at $indexPath belongs to checkpoint lineage '$prev' but this " +
+          s"query runs under '$incarnation' — batch ids are incomparable across " +
+          "lineages; clear the index path or restore the original checkpoint")
+      case None =>
+        fs.mkdirs(root)
+        graft.sources.CdcStreamProvider.writePinFile(fs, incFile, incarnation)
     }
-    val bases = basesOf(fs, root)
-    val segs = partsOf(fs, root, "seg-")
     require((bases ++ segs).forall(_._1 <= batchId),
       s"index at $indexPath has a part ahead of batch $batchId — the checkpoint " +
       "was wiped in place and batch ids restarted; clear the index path or " +
@@ -1138,8 +964,6 @@ object TraceStream {
     if ((bases ++ segs).exists(_._1 == batchId)) return
     val curBase = bases.lastOption
     val live = segs.filter { case (id, _) => curBase.forall(_._1 < id) }
-    def readParts(ps: Seq[org.apache.hadoop.fs.Path]): Option[DataFrame] =
-      if (ps.isEmpty) None else Some(spark.read.parquet(ps.map(_.toString): _*))
     def drop(p: org.apache.hadoop.fs.Path): Unit = {
       fs.delete(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), false)
       fs.delete(p, true)
@@ -1147,26 +971,23 @@ object TraceStream {
     }
     if (live.size + 1 > compactOver) {
       // background merge: base ⊎ segments ⊎ delta → new base; emptied
-      // buckets leave the index here. The fold is the index-proportional
+      // groups leave the table here. The fold is the table-proportional
       // step — a single-task write would serialize a corpus-sized bucket
       // table through one core at 100 TB — so size the write by the
-      // merged INPUT bytes (an upper bound on the folded index): ~one
+      // merged INPUT bytes (an upper bound on the folded table): ~one
       // baseFileBytes-sized file per task, multi-file base parts.
       // Readers already treat every part as a directory (readIndex,
-      // basesOf) and the seed writes in parallel the same way.
+      // partsOf) and the seed writes in parallel the same way.
       val inputs = curBase.map(_._2).toSeq ++ live.map(_._2)
       val inputBytes = inputs.map(p => fs.getContentSummary(p).getLength).sum
       val targetParts = math.max(1L,
         math.ceil(inputBytes.toDouble / baseFileBytes).toLong).min(Int.MaxValue).toInt
-      val aggs = measures.map(m => sum(col(m)).as(m))
-      val folded = readParts(inputs)
-        .map(_.unionByName(delta)).getOrElse(delta)
-        .groupBy(keys.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-        // the FIRST measure is the group's signed row count ([[upsertDelta]]'s
-        // convention): zero ⇒ every contributing row was retracted ⇒ the
-        // group leaves, and its other measures are zero by the same algebra
-        .filter(col(measures.head) =!= 0L)
+      val merged =
+        if (inputs.isEmpty) delta
+        else spark.read.parquet(inputs.map(_.toString): _*).unionByName(delta)
+      // zero signed count ⇒ every contributing row was retracted ⇒ the
+      // group leaves, and its other measures are zero by the same algebra
+      val folded = sumBy(merged, keys, measures).filter(col(measures.head) =!= 0L)
       // under the aggregation's own shuffle width, coalesce — the fold
       // stays one shuffle and its reduce side IS the write; a base wider
       // than the shuffle width re-partitions by key so every task still
@@ -1193,7 +1014,7 @@ object TraceStream {
         }
     } else {
       // plain segment append: cost ∝ the batch's changed rows, never the
-      // index — zero-net rows drop, negative (retraction) rows KEEP. A
+      // table — zero-net rows drop, negative (retraction) rows KEEP. A
       // row is zero-net only when EVERY measure nets to zero: a same-key
       // replace can leave n = 0 with a nonzero secondary measure, and
       // dropping it would lose the secondary's change
@@ -1206,30 +1027,31 @@ object TraceStream {
     // batch (only the latest) can be a compaction, whose rebuild
     // re-reads the previous base + its tail. _SUCCESS goes first so a
     // crash mid-delete leaves the dir invisible. With a SINGLE base (the
-    // first compaction of an unseeded index) the just-merged tail gets
+    // first compaction of an unseeded table) the just-merged tail gets
     // the same one-cycle grace concurrent readers rely on elsewhere:
     // floor -1 keeps it until a second base exists (bounded — the next
     // compaction prunes it).
-    val keptBases = basesOf(fs, root).takeRight(2)
+    val (nowBases, nowSegs) = partsOf(fs, root, indexPath)
+    val keptBases = nowBases.takeRight(2)
     val floor = if (keptBases.size >= 2) keptBases.head._1 else -1L
-    basesOf(fs, root).dropRight(2).foreach(b => drop(b._2))
-    partsOf(fs, root, "seg-").filter(_._1 <= floor).foreach(s => drop(s._2))
+    nowBases.dropRight(2).foreach(b => drop(b._2))
+    nowSegs.filter(_._1 <= floor).foreach(s => drop(s._2))
   }
 
-  /** Read the current maintained band-bucket index: newest complete base
-    * ⊎ later segments, signed-summed (merge-on-read — segment count is
-    * bounded by the maintainer's `compactOver`). The result is the same
-    * table a from-scratch rebuild produces; execute it within one
-    * maintenance cycle of resolution (pruning keeps a one-base grace
-    * window, same discipline as [[readRollup]]). */
+  /** Read the current state of a segment-store table (by default the
+    * band-bucket index): newest complete base ⊎ later segments,
+    * signed-summed (merge-on-read — segment count is bounded by the
+    * maintainer's `compactOver`). The result is the same table a
+    * from-scratch rebuild produces. The returned DataFrame is lazy;
+    * pruning keeps a one-base grace window, so execute it within
+    * roughly one maintenance cycle of resolution (or cache it). */
   def readIndex(spark: SparkSession, indexPath: String,
                 keys: Seq[String] = Seq("band", "bkey"),
                 measures: Seq[String] = Seq("n")): DataFrame = {
     val (fs, root) = fsOf(spark, indexPath)
-    val bases = basesOf(fs, root)
+    val (bases, allSegs) = partsOf(fs, root, indexPath)
     val curBase = bases.lastOption
-    val segs = partsOf(fs, root, "seg-")
-      .filter { case (id, _) => curBase.forall(_._1 < id) }
+    val segs = allSegs.filter { case (id, _) => curBase.forall(_._1 < id) }
     val parts = curBase.map(_._2).toSeq ++ segs.map(_._2)
     require(parts.nonEmpty, s"no complete index part under $indexPath")
     val df = spark.read.parquet(parts.map(_.toString): _*)
@@ -1240,16 +1062,11 @@ object TraceStream {
       s"index at $indexPath has columns [${df.columns.mkString(", ")}] but the " +
         s"read declares keys=[${keys.mkString(", ")}] measures=[${measures.mkString(", ")}] — " +
         "pass the keys/measures the maintainer writes (fleet indexes carry _store)")
-    // a freshly folded (or seeded) index with no later segments IS the
+    // a freshly folded (or seeded) table with no later segments IS the
     // merged state — the fold already signed-summed and zero-filtered —
     // so the common just-compacted read skips the aggregation shuffle
     if (segs.isEmpty) df.select((keys ++ measures).map(col): _*)
-    else {
-      val aggs = measures.map(m => sum(col(m)).as(m))
-      df.groupBy(keys.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .filter(col(measures.head) =!= 0L)
-    }
+    else sumBy(df, keys, measures).filter(col(measures.head) =!= 0L)
   }
 
   /** Continuous replication of a trace STORE over the reference's HTTP
@@ -1272,14 +1089,10 @@ object TraceStream {
                        trigger: Trigger = Trigger.AvailableNow(),
                        maxFilesPerTrigger: Option[Int] = None,
                        maxBytesPerTrigger: Option[Long] = None): StreamingQuery = {
-    val reader = spark.readStream.format("graft-cdc")
-      .option("path", storePath)
-      .option("initialLoad", initialLoad.toString)
     // at scale the bootstrap must ride the bounded-chunk path — one
     // table-sized POST loop would defeat the admission control
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    maxBytesPerTrigger.foreach(n => reader.option("maxBytesPerTrigger", n.toString))
-    reader
+    cdcReader(spark, Feed(Seq(storePath), fleet = false, None, None,
+        maxFilesPerTrigger, maxBytesPerTrigger), initialLoad)
       .load()
       .writeStream
       .queryName(s"trace-cdc-replicate-${incarnationOf(checkpointDir)}")
@@ -1327,12 +1140,8 @@ object TraceStream {
       s"tables names ${tables.size} receiving tables for ${storePaths.size} " +
         "stores — the list is positional, one table per store")
     val tableOf = storePaths.zip(tables).toMap
-    val reader = spark.readStream.format("graft-cdc")
-      .option("paths", storePaths.mkString(","))
-      .option("initialLoad", initialLoad.toString)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    maxBytesPerTrigger.foreach(n => reader.option("maxBytesPerTrigger", n.toString))
-    reader
+    cdcReader(spark, Feed(storePaths, fleet = true, None, None,
+        maxFilesPerTrigger, maxBytesPerTrigger), initialLoad)
       .load()
       .writeStream
       .queryName(s"trace-cdc-fleet-replicate-${incarnationOf(checkpointDir)}")

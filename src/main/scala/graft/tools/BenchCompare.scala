@@ -91,7 +91,7 @@ object BenchCompare {
         if (cross > maxDivergence)
           Left(f"refused: calibration diverges $cross%.2f× between artifacts " +
             f"($cc%.3f vs $cr%.3f s mean) — different machine regimes; " +
-            "re-run both in one session (the TriProbe alternation shape)")
+            "re-run both in one session, alternating (bench/DRIFT_r7.md)")
         else Right(())
       }
     } yield {

@@ -1296,49 +1296,23 @@ class CdcStreamSpec extends SparkSpec {
     assert(current() == rebuilt())
   }
 
-  test("a rollup version written as MULTIPLE files reads and merges identically") {
+  test("a rollup root still holding a merged-version v0 dir fails loudly on read and write") {
     import spark.implicits._
-    val roll = tmpDir("rollmulti")
-    def put(id: Long, rows: (String, String, Long, Long)*): Unit =
-      TraceStream.upsertDelta(spark,
-        rows.toSeq.toDF("ym", "Type", "n", "sev_sum"), id, roll, "lineage-a",
-        versionFileBytes = 1L) // 1-byte target: every merge splits maximally
-    put(0, ("201905", "ok", 2L, 20L), ("201906", "bad", 1L, 5L))
-    put(1, ("201905", "ok", 1L, 10L), ("201906", "bad", -1L, -5L))
-    val v1 = new java.io.File(roll, "v1")
-    assert(v1.listFiles.count(_.getName.endsWith(".parquet")) > 1,
-      "a 1-byte target over a non-empty base must write a multi-file version")
-    val state = TraceStream.readRollup(spark, roll)
-      .collect().map((r: Row) => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    // the emptied (201906, bad) group left; the merged group summed
-    assert(state == Set(("201905", "ok", 3L, 30L)))
-    // and the next merge reads the multi-file base correctly
-    put(2, ("201907", "ok", 4L, 40L))
-    val state2 = TraceStream.readRollup(spark, roll)
-      .collect().map((r: Row) => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    assert(state2 == Set(("201905", "ok", 3L, 30L), ("201907", "ok", 4L, 40L)))
-  }
-
-  test("a crash-orphaned incomplete rollup version is swept by the next committed version") {
-    val roll = tmpDir("rollorphan")
-    val rows = mk((10, "m1", "ok", "2019-05-13 10:00:00"))
-    TraceStream.upsertRollup(rows, 0, roll, "lineage-a")
-    // what a crash mid-version-write leaves: a version dir with data but
-    // no _SUCCESS — invisible to readers and merges, never reclaimed
-    // before (the complete-version prune only sees complete versions)
-    val orphan = java.nio.file.Paths.get(roll, "v1")
-    java.nio.file.Files.createDirectories(orphan)
-    java.nio.file.Files.write(orphan.resolve("part-00000.parquet"), Array[Byte](7))
-    // readers skip it; the next committed version sweeps it
-    assert(TraceStream.readRollup(spark, roll).count() == 1)
-    TraceStream.upsertRollup(mk((20, "m2", "ok", "2019-05-14 10:00:00")),
-      2, roll, "lineage-a")
-    assert(!java.nio.file.Files.exists(orphan),
-      "incomplete version below the committed batch must be swept")
-    assert(TraceStream.readRollup(spark, roll)
-      .agg(sum(col("n"))).collect()(0).getLong(0) == 2L)
+    val roll = tmpDir("rollv0")
+    // the retired merged-version layout: a complete v<batchId> dir
+    Seq(("201905", "ok", 1L, 10L)).toDF("ym", "Type", "n", "sev_sum")
+      .write.parquet(s"$roll/v0")
+    val onRead = intercept[IllegalArgumentException] {
+      TraceStream.readRollup(spark, roll)
+    }
+    assert(onRead.getMessage.contains("rebuild"), onRead.getMessage)
+    val onWrite = intercept[IllegalArgumentException] {
+      TraceStream.upsertRollup(mk((20, "m2", "ok", "2019-05-14 10:00:00")),
+        1, roll, "lineage-a")
+    }
+    assert(onWrite.getMessage.contains("rebuild"), onWrite.getMessage)
+    // the refused write left nothing behind that would hide the old history
+    assert(new java.io.File(roll).list().toSet == Set("v0"))
   }
 
   test("fleet index keeps per-store attribution across membership growth") {
