@@ -451,8 +451,9 @@ object Similarity {
     * Assignment is a broadcast of the centroid set + per-row fused-cosine
     * argmax; the cell join is an equi-join. The cap is what keeps the
     * index build O(n·k): an uncapped every-400th rule grows the centroid
-    * count with the corpus and turns assignment quadratic (measured by
-    * `tools/AnnStress` before the cap landed). */
+    * count with the corpus and turns assignment quadratic (measured at
+    * 500k embeddings before the cap landed; SCALE.md records the ANN
+    * stress numbers). */
   def q46IvfAnn(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.GraftFunctions.cosine_sim
     val emb = Tables.embeddings(s, dir)
@@ -597,7 +598,7 @@ object Similarity {
     * The centroid set is broadcast-small by definition, so it is collected
     * once and baked into a literal; `NearestCellExpr` then scores all k
     * cells in one compiled call per corpus row — a pure map stage, no n·k
-    * join rows, no shuffle. (Measured in `tools/AnnStress` at 200k×256:
+    * join rows, no shuffle. (Measured at 200k embeddings × 256 centroids:
     * the previous crossJoin + window formulation spent its time
     * materializing and sorting 51M joined rows, slower than brute-force
     * kNN; this form builds the index at scan speed.)

@@ -121,28 +121,37 @@ object ExprKernels {
     * dropped without changing any minimum. Returns, for `bands == 2`, the
     * two packed base-P band keys `[sig0·P+sig1, sig2·P+sig3]`; for
     * `bands == 4`, the four raw signatures — exactly the bkey values the
-    * HOF form produced (same A/B constants, same P init). Strings shorter
-    * than 3 chars return an empty array (callers filter them anyway). */
+    * HOF form produced (same A/B constants, same P init). Characters are
+    * code points, as in the HOF form (`length`/`substring`/`ascii`) and
+    * the DuckDB oracle (`unicode()`): a supplementary-plane character is
+    * one character, never two surrogate halves. Strings shorter than 3
+    * characters return an empty array (callers filter them anyway). */
   def trigramBandKeys(s: UTF8String, bands: Int): ArrayData = {
     val str = s.toString
     val n = str.length
-    if (n < 3) return new GenericArrayData(Array.emptyLongArray)
     val m0 = P; var min0 = m0; var min1 = m0; var min2 = m0; var min3 = m0
     val a0 = A(0); val a1 = A(1); val a2 = A(2); val a3 = A(3)
     val b0 = B(0); val b1 = B(1); val b2 = B(2); val b3 = B(3)
+    // sliding window over code points: c1, c2 precede the current c3
+    var c1 = 0L; var c2 = 0L
+    var seen = 0
     var i = 0
-    val last = n - 3
-    while (i <= last) {
-      val poly = str.charAt(i).toLong +
-        str.charAt(i + 1).toLong * 31L + str.charAt(i + 2).toLong * 961L
-      val tv = ((poly % P) * 2654435761L) % P
-      val v0 = (a0 * tv + b0) % P; if (v0 < min0) min0 = v0
-      val v1 = (a1 * tv + b1) % P; if (v1 < min1) min1 = v1
-      val v2 = (a2 * tv + b2) % P; if (v2 < min2) min2 = v2
-      val v3 = (a3 * tv + b3) % P; if (v3 < min3) min3 = v3
-      i += 1
+    while (i < n) {
+      val cp = str.codePointAt(i)
+      i += Character.charCount(cp)
+      seen += 1
+      if (seen >= 3) {
+        val poly = c1 + c2 * 31L + cp.toLong * 961L
+        val tv = ((poly % P) * 2654435761L) % P
+        val v0 = (a0 * tv + b0) % P; if (v0 < min0) min0 = v0
+        val v1 = (a1 * tv + b1) % P; if (v1 < min1) min1 = v1
+        val v2 = (a2 * tv + b2) % P; if (v2 < min2) min2 = v2
+        val v3 = (a3 * tv + b3) % P; if (v3 < min3) min3 = v3
+      }
+      c1 = c2; c2 = cp
     }
-    if (bands == 2) new GenericArrayData(Array(min0 * P + min1, min2 * P + min3))
+    if (seen < 3) new GenericArrayData(Array.emptyLongArray)
+    else if (bands == 2) new GenericArrayData(Array(min0 * P + min1, min2 * P + min3))
     else new GenericArrayData(Array(min0, min1, min2, min3))
   }
 

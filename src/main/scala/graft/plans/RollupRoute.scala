@@ -38,7 +38,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * At 100 TB this turns the daily dashboard family from full-corpus
   * scans into reads of a keys-cardinality table maintained incrementally
   * — by [[graft.store.TraceStore.mergeRollups]], or as a segment store
-  * by `TraceStream.maintainRollup` / `followRollup` and read back with
+  * by `TraceStream.followRollup` and read back with
   * `TraceStream.readRollup` — the write side this rule is the read
   * side of. Scope guard: the rewrite only fires for relations explicitly
   * registered in this JVM, and only when

@@ -252,31 +252,18 @@ final class CdcSource(
     }
   }
 
-  /** The files/bytes budgets a ReadLimit carries (composite = tightest
-    * of each kind); (None, None) = unbounded. */
-  private def budgets(limit: ReadLimit): (Option[Int], Option[Long]) = limit match {
-    case f: ReadMaxFiles => (Some(f.maxFiles()), None)
-    case b: ReadMaxBytes => (None, Some(b.maxBytes()))
-    case c: CompositeReadLimit =>
-      c.getReadLimits.map(budgets).foldLeft((Option.empty[Int], Option.empty[Long])) {
-        case ((f1, b1), (f2, b2)) =>
-          (Seq(f1, f2).flatten.reduceOption(_ min _),
-            Seq(b1, b2).flatten.reduceOption(_ min _))
-      }
-    case _ => (None, None)
-  }
-
-  /** Worklist index where the chunk starting at `from` ends: admit files
-    * until the files or bytes budget would be exceeded — always at least
-    * one, so an oversized file arrives alone (FileStreamSource's
-    * maxBytesPerTrigger contract; the batch is then bounded by the
-    * store's own file-size policy, which ingest and maintenance both
-    * honor). `sizeAt` is only consulted under a bytes budget, so the
-    * per-file stat pass is never paid for pure file-count admission. */
+  /** Worklist index where the chunk starting at `from` ends, and the
+    * bytes the chunk admitted: admit files until the files or bytes
+    * budget would be exceeded — always at least one, so an oversized
+    * file arrives alone (FileStreamSource's maxBytesPerTrigger contract;
+    * the batch is then bounded by the store's own file-size policy,
+    * which ingest and maintenance both honor). `sizeAt` is only
+    * consulted under a bytes budget, so the per-file stat pass is never
+    * paid for pure file-count admission (the byte sum is then 0). */
   private def admit(count: Int, sizeAt: Int => Long, from: Int,
-                    limit: ReadLimit): Int = {
-    val (mf, mb) = budgets(limit)
-    if (mf.isEmpty && mb.isEmpty) count
+                    limit: ReadLimit): (Int, Long) = {
+    val (mf, mb) = CdcSource.budgets(limit)
+    if (mf.isEmpty && mb.isEmpty) (count, 0L)
     else {
       var k = from
       var bytes = 0L
@@ -289,61 +276,7 @@ final class CdcSource(
           if (!fits) stop = true // oversized lone file admitted by itself
         } else stop = true
       }
-      k
-    }
-  }
-
-  /** Files (and bytes, when a bytes budget is in force) the offset step
-    * `prev → next` admitted — the fleet source's shared-budget
-    * accounting ([[CdcMultiSource]] with `maxStoresPerTrigger` > 1
-    * advances several children under ONE budget and needs each child's
-    * spend to shrink the next child's limit). Pure worklist-cache
-    * arithmetic; never touches data, and the byte sums are only
-    * computed under a bytes budget (no stat pass otherwise). */
-  private[sources] def admittedCost(prev: CdcOffset, next: CdcOffset,
-                                    needBytes: Boolean): (Int, Long) = {
-    def bytes(sizes: => IndexedSeq[Long], j: Int, k: Int): Long =
-      if (!needBytes) 0L else sizes.slice(j, k).sum
-    val fresh = num(prev.snapshotId) == 0
-    (next.upTo, next.fromSnapshot) match {
-      case (Some(k), None) => // bootstrap chunk
-        val j = if (!fresh && prev.snapshotId == next.snapshotId)
-          prev.upTo.getOrElse(0) else 0
-        (k - j, bytes(bootSizes(next.snapshotId), j, k))
-      case (Some(k), Some(f)) => // diff-worklist slice
-        val j = if (!fresh && prev.snapshotId == next.snapshotId &&
-          prev.fromSnapshot.contains(f)) prev.upTo.getOrElse(0) else 0
-        (k - j, bytes(diffSizes(f, next.snapshotId), j, k))
-      case (None, None) if fresh =>
-        // complete in one step: whole bootstrap, whole first diff from a
-        // user pin, or the empty first batch of a latest-start stream
-        if (initialLoad) {
-          val m = keysOf(next.snapshotId).size
-          (m, bytes(bootSizes(next.snapshotId), 0, m))
-        } else startingSnapshot match {
-          case Some(f0) =>
-            val m = diffKeys(f0, next.snapshotId).size
-            (m, bytes(diffSizes(f0, next.snapshotId), 0, m))
-          case None => (0, 0L)
-        }
-      case (None, None) if prev.snapshotId == next.snapshotId =>
-        // closing slice of a chunked diff/bootstrap (the complete offset)
-        (prev.upTo, prev.fromSnapshot) match {
-          case (Some(j), Some(f)) =>
-            val m = diffKeys(f, next.snapshotId).size
-            (m - j, bytes(diffSizes(f, next.snapshotId), j, m))
-          case (Some(j), None) =>
-            val m = keysOf(next.snapshotId).size
-            (m - j, bytes(bootSizes(next.snapshotId), j, m))
-          case _ => (0, 0L)
-        }
-      case (None, None) =>
-        // whole unchunked diff prev → next
-        val m = diffKeys(prev.snapshotId, next.snapshotId).size
-        (m, bytes(diffSizes(prev.snapshotId, next.snapshotId), 0, m))
-      case (None, Some(_)) => throw new IllegalStateException(
-        s"graft-cdc: offset ${next.json} (diff base without a chunk index) " +
-          "is never constructed")
+      (k, bytes)
     }
   }
 
@@ -387,47 +320,53 @@ final class CdcSource(
   }
 
   override def getDefaultReadLimit: ReadLimit =
-    (maxFilesPerTrigger, maxBytesPerTrigger) match {
-      case (Some(f), Some(b)) =>
-        ReadLimit.compositeLimit(Array(ReadLimit.maxFiles(f), ReadLimit.maxBytes(b)))
-      case (Some(f), None) => ReadLimit.maxFiles(f)
-      case (None, Some(b)) => ReadLimit.maxBytes(b)
-      case _ => ReadLimit.allAvailable()
-    }
+    CdcSource.readLimit(maxFilesPerTrigger, maxBytesPerTrigger)
 
   override def initialOffset(): OffsetV2 = CdcOffset.Start
 
-  /** The next offset after `start` — at most one bounded step. Fresh
-    * streams pin the current state (first chunk of it when chunking
-    * applies); mid-bootstrap advances one chunk of the SAME pin;
-    * mid-diff advances one slice of the SAME frozen worklist (the final
-    * slice lands as the complete offset, releasing the diff's base pin
-    * to commit-GC); complete offsets step toward change only when the
-    * live file set moved — as a bounded chunked diff under
-    * `maxFilesPerTrigger` — else echo `start` verbatim (idle = no
-    * batch, no pin). */
-  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 =
+    step(start, limit)._1
+
+  /** The next offset after `start` — at most one bounded step — with
+    * the files and bytes [[admit]] admitted to reach it (bytes only
+    * under a bytes budget). Fresh streams pin the current state (first
+    * chunk of it when chunking applies); mid-bootstrap advances one
+    * chunk of the SAME pin; mid-diff advances one slice of the SAME
+    * frozen worklist (the final slice lands as the complete offset,
+    * releasing the diff's base pin to commit-GC); complete offsets step
+    * toward change only when the live file set moved — as a bounded
+    * chunked diff under `maxFilesPerTrigger` — else echo `start`
+    * verbatim (idle = no batch, no pin). The fleet source
+    * ([[CdcMultiSource]]) charges each child's admitted files and bytes
+    * to its shared budget. */
+  private[sources] def step(start: OffsetV2, limit: ReadLimit): (CdcOffset, Int, Long) = {
     // the engine passes null (not initialOffset) before the first batch
     val s = Option(start).map(CdcOffset.of).getOrElse(CdcOffset.Start)
-    val unbounded = budgets(limit) == ((None, None))
+    var files = 0
+    var bytes = 0L
+    // one admission-controlled chunk of a `count`-file worklist from
+    // index k, recording what it admitted
+    def chunkEnd(count: Int, sizeAt: Int => Long, k: Int): Int = {
+      val (end, b) = admit(count, sizeAt, k, limit)
+      files = end - k; bytes = b
+      end
+    }
     def bootStep(id: String, k: Int): Int =
-      admit(keysOf(id).size, i => bootSizes(id)(i), k, limit)
-    def diffChunkEnd(fromId: String, toId: String, k: Int): Int =
-      admit(diffKeys(fromId, toId).size, i => diffSizes(fromId, toId)(i), k, limit)
-    // one admission-controlled step from complete-at-fromId toward toId:
-    // a small diff arrives whole; a table-scale one (retention sweep,
-    // mass erase) arrives as bounded worklist slices
-    def diffStep(fromId: String, toId: String): CdcOffset = {
-      val m = diffKeys(fromId, toId).size
-      val n = if (unbounded) m else diffChunkEnd(fromId, toId, 0)
-      if (n >= m) CdcOffset(toId) else CdcOffset(toId, Some(n), Some(fromId))
+      chunkEnd(keysOf(id).size, i => bootSizes(id)(i), k)
+    // one admission-controlled slice of the fromId → toId worklist from
+    // index k: a small diff arrives whole; a table-scale one (retention
+    // sweep, mass erase) arrives as bounded slices, the last of which
+    // lands as the complete offset
+    def diffStep(fromId: String, toId: String, k: Int = 0): CdcOffset = {
+      val n = chunkEnd(diffKeys(fromId, toId).size, i => diffSizes(fromId, toId)(i), k)
+      if (n >= diffKeys(fromId, toId).size) CdcOffset(toId)
+      else CdcOffset(toId, Some(n), Some(fromId))
     }
     def firstChunkOf(o: CdcOffset): CdcOffset =
-      if (unbounded) o
+      if (CdcSource.budgets(limit) == ((None, None))) o
       else if (initialLoad) {
-        val m = keysOf(o.snapshotId).size
         val n = bootStep(o.snapshotId, 0)
-        if (n >= m) o else CdcOffset(o.snapshotId, Some(n))
+        if (n >= keysOf(o.snapshotId).size) o else CdcOffset(o.snapshotId, Some(n))
       } else startingSnapshot match {
         case Some(f) => diffStep(f, o.snapshotId)
         case None => o
@@ -442,9 +381,7 @@ final class CdcSource(
         CdcOffset(id, Some(bootStep(id, k)))
       // mid-diff: one more slice of the same frozen worklist
       case CdcOffset(id, Some(k), Some(f)) if k < diffKeys(f, id).size =>
-        val m = diffKeys(f, id).size
-        val k2 = if (unbounded) m else diffChunkEnd(f, id, k)
-        if (k2 >= m) CdcOffset(id) else CdcOffset(id, Some(k2), Some(f))
+        diffStep(f, id, k)
       // complete (chunked-complete or plain): advance only on change
       case CdcOffset(id, _, _) => target match {
         case Some(t) => if (t.snapshotId == id) s else diffStep(id, t.snapshotId)
@@ -468,7 +405,7 @@ final class CdcSource(
       availableNowTarget = Some(CdcOffset(endId))
       availableNowPending = false
     }
-    next
+    (next, files, bytes)
   }
 
   override def getOffset: Option[OffsetV1] =
@@ -594,6 +531,34 @@ final class CdcSource(
   override def stop(): Unit = ()
 
   override def toString: String = s"CdcSource[$path]"
+}
+
+object CdcSource {
+  /** The files/bytes budgets a ReadLimit carries (composite = tightest
+    * of each kind); (None, None) = unbounded. */
+  private[sources] def budgets(limit: ReadLimit): (Option[Int], Option[Long]) = limit match {
+    case f: ReadMaxFiles => (Some(f.maxFiles()), None)
+    case b: ReadMaxBytes => (None, Some(b.maxBytes()))
+    case c: CompositeReadLimit =>
+      c.getReadLimits.map(budgets).foldLeft((Option.empty[Int], Option.empty[Long])) {
+        case ((f1, b1), (f2, b2)) =>
+          (Seq(f1, f2).flatten.reduceOption(_ min _),
+            Seq(b1, b2).flatten.reduceOption(_ min _))
+      }
+    case _ => (None, None)
+  }
+
+  /** Files/bytes budgets → the ReadLimit carrying them: a stream's
+    * default limit, and the remaining shared budget [[CdcMultiSource]]
+    * hands its next child. */
+  private[sources] def readLimit(files: Option[Int], bytes: Option[Long]): ReadLimit =
+    (files, bytes) match {
+      case (Some(f), Some(b)) =>
+        ReadLimit.compositeLimit(Array(ReadLimit.maxFiles(f), ReadLimit.maxBytes(b)))
+      case (Some(f), None) => ReadLimit.maxFiles(f)
+      case (None, Some(b)) => ReadLimit.maxBytes(b)
+      case _ => ReadLimit.allAvailable()
+    }
 }
 
 /** Offset = the id of a snapshot pin this stream created; during an
@@ -759,19 +724,6 @@ final class CdcMultiSource(
   override def initialOffset(): OffsetV2 =
     CdcMultiOffset(0, IndexedSeq.fill(children.size)(CdcOffset.Start))
 
-  /** One admission-bounded step of up to `maxStoresPerTrigger` children
-    * per trigger, scanning round-robin from the offset's `next` cursor
-    * under ONE shared files/bytes budget — the batch stays bounded by
-    * the configured budgets no matter how many children move, while a
-    * large-N fleet of trickle changes drains in N/k triggers instead of
-    * N. Each advanced child's admitted cost ([[CdcSource.admittedCost]])
-    * shrinks the budget handed to the next candidate; the scan stops at
-    * k advances, an exhausted budget, or one full lap. A child whose
-    * part is the Start sentinel has never run — it is handed `null`,
-    * the engine's before-first-batch convention. Idle fleet ⇒ every
-    * child echoes ⇒ the composite echoes `start` verbatim (no batch, no
-    * pins). The cursor lands after the LAST advanced child, so fairness
-    * is preserved across triggers at any k. */
   /** A logged composite offset grown to the CURRENT fleet width: a
     * checkpoint written before stores were appended carries fewer parts,
     * and the missing tail is exactly the newcomers — which start at the
@@ -789,33 +741,50 @@ final class CdcMultiSource(
       IndexedSeq.fill(children.size - o.parts.size)(CdcOffset.Start))
   }
 
+  /** One admission-bounded step of up to `maxStoresPerTrigger` children
+    * per trigger, scanning round-robin from the offset's `next` cursor
+    * under ONE shared files/bytes budget — the batch stays bounded by
+    * the configured budgets no matter how many children move, while a
+    * large-N fleet of trickle changes drains in N/k triggers instead of
+    * N. Each advanced child's admitted files and bytes, returned by the
+    * same [[CdcSource.step]] call that chose its offset, shrink the
+    * budget handed to the next candidate; the scan stops at k advances,
+    * an exhausted budget, or one full lap. A child whose part is the
+    * Start sentinel has never run — it is handed `null`, the engine's
+    * before-first-batch convention. Idle fleet ⇒ every child echoes ⇒
+    * the composite echoes `start` verbatim (no batch, no pins). The
+    * cursor lands after the LAST advanced child, so fairness is
+    * preserved across triggers at any k. */
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
     val s = Option(start).map(o => grown(CdcMultiOffset.of(o)))
       .getOrElse(CdcMultiOffset(0, IndexedSeq.fill(children.size)(CdcOffset.Start)))
     val order = (s.next until children.size) ++ (0 until s.next)
     val parts = Array(s.parts: _*)
-    var (remFiles, remBytes) = CdcMultiSource.budgetsOf(limit)
-    val tracking = remFiles.isDefined || remBytes.isDefined
+    var (remFiles, remBytes) = CdcSource.budgets(limit)
     var advanced = 0
     var lastAdvanced = -1
     var exhausted = false
     order.iterator
       .takeWhile(_ => advanced < maxStoresPerTrigger && !exhausted)
       .foreach { i =>
-        val childLimit = CdcMultiSource.limitOf(remFiles, remBytes)
         val prev = parts(i)
         val engineStart: OffsetV2 = if (prev == CdcOffset.Start) null else prev
-        val next = CdcOffset.of(children(i).latestOffset(engineStart, childLimit))
-        if (next != prev) {
+        val (next, files, bytes) =
+          children(i).step(engineStart, CdcSource.readLimit(remFiles, remBytes))
+        if (advanced > 0 && remBytes.exists(_ < bytes)) {
+          // only the child that opens the batch may bring one oversized
+          // file; a later child's lone file past the remaining bytes
+          // waits for a trigger it opens (a pin its step took is an own
+          // pin, so commit-GC drops it)
+          exhausted = true
+        } else if (next != prev) {
           parts(i) = next; advanced += 1; lastAdvanced = i
-          if (tracking) {
-            val (cf, cb) = children(i).admittedCost(prev, next, remBytes.isDefined)
-            remFiles = remFiles.map(_ - cf)
-            remBytes = remBytes.map(_ - cb)
-            // a lone oversized admission may overdraw — both floors stop
-            // the scan (the next child would get a zero or negative budget)
-            exhausted = remFiles.exists(_ <= 0) || remBytes.exists(_ <= 0L)
-          }
+          remFiles = remFiles.map(_ - files)
+          remBytes = remBytes.map(_ - bytes)
+          // the opening child's oversized file may overdraw — both floors
+          // stop the scan (the next child would get a zero or negative
+          // budget)
+          exhausted = remFiles.exists(_ <= 0) || remBytes.exists(_ <= 0L)
         }
       }
     if (advanced == 0) if (start != null) start else initialOffset()
@@ -851,34 +820,6 @@ final class CdcMultiSource(
   override def stop(): Unit = children.foreach(_.stop())
 
   override def toString: String = s"CdcMultiSource[${paths.mkString(",")}]"
-}
-
-object CdcMultiSource {
-  /** The files/bytes budgets a ReadLimit carries (tightest of each kind
-    * under a composite); (None, None) = unbounded. */
-  private[sources] def budgetsOf(limit: ReadLimit): (Option[Int], Option[Long]) =
-    limit match {
-      case f: ReadMaxFiles => (Some(f.maxFiles()), None)
-      case b: ReadMaxBytes => (None, Some(b.maxBytes()))
-      case c: CompositeReadLimit =>
-        c.getReadLimits.map(budgetsOf)
-          .foldLeft((Option.empty[Int], Option.empty[Long])) {
-            case ((f1, b1), (f2, b2)) =>
-              (Seq(f1, f2).flatten.reduceOption(_ min _),
-                Seq(b1, b2).flatten.reduceOption(_ min _))
-          }
-      case _ => (None, None)
-    }
-
-  /** Remaining budgets → the ReadLimit handed to the next child. */
-  private[sources] def limitOf(files: Option[Int], bytes: Option[Long]): ReadLimit =
-    (files, bytes) match {
-      case (Some(f), Some(b)) =>
-        ReadLimit.compositeLimit(Array(ReadLimit.maxFiles(f), ReadLimit.maxBytes(b)))
-      case (Some(f), None) => ReadLimit.maxFiles(f)
-      case (None, Some(b)) => ReadLimit.maxBytes(b)
-      case _ => ReadLimit.allAvailable()
-    }
 }
 
 /** Composite offset: a per-store [[CdcOffset]] (positional, option

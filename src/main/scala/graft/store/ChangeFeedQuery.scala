@@ -36,10 +36,8 @@ object ChangeFeedQuery {
   private val built = new graft.util.SessionDirCache[(String, String)]
 
   /** events → trace-store rows; same closed-form mapping discipline as
-    * [[EvolutionQuery.asTrace]] so the oracle reproduces every value
-    * (shared with `tools/CdcProbe` so the probe's store shape can never
-    * drift from the oracle-gated one). */
-  private[graft] def asTrace(ev: DataFrame): DataFrame =
+    * [[EvolutionQuery.asTrace]] so the oracle reproduces every value. */
+  private def asTrace(ev: DataFrame): DataFrame =
     ev.select(
       pmod(col("event_id"), lit(1000000000L)).cast(IntegerType).as("Severity"),
       concat(lit("m"), pmod(col("user_id"), lit(8L))).as("Machine"),
@@ -77,10 +75,9 @@ object ChangeFeedQuery {
     * +inserts, −deletes). Decomposable measures (count, sum) merge by
     * signed summation, so maintaining a 100 TB rollup across arbitrary
     * store maintenance costs one pass over the CHANGES — never a
-    * re-aggregation of the accumulated table, and (unlike
-    * [[TraceStream.upsertRollup]]'s append-only batches) it stays
-    * correct across DELETE WHERE / retention, because deletes arrive as
-    * negative increments. The oracle recomputes the final state from the
+    * re-aggregation of the accumulated table, and (unlike a rollup fed
+    * from append-only ingest batches) it stays correct across DELETE
+    * WHERE / retention, because deletes arrive as negative increments. The oracle recomputes the final state from the
     * raw events table, so a sign error, a compaction leak (spurious
     * insert+delete pairs cancel — but only if BOTH sides arrive), or a
     * missed delete fails the hash gate. */
@@ -161,7 +158,7 @@ object ChangeFeedQuery {
       // replayed batch must OVERWRITE its own partition directory, never
       // blind-append into the shared output (a mid-drain crash would
       // otherwise double-write the batch and fail the hash gate) — the
-      // same replay-safe discipline upsertRollup documents
+      // same replay-safe discipline the segment store keeps
       val sink: (DataFrame, Long) => Unit = (bdf, bid) => {
         bdf.write.mode("overwrite").parquet(s"$outDir/batch=$bid")
         ()

@@ -1097,11 +1097,6 @@ object TraceStore {
       .filter(_.nonEmpty).sorted
   }
 
-  /** Number of files a snapshot's manifest pins — the chunk-progress
-    * denominator for an admission-controlled bootstrap (metadata read). */
-  def snapshotFileCount(tablePath: String, id: String): Int =
-    snapshotKeys(tablePath, id).size
-
   /** Byte size of each manifest key, resolved live-or-retired — the
     * admission-control weight for byte-bounded chunking (one stat per
     * listed file, metadata only; a vacuumed key weighs 0 and the read
@@ -1138,8 +1133,9 @@ object TraceStore {
 
   /** Alias-aware scan of manifest keys, each resolved to its live path
     * (not yet superseded) or its `_retired/` one (superseded but pinned)
-    * — the shared read kernel of [[readSnapshot]] and the snapshot-diff
-    * readers. Fails loudly on a vacuumed key: no honest read exists. */
+    * — the shared read kernel of [[readSnapshot]], [[readAppendedSince]]
+    * and the snapshot-diff readers. Fails loudly on a vacuumed key: no
+    * honest read exists. */
   private def readResolvedKeys(spark: SparkSession, root: java.nio.file.Path,
                                keys: Seq[String], what: String): DataFrame = {
     import java.nio.file.Files
@@ -1205,21 +1201,7 @@ object TraceStore {
     require(rewritten.isEmpty,
       s"maintenance rewrote pinned file(s) since $id (e.g. ${rewritten.take(3).mkString(", ")})" +
         " — the increment is no longer append-only; re-base on a fresh snapshot")
-    val newKeys = (live -- pinned).toSeq.sorted
-    val stored = storedSchema(root)
-    if (newKeys.isEmpty)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        logicalWithYm(stored))
-    else
-      resolveAliases(
-        spark.read.option("basePath", root.toString)
-          .schema(org.apache.spark.sql.types.StructType(
-            physicalSchema(stored).fields :+
-            org.apache.spark.sql.types.StructField(TraceSchema.PartitionCol,
-              org.apache.spark.sql.types.StringType)))
-          .parquet(newKeys.map(k => root.resolve(k).toString): _*),
-        stored, Seq(TraceSchema.PartitionCol))
+    readResolvedKeys(spark, root, (live -- pinned).toSeq.sorted, s"appended since $id")
   }
 
   /** Row-level change feed since `id`, SURVIVING maintenance rewrites —
@@ -1256,24 +1238,15 @@ object TraceStore {
     * install-then-delete window, so run the feed on the maintenance
     * cadence, not concurrently with it — or pin a fresh snapshot first
     * and use [[readChangesBetween]], whose both sides are immutable
-    * manifests. */
-  def readChangesSince(spark: SparkSession, tablePath: String, id: String): DataFrame =
-    readChangesSince(spark, tablePath, id, None)
-
-  /** [[readChangesSince]] with a row predicate pushed below the diff —
-    * same distribution argument (and same column-pruning caveat) as the
-    * filtered [[readChangesBetween]]. */
+    * manifests.
+    *
+    * `rowFilter` and `monthFilter` push a row predicate below the diff
+    * and prune the changed-file worklist by month before any file I/O —
+    * same soundness arguments and caller contract as in
+    * [[readChangesBetween]]. */
   def readChangesSince(spark: SparkSession, tablePath: String, id: String,
-                       rowFilter: Option[org.apache.spark.sql.Column]): DataFrame =
-    readChangesSince(spark, tablePath, id, rowFilter, None)
-
-  /** [[readChangesSince]] with the changed-file worklist pruned by a
-    * month predicate before any file I/O — see the filtered
-    * [[readChangesBetween]] for the soundness argument and the caller
-    * contract (prune only months the row filters already exclude). */
-  def readChangesSince(spark: SparkSession, tablePath: String, id: String,
-                       rowFilter: Option[org.apache.spark.sql.Column],
-                       monthFilter: Option[String => Boolean]): DataFrame = {
+                       rowFilter: Option[org.apache.spark.sql.Column] = None,
+                       monthFilter: Option[String => Boolean] = None): DataFrame = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val root = Paths.get(tablePath)
@@ -1327,28 +1300,21 @@ object TraceStore {
     * `_change` relative to the `toId` state ("insert" = arrived,
     * "delete" = left). `fromId`/`toId` need not be ordered — swapping
     * them flips the signs, which is the algebra a reconciliation job
-    * expects. Cost ∝ files that differ, never the table. */
-  def readChangesBetween(spark: SparkSession, tablePath: String,
-                         fromId: String, toId: String): DataFrame =
-    readChangesBetween(spark, tablePath, fromId, toId, None)
-
-  /** [[readChangesBetween]] with a row predicate pushed BELOW the diff:
-    * a deterministic per-row filter over the data columns distributes
-    * over multiset difference (`filter(f)(A ⊖ B) = filter(f)(A) ⊖
+    * expects. Cost ∝ files that differ, never the table.
+    *
+    * `rowFilter` pushes a row predicate BELOW the diff: a deterministic
+    * per-row filter over the data columns distributes over multiset
+    * difference (`filter(f)(A ⊖ B) = filter(f)(A) ⊖
     * filter(f)(B)` — membership of a row in either side depends only on
     * that row), so both candidate sides filter before the signed pass
     * and Catalyst pushes the predicate into the parquet scans. The I/O
     * saving a filtering CDC consumer expects: changed files are still
     * the pruning unit, but only matching ROWS of them are read. NOT
     * sound for column pruning (projection below the diff can cancel
-    * rows that differ only in dropped columns) — prune ABOVE the diff. */
-  def readChangesBetween(spark: SparkSession, tablePath: String,
-                         fromId: String, toId: String,
-                         rowFilter: Option[org.apache.spark.sql.Column]): DataFrame =
-    readChangesBetween(spark, tablePath, fromId, toId, rowFilter, None)
-
-  /** [[readChangesBetween]] with the changed-file WORKLIST pruned by a
-    * month predicate before any file I/O — the partition-level
+    * rows that differ only in dropped columns) — prune ABOVE the diff.
+    *
+    * `monthFilter` prunes the changed-file WORKLIST by a month
+    * predicate before any file I/O — the partition-level
     * completion of the row-filter pushdown: a month-scoped consumer
     * (`WHERE ym = '202401'`) of a table-scale rewrite schedules and
     * opens only that month's changed files, not every changed file with
@@ -1365,8 +1331,8 @@ object TraceStore {
     * row filters). */
   def readChangesBetween(spark: SparkSession, tablePath: String,
                          fromId: String, toId: String,
-                         rowFilter: Option[org.apache.spark.sql.Column],
-                         monthFilter: Option[String => Boolean]): DataFrame = {
+                         rowFilter: Option[org.apache.spark.sql.Column] = None,
+                         monthFilter: Option[String => Boolean] = None): DataFrame = {
     val keys = changedKeysBetween(tablePath, fromId, toId)
     val work = monthFilter.fold(keys)(p => keys.filter(k => p(monthValueOf(k._1))))
     readChangedKeys(spark, tablePath, work, s"changes $fromId..$toId", rowFilter)

@@ -264,21 +264,6 @@ object TraceStream {
   def readRollup(spark: SparkSession, rollupPath: String): DataFrame =
     readIndex(spark, rollupPath, RollupKeys, RollupMeasures)
 
-  /** One maintenance step: fold a normalized micro-batch into the stored
-    * rollup as one segment-store step ([[upsertSegment]]): the batch's
-    * (ym, Type) counts land as an O(batch) segment, and every
-    * `compactOver`-th state change folds the table. Crash-safe and
-    * replay-idempotent: parts are `_SUCCESS`-gated dirs named by batch
-    * id, so a replayed batch (foreachBatch is at-least-once) finds its
-    * own part and adds nothing, and a crash mid-write leaves a dir no
-    * reader sees. */
-  def upsertRollup(batch: DataFrame, batchId: Long, rollupPath: String,
-                   incarnation: String = "default"): Unit =
-    upsertSegment(batch.sparkSession,
-      sumBy(rollRows(batch, date_format(col("Time"), "yyyyMM").as("ym"), lit(1L)),
-        RollupKeys, RollupMeasures),
-      batchId, rollupPath, incarnation, RollupKeys, RollupMeasures, DefaultCompactOver)
-
   /** ROLLING month-scope migration for a maintained rollup — the
     * production "last N months" that ADVANCES. The months spec is part
     * of the offset contract and therefore pinned per checkpoint
@@ -328,47 +313,14 @@ object TraceStream {
     pin
   }
 
-  /** Streaming materialized-view maintenance (B6 incremental form —
-    * the SummingMergeTree analogue running live): keep the persistent
-    * (ym, Type) rollup current per micro-batch. One maintainer per
-    * rollupPath; the checkpoint serializes batch ids. The checkpoint is
-    * derived from cfg's with a `-rollup` suffix so one Config can drive
-    * both `start` (ingest) and this maintainer — sharing the literal
-    * checkpoint dir would make the second query fail or silently resume
-    * from the first one's committed offsets.
-    *
-    * WARNING: when one Config drives both queries, `deleteOnSuccess`
-    * must stay false — with `cleanSource=delete` each query deletes
-    * files it commits, and the OTHER query (separate checkpoint, own
-    * pace) never sees whatever the faster one deleted first: rows
-    * silently missing from the store or the rollup. Delete-on-success
-    * is a single-consumer contract. */
-  def maintainRollup(spark: SparkSession, cfg: Config, rollupPath: String): StreamingQuery = {
-    require(!cfg.deleteOnSuccess,
-      "deleteOnSuccess with a rollup maintainer loses files: two queries " +
-      "watch the dir and whichever commits first deletes what the other has " +
-      "not yet read — run the maintainer off the ingested store instead")
-    val ckpt = cfg.checkpointDir.stripSuffix("/") + "-rollup"
-    var inc: String = null   // resolved on first batch — metadata exists by then
-    TraceIngest.normalize(source(spark, cfg))
-      .writeStream
-      .queryName("trace-rollup-maintain")
-      .option("checkpointLocation", ckpt)
-      .trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (inc == null) inc = lineageOf(batch.sparkSession, ckpt)
-        upsertRollup(batch, batchId, rollupPath, inc)
-      }
-      .start()
-  }
-
-  /** CDC-DRIVEN rollup maintenance as a running stream — q227's signed
-    * algebra made operational: follow a trace STORE's change feed
-    * (`format("graft-cdc")`, offsets = pinned snapshots) and fold each
-    * micro-batch's signed increments into the stored rollup. Unlike
-    * [[maintainRollup]] (which folds the ingest's append-only
-    * micro-batches), this maintainer stays correct across the store's
-    * OWN maintenance: DELETE WHERE / retention arrive as negative
+  /** Streaming materialized-view maintenance (B6 incremental form, the
+    * SummingMergeTree analogue running live) and the one maintainer of
+    * the (ym, Type) rollup — q227's signed algebra made operational:
+    * follow a trace STORE's change feed (`format("graft-cdc")`, offsets
+    * = pinned snapshots) and fold each micro-batch's signed increments
+    * into the stored rollup. Because it reads the store rather than the
+    * ingest's files, it stays correct across the store's OWN
+    * maintenance: DELETE WHERE / retention arrive as negative
     * increments, compaction arrives as an empty batch, and a group whose
     * count reaches zero leaves the rollup. The first batch is the full
     * table as inserts (`initialLoad`); a `startingSnapshot` instead

@@ -59,23 +59,6 @@ object Shim {
   def flushListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
-  /** Execute a (non-AQE) Dataset's compiled plan and report, per file
-    * scan node, how many rows the scan DECODED — the row-group-skipping
-    * observable: with a pushed filter, min/max/bloom-skipped row groups
-    * never decode, so this number falling far below the store's row
-    * count is direct evidence data skipping engaged (task bytes-read
-    * metrics mis-attribute under nested-plan relations; this reads the
-    * scan's own SQLMetric). Returns (result rows, decoded rows). */
-  def countWithScanRows(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-    val qe = df.queryExecution
-    val n = qe.executedPlan.execute().count()
-    val decoded = qe.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numOutputRows").value
-    }.sum
-    (n, decoded)
-  }
-
   /** Session timezone (driver side) — what `to_json`/`toJSON` serialize
     * timestamps in; connectors capture it at plan time so their output
     * matches the built-in serializers byte-for-byte. */

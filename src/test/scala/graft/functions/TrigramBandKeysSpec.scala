@@ -48,24 +48,29 @@ class TrigramBandKeysSpec extends SparkSpec {
     }
   }
 
-  test("non-ASCII BMP text matches (UTF-16-unit indexing, the kernel-family convention)") {
+  test("non-ASCII text matches, supplementary plane included (code-point indexing)") {
     import spark.implicits._
-    val keys = Seq("ümlaut/é/σ123", "日本語のキー/type/42", "mix€d/票/xyz")
+    // the last keys carry supplementary-plane characters (surrogate
+    // pairs in UTF-16): each is ONE character to the kernel, as to the
+    // HOF form and the DuckDB oracle — "a😀b" is a single trigram
+    val keys = Seq("ümlaut/é/σ123", "日本語のキー/type/42", "mix€d/票/xyz",
+      "m😀/type/𝄞42", "a😀b", "😀😀😀")
     val df = keys.toDF("key")
     for (bands <- Seq(2, 4)) {
       val got = df.select(
         nativeBandKeys(col("key"), bands).as("nat"),
         hofBandKeys(col("key"), bands).as("hof"))
       assert(got.filter(col("nat") =!= col("hof")).count() === 0,
-        s"bands=$bands: kernel diverged on BMP text")
+        s"bands=$bands: kernel diverged on non-ASCII text")
     }
   }
 
   test("short strings yield an empty array (callers filter length >= 3 anyway)") {
     import spark.implicits._
-    val got = Seq("", "a", "ab").toDF("key")
+    // "😀😀" is two characters (four UTF-16 units)
+    val got = Seq("", "a", "ab", "😀😀").toDF("key")
       .select(size(nativeBandKeys(col("key"), 2)).as("n"))
       .collect().map(_.getInt(0)).toSeq
-    assert(got === Seq(0, 0, 0))
+    assert(got === Seq(0, 0, 0, 0))
   }
 }

@@ -1201,7 +1201,8 @@ class CdcStreamSpec extends SparkSpec {
 
   test("maxStoresPerTrigger advances several stores per trigger under ONE shared budget") {
     val a = tmpDir("cdck-a"); val b = tmpDir("cdck-b"); val c = tmpDir("cdck-c")
-    def drainMulti(ck: String, opts: Map[String, String]): Seq[(Long, Seq[(Int, String)])] = {
+    def drainMulti(ck: String, opts: Map[String, String],
+                   paths: Seq[String] = Seq(a, b, c)): Seq[(Long, Seq[(Int, String)])] = {
       val buf = scala.collection.mutable.ArrayBuffer[(Long, Seq[(Int, String)])]()
       val fn: (DataFrame, Long) => Unit = (df, id) => {
         buf += ((id, df.select("Severity", "_store").collect()
@@ -1209,7 +1210,7 @@ class CdcStreamSpec extends SparkSpec {
         ()
       }
       val q = spark.readStream.format("graft-cdc")
-        .option("paths", s"$a,$b,$c").options(opts)
+        .option("paths", paths.mkString(",")).options(opts)
         .load()
         .writeStream.option("checkpointLocation", ck)
         .trigger(Trigger.AvailableNow()).foreachBatch(fn).start()
@@ -1244,6 +1245,37 @@ class CdcStreamSpec extends SparkSpec {
     assert(boot3.size == 3, s"shared 1-file budget must split the drain: $boot3")
     boot3.foreach { case (id, rows) =>
       assert(rows.map(_._2).distinct.size == 1, s"batch $id mixes stores under a 1-file budget")
+    }
+    // a shared BYTES budget: d holds two files, e and f one each, one row
+    // per file. The budget fits d's two files plus one byte, so d fills
+    // the first batch and e's file (bigger than the byte left) waits:
+    // only the store that opens a batch may bring one oversized file
+    val d = tmpDir("cdck-d"); val e = tmpDir("cdck-e"); val f = tmpDir("cdck-f")
+    TraceStore.append(mk(
+      (41, "m4", "ok", "2019-05-13 10:00:00"),
+      (42, "m4", "ok", "2019-06-13 10:00:00")), d, splitsPerMonth = 1)
+    TraceStore.append(mk((51, "m5", "ok", "2019-05-13 10:00:00")), e)
+    TraceStore.append(mk((61, "m6", "ok", "2019-05-13 10:00:00")), f)
+    val sizeOf: Map[Int, Long] = Seq(d, e, f).flatMap { p =>
+      val ws = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(ws.iterator()).asScala.filter { x =>
+        x.toString.endsWith(".parquet") && x.getParent.getFileName.toString.startsWith("ym=")
+      }.map { x =>
+        spark.read.parquet(x.toString).select("Severity").head().getInt(0) ->
+          java.nio.file.Files.size(x)
+      }.toList finally ws.close()
+    }.toMap
+    assert(sizeOf.keySet == Set(41, 42, 51, 61), s"one data file per row: $sizeOf")
+    val budget = sizeOf(41) + sizeOf(42) + 1
+    val byBytes = drainMulti(tmpDir("cdck-ck4"),
+      Map("initialLoad" -> "true", "maxBytesPerTrigger" -> budget.toString,
+        "maxStoresPerTrigger" -> "3"), Seq(d, e, f))
+    assert(byBytes.flatMap(_._2.map(_._1)).sorted == Seq(41, 42, 51, 61))
+    assert(byBytes.head._2.map(_._1) == Seq(41, 42), s"d's two files fill batch 1: $byBytes")
+    byBytes.foreach { case (id, rows) =>
+      val bytes = rows.map(r => sizeOf(r._1)).sum
+      assert(bytes <= budget || rows.size == 1,
+        s"batch $id admitted $bytes bytes past the $budget-byte budget: $rows")
     }
     // the option is fleet-only
     val exs = intercept[IllegalArgumentException] {
@@ -1306,11 +1338,14 @@ class CdcStreamSpec extends SparkSpec {
       TraceStream.readRollup(spark, roll)
     }
     assert(onRead.getMessage.contains("rebuild"), onRead.getMessage)
-    val onWrite = intercept[IllegalArgumentException] {
-      TraceStream.upsertRollup(mk((20, "m2", "ok", "2019-05-14 10:00:00")),
-        1, roll, "lineage-a")
+    val store = tmpDir("rollv0-store")
+    TraceStore.append(mk((20, "m2", "ok", "2019-05-14 10:00:00")), store)
+    val onWrite = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      TraceStream.followRollup(spark, store, roll, tmpDir("rollv0-ck")).awaitTermination()
     }
-    assert(onWrite.getMessage.contains("rebuild"), onWrite.getMessage)
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(onWrite).exists(_.contains("rebuild")), messages(onWrite))
     // the refused write left nothing behind that would hide the old history
     assert(new java.io.File(roll).list().toSet == Set("v0"))
   }

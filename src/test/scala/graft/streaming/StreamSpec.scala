@@ -147,59 +147,25 @@ class StreamSpec extends SparkSpec {
     assert(rows.toSeq == Seq(("Role", "control-plane")))
   }
 
-  test("maintained rollup equals recomputation and survives batch replay") {
-    val watch = tmpDir("watch4"); val ckpt = tmpDir("ckpt4"); val roll = tmpDir("roll4")
-    writeTrace(watch, "trace.1.json", 1557761852L, 5)
-    writeTrace(watch, "trace.2.json", 1557765452L, 7)
-    val cfg = TraceStream.Config(watch, tmpDir("unused4"), ckpt,
-      maxFilesPerTrigger = 1)                       // force 2 micro-batches
-    val q = TraceStream.maintainRollup(spark, cfg, roll)
-    q.awaitTermination()
-    def snap() = TraceStream.readRollup(spark, roll)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
-    val got = snap()
-    assert(got == Set(("201905", "Role", 12L, 120L)))   // 12 rows, Severity 10 each
-    // replay: re-applying the LAST batch id WITHIN THE SAME CHECKPOINT
-    // LINEAGE must rebuild, not double-count
-    val replayBatch = graft.ingest.TraceIngest.readBatch(spark, s"$watch/trace.2.json")
-    val lastId = 1L
-    val inc = TraceStream.lineageOf(spark, ckpt.stripSuffix("/") + "-rollup")
-    // the lineage must be the checkpoint's query id, not a path hash —
-    // a wiped-in-place checkpoint then yields a DIFFERENT lineage
-    assert(inc != TraceStream.incarnationOf(ckpt.stripSuffix("/") + "-rollup"))
-    TraceStream.upsertRollup(replayBatch, lastId, roll, inc)
-    assert(snap() == got)
-    // a DIFFERENT lineage against the same rollup path must fail loudly
-    // (batch ids are incomparable across checkpoints — silent skip would
-    // drop data, silent merge would double-count)
-    val ex = intercept[IllegalArgumentException] {
-      TraceStream.upsertRollup(replayBatch, lastId, roll, "other-lineage")
-    }
-    assert(ex.getMessage.contains("lineage"))
-    // same lineage string but RESTARTED batch ids (the path-hash-fallback
-    // wipe-in-place shape): a complete version ahead of the current batch
-    // must fail loudly, never merge under a stale current version
-    val ex2 = intercept[IllegalArgumentException] {
-      TraceStream.upsertRollup(replayBatch, 0L, roll, inc)
-    }
-    assert(ex2.getMessage.contains("wiped in place"))
-  }
-
   test("maintained rollup + store stay consistent across mid-stream rename/widen evolution") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, StringType, StructField}
-    // round-8 task 5: the two newest subsystems meet — the store evolves
-    // (widen a base column, add + rename an evolved one) BETWEEN
-    // micro-batches while both the ingest stream and the rollup
-    // maintainer run over the same checkpoint lineage; the rollup must
-    // stay equal to a full recompute across the boundary and the store's
-    // read path must resolve every generation of files in one scan
+    // the store evolves (widen a base column, add + rename an evolved
+    // one) BETWEEN micro-batches while the ingest stream and the rollup
+    // maintainer (followRollup, over the store's change feed) each resume
+    // their own checkpoint; the rollup must stay equal to a full
+    // recompute across the boundary and the store's read path must
+    // resolve every generation of files in one scan
     val watch = tmpDir("watch-roll-evo"); val table = tmpDir("table-roll-evo")
     val ckpt = tmpDir("ckpt-roll-evo"); val roll = tmpDir("roll-evo")
+    val rollCk = tmpDir("ckpt-roll-evo-follow")
     writeTrace(watch, "trace.1.json", 1557761852L, 5)          // hour 15
     val cfg = TraceStream.Config(watch, table, ckpt, maxFilesPerTrigger = 1)
     TraceStream.start(spark, cfg).awaitTermination()
-    TraceStream.maintainRollup(spark, cfg, roll).awaitTermination()
+    TraceStream.followRollup(spark, table, roll, rollCk).awaitTermination()
+    // the rollup's lineage is its checkpoint's query id, not a path hash
+    // — a checkpoint wiped in place then yields a DIFFERENT lineage
+    assert(TraceStream.lineageOf(spark, rollCk) != TraceStream.incarnationOf(rollCk))
     // live operator actions between micro-batches: widen a base ingest
     // column, add an evolved column, rename it — all metadata-only
     TraceStore.widenColumn(table, "Severity", LongType)
@@ -207,7 +173,9 @@ class StreamSpec extends SparkSpec {
     TraceStore.renameColumn(table, "Region", "Zone")
     writeTrace(watch, "trace.2.json", 1557765452L, 7)          // hour 16
     TraceStream.start(spark, cfg).awaitTermination()           // same lineage
-    TraceStream.maintainRollup(spark, cfg, roll).awaitTermination()
+    // the restarted follower adopts the evolved schema and resumes from
+    // its checkpointed offset
+    TraceStream.followRollup(spark, table, roll, rollCk).awaitTermination()
     // store: one scan resolves pre-widen int32 files + post-widen int64
     // files + the renamed column (null for every file — no batch ever
     // carried it)
