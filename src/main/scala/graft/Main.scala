@@ -151,13 +151,15 @@ object Main {
       |  --table NAME            catalog table       (GRAFT_TABLE | CLICKHOUSE_TABLE)
       |  --table-path PATH       store location      (GRAFT_TABLE_PATH)
       |  --table-paths A,B,…     store FLEET (comma-separated list) for
-      |                          --follow-rollup / --follow-index: one
+      |                          --follow-rollup / --follow-index /
+      |                          --seed-index / --replicate: one
       |                          checkpoint over N stores; exclusive with
       |                          --table-path (which is always ONE literal
       |                          path — never split)
       |  --months SPEC           month-scope a --follow-rollup/--follow-index
-      |                          stream (e.g. '>=202401' or '202401,202402');
-      |                          fixed per checkpoint
+      |                          stream or a --seed-index census (e.g.
+      |                          '>=202401' or '202401,202402'); fixed per
+      |                          checkpoint
       |  --starting-snapshot ID  with --follow-index / --follow-rollup:
       |                          follow changes from this pin (the
       |                          --seed-index / --migrate-months handoff)
@@ -177,12 +179,14 @@ object Main {
       |  --compact-over N        compact months above N files (default 16)
       |  --compact-every N       with --watch: every N batches, drop expired
       |                          months and compact (TTL + background merges)
-      |  --max-files N           max files per micro-batch (default 64;
-      |                          with --follow-rollup/--replicate: bounds
-      |                          every CDC batch, bootstrap AND diffs)
-      |  --max-bytes N           with --follow-rollup/--replicate: byte
-      |                          budget per CDC micro-batch (composes
-      |                          with --max-files, tightest wins)
+      |  --max-files N           max files per micro-batch (default 64 with
+      |                          --watch; with --follow-rollup /
+      |                          --follow-index / --replicate: bounds every
+      |                          CDC batch, bootstrap AND diffs)
+      |  --max-bytes N           with --follow-rollup / --follow-index /
+      |                          --replicate: byte budget per CDC
+      |                          micro-batch (composes with --max-files,
+      |                          tightest wins)
       |  --splits N              write splits per month partition (default 8)
       |  --completion-file NAME  exit when <log-dir>/NAME appears
       |                          (WATCH_COMPLETION_FILE)""".stripMargin

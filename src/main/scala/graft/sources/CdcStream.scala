@@ -43,23 +43,30 @@ import graft.store.TraceStore
   *    resume position lives in the engine's own offset log, nowhere
   *    else. An idle store returns the start offset unchanged and pins
   *    nothing.
-  *  - '''getBatch(a, b) = readChangesBetween(a, b)''' — file-set-pruned
-  *    signed row diff: cost ∝ files that changed, never the table; a
-  *    compaction between two offsets cancels row-for-row and delivers
-  *    an EMPTY batch. At 100 TB the untouched bulk of the store never
-  *    appears in any micro-batch's plan.
+  *  - '''getBatch(a, b) = one slice of one worklist.''' A worklist is
+  *    the ordered list of manifest keys a read covers, of one of two
+  *    kinds: the BOOTSTRAP worklist (the end pin's sorted, month-scoped
+  *    manifest, read as inserts by [[TraceStore.readKeys]]) or the DIFF
+  *    worklist (the signed changed-file list between two pins,
+  *    [[TraceStore.changedKeysBetween]], read by
+  *    [[TraceStore.readChangedKeys]]). The offset pair names the kind
+  *    and the slice `[from, until)`; a whole bootstrap or diff is
+  *    `[0, size)`. A diff's cost is ∝ files that changed, never the
+  *    table; a compaction between two offsets cancels row-for-row and
+  *    delivers an EMPTY batch. Worklists are computed ONCE per pin or
+  *    transition and cached (manifests are immutable), so `latestOffset`
+  *    and `getBatch` share one list and every replay re-slices it
+  *    identically.
   *  - '''Bounded bootstrap AND bounded diffs''': with
-  *    `maxFilesPerTrigger`, the `initialLoad` arrives as sorted-manifest
-  *    slices (sub-snapshot offsets `{"snapshot":…,"upto":n}`), and every
-  *    post-bootstrap diff arrives as slices of the signed changed-file
-  *    worklist (offsets `{"snapshot":…,"from":…,"upto":n}`) — at most
-  *    that many files per micro-batch, so a table-scale retention
-  *    rewrite between two offsets is bounded batches, not one
-  *    rewrite-sized batch. Worklists are computed ONCE per transition
-  *    and cached (both manifests immutable); the final slice lands as
-  *    the complete offset, releasing the diff's base pin to commit-GC.
-  *    `Trigger.AvailableNow` runs every chunk to the prepared target
-  *    before terminating (`SupportsTriggerAvailableNow`).
+  *    `maxFilesPerTrigger`/`maxBytesPerTrigger`, the `initialLoad`
+  *    arrives as bootstrap slices (sub-snapshot offsets
+  *    `{"snapshot":…,"upto":n}`), and every post-bootstrap diff as diff
+  *    slices (offsets `{"snapshot":…,"from":…,"upto":n}`) — at most the
+  *    budget per micro-batch, so a table-scale retention rewrite between
+  *    two offsets is bounded batches, not one rewrite-sized batch. The
+  *    final slice lands as the complete offset, releasing the diff's base
+  *    pin to commit-GC. `Trigger.AvailableNow` runs every chunk to the
+  *    prepared target before terminating (`SupportsTriggerAvailableNow`).
   *  - '''commit(end) garbage-collects this stream's own pins''' below
   *    the committed offset (tracked durably under the stream's
   *    checkpoint `sources/` metadata dir, so GC survives restarts) and
@@ -109,10 +116,7 @@ final class CdcSource(
   // they surface as EMPTY batches (the pin advances; nothing is read).
   private val monthOk: Option[String => Boolean] =
     months.map(CdcStreamProvider.monthsPredicate)
-  private def monthValueOf(key: String): String =
-    key.takeWhile(_ != '/').stripPrefix(s"${graft.schema.TraceSchema.PartitionCol}=")
-  private def monthScoped(keys: IndexedSeq[String]): IndexedSeq[String] =
-    monthOk.fold(keys)(p => keys.filter(k => p(monthValueOf(k))))
+  private def inScope(key: String): Boolean = monthOk.forall(_(TraceStore.monthOf(key)))
 
   override val schema: StructType = CdcStreamProvider.feedSchema(path)
 
@@ -198,59 +202,23 @@ final class CdcSource(
     CdcOffset(id)
   }
 
-  // manifest cache: one metadata read per snapshot id for the whole
-  // bootstrap (manifests are immutable), instead of one per chunk.
-  // Month-scoped streams cache the FILTERED list — chunk offsets index
-  // into it, and the filter is a pure function of the immutable manifest
-  // plus the checkpoint-pinned spec, so replays slice identically.
-  @volatile private var keysCache: (String, IndexedSeq[String]) = null
-  private def keysOf(id: String): IndexedSeq[String] = {
-    val c = keysCache
-    if (c != null && c._1 == id) c._2
-    else {
-      val ks = monthScoped(TraceStore.snapshotKeys(path, id))
-      keysCache = (id, ks)
-      ks
+  // worklist caches, one entry each: a pin's bootstrap list, a
+  // transition's diff list, and their file sizes (stat'd only under a
+  // bytes budget) are pure functions of immutable manifests, so every
+  // chunk of one bootstrap or diff — and the getBatch after the step that
+  // chose it — reads them once. Month-scoped streams cache the FILTERED
+  // lists: chunk offsets index into them, and the spec is fixed per
+  // checkpoint, so replays slice identically.
+  private val keysOf: String => IndexedSeq[String] =
+    CdcSource.lastOf(id => TraceStore.snapshotKeys(path, id).filter(inScope))
+  private val diffKeys: ((String, String)) => IndexedSeq[(String, Boolean)] =
+    CdcSource.lastOf { case (fromId, toId) =>
+      TraceStore.changedKeysBetween(path, fromId, toId).filter(e => inScope(e._1))
     }
-  }
-
-  // changed-file worklist cache: one pair of manifest reads per
-  // (from, to) transition for all its chunks (both manifests immutable);
-  // month-filtered like the bootstrap list above
-  @volatile private var diffCache: ((String, String), IndexedSeq[(String, Boolean)]) = null
-  private def diffKeys(fromId: String, toId: String): IndexedSeq[(String, Boolean)] = {
-    val c = diffCache
-    if (c != null && c._1 == ((fromId, toId))) c._2
-    else {
-      val ks0 = TraceStore.changedKeysBetween(path, fromId, toId)
-      val ks = monthOk.fold(ks0)(p => ks0.filter(e => p(monthValueOf(e._1))))
-      diffCache = ((fromId, toId), ks)
-      ks
-    }
-  }
-
-  // file-size caches for byte-budgeted admission: one stat per file per
-  // snapshot/transition, computed only when a bytes budget is in force
-  @volatile private var bootSizesCache: (String, IndexedSeq[Long]) = null
-  private def bootSizes(id: String): IndexedSeq[Long] = {
-    val c = bootSizesCache
-    if (c != null && c._1 == id) c._2
-    else {
-      val sz = TraceStore.keyBytes(path, keysOf(id))
-      bootSizesCache = (id, sz)
-      sz
-    }
-  }
-  @volatile private var diffSizesCache: ((String, String), IndexedSeq[Long]) = null
-  private def diffSizes(fromId: String, toId: String): IndexedSeq[Long] = {
-    val c = diffSizesCache
-    if (c != null && c._1 == ((fromId, toId))) c._2
-    else {
-      val sz = TraceStore.keyBytes(path, diffKeys(fromId, toId).map(_._1))
-      diffSizesCache = ((fromId, toId), sz)
-      sz
-    }
-  }
+  private val bootSizes: String => IndexedSeq[Long] =
+    CdcSource.lastOf(id => TraceStore.keyBytes(path, keysOf(id)))
+  private val diffSizes: ((String, String)) => IndexedSeq[Long] =
+    CdcSource.lastOf(t => TraceStore.keyBytes(path, diffKeys(t).map(_._1)))
 
   /** Worklist index where the chunk starting at `from` ends, and the
     * bytes the chunk admitted: admit files until the files or bytes
@@ -358,13 +326,13 @@ final class CdcSource(
     // sweep, mass erase) arrives as bounded slices, the last of which
     // lands as the complete offset
     def diffStep(fromId: String, toId: String, k: Int = 0): CdcOffset = {
-      val n = chunkEnd(diffKeys(fromId, toId).size, i => diffSizes(fromId, toId)(i), k)
-      if (n >= diffKeys(fromId, toId).size) CdcOffset(toId)
+      val t = (fromId, toId)
+      val n = chunkEnd(diffKeys(t).size, i => diffSizes(t)(i), k)
+      if (n >= diffKeys(t).size) CdcOffset(toId)
       else CdcOffset(toId, Some(n), Some(fromId))
     }
     def firstChunkOf(o: CdcOffset): CdcOffset =
-      if (CdcSource.budgets(limit) == ((None, None))) o
-      else if (initialLoad) {
+      if (initialLoad) {
         val n = bootStep(o.snapshotId, 0)
         if (n >= keysOf(o.snapshotId).size) o else CdcOffset(o.snapshotId, Some(n))
       } else startingSnapshot match {
@@ -380,7 +348,7 @@ final class CdcSource(
       case CdcOffset(id, Some(k), None) if k < keysOf(id).size =>
         CdcOffset(id, Some(bootStep(id, k)))
       // mid-diff: one more slice of the same frozen worklist
-      case CdcOffset(id, Some(k), Some(f)) if k < diffKeys(f, id).size =>
+      case CdcOffset(id, Some(k), Some(f)) if k < diffKeys((f, id)).size =>
         diffStep(f, id, k)
       // complete (chunked-complete or plain): advance only on change
       case CdcOffset(id, _, _) => target match {
@@ -413,83 +381,70 @@ final class CdcSource(
       "graft-cdc implements SupportsAdmissionControl; the engine calls " +
         "latestOffset(start, limit) instead of getOffset")
 
-  /** Slice (j, k] of the changed-file worklist between two pins, as
-    * signed rows. Any partition of the worklist sums to exactly the
-    * whole diff (signed row algebra is additive over file sets); a
-    * rewrite's cancelling pair split across slices surfaces as
-    * insert+delete of the same row in different batches — net zero for
-    * every signed consumer (rollup maintenance, `_sign` replication). */
-  private def sliceDiff(fromId: String, toId: String, j: Int, k: Int): DataFrame =
-    if (j >= k) null
-    else TraceStore.readChangedKeys(spark, path,
-      diffKeys(fromId, toId).slice(j, k), s"changes $fromId..$toId")
-
+  /** One batch = one slice `[j, k)` of one immutable worklist: the
+    * end pin's month-scoped sorted manifest read as inserts (`base` =
+    * None: a bootstrap), or the signed changed-file list `base → end`
+    * (a diff). A whole bootstrap or diff is the slice `[0, size)`; a
+    * chunk runs from the start offset's index to the end offset's. Any
+    * partition of a diff worklist sums to exactly the whole diff (signed
+    * row algebra is additive over file sets); a rewrite's cancelling
+    * pair split across slices surfaces as insert+delete of the same row
+    * in different batches — net zero for every signed consumer (rollup
+    * maintenance, `_sign` replication). */
   override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
     val endOff = CdcOffset.of(end)
     val endId = endOff.snapshotId
     // the engine may hand initialOffset back as a real start; it means
     // "nothing delivered yet", i.e. the same thing as None
     val from = start.map(CdcOffset.of).filter(o => num(o.snapshotId) > 0)
-    val df = (from, endOff.upTo, endOff.fromSnapshot) match {
-      // diff chunk: worklist slice between the diff's base and endId
-      case (f, Some(k), Some(base)) =>
-        val j = f match {
-          case Some(CdcOffset(`endId`, Some(prev), Some(`base`))) => prev
-          case Some(CdcOffset(`base`, _, _)) => 0 // complete at the base
-          case None => 0 // fresh stream chunking from startingSnapshot
-          case Some(other) => throw new IllegalStateException(
-            s"graft-cdc: diff chunk $base..$endId cannot follow offset ${other.json}")
-        }
-        sliceDiff(base, endId, j, k)
-      // bootstrap chunk: sorted-manifest slice of the pinned snapshot
-      case (f, Some(k), None) =>
-        val j = f match {
-          case Some(CdcOffset(`endId`, Some(prev), None)) => prev
-          case None => 0
-          case Some(other) => throw new IllegalStateException(
-            s"graft-cdc: bootstrap chunk of $endId cannot follow offset ${other.json}")
-        }
-        if (j >= k) null
-        else TraceStore.readKeys(spark, path,
-          keysOf(endId).slice(j, k), s"snapshot $endId")
-          .withColumn("_change", lit("insert"))
-      case (Some(s), None, None) if s.snapshotId == endId =>
-        s.fromSnapshot match {
-          // final slice of a chunked diff (the complete offset closes it)
-          case Some(base) =>
-            sliceDiff(base, endId, s.upTo.getOrElse(0), diffKeys(base, endId).size)
-          case None => null
-        }
-      case (Some(s), None, None) =>
-        if (s.fromSnapshot.isDefined) throw new IllegalStateException(
-          s"graft-cdc: complete offset $endId cannot follow a mid-diff " +
-            s"offset of another snapshot (${s.json})")
-        TraceStore.readChangesBetween(spark, path, s.snapshotId, endId, None, monthOk)
-      case (None, None, None) if initialLoad =>
-        // CDC bootstrap in one piece (no maxFilesPerTrigger): the
-        // consumer materializes state from one full load, then follows
-        // increments — the first batch is the pinned table AS inserts.
-        // Month-scoped: read the filtered manifest keys instead (the
-        // prune is metadata-level here too; an all-filtered pin is an
-        // empty batch, not a zero-path scan)
-        monthOk match {
-          case Some(_) =>
-            val ks = keysOf(endId)
-            if (ks.isEmpty) null
-            else TraceStore.readKeys(spark, path, ks, s"snapshot $endId")
-              .withColumn("_change", lit("insert"))
-          case None =>
-            TraceStore.readSnapshot(spark, path, endId)
-              .withColumn("_change", lit("insert"))
-        }
-      case (None, None, None) => startingSnapshot match {
-        case Some(s) => TraceStore.readChangesBetween(spark, path, s, endId, None, monthOk)
-        case None => null
+    def sizeOf(base: Option[String]): Int =
+      base.fold(keysOf(endId).size)(b => diffKeys((b, endId)).size)
+    def whole(base: Option[String], j: Int = 0) = Some((base, j, sizeOf(base)))
+    val slice: Option[(Option[String], Int, Int)] =
+      (from, endOff.upTo, endOff.fromSnapshot) match {
+        // diff chunk: worklist slice between the diff's base and endId
+        case (f, Some(k), Some(base)) =>
+          val j = f match {
+            case Some(CdcOffset(`endId`, Some(prev), Some(`base`))) => prev
+            case Some(CdcOffset(`base`, _, _)) => 0 // complete at the base
+            case None => 0 // fresh stream chunking from startingSnapshot
+            case Some(other) => throw new IllegalStateException(
+              s"graft-cdc: diff chunk $base..$endId cannot follow offset ${other.json}")
+          }
+          Some((Some(base), j, k))
+        // bootstrap chunk: sorted-manifest slice of the pinned snapshot
+        case (f, Some(k), None) =>
+          val j = f match {
+            case Some(CdcOffset(`endId`, Some(prev), None)) => prev
+            case None => 0
+            case Some(other) => throw new IllegalStateException(
+              s"graft-cdc: bootstrap chunk of $endId cannot follow offset ${other.json}")
+          }
+          Some((None, j, k))
+        // the complete offset closes a chunked diff with its final slice
+        case (Some(s), None, None) if s.snapshotId == endId =>
+          s.fromSnapshot.flatMap(base => whole(Some(base), s.upTo.getOrElse(0)))
+        case (Some(s), None, None) =>
+          if (s.fromSnapshot.isDefined) throw new IllegalStateException(
+            s"graft-cdc: complete offset $endId cannot follow a mid-diff " +
+              s"offset of another snapshot (${s.json})")
+          whole(Some(s.snapshotId))
+        // CDC bootstrap in one piece: the consumer materializes state
+        // from one full load, then follows increments
+        case (None, None, None) if initialLoad => whole(None)
+        case (None, None, None) => startingSnapshot.flatMap(base => whole(Some(base)))
+        // a diff-marked end without a chunk index is never constructed
+        case (f, _, _) => throw new IllegalStateException(
+          s"graft-cdc: unrecognized offset pair start=${f.map(_.json)} end=${endOff.json}")
       }
-      // a diff-marked end without a chunk index is never constructed
-      case (f, _, _) => throw new IllegalStateException(
-        s"graft-cdc: unrecognized offset pair start=${f.map(_.json)} end=${endOff.json}")
-    }
+    val df = slice.collect {
+      case (None, j, k) if j < k =>
+        TraceStore.readKeys(spark, path, keysOf(endId).slice(j, k), s"snapshot $endId")
+          .withColumn("_change", lit("insert"))
+      case (Some(base), j, k) if j < k =>
+        TraceStore.readChangedKeys(spark, path,
+          diffKeys((base, endId)).slice(j, k), s"changes $base..$endId")
+    }.orNull
     if (df == null) Shim.emptyStreaming(spark, schema)
     else {
       val got = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
@@ -534,6 +489,13 @@ final class CdcSource(
 }
 
 object CdcSource {
+  /** `f` memoized for its most recent argument (one entry, replaced
+    * atomically). */
+  private def lastOf[K, V](f: K => V): K => V = {
+    val last = new java.util.concurrent.atomic.AtomicReference[(K, V)]
+    k => Option(last.get).filter(_._1 == k).fold { val v = f(k); last.set((k, v)); v }(_._2)
+  }
+
   /** The files/bytes budgets a ReadLimit carries (composite = tightest
     * of each kind); (None, None) = unbounded. */
   private[sources] def budgets(limit: ReadLimit): (Option[Int], Option[Long]) = limit match {

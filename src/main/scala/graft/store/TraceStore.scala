@@ -560,29 +560,9 @@ object TraceStore {
     *     maintenance cadence, not against latency-critical readers.)
     * Returns the list of compacted ym values. */
   def compact(spark: SparkSession, tablePath: String,
-              maxFilesPerMonth: Int = 16, splitsPerMonth: Int = 4): Seq[String] = {
-    import java.nio.file.{Files, Path, Paths}
-    val root = Paths.get(tablePath)
-    if (!Files.exists(root)) return Seq.empty
-
-    import FsMaint.listDir
-    def parquetFiles(p: Path): Seq[Path] =
-      listDir(p).filter(_.toString.endsWith(".parquet"))
-
-    val monthDirs = listDir(root).filter(p => Files.isDirectory(p) &&
-      p.getFileName.toString.startsWith(s"${TraceSchema.PartitionCol}="))
-
-    // ---- crash recovery: finish or roll back a previous attempt (shared
-    // with deleteWhere — see recoverAttempts for the protocol argument)
-    recoverAttempts(root)
-
-    monthDirs
-      .map(d => (d, parquetFiles(d)))               // capture-first file set
-      .filter(_._2.size > maxFilesPerMonth)
-      .map { case (monthDir, old) =>
-        rewriteMonth(spark, monthDir, old, identity, splitsPerMonth, "compacted")
-      }
-  }
+              maxFilesPerMonth: Int = 16, splitsPerMonth: Int = 4): Seq[String] =
+    rewriteMonths(spark, tablePath, (_, old) => old.size > maxFilesPerMonth,
+      identity, splitsPerMonth, "compacted")
 
   /** Re-layout every month on a chosen clustering key — the
     * `ALTER TABLE … ORDER BY` / OPTIMIZE-ZORDER analogue: each month is
@@ -611,21 +591,9 @@ object TraceStore {
     * correctness change. Returns the rewritten ym values. */
   def clusterMonths(spark: SparkSession, tablePath: String,
                     by: Seq[String], splitsPerMonth: Int = 4): Seq[String] = {
-    import java.nio.file.{Files, Paths}
     require(by.nonEmpty, "clusterMonths needs at least one layout column")
-    val root = Paths.get(tablePath)
-    if (!Files.exists(root)) return Seq.empty
-    recoverAttempts(root)
-    import FsMaint.listDir
-    val monthDirs = listDir(root).filter(p => Files.isDirectory(p) &&
-      p.getFileName.toString.startsWith(s"${TraceSchema.PartitionCol}="))
-    monthDirs
-      .map(d => (d, listDir(d).filter(_.toString.endsWith(".parquet"))))
-      .filter(_._2.nonEmpty)
-      .map { case (monthDir, old) =>
-        rewriteMonth(spark, monthDir, old, identity, splitsPerMonth,
-          "clustered", layoutBy = by)
-      }
+    rewriteMonths(spark, tablePath, (_, old) => old.nonEmpty, identity, splitsPerMonth,
+      "clustered", layoutBy = by)
   }
 
   /** Predicate erasure — the `ALTER TABLE … DELETE WHERE` / GDPR-redaction
@@ -641,32 +609,17 @@ object TraceStore {
   def deleteWhere(spark: SparkSession, tablePath: String,
                   cond: org.apache.spark.sql.Column,
                   splitsPerMonth: Int = 4,
-                  layoutBy: Seq[String] = Seq("Time")): Seq[String] = {
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(tablePath)
-    if (!Files.exists(root)) return Seq.empty
-    recoverAttempts(root)
-    import FsMaint.listDir
-    val monthDirs = listDir(root).filter(p => Files.isDirectory(p) &&
-      p.getFileName.toString.startsWith(s"${TraceSchema.PartitionCol}="))
-    monthDirs
-      .map(d => (d, listDir(d).filter(_.toString.endsWith(".parquet"))))
-      .filter { case (_, old) =>
-        old.nonEmpty && readFiles(spark, root, old).filter(cond).limit(1).count() > 0
-      }
-      .map { case (monthDir, old) =>
-        // SQL DELETE semantics: only cond=TRUE rows go. A bare !cond maps
-        // NULL→NULL and filter would drop every row where the predicate
-        // is merely UNKNOWN (e.g. ID === "x" on a NULL ID) — silent
-        // over-erasure the match probe above never counted.
-        // layoutBy lets maintenance on a [[clusterMonths]]-laid-out store
-        // PRESERVE the clustering instead of silently reverting rewritten
-        // months to the Time layout.
-        rewriteMonth(spark, monthDir, old,
-          _.filter(!coalesce(cond, lit(false))), splitsPerMonth, "redacted",
-          layoutBy = layoutBy)
-      }
-  }
+                  layoutBy: Seq[String] = Seq("Time")): Seq[String] =
+    // SQL DELETE semantics: only cond=TRUE rows go. A bare !cond maps
+    // NULL→NULL and filter would drop every row where the predicate
+    // is merely UNKNOWN (e.g. ID === "x" on a NULL ID) — silent
+    // over-erasure the match probe never counted.
+    // layoutBy lets maintenance on a [[clusterMonths]]-laid-out store
+    // PRESERVE the clustering instead of silently reverting rewritten
+    // months to the Time layout.
+    rewriteMonths(spark, tablePath, (_, old) => anyRow(spark, tablePath, old, cond),
+      _.filter(!coalesce(cond, lit(false))), splitsPerMonth, "redacted",
+      layoutBy = layoutBy)
 
   /** Month-partition retention — the MergeTree `TTL … DELETE` /
     * `ALTER TABLE DROP PARTITION` analogue, the standard trace-log
@@ -694,24 +647,17 @@ object TraceStore {
     val root = Paths.get(tablePath)
     if (!Files.exists(root)) return Seq.empty
     recoverAttempts(root)   // also clears any previous drop's .trash-* orphans
-    import FsMaint.{listDir, deleteTree}
     val refs = snapshotRefs(root)
-    listDir(root)
-      .filter { p =>
-        val n = p.getFileName.toString
-        Files.isDirectory(p) && n.startsWith(s"${TraceSchema.PartitionCol}=") &&
-          n.stripPrefix(s"${TraceSchema.PartitionCol}=") < cutoffYm
-      }
-      .map { monthDir =>
-        val ym = monthDir.getFileName.toString.stripPrefix(s"${TraceSchema.PartitionCol}=")
-        listDir(monthDir)
-          .filter(f => f.toString.endsWith(".parquet") &&
-            refs.contains(fileKey(monthDir, f.getFileName.toString)))
+    monthDirs(root).map(d => d -> monthOf(d.getFileName.toString))
+      .filter(_._2 < cutoffYm)
+      .map { case (monthDir, ym) =>
+        parquetFiles(monthDir)
+          .filter(f => refs.contains(fileKey(monthDir, f.getFileName.toString)))
           .foreach(f => retireOrDelete(root, monthDir, f.getFileName.toString, refs))
         val trash = monthDir.resolveSibling(
           s".trash-$ym-${java.util.UUID.randomUUID().toString.take(8)}")
         Files.move(monthDir, trash, StandardCopyOption.ATOMIC_MOVE)
-        deleteTree(trash)
+        FsMaint.deleteTree(trash)
         ym
       }
   }
@@ -726,21 +672,20 @@ object TraceStore {
     * cost stays O(dropped files), zero data read. Returns dropped yms. */
   def retainLastMonths(tablePath: String, months: Int): Seq[String] = {
     require(months >= 1, s"months must be >= 1, got $months")
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(tablePath)
-    if (!Files.exists(root)) return Seq.empty
-    val yms = FsMaint.listDir(root).flatMap { p =>
-      val n = p.getFileName.toString
-      if (Files.isDirectory(p) && n.startsWith(s"${TraceSchema.PartitionCol}="))
-        Some(n.stripPrefix(s"${TraceSchema.PartitionCol}=")).filter(_.matches("\\d{6}"))
-      else None
-    }
-    if (yms.isEmpty) return Seq.empty
-    val newest = yms.max
-    val cut = java.time.YearMonth.of(newest.take(4).toInt, newest.drop(4).toInt)
-      .minusMonths((months - 1).toLong)
-    dropPartitionsBefore(tablePath, f"${cut.getYear}%04d${cut.getMonthValue}%02d")
+    keepCutoff(java.nio.file.Paths.get(tablePath), months)
+      .fold(Seq.empty[String])(dropPartitionsBefore(tablePath, _))
   }
+
+  /** The oldest month a keep-the-newest-`months` window retains: the
+    * newest ym present (by data time) minus `months − 1`; None for a
+    * store with no month partition. */
+  private def keepCutoff(root: java.nio.file.Path, months: Int): Option[String] =
+    monthDirs(root).map(d => monthOf(d.getFileName.toString))
+      .filter(_.matches("\\d{6}")).maxOption.map { newest =>
+        val cut = java.time.YearMonth.of(newest.take(4).toInt, newest.drop(4).toInt)
+          .minusMonths((months - 1).toLong)
+        f"${cut.getYear}%04d${cut.getMonthValue}%02d"
+      }
 
   /** Downsampling retention — the "thin old data instead of deleting it"
     * TTL shape (ClickHouse expresses it as a `TTL … WHERE`-guarded delete
@@ -769,20 +714,8 @@ object TraceStore {
     require(keepExactMonths >= 1, s"keepExactMonths must be >= 1, got $keepExactMonths")
     require(k >= 1, s"k must be >= 1, got $k")
     if (k == 1) return Seq.empty // 1-in-1 keeps everything
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(tablePath)
-    if (!Files.exists(root)) return Seq.empty
-    recoverAttempts(root)
-    import FsMaint.listDir
-    val pref = s"${TraceSchema.PartitionCol}="
-    val months = listDir(root).filter(p => Files.isDirectory(p) &&
-      p.getFileName.toString.startsWith(pref))
-    val yms = months.map(_.getFileName.toString.stripPrefix(pref)).filter(_.matches("\\d{6}"))
-    if (yms.isEmpty) return Seq.empty
-    val newest = yms.max
-    val cut = java.time.YearMonth.of(newest.take(4).toInt, newest.drop(4).toInt)
-      .minusMonths((keepExactMonths - 1).toLong)
-    val cutoff = f"${cut.getYear}%04d${cut.getMonthValue}%02d"
+    // a store with no month partition has no cutoff: "" selects nothing
+    val cutoff = keepCutoff(java.nio.file.Paths.get(tablePath), keepExactMonths).getOrElse("")
     // the keep hash is pinned to the BASE columns AT THEIR BASE TYPES on
     // purpose: base columns exist in every file forever (they cannot be
     // dropped or renamed), and the cast undoes any later widenColumn —
@@ -794,15 +727,9 @@ object TraceStore {
       xxhash64(TraceSchema.target.fields
         .map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*),
       lit(k.toLong)) === 0L
-    months
-      .filter(_.getFileName.toString.stripPrefix(pref) < cutoff)
-      .map(d => (d, listDir(d).filter(_.toString.endsWith(".parquet"))))
-      .filter { case (_, old) => // probe: anything left to drop?
-        old.nonEmpty && readFiles(spark, root, old).filter(!keep).limit(1).count() > 0
-      }
-      .map { case (monthDir, old) =>
-        rewriteMonth(spark, monthDir, old, _.filter(keep), splitsPerMonth, "thinned")
-      }
+    rewriteMonths(spark, tablePath,
+      (ym, old) => ym < cutoff && anyRow(spark, tablePath, old, !keep), // anything left to drop?
+      _.filter(keep), splitsPerMonth, "thinned")
   }
 
   // ------------------------------------------------------------------ snapshots (time travel)
@@ -815,32 +742,19 @@ object TraceStore {
   private def fileKey(monthDir: java.nio.file.Path, name: String): String =
     s"${monthDir.getFileName}/$name"
 
-  /** Union of file keys referenced by every snapshot manifest — loaded
-    * ONCE per maintenance entry point (metadata-sized; manifests are
-    * file lists, never data). */
   /** The current live file set (month-partition parquet keys) — the
     * store's state fingerprint: two instants with equal live sets hold
     * identical rows (files are immutable and never reused). One
     * directory listing; metadata-only at any scale. */
-  private def liveKeys(root: java.nio.file.Path): Set[String] = {
-    import java.nio.file.Files
-    val pref = s"${TraceSchema.PartitionCol}="
-    FsMaint.listDir(root)
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(pref))
-      .flatMap(d => FsMaint.listDir(d).filter(_.toString.endsWith(".parquet"))
-        .map(f => fileKey(d, f.getFileName.toString)))
+  private def liveKeys(root: java.nio.file.Path): Set[String] =
+    monthDirs(root).flatMap(d => parquetFiles(d).map(f => fileKey(d, f.getFileName.toString)))
       .toSet
-  }
 
-  private def snapshotRefs(root: java.nio.file.Path): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    val dir = root.resolve(SnapDir)
-    if (!java.nio.file.Files.exists(dir)) Set.empty
-    else FsMaint.listDir(dir)
-      .filter(_.getFileName.toString.matches("s\\d{6,}"))
-      .flatMap(p => java.nio.file.Files.readAllLines(p).asScala)
-      .filter(_.nonEmpty).toSet
-  }
+  /** Union of file keys referenced by every snapshot manifest — loaded
+    * ONCE per maintenance entry point (metadata-sized; manifests are
+    * file lists, never data). */
+  private def snapshotRefs(root: java.nio.file.Path): Set[String] =
+    listSnapshots(root.toString).flatMap(manifestKeys(root, _)).toSet
 
   /** Retire a superseded live file if any snapshot still references it
     * (atomic move into `_retired/` preserving the ym= layout — names are
@@ -994,13 +908,10 @@ object TraceStore {
     * store must not grow a pin per trigger. One directory listing + one
     * manifest read — metadata-only at any scale. */
   def snapshotMatchesLive(tablePath: String, id: String): Boolean = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(tablePath)
-    val mf = root.resolve(SnapDir).resolve(id)
-    if (!Files.exists(mf)) return false
+    val root = java.nio.file.Paths.get(tablePath)
+    if (!java.nio.file.Files.exists(root.resolve(SnapDir).resolve(id))) return false
     recoverAttempts(root)
-    Files.readAllLines(mf).asScala.toSet.filter(_.nonEmpty) == liveKeys(root)
+    manifestKeys(root, id).toSet == liveKeys(root)
   }
 
   /** Cheap fingerprint of the live file set: the root's and each month
@@ -1022,9 +933,7 @@ object TraceStore {
   def liveFingerprint(tablePath: String): String = {
     import java.nio.file.{Files, Paths}
     val root = Paths.get(tablePath)
-    val pref = s"${TraceSchema.PartitionCol}="
-    val parts = FsMaint.listDir(root)
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(pref))
+    val parts = monthDirs(root)
       .map(p => s"${p.getFileName}@${Files.getLastModifiedTime(p).toInstant}")
       .sorted
     (s"root@${Files.getLastModifiedTime(root).toInstant}" +: parts).mkString("|")
@@ -1077,24 +986,23 @@ object TraceStore {
     * layout, so the result is indistinguishable from [[read]] at capture
     * time. Fails loudly if a referenced file was vacuumed away. */
   def readSnapshot(spark: SparkSession, tablePath: String, id: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(tablePath)
-    val mf = root.resolve(SnapDir).resolve(id)
-    require(Files.exists(mf), s"unknown snapshot '$id' at $tablePath")
-    val keys = Files.readAllLines(mf).asScala.toSeq.filter(_.nonEmpty)
-    readResolvedKeys(spark, root, keys, s"snapshot $id")
+    val root = java.nio.file.Paths.get(tablePath)
+    readResolvedKeys(spark, root, manifestKeys(root, id), s"snapshot $id")
   }
 
   /** A snapshot's manifest keys, sorted — ONE metadata read. A chunked
     * bootstrap caches this once per snapshot (manifests are immutable)
     * instead of re-reading a million-key manifest per chunk. */
-  def snapshotKeys(tablePath: String, id: String): IndexedSeq[String] = {
+  def snapshotKeys(tablePath: String, id: String): IndexedSeq[String] =
+    manifestKeys(java.nio.file.Paths.get(tablePath), id).sorted
+
+  /** A snapshot manifest's keys in file order — the store's one manifest
+    * reader. Fails loudly on an unknown id. */
+  private def manifestKeys(root: java.nio.file.Path, id: String): IndexedSeq[String] = {
     import scala.jdk.CollectionConverters._
-    val mf = java.nio.file.Paths.get(tablePath).resolve(SnapDir).resolve(id)
-    require(java.nio.file.Files.exists(mf), s"unknown snapshot '$id' at $tablePath")
-    java.nio.file.Files.readAllLines(mf).asScala.toIndexedSeq
-      .filter(_.nonEmpty).sorted
+    val mf = root.resolve(SnapDir).resolve(id)
+    require(java.nio.file.Files.exists(mf), s"unknown snapshot '$id' at $root")
+    java.nio.file.Files.readAllLines(mf).asScala.toIndexedSeq.filter(_.nonEmpty)
   }
 
   /** Byte size of each manifest key, resolved live-or-retired — the
@@ -1190,12 +1098,8 @@ object TraceStore {
     * the live set, and failed loudly instead of over-reporting — after
     * maintenance, re-base on a fresh snapshot. */
   def readAppendedSince(spark: SparkSession, tablePath: String, id: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(tablePath)
-    val mf = root.resolve(SnapDir).resolve(id)
-    require(Files.exists(mf), s"unknown snapshot '$id' at $tablePath")
-    val pinned = Files.readAllLines(mf).asScala.toSet.filter(_.nonEmpty)
+    val root = java.nio.file.Paths.get(tablePath)
+    val pinned = manifestKeys(root, id).toSet
     val live = liveKeys(root)
     val rewritten = pinned -- live
     require(rewritten.isEmpty,
@@ -1247,26 +1151,15 @@ object TraceStore {
   def readChangesSince(spark: SparkSession, tablePath: String, id: String,
                        rowFilter: Option[org.apache.spark.sql.Column] = None,
                        monthFilter: Option[String => Boolean] = None): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(tablePath)
+    val root = java.nio.file.Paths.get(tablePath)
     // resolve any crashed maintenance attempt FIRST (same as snapshot()):
     // a compact that died between install and delete leaves both the old
     // pinned files and their rewritten copies live, and a diff over that
     // half-committed state would report the whole month as inserts
     recoverAttempts(root)
-    val mf = root.resolve(SnapDir).resolve(id)
-    require(Files.exists(mf), s"unknown snapshot '$id' at $tablePath")
-    val pinned = Files.readAllLines(mf).asScala.toSet.filter(_.nonEmpty)
-    val live = liveKeys(root)
-    def keep(k: String): Boolean = monthFilter.forall(_(monthValueOf(k)))
-    def side(keys: Seq[String]): DataFrame = {
-      val df = readResolvedKeys(spark, root, keys, s"change feed since $id")
-      rowFilter.fold(df)(df.filter)
-    }
-    signedDiff(
-      side((live -- pinned).toSeq.sorted.filter(keep)),
-      side((pinned -- live).toSeq.sorted.filter(keep)))
+    val work = worklist(manifestKeys(root, id).toSet, liveKeys(root))
+    readChangedKeys(spark, tablePath, inMonths(work, monthFilter),
+      s"change feed since $id", rowFilter)
   }
 
   /** Both sides of a multiset row diff in ONE pass: union the sides with
@@ -1332,15 +1225,20 @@ object TraceStore {
   def readChangesBetween(spark: SparkSession, tablePath: String,
                          fromId: String, toId: String,
                          rowFilter: Option[org.apache.spark.sql.Column] = None,
-                         monthFilter: Option[String => Boolean] = None): DataFrame = {
-    val keys = changedKeysBetween(tablePath, fromId, toId)
-    val work = monthFilter.fold(keys)(p => keys.filter(k => p(monthValueOf(k._1))))
-    readChangedKeys(spark, tablePath, work, s"changes $fromId..$toId", rowFilter)
-  }
+                         monthFilter: Option[String => Boolean] = None): DataFrame =
+    readChangedKeys(spark, tablePath,
+      inMonths(changedKeysBetween(tablePath, fromId, toId), monthFilter),
+      s"changes $fromId..$toId", rowFilter)
 
-  /** The month value (`"201905"`) of a manifest key (`"ym=201905/…"`). */
-  private def monthValueOf(key: String): String =
+  /** The month value (`"201905"`) of a manifest key (`"ym=201905/…"`) or
+    * of a month directory name (`"ym=201905"`). */
+  private[graft] def monthOf(key: String): String =
     key.takeWhile(_ != '/').stripPrefix(s"${TraceSchema.PartitionCol}=")
+
+  /** A worklist restricted to the months `monthFilter` accepts. */
+  private def inMonths(work: IndexedSeq[(String, Boolean)],
+                       monthFilter: Option[String => Boolean]): IndexedSeq[(String, Boolean)] =
+    monthFilter.fold(work)(p => work.filter(e => p(monthOf(e._1))))
 
   /** The signed changed-FILE worklist between two pins: every manifest
     * key present in exactly one of the two, tagged with its side
@@ -1369,34 +1267,25 @@ object TraceStore {
     * the existing one. Two metadata reads, no data I/O. */
   def changedKeysBetween(tablePath: String, fromId: String,
                          toId: String): IndexedSeq[(String, Boolean)] = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(tablePath)
-    def keysOf(id: String): Set[String] = {
-      val mf = root.resolve(SnapDir).resolve(id)
-      require(Files.exists(mf), s"unknown snapshot '$id' at $tablePath")
-      Files.readAllLines(mf).asScala.toSet.filter(_.nonEmpty)
-    }
-    val from = keysOf(fromId); val to = keysOf(toId)
-    val tagged = ((to -- from).iterator.map(_ -> true) ++
-      (from -- to).iterator.map(_ -> false)).toIndexedSeq
-    def monthOf(key: String): String = key.takeWhile(_ != '/')
-    tagged.groupBy(k => monthOf(k._1)).toIndexedSeq.sortBy(_._1)
+    val root = java.nio.file.Paths.get(tablePath)
+    worklist(manifestKeys(root, fromId).toSet, manifestKeys(root, toId).toSet)
+  }
+
+  /** The signed changed-file worklist from key set `from` to key set
+    * `to`, in [[changedKeysBetween]]'s order (months ascending; within a
+    * month, both sides merged by fractional file position). */
+  private def worklist(from: Set[String], to: Set[String]): IndexedSeq[(String, Boolean)] =
+    ((to -- from).iterator.map(_ -> true) ++ (from -- to).iterator.map(_ -> false))
+      .toIndexedSeq.groupBy(e => monthOf(e._1)).toIndexedSeq.sortBy(_._1)
       .flatMap { case (_, entries) =>
-        val bySide = entries.groupBy(_._2).map { case (side, es) =>
-          side -> es.map(_._1).sorted
-        }
-        bySide.toIndexedSeq
-          .flatMap { case (side, names) =>
-            val n = names.size.toDouble
-            names.zipWithIndex.map { case (name, i) =>
-              ((i + 0.5) / n, name, side)
-            }
+        entries.groupBy(_._2).toIndexedSeq
+          .flatMap { case (side, es) =>
+            val names = es.map(_._1).sorted
+            names.zipWithIndex.map { case (name, i) => ((i + 0.5) / names.size, name, side) }
           }
-          .sortBy { case (pos, name, side) => (pos, name, side) }
+          .sorted
           .map { case (_, name, side) => (name, side) }
       }
-  }
 
   /** Signed row diff over a slice of [[changedKeysBetween]]'s worklist —
     * the chunked consumer's read kernel (the whole-list call IS
@@ -1466,7 +1355,7 @@ object TraceStore {
     val removed = FsMaint.listDir(retiredRoot)
       .filter(d => Files.isDirectory(d))
       .flatMap { mdir =>
-        FsMaint.listDir(mdir).filter(_.toString.endsWith(".parquet"))
+        parquetFiles(mdir)
           .filterNot(f => refs.contains(fileKey(mdir, f.getFileName.toString)))
           .map { f => Files.delete(f); fileKey(mdir, f.getFileName.toString) }
       }
@@ -1485,9 +1374,7 @@ object TraceStore {
     import scala.jdk.CollectionConverters._
     import FsMaint.{listDir, deleteTree}
     val refs = snapshotRefs(root)
-    val monthDirs = listDir(root).filter(p => Files.isDirectory(p) &&
-      p.getFileName.toString.startsWith(s"${TraceSchema.PartitionCol}="))
-    monthDirs.foreach { monthDir =>
+    monthDirs(root).foreach { monthDir =>
       Files.deleteIfExists(monthDir.resolve("_compact_manifest.tmp"))
       val marker = monthDir.resolve("_compact_manifest")
       if (Files.exists(marker)) {
@@ -1514,6 +1401,42 @@ object TraceStore {
     }.foreach(deleteTree)
   }
 
+  /** The store's `ym=` month partition directories. */
+  private def monthDirs(root: java.nio.file.Path): Seq[java.nio.file.Path] =
+    FsMaint.listDir(root).filter(p => java.nio.file.Files.isDirectory(p) &&
+      p.getFileName.toString.startsWith(s"${TraceSchema.PartitionCol}="))
+
+  private def parquetFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    FsMaint.listDir(dir).filter(_.toString.endsWith(".parquet"))
+
+  /** Does any row of `files` match `cond`? One pushed-filter probe —
+    * bloom/min-max stats make misses cheap. */
+  private def anyRow(spark: SparkSession, tablePath: String, files: Seq[java.nio.file.Path],
+                     cond: org.apache.spark.sql.Column): Boolean =
+    files.nonEmpty && readFiles(spark, java.nio.file.Paths.get(tablePath), files)
+      .filter(cond).limit(1).count() > 0
+
+  /** The month-rewrite loop of [[compact]], [[clusterMonths]],
+    * [[deleteWhere]] and [[thinExpired]]: resolve pending attempts,
+    * capture each month's parquet file set FIRST (only those files are
+    * read and later retired — a concurrent append is never touched), and
+    * [[rewriteMonth]] the months `pick(ym, files)` selects. Returns the
+    * rewritten ym values. */
+  private def rewriteMonths(spark: SparkSession, tablePath: String,
+                            pick: (String, Seq[java.nio.file.Path]) => Boolean,
+                            transform: DataFrame => DataFrame,
+                            splitsPerMonth: Int, tag: String,
+                            layoutBy: Seq[String] = Seq("Time")): Seq[String] = {
+    val root = java.nio.file.Paths.get(tablePath)
+    if (!java.nio.file.Files.exists(root)) return Seq.empty
+    recoverAttempts(root)
+    monthDirs(root).map(d => (d, parquetFiles(d)))
+      .filter { case (d, old) => pick(monthOf(d.getFileName.toString), old) }
+      .map { case (d, old) =>
+        rewriteMonth(spark, d, old, transform, splitsPerMonth, tag, layoutBy)
+      }
+  }
+
   /** Shared month-swap: read exactly the captured files, apply
     * `transform`, rewrite time-sorted under the manifest protocol
     * documented on [[compact]]. Returns the month's ym value. */
@@ -1526,9 +1449,7 @@ object TraceStore {
                            layoutBy: Seq[String] = Seq("Time")): String = {
     import java.nio.file.{Files, StandardCopyOption}
     import FsMaint.deleteTree
-    def parquetFiles(p: java.nio.file.Path): Seq[java.nio.file.Path] =
-      FsMaint.listDir(p).filter(_.toString.endsWith(".parquet"))
-    val ym = monthDir.getFileName.toString.stripPrefix(s"${TraceSchema.PartitionCol}=")
+    val ym = monthOf(monthDir.getFileName.toString)
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val tmpName = s".compact-$ym-$attempt"
     val tmp = monthDir.resolveSibling(tmpName)

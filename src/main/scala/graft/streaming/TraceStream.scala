@@ -759,17 +759,13 @@ object TraceStream {
     * argument as the CDC source's worklist filter), so a month-scoped
     * seed never opens an out-of-scope file. */
   private def snapshotRows(spark: SparkSession, storePath: String,
-                           snapshotId: String, months: Option[String]): DataFrame =
-    months match {
-      case None => TraceStore.readSnapshot(spark, storePath, snapshotId)
-      case Some(spec) =>
-        val ok = graft.sources.CdcStreamProvider.monthsPredicate(spec)
-        val pfx = s"${graft.schema.TraceSchema.PartitionCol}="
-        val keys = TraceStore.snapshotKeys(storePath, snapshotId)
-          .filter(k => ok(k.takeWhile(_ != '/').stripPrefix(pfx)))
-        TraceStore.readKeys(spark, storePath, keys,
-          s"snapshot $snapshotId (months=$spec)")
-    }
+                           snapshotId: String, months: Option[String]): DataFrame = {
+    val ok = months.map(graft.sources.CdcStreamProvider.monthsPredicate)
+    val keys = TraceStore.snapshotKeys(storePath, snapshotId)
+      .filter(k => ok.forall(_(TraceStore.monthOf(k))))
+    TraceStore.readKeys(spark, storePath, keys,
+      s"snapshot $snapshotId" + months.fold("")(m => s" (months=$m)"))
+  }
 
   /** The fleet form of [[seedIndex]]: pin EVERY store, build the shared
     * `(_store, band, bkey)` census over all the pins in one parallel

@@ -235,6 +235,35 @@ class SnapshotSpec extends SparkSpec {
     assert(TraceStore.listSnapshots(path) == Seq(s1b, s2))
   }
 
+  test("changedKeysBetween order is pinned: months ascending, sides merged by file fraction") {
+    import spark.implicits._
+    // chunk offsets index this list, so its order is an offset contract
+    val path = tmpDir("snap-order")
+    def put(sev: Int, t: String): Unit = TraceStore.append(Seq(row(sev, t, Some(s"id$sev")))
+      .toDF("Severity", "Machine", "LogGroup", "Time", "Type", "ID"), path)
+    put(0, "2019-04-01 08:00:00")                   // 201904: one file
+    (1 to 3).foreach(i => put(i, f"2019-05-0$i%d 08:00:00")) // 201905: three files
+    val from = TraceStore.snapshot(path)
+    assert(TraceStore.compact(spark, path, maxFilesPerMonth = 2, splitsPerMonth = 2) ==
+      Seq("201905"))
+    put(4, "2019-04-02 08:00:00"); put(5, "2019-04-03 08:00:00") // 201904: two appends
+    val to = TraceStore.snapshot(path)
+    def month(id: String, ym: String): Set[String] =
+      TraceStore.snapshotKeys(path, id).filter(_.startsWith(s"ym=$ym/")).toSet
+    val appended = (month(to, "201904") -- month(from, "201904")).toSeq.sorted
+    val retired = (month(from, "201905") -- month(to, "201905")).toSeq.sorted
+    val rewritten = (month(to, "201905") -- month(from, "201905")).toSeq.sorted
+    assert(appended.size == 2 && retired.size == 3 && rewritten.size == 2)
+    // 201905's fractions: retired 1/6, 3/6, 5/6 against rewritten 1/4, 3/4
+    val may = Seq(retired(0) -> false, rewritten(0) -> true, retired(1) -> false,
+      rewritten(1) -> true, retired(2) -> false)
+    val got = TraceStore.changedKeysBetween(path, from, to)
+    assert(got == appended.map(_ -> true) ++ may)
+    // a month-scoped worklist is that month's contiguous run, in order
+    assert(got.filter(_._1.startsWith("ym=201905/")) == may)
+    assert(got.slice(2, 7) == may)
+  }
+
   test("snapshot ids are monotonic and listable") {
     val path = tmpDir("snap-ids")
     mkStore(path, 2)
