@@ -7,7 +7,15 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [comma-separated query names — local iteration only]
     val sfDir = args(0); val outDir = args(1)
-    val only: Set[String] = if (args.length > 2) args(2).split(",").toSet else Set.empty
+    val only: Set[String] =
+      if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet else Set.empty
+    // a subset naming no registered query would report declared=0 and
+    // exit 0 — a typo must not look like a green run
+    val unknown = (only -- SparkEntry.queries.keySet).toSeq.sorted
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown query names: ${unknown.mkString(",")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -84,11 +84,6 @@ object TraceIngest {
     df.as[TraceSchema.TraceEvent]
   }
 
-  /** Row serialization to NDJSON / JSONEachRow (A10,
-    * trace-converter.py:71) — kept as a tested function so an external
-    * HTTP bulk sink could be slotted in (SURVEY.md §7.4 risk 4). */
-  def toJsonEachRow(df: DataFrame): Dataset[String] = df.toJSON
-
   /** Diagnostic summary (A15 — the reference's data.info()):
     * row count + per-column non-null counts, computed in one pass. */
   def summary(df: DataFrame): DataFrame =

@@ -205,7 +205,7 @@ object ExtendedQueries {
       |FROM events""".stripMargin
 
   // ------------------------------------------------------------------- sub-second ingest (§1.4 opt-in, DateTime64(6))
-  private val microsNdjson = new graft.util.SessionDirCache[String]
+  private val microsTraceDir = new graft.util.SessionDirCache[String]
 
   /** q236 — the reference TODO's sub-second mode, end to end: events
     * rendered as raw NDJSON (`Time` = fractional epoch-seconds double,
@@ -221,7 +221,7 @@ object ExtendedQueries {
     * double's ~0.25 µs quantization as off-by-one micros), or a
     * timezone shear fails the hash gate. */
   def q236MicrosTime(s: SparkSession, dir: String): DataFrame = {
-    val path = microsNdjson(s, dir) { (sess, d) =>
+    val path = microsTraceDir(s, dir) { (sess, d) =>
       val out = graft.util.TmpDirs.scratch("graft-micros-ndjson")
       Tables.events(sess, d).select(
         pmod(col("event_id"), lit(1000000000L)).as("Severity"),

@@ -812,9 +812,9 @@ object CdcMultiOffset {
 }
 
 /** `spark.readStream.format("graft-cdc")` / `spark.read.format("graft-cdc")`
-  * provider (DataSourceRegister via META-INF/services, same as
-  * `graft-ndjson`). The BATCH form is the Delta `table_changes` shape —
-  * SQL/DataFrame users get the snapshot-diff feed without `foreachBatch`:
+  * provider (DataSourceRegister via META-INF/services). The BATCH form is
+  * the Delta `table_changes` shape — SQL/DataFrame users get the
+  * snapshot-diff feed without `foreachBatch`:
   *
   * {{{
   * spark.read.format("graft-cdc")

@@ -16,9 +16,9 @@ import graft.store.TraceStore
   * source's contract: a newly visible file is a new unit of data, each
   * micro-batch is delivered at-least-once under checkpoint bookkeeping,
   * and the ingest sink adds per-batch markers so a replayed delivery is
-  * skipped (effectively-once up to a crash in the commit→marker window —
-  * still at least as strong as the reference's at-least-once manual
-  * delete; see [[start]]).
+  * skipped. A crash between a batch's append and its marker stores that
+  * batch twice (at-least-once, like the reference's manual delete; see
+  * [[start]] and ROADMAP direction 2).
   *
   * Scale: file listing is driver-side but incremental (maxFilesPerTrigger
   * bounds a batch); parse/normalize run on executors; the sink append
@@ -132,10 +132,9 @@ object TraceStream {
     * would land TWICE without a guard. A per-(incarnation, batchId)
     * marker under `_ingest_batches/` is written after each successful
     * append and skips the re-delivery. The marker follows the append, so
-    * a crash in the tiny window between commit and marker can still
-    * duplicate one batch (at-least-once, never loss); byte-atomic
-    * batch publish is the DSv2 `graft-ndjson` sink's job
-    * (per-task atomic publish + batch markers). */
+    * a crash between the append and the marker stores that batch twice
+    * (at-least-once, never loss). Making the append itself idempotent
+    * per batch is ROADMAP direction 2. */
   def start(spark: SparkSession, cfg: Config): StreamingQuery = {
     // Lineage resolves LAZILY, on the first batch: the checkpoint's
     // metadata file only exists once the query has started, and

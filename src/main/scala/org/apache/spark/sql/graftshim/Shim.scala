@@ -58,48 +58,4 @@ object Shim {
     * task-end events for a finished job can still be in flight. */
   def flushListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
-
-  /** Session timezone (driver side) — what `to_json`/`toJSON` serialize
-    * timestamps in; connectors capture it at plan time so their output
-    * matches the built-in serializers byte-for-byte. */
-  def sessionTimeZone: String =
-    org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
-
-  /** NDJSON (JSONEachRow) line serializer over Spark's internal
-    * JacksonGenerator — the same row→JSON machinery `to_json` uses, but
-    * streamed to a Writer one line per InternalRow. JacksonGenerator is
-    * private[sql], hence the shim residence. */
-  final class NdjsonLineGen(schema: org.apache.spark.sql.types.StructType,
-                            out: java.io.Writer, timeZoneId: String) {
-    private val gen = new org.apache.spark.sql.catalyst.json.JacksonGenerator(
-      schema, out,
-      new org.apache.spark.sql.catalyst.json.JSONOptions(
-        Map.empty[String, String], timeZoneId, "_corrupt_record"))
-    private var closed = false
-    def write(row: org.apache.spark.sql.catalyst.InternalRow): Unit = {
-      gen.write(row); gen.writeLineEnding()
-    }
-    def close(): Unit = if (!closed) { closed = true; gen.flush(); gen.close() }
-  }
-
-  /** NDJSON line → InternalRow parser over Spark's internal JacksonParser
-    * + FailureSafeParser — the same line-parse + PERMISSIVE-malformed
-    * machinery the built-in json source uses (malformed lines null out,
-    * they never kill the task). JacksonParser only materializes the
-    * fields of `schema`, so column pruning happens inside the parse. */
-  final class NdjsonLineParser(schema: org.apache.spark.sql.types.StructType,
-                               timeZoneId: String) {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
-    import org.apache.spark.sql.catalyst.util.FailureSafeParser
-    import org.apache.spark.unsafe.types.UTF8String
-    private val opts =
-      new JSONOptions(Map.empty[String, String], timeZoneId, "_corrupt_record")
-    private val raw = new JacksonParser(schema, opts, allowArrayAsStructs = false)
-    private val safe = new FailureSafeParser[UTF8String](
-      (u: UTF8String) => raw.parse(u, CreateJacksonParser.utf8String, identity[UTF8String]),
-      opts.parseMode, schema, opts.columnNameOfCorruptRecord)
-    def parse(line: String): Iterator[InternalRow] =
-      safe.parse(UTF8String.fromString(line))
-  }
 }

@@ -77,13 +77,17 @@ class IngestSpec extends SparkSpec {
     assert(us.toSeq == Seq(1557761852941000L, 1557761853499000L, 1557761854000000L))
   }
 
-  test("toJsonEachRow round-trips the declared schema") {
-    val dir = tmpDir("ingest2")
-    writeFixture(dir)
-    val df = TraceIngest.readBatch(spark, dir)
-    val json = TraceIngest.toJsonEachRow(df).collect()
-    assert(json.length == 3)
-    assert(json.forall(_.contains("\"Severity\":")))
+  test("a malformed line between valid lines drops out instead of failing the task") {
+    val dir = tmpDir("ingest-bad")
+    Files.createDirectories(Paths.get(dir))
+    Files.write(Paths.get(dir, "trace.127.0.0.1.4500.3.4.json"), Seq(
+      """{"Severity": 10, "Machine": "127.0.0.1:4500", "LogGroup": "default", "Time": 1557761852.0, "Type": "Role", "ID": "a"}""",
+      "not json at all",
+      """{"Severity": 20, "Machine": "127.0.0.1:4501", "LogGroup": "default", "Time": 1557761853.0, "Type": "Role", "ID": "b"}""",
+    ).mkString("", "\n", "\n").getBytes("UTF-8"))
+    // PERMISSIVE parse nulls the bad line's fields; normalize's filters drop it
+    val rows = TraceIngest.readBatch(spark, dir).orderBy("Time").collect()
+    assert(rows.map(_.getString(5)).toSeq == Seq("a", "b"))
   }
 
   test("summary counts rows and non-nulls per column") {

@@ -24,6 +24,10 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    unknown = sorted(only - oracle.keys())
+    if unknown:
+        print(f"unknown query names (no oracle_sql.json key): {' '.join(unknown)}")
+        sys.exit(2)
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only: continue
