@@ -1,6 +1,8 @@
 package graft
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 object Bench {
 
   /** Compact end-of-run summary line, guaranteed to fit a bounded stdout
@@ -66,22 +68,85 @@ object Bench {
     else ""
   }
 
+  /** The registered names a `SPARK_GRAFT_ONLY` filter selects, sorted
+    * (each entry is a name prefix: `q38` selects `q38_…`), or the error
+    * naming every entry that matches no registered query — a typo must
+    * fail the run, never time the rest of the list under its label. */
+  private[graft] def selectQueries(registered: Iterable[String],
+                                   only: Option[Seq[String]]): Either[String, Seq[String]] = {
+    val names = registered.toSeq.sorted
+    only match {
+      case None => Right(names)
+      case Some(ps) =>
+        val unknown = ps.filterNot(p => names.exists(_.startsWith(p)))
+        if (ps.isEmpty) Left("SPARK_GRAFT_ONLY names no query")
+        else if (unknown.nonEmpty)
+          Left(s"SPARK_GRAFT_ONLY entries match no registered query: ${unknown.mkString(",")}")
+        else Right(names.filter(n => ps.exists(n.startsWith)))
+    }
+  }
+
+  /** Keys of one query's entry in the full line's `io_bytes` map: shuffle
+    * read/write/spill bytes, then the jobs, stages and tasks it launched
+    * and its tasks' summed executor run, CPU, GC and shuffle fetch-wait
+    * milliseconds. A failed query's entry is all -1. */
+  private[graft] val WorkKeys = Seq("sr", "sw", "sp", "jobs", "stages", "tasks",
+    "run_ms", "cpu_ms", "gc_ms", "fetch_wait_ms")
+
+  private[graft] def workEntry(work: Seq[Long]): String =
+    WorkKeys.zip(work).map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+
+  /** Running totals of [[WorkKeys]] over every Spark event so far; one
+    * query's work is the difference of the readings around it. */
+  private final class WorkListener extends SparkListener {
+    private val sr, sw, sp, jobs, stages, tasks, runMs, cpuNs, gcMs, fetchMs = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = e.taskMetrics
+      if (m != null) {
+        sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        sp.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
+        runMs.addAndGet(m.executorRunTime)
+        cpuNs.addAndGet(m.executorCpuTime)
+        gcMs.addAndGet(m.jvmGCTime)
+        fetchMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
+      }
+    }
+    def reading: Seq[Long] = Seq(sr.get, sw.get, sp.get, jobs.get, stages.get, tasks.get,
+      runMs.get, cpuNs.get / 1000000, gcMs.get, fetchMs.get)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // local[32] per the target environment (32-thread single JVM); shuffle
-    // partitions match so every stage uses the full machine without tiny-task
-    // overhead. Override via SPARK_GRAFT_CPUS.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // AQE stays on (the cluster default): measured on this suite it is
-      // marginally FASTER than off even at bench scale (skew-join and
-      // coalescing pay for their re-planning); SPARK_GRAFT_AQE overrides.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Two timed passes per query, report the per-query MIN: a single pass
+    // is hostage to transient machine noise (round 3's bench ran on a
+    // loaded machine and showed phantom 10-20× per-query regressions that
+    // a quiet re-run dispelled). The min of two passes bounds per-query
+    // variance while keeping the run shape identical.
+    // malformed values fail fast (a silent fallback would run a different
+    // shape than requested with no diagnostic); 0/negative clamp to 1
+    val passes = sys.env.get("SPARK_GRAFT_PASSES") match {
+      case None => 2
+      case Some(v) => math.max(1, v.toIntOption.getOrElse(
+        throw new IllegalArgumentException(s"SPARK_GRAFT_PASSES must be an int, got '$v'")))
+    }
+    // Optional isolation filter: SPARK_GRAFT_ONLY=q38,q65 runs just the
+    // named queries (prefix match) in an otherwise-identical harness —
+    // the tool for attributing full-suite drift to suite accretion vs a
+    // real per-query plan change, and (with the per-query work entries)
+    // for asking which jobs one query launches and whether its time is
+    // compute, GC or scheduling.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val registered = SparkEntry.queries
+    val ordered = selectQueries(registered.keys, only)
+      .fold(e => throw new IllegalArgumentException(e), identity)
+      .map(n => n -> registered(n))
+    // local[32] per the target environment (32-thread single JVM)
+    val spark = graft.util.Sessions.suite(defaultCpus = 32)
     // Untimed engine warmup on synthetic data (never the benchmark tables):
     // JIT-compiles the scheduler/codegen/shuffle/parquet paths so the first
     // timed query doesn't absorb ~5 s of one-time JVM cost.
@@ -115,57 +180,20 @@ object Bench {
           org.apache.spark.sql.types.StructType.fromDDL("a BIGINT, b STRING")).as("p"))
         .filter(col("p.a") % 7 === 0).count()
     }
-    // Two timed passes per query, report the per-query MIN: a single pass
-    // is hostage to transient machine noise (round 3's bench ran on a
-    // loaded machine and showed phantom 10-20× per-query regressions that
-    // a quiet re-run dispelled). The min of two passes bounds per-query
-    // variance while keeping the run shape identical for the driver.
-    // malformed values fail fast (a silent fallback would run a different
-    // shape than requested with no diagnostic); 0/negative clamp to 1
-    val passes = sys.env.get("SPARK_GRAFT_PASSES") match {
-      case None => 2
-      case Some(v) => math.max(1, v.toIntOption.getOrElse(
-        throw new IllegalArgumentException(s"SPARK_GRAFT_PASSES must be an int, got '$v'")))
+    // Per-query attribution (see [[WorkKeys]]), drained through the
+    // listener bus before each reading. Seconds tell WHETHER a query is
+    // slow; the work entry tells WHY — whether a plan change moved data,
+    // launched more jobs, or just took time.
+    val work = new WorkListener
+    spark.sparkContext.addSparkListener(work)
+    def snap(): Seq[Long] = {
+      // a drain that exceeds the bus's internal timeout degrades THIS
+      // reading's attribution; it must never abort the bench run (the
+      // per-query count() is fail-isolated, so the metrics must be too)
+      try org.apache.spark.sql.graftshim.Shim.flushListenerBus(spark.sparkContext)
+      catch { case _: java.util.concurrent.TimeoutException => () }
+      work.reading
     }
-    // Optional isolation filter: SPARK_GRAFT_ONLY=q38,q65 runs just the
-    // named queries (prefix match) in an otherwise-identical harness —
-    // the tool for attributing full-suite drift to suite accretion vs a
-    // real per-query plan change.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    // a typo'd filter silently timing ZERO queries would look like a
-    // successful run — fail loudly like the SPARK_GRAFT_PASSES parse does
-    require(only.isEmpty || ordered.nonEmpty,
-      s"SPARK_GRAFT_ONLY=${only.get.mkString(",")} matches no registered query")
-    // Per-query I/O attribution: shuffle read/write + spill bytes from
-    // task metrics, drained through the listener bus before each
-    // snapshot. Seconds tell WHETHER a query is slow; shuffle bytes tell
-    // WHY — and whether a plan change moved data or just time.
-    val io = new org.apache.spark.scheduler.SparkListener {
-      val sr = new java.util.concurrent.atomic.AtomicLong
-      val sw = new java.util.concurrent.atomic.AtomicLong
-      val sp = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          sp.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-          ()
-        }
-      }
-      def snap(): (Long, Long, Long) = {
-        // a drain that exceeds the bus's internal timeout degrades THIS
-        // snapshot's attribution; it must never abort the bench run (the
-        // per-query count() is fail-isolated, so the metrics must be too)
-        try org.apache.spark.sql.graftshim.Shim.flushListenerBus(spark.sparkContext)
-        catch { case _: java.util.concurrent.TimeoutException => () }
-        (sr.get, sw.get, sp.get)
-      }
-    }
-    spark.sparkContext.addSparkListener(io)
     // Cache-pressure eviction (round-8 finding: per-dir localCheckpoint
     // intermediates accumulated ~45 GiB across 225 queries at sf1 and
     // OOM'd the default 24 GiB driver). The accumulating quantity is
@@ -199,14 +227,14 @@ object Bench {
         }
       }
     }
-    def runOnce(): Seq[(String, (Double, (Long, Long, Long)))] = {
-      // query N's post-snapshot IS query N+1's pre state (nothing runs
+    def runOnce(): Seq[(String, (Double, Seq[Long]))] = {
+      // query N's post-reading IS query N+1's pre state (nothing runs
       // between them) — threading it forward halves the bus drains.
       // Caveat (accepted): tasks of a FAILED query cancelled async can
       // end during the next query's window and leak into its delta; the
-      // failed query's own io is marked -1 below, and the neighbour's
+      // failed query's own entry is marked -1 below, and the neighbour's
       // reading is treated as suspect in analysis.
-      var pre = io.snap()
+      var pre = snap()
       ordered.map { case (name, fn) =>
         val t0 = System.nanoTime()
         val ok =
@@ -215,10 +243,10 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        val post = io.snap()
+        val post = snap()
         val delta =
-          if (ok) (post._1 - pre._1, post._2 - pre._2, post._3 - pre._3)
-          else (-1L, -1L, -1L) // partial-run bytes are not a measurement
+          if (ok) post.zip(pre).map { case (b, a) => b - a }
+          else post.map(_ => -1L) // a partial run's work is not a measurement
         pre = post
         afterQuery(name)
         // negative duration marks a failed query in the emitted JSON
@@ -251,11 +279,10 @@ object Bench {
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // I/O attribution from the LAST pass (warm-cache state — the one the
-    // reported min time also reflects)
+    // work attribution from the LAST pass (warm-cache state — the one
+    // the reported min time also reflects)
     val ioMap = ordered.map { case (name, _) =>
-      val (_, (sr, sw, sp)) = allPasses.last(name)
-      s"\"$name\":{\"sr\":$sr,\"sw\":$sw,\"sp\":$sp}"
+      s"\"$name\":${workEntry(allPasses.last(name)._2)}"
     }.mkString("{", ",", "}")
     // failed queries (-1 markers) must not subtract from the headline
     val total = results.map(_._2).filter(_ >= 0).sum

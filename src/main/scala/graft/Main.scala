@@ -48,12 +48,23 @@ object Main {
   final case class ListSnapshots(tablePath: String) extends Action
   final case class DropSnapshot(tablePath: String, id: String) extends Action
   final case class ChangesSince(tablePath: String, id: String) extends Action
+  /** The stores a CDC mode reads. `--table-path` names ONE store;
+    * `--table-paths` names a FLEET of any size (`fleet`): a one-store
+    * fleet keeps the fleet checkpoint, offsets and `_store` keys, so the
+    * same checkpoint can later follow `A,B`. */
+  sealed trait ReadsStores {
+    def tablePaths: Seq[String]
+    def fleet: Boolean
+    require(fleet || tablePaths.size == 1,
+      s"more than one store is a fleet: ${tablePaths.mkString(",")}")
+  }
   final case class FollowRollup(tablePaths: Seq[String], rollupPath: String,
                                 checkpointDir: String,
                                 maxFiles: Option[Int] = None,
                                 maxBytes: Option[Long] = None,
                                 months: Option[String] = None,
-                                startingSnapshot: Option[String] = None) extends Action
+                                startingSnapshot: Option[String] = None,
+                                fleet: Boolean = false) extends Action with ReadsStores
   final case class MigrateMonths(tablePath: String, fromRollup: String,
                                  toRollup: String, months: String) extends Action
   final case class FollowIndex(tablePaths: Seq[String], indexPath: String,
@@ -62,15 +73,18 @@ object Main {
                                maxBytes: Option[Long] = None,
                                startingSnapshot: Option[String] = None,
                                months: Option[String] = None,
-                               startingSnapshots: Option[Seq[String]] = None) extends Action
+                               startingSnapshots: Option[Seq[String]] = None,
+                               fleet: Boolean = false) extends Action with ReadsStores
   final case class SeedIndex(tablePaths: Seq[String], indexPath: String,
-                             months: Option[String] = None) extends Action
+                             months: Option[String] = None,
+                             fleet: Boolean = false) extends Action with ReadsStores
   final case class Replicate(tablePaths: Seq[String],
                              tables: Seq[String],
                              http: graft.sources.HttpBulkSink.Config,
                              checkpointDir: String,
                              maxFiles: Option[Int],
-                             maxBytes: Option[Long] = None) extends Action
+                             maxBytes: Option[Long] = None,
+                             fleet: Boolean = false) extends Action with ReadsStores
   sealed trait EvolveOp
   final case class AddCol(name: String,
                           dtype: org.apache.spark.sql.types.DataType) extends EvolveOp
@@ -153,7 +167,8 @@ object Main {
       |  --table-paths A,B,…     store FLEET (comma-separated list) for
       |                          --follow-rollup / --follow-index /
       |                          --seed-index / --replicate: one
-      |                          checkpoint over N stores; exclusive with
+      |                          checkpoint over N ≥ 1 stores (a fleet of
+      |                          one can grow to A,B later); exclusive with
       |                          --table-path (which is always ONE literal
       |                          path — never split)
       |  --months SPEC           month-scope a --follow-rollup/--follow-index
@@ -257,10 +272,11 @@ object Main {
     if (modes.size > 1)
       return Left(s"ERROR: pick one mode, got ${modes.toSeq.sorted.mkString(", ")}")
 
-    // the store list for the CDC follow modes: ONE literal --table-path
-    // (never split — a path may legitimately contain a comma), or a
-    // comma-separated --table-paths fleet; exclusive
-    def followStores: Either[String, Seq[String]] =
+    // the stores of the CDC follow modes and whether they are a fleet:
+    // ONE literal --table-path (never split — a path may legitimately
+    // contain a comma), or a comma-separated --table-paths fleet of any
+    // size; exclusive
+    def followStores: Either[String, (Seq[String], Boolean)] =
       (flags.get("--table-paths"), opt("--table-path", "GRAFT_TABLE_PATH")) match {
         case (Some(_), Some(_)) =>
           Left("ERROR: --table-path and --table-paths are exclusive (one " +
@@ -268,8 +284,8 @@ object Main {
         case (Some(list), None) =>
           val ps = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
           if (ps.isEmpty) Left("ERROR: --table-paths names no store")
-          else Right(ps)
-        case (None, Some(p)) => Right(Seq(p))
+          else Right((ps, true))
+        case (None, Some(p)) => Right((Seq(p), false))
         case (None, None) =>
           Left("ERROR: --table-path (or $GRAFT_TABLE_PATH / --table-paths) must be set!")
       }
@@ -370,7 +386,8 @@ object Main {
       } yield EvolveSchema(tablePath, op)
     else if (flags.contains("--follow-rollup"))
       for {
-        stores <- followStores
+        named <- followStores
+        (stores, fleet) = named
         rollup <- flags.get("--follow-rollup").filter(_.nonEmpty)
           .toRight("ERROR: --follow-rollup needs a rollup path")
         maxFiles <- posIntFlag("--max-files")
@@ -378,7 +395,7 @@ object Main {
         months <- monthsOpt
         startPin <- flags.get("--starting-snapshot") match {
           case None => Right(None)
-          case Some(_) if stores.size > 1 =>
+          case Some(_) if fleet =>
             Left("ERROR: --starting-snapshot is the single-store migration " +
               "handoff; it does not apply to a --table-paths fleet rollup")
           case Some(id) if id.matches("s\\d{6,}") => Right(Some(id))
@@ -387,10 +404,11 @@ object Main {
         }
       } yield FollowRollup(stores, rollup,
         opt("--checkpoint", "GRAFT_CHECKPOINT")
-          .getOrElse(s"$rollup/_checkpoint"), maxFiles, maxBytes, months, startPin)
+          .getOrElse(s"$rollup/_checkpoint"), maxFiles, maxBytes, months, startPin, fleet)
     else if (flags.contains("--follow-index"))
       for {
-        stores <- followStores
+        named <- followStores
+        (stores, fleet) = named
         index <- flags.get("--follow-index").filter(_.nonEmpty)
           .toRight("ERROR: --follow-index needs an index path")
         maxFiles <- posIntFlag("--max-files")
@@ -400,14 +418,14 @@ object Main {
           case None => Right(None)
           case Some(id) if !id.matches("s\\d{6,}") =>
             Left(s"ERROR: --starting-snapshot needs an id like s000001, got '$id'")
-          case Some(id) if stores.size > 1 =>
+          case Some(_) if fleet =>
             Left("ERROR: --starting-snapshot names ONE pin; a fleet " +
               "(--table-paths) takes --starting-snapshots, one pin per store")
           case Some(id) => Right(Some(id))
         }
         startPins <- flags.get("--starting-snapshots") match {
           case None => Right(None)
-          case Some(_) if stores.size == 1 =>
+          case Some(_) if !fleet =>
             Left("ERROR: --starting-snapshots is the fleet form; a single " +
               "store takes --starting-snapshot")
           case Some(raw) =>
@@ -424,14 +442,15 @@ object Main {
       } yield FollowIndex(stores, index,
         opt("--checkpoint", "GRAFT_CHECKPOINT")
           .getOrElse(s"$index/_checkpoint"), maxFiles, maxBytes, startPin, months,
-        startPins)
+        startPins, fleet)
     else if (flags.contains("--seed-index"))
       for {
-        stores <- followStores
+        named <- followStores
+        (stores, fleet) = named
         index <- flags.get("--seed-index").filter(_.nonEmpty)
           .toRight("ERROR: --seed-index needs an index path")
         months <- monthsOpt // MUST equal the follow's scope (seedIndex doc)
-      } yield SeedIndex(stores, index, months)
+      } yield SeedIndex(stores, index, months, fleet)
     else if (flags.contains("--migrate-months"))
       for {
         tablePath <- need("--table-path", "GRAFT_TABLE_PATH")
@@ -449,14 +468,15 @@ object Main {
       // 102): CLICKHOUSE_ADDR required, basic auth only when BOTH
       // CLICKHOUSE_USER and CLICKHOUSE_PASS are set
       for {
-        stores <- followStores
+        named <- followStores
+        (stores, fleet) = named
         addr <- need("--addr", "GRAFT_ADDR", "CLICKHOUSE_ADDR")
         db <- need("--db", "GRAFT_DB", "CLICKHOUSE_DB")
         // one receiving table per store — the reference's per-cluster
         // CLICKHOUSE_TABLE deployment; --tables is positional (fleet),
         // --table the single-store form
         tables <-
-          if (stores.size == 1)
+          if (!fleet)
             need("--table", "GRAFT_TABLE", "CLICKHOUSE_TABLE").map(Seq(_))
           else flags.get("--tables").filter(_.nonEmpty) match {
             case None =>
@@ -470,7 +490,7 @@ object Main {
               else Right(ts)
           }
         ck <-
-          if (stores.size == 1)
+          if (!fleet)
             Right(opt("--checkpoint", "GRAFT_CHECKPOINT")
               .getOrElse(s"${stores.head}/_replicate-checkpoint"))
           else opt("--checkpoint", "GRAFT_CHECKPOINT").toRight(
@@ -487,7 +507,7 @@ object Main {
           }
         Replicate(stores, tables,
           graft.sources.HttpBulkSink.Config(addr, db, tables.head, user, pass),
-          ck, maxFiles, maxBytes)
+          ck, maxFiles, maxBytes, fleet)
       }
     else if (files.nonEmpty)
       for {
@@ -622,13 +642,13 @@ object Main {
       if (per.isEmpty) out(s"no changes since $id")
       else per.foreach(r =>
         out(s"${r.getString(0)} ${r.getString(1)} ${r.getLong(2)}"))
-    case FollowRollup(stores, rollupPath, ck, maxFiles, maxBytes, months, startPin) =>
+    case FollowRollup(stores, rollupPath, ck, maxFiles, maxBytes, months, startPin, fleet) =>
       // one catch-up pass on the operational cadence: between (never
       // concurrent with) store maintenance, per the CDC reader contract.
       // --table-paths is the FLEET form: one checkpoint maintains the
       // union rollup of every listed store.
       val q =
-        if (stores.size > 1)
+        if (fleet)
           TraceStream.followFleetRollup(session(), stores, rollupPath, ck,
             maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes,
             months = months)
@@ -638,9 +658,9 @@ object Main {
       q.awaitTermination()
       out(s"rollup at $rollupPath caught up with ${stores.mkString(", ")}")
     case FollowIndex(stores, indexPath, ck, maxFiles, maxBytes, startPin, months,
-                     startPins) =>
+                     startPins, fleet) =>
       val q =
-        if (stores.size > 1)
+        if (fleet)
           TraceStream.followFleetIndex(session(), stores, indexPath, ck,
             maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes,
             months = months, startingSnapshots = startPins)
@@ -649,11 +669,11 @@ object Main {
           startingSnapshot = startPin, months = months)
       q.awaitTermination()
       out(s"index at $indexPath caught up with ${stores.mkString(", ")}")
-    case SeedIndex(stores, indexPath, months) =>
+    case SeedIndex(stores, indexPath, months, fleet) =>
       // corpus-scale bootstrap: pin FIRST (so the follow stream's first
       // diff has an immutable base), then one parallel batch census;
       // --table-paths seeds the FLEET index ((_store, band, bkey) keys)
-      if (stores.size > 1) {
+      if (fleet) {
         val pins = TraceStream.seedFleetIndex(session(), stores, indexPath,
           months = months)
         pins.foreach { case (p, pin) => out(s"pinned $pin ($p)") }
@@ -684,9 +704,9 @@ object Main {
         "retire the old rollup/checkpoint and drop the pin with " +
         "--drop-snapshot once the stream's offset passes its first " +
         "complete form)")
-    case Replicate(tablePaths, tables, http, ck, maxFiles, maxBytes) =>
+    case Replicate(tablePaths, tables, http, ck, maxFiles, maxBytes, fleet) =>
       val q =
-        if (tablePaths.size > 1)
+        if (fleet)
           TraceStream.replicateFleetChanges(session(), tablePaths, tables,
             http, ck, maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes)
         else TraceStream.replicateChanges(session(), tablePaths.head, http, ck,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,14 +15,8 @@ object Verify {
       System.err.println(s"[verify] unknown query names: ${unknown.mkString(",")}")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session Bench times, at a 4-core default
+    val spark = graft.util.Sessions.suite(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // A query that throws must NEVER silently vanish from the correctness
     // report (round-3 lesson: 16 analysis failures looked like "160/164

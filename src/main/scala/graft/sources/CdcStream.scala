@@ -248,35 +248,6 @@ final class CdcSource(
     }
   }
 
-  // idle-poll fast path: a fingerprint (one stat per month dir — O(
-  // partitions), never O(files)) certified idle by a FULL check. While
-  // it holds, polls skip the live file-set listing entirely, so a
-  // short-interval trigger on an ~800k-file store pays metadata stats,
-  // not a full listing, per poll. Captured BEFORE the authoritative
-  // check: a mutation landing in between invalidates conservatively.
-  //
-  // The fingerprint is mtime-based, and filesystems with coarse
-  // timestamp granularity (HDFS ms, 1 s on older local/NFS) can absorb
-  // a mutation landing in the SAME tick right after a successful
-  // certification — last-write-then-quiet would then be withheld for as
-  // long as the store stays otherwise idle. Bound that window: the
-  // certification expires after IdleRecheckEvery fingerprint hits, so a
-  // full snapshotMatchesLive re-runs at worst every N polls (amortized
-  // 1/N of the full-listing cost; a tick-absorbed change is delivered
-  // at most N trigger intervals late instead of indefinitely).
-  private val IdleRecheckEvery = 64
-  @volatile private var idleCache: (String, String, Int) = null
-  private def matchesLive(id: String): Boolean = {
-    val fp = TraceStore.liveFingerprint(path)
-    val c = idleCache
-    if (c != null && c._1 == id && c._2 == fp && c._3 < IdleRecheckEvery) {
-      idleCache = (c._1, c._2, c._3 + 1)
-      true
-    } else if (TraceStore.snapshotMatchesLive(path, id)) {
-      idleCache = (id, fp, 1); true
-    } else false
-  }
-
   // Trigger.AvailableNow: the run's end state, frozen at the first
   // latestOffset call (start-aware, so an idle run pins nothing)
   @volatile private var availableNowPending = false
@@ -354,7 +325,8 @@ final class CdcSource(
       case CdcOffset(id, _, _) => target match {
         case Some(t) => if (t.snapshotId == id) s else diffStep(id, t.snapshotId)
         case None =>
-          if (matchesLive(id)) s else diffStep(id, pinOwn().snapshotId)
+          if (TraceStore.snapshotMatchesLive(path, id)) s
+          else diffStep(id, pinOwn().snapshotId)
       }
     }
     if (availableNowPending && target.isEmpty) {
@@ -367,7 +339,8 @@ final class CdcSource(
       // with available changes undelivered until the next invocation.
       val endId = next match {
         case CdcOffset(id, Some(_), _)
-            if num(s.snapshotId) > 0 && !matchesLive(id) => pinOwn().snapshotId
+            if num(s.snapshotId) > 0 && !TraceStore.snapshotMatchesLive(path, id) =>
+          pinOwn().snapshotId
         case o => o.snapshotId
       }
       availableNowTarget = Some(CdcOffset(endId))

@@ -914,31 +914,6 @@ object TraceStore {
     manifestKeys(root, id).toSet == liveKeys(root)
   }
 
-  /** Cheap fingerprint of the live file set: the root's and each month
-    * directory's (name, mtime-with-nanos), hashed — one stat per month
-    * dir, O(partitions) not O(files). Any mutation of the live set
-    * (append, compact, DELETE WHERE, retention, crash recovery) creates
-    * or removes an entry in some month dir (or a month dir itself),
-    * which bumps that directory's mtime, so an unchanged fingerprint
-    * taken BEFORE a successful [[snapshotMatchesLive]] check certifies
-    * the store is still idle without re-listing ~800k files per poll.
-    * Collision risk is a mutation of the same dir within one timestamp
-    * TICK of the certification — nanoseconds locally, but milliseconds
-    * on HDFS and a full second on older/NFS filesystems, where a
-    * last-write-then-quiet store could be absorbed. Capture the
-    * fingerprint before the authoritative check (an in-between mutation
-    * then invalidates conservatively) AND bound reliance on it: a
-    * cached certification must expire after N uses (CdcSource re-runs
-    * the full check every 64 fingerprint hits). */
-  def liveFingerprint(tablePath: String): String = {
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(tablePath)
-    val parts = monthDirs(root)
-      .map(p => s"${p.getFileName}@${Files.getLastModifiedTime(p).toInstant}")
-      .sorted
-    (s"root@${Files.getLastModifiedTime(root).toInstant}" +: parts).mkString("|")
-  }
-
   /** List snapshot ids, oldest first (numeric order — ids past the
     * 6-digit zero-padding would mis-sort lexicographically). */
   def listSnapshots(tablePath: String): Seq[String] = {
@@ -1373,7 +1348,9 @@ object TraceStore {
     import java.nio.file.{Files, StandardCopyOption}
     import scala.jdk.CollectionConverters._
     import FsMaint.{listDir, deleteTree}
-    val refs = snapshotRefs(root)
+    // manifests are read only when a crashed rewrite left a marker: every
+    // CDC poll, snapshot and diff runs this recovery on a clean store
+    lazy val refs = snapshotRefs(root)
     monthDirs(root).foreach { monthDir =>
       Files.deleteIfExists(monthDir.resolve("_compact_manifest.tmp"))
       val marker = monthDir.resolve("_compact_manifest")

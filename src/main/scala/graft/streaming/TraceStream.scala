@@ -401,13 +401,12 @@ object TraceStream {
                        maxFilesPerTrigger: Option[Int] = None,
                        maxBytesPerTrigger: Option[Long] = None,
                        months: Option[String] = None,
-                       compactOver: Int = DefaultCompactOver,
-                       baseFileBytes: Long = DefaultBaseFileBytes): StreamingQuery = {
+                       compactOver: Int = DefaultCompactOver): StreamingQuery = {
     require(slotMicros > 0, s"slotMicros must be positive, got $slotMicros")
     follow(spark, Feed(Seq(storePath), fleet = false, None, months,
         maxFilesPerTrigger, maxBytesPerTrigger),
       "slot-rollup", rollupPath, checkpointDir, trigger, SlotKeys, RollupMeasures,
-      compactOver, baseFileBytes) {
+      compactOver) {
       (batch, sign) => rollRows(batch, slotOf(slotMicros), sign)
     }
   }
@@ -434,13 +433,12 @@ object TraceStream {
                             maxFilesPerTrigger: Option[Int] = None,
                             maxBytesPerTrigger: Option[Long] = None,
                             months: Option[String] = None,
-                            compactOver: Int = DefaultCompactOver,
-                            baseFileBytes: Long = DefaultBaseFileBytes): StreamingQuery = {
+                            compactOver: Int = DefaultCompactOver): StreamingQuery = {
     require(slotMicros > 0, s"slotMicros must be positive, got $slotMicros")
     follow(spark, Feed(storePaths, fleet = true, None, months,
         maxFilesPerTrigger, maxBytesPerTrigger),
       "fleet-slot-rollup", rollupPath, checkpointDir, trigger, SlotKeys, RollupMeasures,
-      compactOver, baseFileBytes) {
+      compactOver) {
       (batch, sign) => rollRows(batch, slotOf(slotMicros), sign)
     }
   }
@@ -487,7 +485,6 @@ object TraceStream {
                   maxBytesPerTrigger: Option[Long] = None,
                   compactOver: Int = DefaultCompactOver,
                   startingSnapshot: Option[String] = None,
-                  baseFileBytes: Long = DefaultBaseFileBytes,
                   months: Option[String] = None,
                   bands: Int = 2): StreamingQuery =
     // Corpus-scale bootstrap: streaming the initial load through the
@@ -500,7 +497,7 @@ object TraceStream {
     follow(spark, Feed(Seq(storePath), fleet = false, startingSnapshot.map(Seq(_)),
         months, maxFilesPerTrigger, maxBytesPerTrigger),
       "index", indexPath, checkpointDir, trigger, Seq("band", "bkey"), Seq("n"),
-      compactOver, baseFileBytes, onFirstBatch = s => pinBands(s, indexPath, bands)) {
+      compactOver, onFirstBatch = s => pinBands(s, indexPath, bands)) {
       (batch, sign) => graft.store.ChangeFeedQuery
         .bucketRows(batch.withColumn("n", sign), carry = Seq("n"), bands = bands)
     }
@@ -531,12 +528,11 @@ object TraceStream {
                         maxBytesPerTrigger: Option[Long] = None,
                         compactOver: Int = DefaultCompactOver,
                         startingSnapshot: Option[String] = None,
-                        baseFileBytes: Long = DefaultBaseFileBytes,
                         months: Option[String] = None): StreamingQuery =
     follow(spark, Feed(Seq(storePath), fleet = false, startingSnapshot.map(Seq(_)),
         months, maxFilesPerTrigger, maxBytesPerTrigger),
       "members", indexPath, checkpointDir, trigger, Seq("band", "bkey", "doc"), Seq("n"),
-      compactOver, baseFileBytes) {
+      compactOver) {
       (batch, sign) => graft.store.ChangeFeedQuery.bucketRows(
         batch.withColumn("n", sign).withColumn("doc",
           concat(col("Machine"), lit("/"), col("Type"), lit("/"), col("ID"))),
@@ -619,7 +615,6 @@ object TraceStream {
                        maxFilesPerTrigger: Option[Int] = None,
                        maxBytesPerTrigger: Option[Long] = None,
                        compactOver: Int = DefaultCompactOver,
-                       baseFileBytes: Long = DefaultBaseFileBytes,
                        months: Option[String] = None,
                        startingSnapshots: Option[Seq[String]] = None): StreamingQuery =
     // corpus-scale fleet bootstrap: [[seedFleetIndex]] pins every store
@@ -629,7 +624,7 @@ object TraceStream {
     follow(spark, Feed(storePaths, fleet = true, startingSnapshots, months,
         maxFilesPerTrigger, maxBytesPerTrigger),
       "fleet-index", indexPath, checkpointDir, trigger, Seq("_store", "band", "bkey"),
-      Seq("n"), compactOver, baseFileBytes) {
+      Seq("n"), compactOver) {
       (batch, sign) => graft.store.ChangeFeedQuery
         .bucketRows(batch.withColumn("n", sign), carry = Seq("n", "_store"))
     }
@@ -675,7 +670,6 @@ object TraceStream {
                      checkpointDir: String, trigger: Trigger,
                      keys: Seq[String], measures: Seq[String],
                      compactOver: Int = DefaultCompactOver,
-                     baseFileBytes: Long = DefaultBaseFileBytes,
                      onFirstBatch: SparkSession => Unit = _ => ())(
                      rows: (DataFrame, Column) => DataFrame): StreamingQuery = {
     var inc: String = null
@@ -693,7 +687,7 @@ object TraceStream {
         }
         val sign = when(col("_change") === "insert", lit(1L)).otherwise(lit(-1L))
         upsertSegment(s, sumBy(rows(batch, sign), keys, measures), batchId, table, inc,
-          keys, measures, compactOver, baseFileBytes)
+          keys, measures, compactOver)
       }
       .start()
   }

@@ -91,4 +91,23 @@ class BenchEmitSpec extends AnyFunSuite {
     assert(Bench.calibWarnField(0.5, 0.6).isEmpty)
     assert(Bench.calibWarnField(0.5, 1.2).nonEmpty)
   }
+
+  test("a SPARK_GRAFT_ONLY entry that matches no query fails the run, naming it") {
+    val registered = Seq("q6_b", "q38_a", "q65_c")
+    assert(Bench.selectQueries(registered, None) == Right(Seq("q38_a", "q65_c", "q6_b")))
+    assert(Bench.selectQueries(registered, Some(Seq("q38", "q6_"))) == Right(Seq("q38_a", "q6_b")))
+    // one typo among valid entries must not time the rest under its label
+    val typo = Bench.selectQueries(registered, Some(Seq("q38", "q6x5", "q99")))
+    assert(typo.swap.exists(e => e.contains("q6x5") && e.contains("q99") && !e.contains("q38")),
+      typo.toString)
+    assert(Bench.selectQueries(registered, Some(Seq.empty)).isLeft)
+  }
+
+  test("a query's io_bytes entry carries its shuffle bytes and its Spark work") {
+    val js = JsonMethods.parse(Bench.workEntry(1L to Bench.WorkKeys.size.toLong))
+    val JObject(fields) = js: @unchecked
+    assert(fields.map(_._1) == List("sr", "sw", "sp", "jobs", "stages", "tasks",
+      "run_ms", "cpu_ms", "gc_ms", "fetch_wait_ms"))
+    assert((js \ "sr") == JInt(1) && (js \ "fetch_wait_ms") == JInt(10))
+  }
 }

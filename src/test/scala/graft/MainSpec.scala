@@ -179,7 +179,7 @@ class MainParseSpec extends AnyFunSuite {
     assert(Main.parse(Seq("--replicate"), env - "CLICKHOUSE_ADDR").isLeft)
     // a lone user (no pass) posts unauthenticated, like the reference
     Main.parse(Seq("--replicate"), env - "CLICKHOUSE_PASS") match {
-      case Right(Main.Replicate(_, _, cfg, _, _, _)) =>
+      case Right(Main.Replicate(_, _, cfg, _, _, _, _)) =>
         assert(cfg.user.isEmpty && cfg.pass.isEmpty)
       case other => fail(other.toString)
     }
@@ -191,7 +191,7 @@ class MainParseSpec extends AnyFunSuite {
       "--db", "fdb"), noEnv) ==
       Right(Main.Replicate(Seq("/a", "/b"), Seq("ta", "tb"),
         HttpBulkSink.Config("http://ch:8123", "fdb", "ta", None, None),
-        "/ck", None)))
+        "/ck", None, fleet = true)))
     assert(Main.parse(Seq("--replicate", "--table-paths", "/a,/b",
       "--tables", "ta", "--checkpoint", "/ck", "--addr", "http://ch:8123",
       "--db", "fdb"), noEnv).swap.exists(_.contains("positional")))
@@ -416,7 +416,7 @@ class MainRunSpec extends SparkSpec {
     Main.run(Main.Convert(Seq(s"$in/a.json"), a, 1), _ => (), () => spark)
     Main.run(Main.Convert(Seq(s"$in/b.json"), b, 1), _ => (), () => spark)
     val out = scala.collection.mutable.ArrayBuffer[String]()
-    Main.run(Main.FollowRollup(Seq(a, b), roll, ck), out.append(_), () => spark)
+    Main.run(Main.FollowRollup(Seq(a, b), roll, ck, fleet = true), out.append(_), () => spark)
     assert(out.last == s"rollup at $roll caught up with $a, $b")
     def byYm(): Map[String, Long] =
       graft.streaming.TraceStream.readRollup(spark, roll)
@@ -425,8 +425,31 @@ class MainRunSpec extends SparkSpec {
     // one store's growth + the other untouched, second catch-up pass
     writeTrace(in, "b2.json", 1568000100L, 4)
     Main.run(Main.Convert(Seq(s"$in/b2.json"), b, 1), _ => (), () => spark)
-    Main.run(Main.FollowRollup(Seq(a, b), roll, ck), _ => (), () => spark)
+    Main.run(Main.FollowRollup(Seq(a, b), roll, ck, fleet = true), _ => (), () => spark)
     assert(byYm() == Map("201905" -> 3L, "201909" -> 6L))
+  }
+
+  test("a one-store --table-paths fleet grows to two on the same checkpoint") {
+    val in = tmpDir("cli-f1-in")
+    val a = tmpDir("cli-f1-a"); val b = tmpDir("cli-f1-b")
+    val roll = tmpDir("cli-f1-roll"); val ck = tmpDir("cli-f1-ck")
+    writeTrace(in, "a.json", 1557761852L, 3)   // 201905 → store A
+    writeTrace(in, "b.json", 1568000000L, 2)   // 201909 → store B
+    Main.run(Main.Convert(Seq(s"$in/a.json"), a, 1), _ => (), () => spark)
+    Main.run(Main.Convert(Seq(s"$in/b.json"), b, 1), _ => (), () => spark)
+    def follow(paths: String): Unit = Main.parse(Seq("--follow-rollup", roll,
+      "--table-paths", paths, "--checkpoint", ck), Map.empty) match {
+      case Right(action) => Main.run(action, _ => (), () => spark)
+      case Left(err) => fail(err)
+    }
+    def byYm(): Map[String, Long] =
+      graft.streaming.TraceStream.readRollup(spark, roll)
+        .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    follow(a)
+    assert(byYm() == Map("201905" -> 3L))
+    // the checkpoint a fleet of one wrote takes a second store
+    follow(s"$a,$b")
+    assert(byYm() == Map("201905" -> 3L, "201909" -> 2L))
   }
 
   test("--follow-index catches the band-bucket index up with the store across maintenance") {
@@ -460,7 +483,10 @@ class MainRunSpec extends SparkSpec {
     val noEnv = Map.empty[String, String]
     // fleet parse
     assert(Main.parse(Seq("--follow-rollup", "/r", "--table-paths", "/a,/b"), noEnv) ==
-      Right(Main.FollowRollup(Seq("/a", "/b"), "/r", "/r/_checkpoint")))
+      Right(Main.FollowRollup(Seq("/a", "/b"), "/r", "/r/_checkpoint", fleet = true)))
+    // the flag, not the count, makes a fleet: one entry is a fleet of one
+    assert(Main.parse(Seq("--follow-rollup", "/r", "--table-paths", "/a"), noEnv) ==
+      Right(Main.FollowRollup(Seq("/a"), "/r", "/r/_checkpoint", fleet = true)))
     // a comma INSIDE --table-path is part of the path, never a fleet
     // split (ADVICE r12: the flag's semantics must not be mode-dependent)
     assert(Main.parse(Seq("--follow-rollup", "/r", "--table-path", "/odd,name"), noEnv) ==
@@ -479,7 +505,7 @@ class MainRunSpec extends SparkSpec {
       "--months", "May"), noEnv).swap.exists(_.contains("months")))
     // fleet index + starting-snapshot contracts
     assert(Main.parse(Seq("--follow-index", "/i", "--table-paths", "/a,/b"), noEnv) ==
-      Right(Main.FollowIndex(Seq("/a", "/b"), "/i", "/i/_checkpoint")))
+      Right(Main.FollowIndex(Seq("/a", "/b"), "/i", "/i/_checkpoint", fleet = true)))
     assert(Main.parse(Seq("--follow-index", "/i", "--table-path", "/t",
       "--starting-snapshot", "s000004"), noEnv) ==
       Right(Main.FollowIndex(Seq("/t"), "/i", "/i/_checkpoint",
@@ -496,11 +522,11 @@ class MainRunSpec extends SparkSpec {
       "--table-path", "/t"), noEnv).swap.exists(_.contains("pick one mode")))
     // fleet seed + fleet handoff pins
     assert(Main.parse(Seq("--seed-index", "/i", "--table-paths", "/a,/b"), noEnv) ==
-      Right(Main.SeedIndex(Seq("/a", "/b"), "/i")))
+      Right(Main.SeedIndex(Seq("/a", "/b"), "/i", fleet = true)))
     assert(Main.parse(Seq("--follow-index", "/i", "--table-paths", "/a,/b",
       "--starting-snapshots", "s000001,s000002"), noEnv) ==
       Right(Main.FollowIndex(Seq("/a", "/b"), "/i", "/i/_checkpoint",
-        None, None, None, None, Some(Seq("s000001", "s000002")))))
+        None, None, None, None, Some(Seq("s000001", "s000002")), fleet = true)))
     assert(Main.parse(Seq("--follow-index", "/i", "--table-paths", "/a,/b",
       "--starting-snapshots", "s000001"), noEnv).swap.exists(_.contains("positional")))
     assert(Main.parse(Seq("--follow-index", "/i", "--table-path", "/t",
@@ -518,7 +544,7 @@ class MainRunSpec extends SparkSpec {
     Main.run(Main.Convert(Seq(s"$in/a.json"), a, 1), _ => (), () => spark)
     Main.run(Main.Convert(Seq(s"$in/b.json"), b, 1), _ => (), () => spark)
     val out = scala.collection.mutable.ArrayBuffer[String]()
-    Main.run(Main.SeedIndex(Seq(a, b), idx), out.append(_), () => spark)
+    Main.run(Main.SeedIndex(Seq(a, b), idx, fleet = true), out.append(_), () => spark)
     val pins = out.filter(_.startsWith("pinned ")).map(_.split(" ")(1)).toSeq
     assert(pins.size == 2, s"one pin per store expected: $out")
     assert(out.exists(_.contains(s"--starting-snapshots ${pins.mkString(",")}")),
@@ -545,7 +571,7 @@ class MainRunSpec extends SparkSpec {
     writeTrace(in, "a2.json", 1557761900L, 2)
     Main.run(Main.Convert(Seq(s"$in/a2.json"), a, 1), _ => (), () => spark)
     Main.run(Main.FollowIndex(Seq(a, b), idx, ck,
-      startingSnapshots = Some(pins)), _ => (), () => spark)
+      startingSnapshots = Some(pins), fleet = true), _ => (), () => spark)
     assert(current() == rebuilt(), "CLI fleet seed + follow must equal rebuild")
   }
 

@@ -821,14 +821,13 @@ class CdcStreamSpec extends SparkSpec {
     assert(!parts.exists(_.startsWith("v")), s"slot table must not store merged versions: $parts")
   }
 
-  test("idle certification expires: an mtime-absorbed mutation is delivered within the recheck bound") {
+  test("an mtime-absorbed mutation is delivered on the first poll") {
     // coarse-timestamp hazard (ADVICE r11): a mutation landing in the
-    // same filesystem tick as the idle certification leaves the month-dir
-    // fingerprint unchanged. Simulate the absorption directly — append,
-    // then restore the directory mtimes — and pin the bound: polls ride
-    // the stale certification for a while (documenting the hazard is
-    // real) but a FULL check re-runs within 64 fingerprint hits, so the
-    // change is delivered, never withheld indefinitely.
+    // same filesystem tick as an idle poll leaves every directory mtime
+    // unchanged. Simulate the absorption directly — append, then restore
+    // the directory mtimes — and pin that an idle poll compares the
+    // snapshot against the live file set itself, so the very next poll
+    // delivers the change.
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val store = tmpDir("cdcidle"); val meta = tmpDir("cdcidle-meta")
@@ -837,21 +836,16 @@ class CdcStreamSpec extends SparkSpec {
       spark.sqlContext, store, meta, None, true, true, None)
     val all = ReadLimit.allAvailable()
     val o1 = CdcOffset.of(src.latestOffset(null, all))
-    assert(src.latestOffset(o1, all) == o1, "idle store echoes the offset (certifies)")
-    // mutate the store, then roll the mtimes back to the certified state
+    assert(src.latestOffset(o1, all) == o1, "idle store echoes the offset")
+    // mutate the store, then roll the mtimes back to the idle state
     val root = Paths.get(store)
     val dirs = root +: root.toFile.listFiles.toSeq
       .filter(f => f.isDirectory && f.getName.startsWith("ym=")).map(_.toPath)
     val saved = dirs.map(d => d -> Files.getLastModifiedTime(d))
     TraceStore.append(mk((20, "m1", "ok", "2019-05-14 10:00:00")), store)
     saved.foreach { case (d, t) => Files.setLastModifiedTime(d, t) }
-    assert(src.latestOffset(o1, all) == o1,
-      "the absorbed mutation IS invisible to the fingerprint fast path — " +
-        "if this detects it, the simulation lost its bite and the expiry is untested")
-    var polls = 1
-    while (polls < 80 && CdcOffset.of(src.latestOffset(o1, all)) == o1) polls += 1
-    assert(polls <= 65, s"change still withheld after $polls polls — idle cache never expired")
-    assert(polls > 3, s"expected several absorbed polls before the recheck, got $polls")
+    assert(CdcOffset.of(src.latestOffset(o1, all)) != o1,
+      "the absorbed append must advance the offset on the first poll")
   }
 
   test("non-numeric admission options fail with the option's name, not a bare NumberFormatException") {
