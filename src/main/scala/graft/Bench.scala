@@ -1,8 +1,8 @@
 package graft
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 object Bench {
 
   /** Compact end-of-run summary line, guaranteed to fit a bounded stdout
@@ -87,21 +87,32 @@ object Bench {
   }
 
   /** Keys of one query's entry in the full line's `io_bytes` map: shuffle
-    * read/write/spill bytes, then the jobs, stages and tasks it launched
-    * and its tasks' summed executor run, CPU, GC and shuffle fetch-wait
-    * milliseconds. A failed query's entry is all -1. */
-  private[graft] val WorkKeys = Seq("sr", "sw", "sp", "jobs", "stages", "tasks",
+    * read/write/spill bytes, then the jobs it launched, the stages those
+    * jobs listed but skipped (their output already existed: a reused
+    * shuffle, or under AQE every parent of a later stage's job), the
+    * tasks it ran, and its tasks' summed executor run, CPU, GC and
+    * shuffle fetch-wait milliseconds. A failed query's entry is all -1. */
+  private[graft] val WorkKeys = Seq("sr", "sw", "sp", "jobs", "skipped_stages", "tasks",
     "run_ms", "cpu_ms", "gc_ms", "fetch_wait_ms")
 
   private[graft] def workEntry(work: Seq[Long]): String =
     WorkKeys.zip(work).map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
 
   /** Running totals of [[WorkKeys]] over every Spark event so far; one
-    * query's work is the difference of the readings around it. */
+    * query's work is the difference of the readings around it. A stage
+    * counts as skipped when a job that listed it ends without it having
+    * been submitted meanwhile; `pending` is touched only on the listener
+    * thread. */
   private final class WorkListener extends SparkListener {
-    private val sr, sw, sp, jobs, stages, tasks, runMs, cpuNs, gcMs, fetchMs = new AtomicLong
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+    private val sr, sw, sp, jobs, skipped, tasks, runMs, cpuNs, gcMs, fetchMs = new AtomicLong
+    private val pending = scala.collection.mutable.Map.empty[Int, Set[Int]]
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet(); pending(e.jobId) = e.stageIds.toSet
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      pending.mapValuesInPlace((_, ids) => ids - e.stageInfo.stageId)
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      pending.remove(e.jobId).foreach(ids => skipped.addAndGet(ids.size))
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       tasks.incrementAndGet()
       val m = e.taskMetrics
@@ -115,7 +126,7 @@ object Bench {
         fetchMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
       }
     }
-    def reading: Seq[Long] = Seq(sr.get, sw.get, sp.get, jobs.get, stages.get, tasks.get,
+    def reading: Seq[Long] = Seq(sr.get, sw.get, sp.get, jobs.get, skipped.get, tasks.get,
       runMs.get, cpuNs.get / 1000000, gcMs.get, fetchMs.get)
   }
 

@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets
 import java.util.Base64
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct, to_json}
+import org.apache.spark.sql.graftshim.Shim
 
 /** Authenticated HTTP bulk-insert transport — the reference's ClickHouse
   * write path reproduced natively (SURVEY §2 A11/A12;
@@ -14,9 +16,13 @@ import org.apache.spark.sql.DataFrame
   * `ADDR?database=DB&query=INSERT INTO TABLE FORMAT JSONEachRow` with
   * HTTP Basic credentials.
   *
-  * Execution shape: `df.toJSON` runs distributed (per-partition Jackson
-  * serialization, no driver funnel); each PARTITION posts one blob from
-  * its executor — the reference's one-file-one-POST contract at
+  * Execution shape: rows serialize distributed, inside Catalyst
+  * (`to_json` over a struct of every column: the Jackson writer and
+  * options `Dataset.toJSON` uses, so the bytes are `toJSON`'s, and the
+  * insert ids that hash them match). Each task writes every row's UTF-8
+  * bytes straight from Spark's row into its chunk buffer, with no Java
+  * `String` in between, and each PARTITION posts from its executor —
+  * the reference's one-file-one-POST contract at
   * partition grain, which is what a 1000-executor cluster needs (the
   * driver never sees the data; a failed POST throws, the task retries,
   * and at-least-once delivery matches the reference's semantics, whose
@@ -27,7 +33,7 @@ import org.apache.spark.sql.DataFrame
   * micro-batch = one logical insert, the A11 batch-at-once contract.
   *
   * No ClickHouse ships in this environment, so the integration tests run
-  * against an in-JDK embedded HTTP server ([[graft.sinks.HttpSinkSpec]])
+  * against an in-JDK embedded HTTP server ([[graft.sources.HttpSinkSpec]])
   * capturing auth, query params and bodies byte-for-byte.
   */
 object HttpBulkSink {
@@ -71,15 +77,12 @@ object HttpBulkSink {
   /** POST one JSONEachRow blob; throws on any non-2xx status (task retry
     * → at-least-once, the reference's failure contract: keep the file,
     * print the error — trace-converter.py:109-112). */
-  private[sources] def post(c: Config, blob: String, insertId: Option[String] = None): Unit =
-    post(c, blob.getBytes(StandardCharsets.UTF_8), insertId)
-
-  private[sources] def post(c: Config, blob: Array[Byte], insertId: Option[String]): Unit = {
+  private def post(c: Config, body: Chunk, insertId: String): Unit = {
     val b = HttpRequest.newBuilder(insertUri(c))
-      .POST(HttpRequest.BodyPublishers.ofByteArray(blob))
+      .POST(HttpRequest.BodyPublishers.ofByteArray(body.bytes, 0, body.size()))
       .header("Content-Type", "application/x-ndjson")
       .timeout(java.time.Duration.ofSeconds(RequestTimeoutSec))
-    insertId.foreach(b.header(InsertIdHeader, _))
+      .header(InsertIdHeader, insertId)
     authHeader(c).foreach(b.header("Authorization", _))
     val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
     if (resp.statusCode() / 100 != 2)
@@ -113,27 +116,30 @@ object HttpBulkSink {
   def append(df: DataFrame, c: Config, partitions: Option[Int] = None,
              batchId: Option[String] = None): Unit = {
     val insertBatch = batchId.getOrElse(java.util.UUID.randomUUID().toString)
-    val json = partitions.fold(df)(n => df.coalesce(n)).toJSON
-    json.foreachPartition { rows: Iterator[String] =>
+    val json = partitions.fold(df)(n => df.coalesce(n)).select(to_json(struct(col("*"))))
+    Shim.toInternalRdd(json).foreachPartition { rows =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
-      // rows encode ONCE, straight into the chunk buffer (the previous
-      // form paid a second full encode inside BodyPublishers.ofString
-      // plus a throwaway byte[] per row just to count bytes)
-      val buf = new java.io.ByteArrayOutputStream(1 << 20)
+      val buf = new Chunk(1 << 20)
       var chunk = 0
       def flush(): Unit = {
-        val body = buf.toByteArray
-        val hash = java.security.MessageDigest.getInstance("SHA-256").digest(body)
-          .take(8).map(b => f"${b & 0xff}%02x").mkString
-        post(c, body, Some(s"$insertBatch/$pid/$chunk/$hash"))
+        val sha = java.security.MessageDigest.getInstance("SHA-256")
+        sha.update(buf.bytes, 0, buf.size())
+        val hash = sha.digest().take(8).map(b => f"${b & 0xff}%02x").mkString
+        post(c, buf, s"$insertBatch/$pid/$chunk/$hash")
         buf.reset(); chunk += 1
       }
       rows.foreach { r =>
-        buf.write(r.getBytes(StandardCharsets.UTF_8)); buf.write('\n')
+        r.getUTF8String(0).writeTo(buf); buf.write('\n')
         if (buf.size() >= MaxPostBytes) flush()
       }
       if (buf.size() > 0) flush()
     }
+  }
+
+  /** A chunk's body buffer whose backing array is read in place by the
+    * hash and the POST (`toByteArray` would copy every chunk). */
+  private final class Chunk(initial: Int) extends java.io.ByteArrayOutputStream(initial) {
+    def bytes: Array[Byte] = buf
   }
 
   /** Execute one SQL statement over the same transport (the reference's

@@ -1266,18 +1266,23 @@ object TraceStore {
     * the chunked consumer's read kernel (the whole-list call IS
     * [[readChangesBetween]]). Insert-side and delete-side keys of the
     * slice are read alias-resolved (live or `_retired/`) and combined in
-    * one signed pass ([[signedDiff]]). */
+    * one signed pass ([[signedDiff]]). A one-sided slice (every
+    * append-only diff is one) has nothing to cancel, so it is read as a
+    * plain scan tagged with its side: the same multiset, no shuffle. */
   private[graft] def readChangedKeys(spark: SparkSession, tablePath: String,
                                      slice: Seq[(String, Boolean)],
                                      what: String,
                                      rowFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val root = java.nio.file.Paths.get(tablePath)
-    val (news, olds) = slice.partition(_._2)
+    val news = slice.collect { case (k, true) => k }
+    val olds = slice.collect { case (k, false) => k }
     def side(keys: Seq[String]): DataFrame = {
       val df = readResolvedKeys(spark, root, keys, what)
       rowFilter.fold(df)(df.filter)
     }
-    signedDiff(side(news.map(_._1)), side(olds.map(_._1)))
+    if (olds.isEmpty) side(news).withColumn("_change", lit("insert"))
+    else if (news.isEmpty) side(olds).withColumn("_change", lit("delete"))
+    else signedDiff(side(news), side(olds))
   }
 
   /** One step of the operational CDC cursor cycle: pin the CURRENT state

@@ -106,7 +106,7 @@ class BenchEmitSpec extends AnyFunSuite {
   test("a query's io_bytes entry carries its shuffle bytes and its Spark work") {
     val js = JsonMethods.parse(Bench.workEntry(1L to Bench.WorkKeys.size.toLong))
     val JObject(fields) = js: @unchecked
-    assert(fields.map(_._1) == List("sr", "sw", "sp", "jobs", "stages", "tasks",
+    assert(fields.map(_._1) == List("sr", "sw", "sp", "jobs", "skipped_stages", "tasks",
       "run_ms", "cpu_ms", "gc_ms", "fetch_wait_ms"))
     assert((js \ "sr") == JInt(1) && (js \ "fetch_wait_ms") == JInt(10))
   }

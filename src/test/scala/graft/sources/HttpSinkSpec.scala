@@ -160,6 +160,44 @@ class HttpSinkSpec extends SparkSpec {
     } finally stop()
   }
 
+  test("bodies and insert ids are byte-identical to Dataset.toJSON's lines") {
+    import spark.implicits._
+    val (url, got, stop) = server(200)
+    try {
+      val cfg = HttpBulkSink.Config(url, "db", "t")
+      // the insert id hashes the body, so a writer whose bytes drift from
+      // toJSON's would break dedup for a replay that straddles the change
+      def check(df: org.apache.spark.sql.DataFrame): Unit = {
+        got.clear()
+        HttpBulkSink.append(df, cfg, partitions = Some(1), batchId = Some("id"))
+        val want = df.coalesce(1).toJSON.collect().mkString("", "\n", "\n")
+        val sha = java.security.MessageDigest.getInstance("SHA-256")
+          .digest(want.getBytes(StandardCharsets.UTF_8))
+          .take(8).map(b => f"${b & 0xff}%02x").mkString
+        assert(got.size == 1)
+        assert(got.peek().body == want)
+        assert(got.peek().insertId == s"id/0/0/$sha")
+      }
+      // the replicated shape: the store's columns plus _sign
+      val store = tmpDir("bytes-store")
+      graft.store.TraceStore.append(Seq(
+        (10, "m1", "default", java.sql.Timestamp.valueOf("2019-05-13 15:37:32.5"), "ok", "a"),
+        (40, "m2", "default", java.sql.Timestamp.valueOf("2019-05-14 10:00:00"), "bad", null)
+      ).toDF("Severity", "Machine", "LogGroup", "Time", "Type", "ID"), store)
+      check(graft.store.TraceStore.read(spark, store)
+        .withColumn("_sign", org.apache.spark.sql.functions.lit(-1)))
+      // every type and text shape the JSON writer treats specially
+      check(spark.sql("""SELECT * FROM VALUES
+        ('é ü 中 😀 \u0007 "q" \\ /', TIMESTAMP'1969-07-20 20:17:40.123456',
+         double('NaN'), double('Infinity'), float('-Infinity'), CAST(NULL AS INT),
+         array(1, NULL, 3), map('k', 'v', 'z', NULL), 12345.678BD, X'00FF41',
+         DATE'1900-02-28', named_struct('a', CAST(NULL AS INT), 'b', array('x'))),
+        (NULL, NULL, -0.0D, 1.0E-10D, 3.4E38F, -7, CAST(array() AS ARRAY<INT>),
+         CAST(map() AS MAP<STRING, STRING>), NULL, NULL, NULL, NULL)
+        AS t(s, ts, d, inf, f, i, arr, m, dec, bin, dt, st)"""))
+    } finally stop()
+  }
+
   test("soak: injected 500 + stream restart replays a batch; receiver dedup on insert ids yields exactly-once") {
     // The full at-least-once → exactly-once-with-dedup narrative against a
     // DEDUP-CAPABLE receiver (ClickHouse insert_deduplication_token

@@ -264,6 +264,54 @@ class SnapshotSpec extends SparkSpec {
     assert(got.slice(2, 7) == may)
   }
 
+  test("one-sided slices are a tagged scan equal to the signed diff; a compaction slice cancels") {
+    import spark.implicits._
+    val path = tmpDir("snap-slices")
+    mkStore(path, 2) // ids 0..1, May 2019
+    val s1 = TraceStore.snapshot(path)
+    val dup = row(7, "2019-06-02 09:00:00", Some("dup"))
+    TraceStore.append(Seq(dup, dup, row(8, "2019-06-03 09:00:00", None))
+      .toDF("Severity", "Machine", "LogGroup", "Time", "Type", "ID"), path)
+    val s2 = TraceStore.snapshot(path)
+    def bag(df: DataFrame): Map[String, Int] =
+      df.collect().map(_.toSeq.mkString("|")).groupBy(identity).map { case (k, v) => k -> v.length }
+    def slice(from: String, to: String): DataFrame =
+      TraceStore.readChangedKeys(spark, path, TraceStore.changedKeysBetween(path, from, to), "slice")
+    def signed(from: String, to: String): DataFrame = {
+      val (a, b) = (TraceStore.readSnapshot(spark, path, from), TraceStore.readSnapshot(spark, path, to))
+      b.exceptAll(a).withColumn("_change", lit("insert"))
+        .unionByName(a.exceptAll(b).withColumn("_change", lit("delete")))
+    }
+    def shuffles(df: DataFrame): Boolean = {
+      df.collect() // settle the adaptive plan
+      df.queryExecution.executedPlan.toString.contains("Exchange")
+    }
+    val cols = TraceStore.readSnapshot(spark, path, s2).columns.toSeq :+ "_change"
+    // append-only: every changed file is an insert, duplicates keep their count
+    assert(TraceStore.changedKeysBetween(path, s1, s2).forall(_._2))
+    val inserts = slice(s1, s2)
+    assert(inserts.columns.toSeq == cols)
+    assert(bag(inserts) == bag(signed(s1, s2)) && bag(inserts).values.sum == 3)
+    assert(!shuffles(inserts), "a one-sided slice needs no exchange")
+    // the reverse pair is delete-only: the same rows, signed the other way
+    val deletes = slice(s2, s1)
+    assert(deletes.columns.toSeq == cols && !shuffles(deletes))
+    assert(bag(deletes) == bag(signed(s2, s1)) && bag(deletes).values.sum == 3)
+    // a retention drop retires whole files: delete-only again
+    TraceStore.dropPartitionsBefore(path, "201906")
+    val s3 = TraceStore.snapshot(path)
+    assert(TraceStore.changedKeysBetween(path, s2, s3).forall(!_._2))
+    assert(bag(slice(s2, s3)) == bag(signed(s2, s3)) && bag(slice(s2, s3)).values.sum == 2)
+    // a compaction's slice holds both sides and still cancels to nothing
+    TraceStore.append(Seq(row(9, "2019-06-04 09:00:00", Some("id9")))
+      .toDF("Severity", "Machine", "LogGroup", "Time", "Type", "ID"), path)
+    val s3b = TraceStore.snapshot(path)
+    TraceStore.compact(spark, path, maxFilesPerMonth = 1, splitsPerMonth = 1)
+    val s4 = TraceStore.snapshot(path)
+    assert(TraceStore.changedKeysBetween(path, s3b, s4).map(_._2).toSet == Set(true, false))
+    assert(slice(s3b, s4).count() == 0)
+  }
+
   test("snapshot ids are monotonic and listable") {
     val path = tmpDir("snap-ids")
     mkStore(path, 2)
