@@ -32,8 +32,6 @@ object AcScan {
   final class Automaton(val alphabet: Map[Char, Int],
                         val next: Array[Array[Int]],
                         val out: Array[Array[(Int, Int)]]) extends Serializable {
-    def nodeCount: Int = next.length
-
     /** Scan `text`, invoking `f(patternId, endPos1Based)` per match. */
     def scan(text: String, f: (Int, Int) => Unit): Unit = {
       var st = 0

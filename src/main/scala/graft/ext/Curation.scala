@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
@@ -69,8 +69,8 @@ object Curation {
     * This is the mixture-control primitive of a training-data pipeline:
     * per-source quotas instead of global random sampling. One shuffle
     * keyed by the stratum; the rank cutoff happens within each partition. */
-  /** THE deterministic per-row sampling hash, shared by q57 and the
-    * composed pipeline. Reduce mod 2^31-1 BEFORE multiplying: 64-bit ids
+  /** THE deterministic per-row sampling hash, shared by q57, q71 and
+    * q116. Reduce mod 2^31-1 BEFORE multiplying: 64-bit ids
     * times a 31-bit constant would overflow Long, which throws under ANSI
     * mode (Spark 4 default) and errors in DuckDB. (id % m) * 48271 stays
     * < 2^47. TWO Lehmer steps, not one: a single step is strictly
@@ -188,10 +188,8 @@ object Curation {
     * definition the reporting query (q33) surfaces, never a fork.
     * percent_rank is rank-arithmetic — engine-exact, no float quantile
     * interpolation to drift. */
-  /** THE quality-gate transform, shared by q65 and the composed pipeline
-    * (q65's rounded-pr comparison included — a fork here would let the
-    * pipeline drop boundary docs the pinned operator keeps). Adds
-    * `quality` and `pr`, filters to survivors.
+  /** The quality-gate transform q65 projects, with its rounded-pr
+    * comparison. Adds `quality` and `pr`, filters to survivors.
     *
     * percent_rank is (rank−1)/(n_lang−1) computed from
     * [[DistRank.withGroupRank]] — a real corpus is ~90% one language, so
@@ -201,7 +199,7 @@ object Curation {
     * (quality, doc_id) order is a total order, so rank == row_number and
     * the arithmetic percent_rank is bit-identical to the window's. n_lang
     * is a dimension-sized broadcast off the rank checkpoint. */
-  private[ext] def qualityGate(docs: DataFrame): DataFrame = {
+  private def qualityGate(docs: DataFrame): DataFrame = {
     val scored = docs.withColumn("quality", TextAnalysis.qualityCol)
     val rk = DistRank.withGroupRank(
       scored, Seq("lang"), "__qr", Seq(col("quality"), col("doc_id"))).df
@@ -229,58 +227,6 @@ object Curation {
        |          ${TextAnalysis.qualitySqlExpr} AS quality
        |        FROM documents) q) t
        |WHERE pr >= 0.25 OR n_lang < 8 ORDER BY doc_id""".stripMargin
-
-  // ---------------------------------------------------------------- the composed pipeline
-  /** End-to-end corpus curation — the operators above composed the way a
-    * training-data pipeline actually runs them:
-    *
-    *   1. near-dup resolution: LSH pairs → connected components → keep
-    *      the lowest doc_id per cluster (q55's semantics);
-    *   2. quality gate: per-language percent_rank threshold with the
-    *      low-resource stratum floor (q65's semantics);
-    *   3. per-source quota: deterministic hash-ordered k per source
-    *      (q57's semantics, quota = `perSource`).
-    *
-    * Stage order matters and is the standard one: dedup before quality
-    * (so a duplicated high-quality doc can't occupy several quota slots),
-    * quality before sampling (so quotas are filled with gated docs).
-    * Returns the curated documents plus per-stage survivor counts. */
-  def curateCorpus(s: SparkSession, dir: String, perSource: Int = 20)
-      : (DataFrame, Map[String, Long]) = {
-    val docs = Tables.documents(s, dir)
-    val n0 = docs.count()
-
-    // 1. drop near-dup non-representatives. Intermediates are persisted so
-    // each stage computes once across its count and the next stage (and
-    // released before returning — the final result is quota-bounded, so
-    // localCheckpoint keeps it alive without the corpus-sized caches).
-    val clusters = Dedup.q55DedupClusters(s, dir)
-      .select(col("doc_id"), col("keep"))
-    val deduped = docs.join(clusters, Seq("doc_id"), "left")
-      .filter(col("keep").isNull || col("keep") === 1)
-      .drop("keep")
-      .persist()
-    val n1 = deduped.count()
-
-    // 2. quality gate — the SAME transform as q65 (shared helper,
-    // rounded-pr comparison included), over the deduped set
-    val gated = qualityGate(deduped).drop("quality", "pr").persist()
-    val n2 = gated.count()
-
-    // 3. per-source quota
-    val ws = Window.partitionBy(col("source")).orderBy(sampleHash, col("doc_id"))
-    val sampled = gated
-      .withColumn("rn", row_number().over(ws))
-      .filter(col("rn") <= perSource)
-      .drop("rn")
-      .localCheckpoint(true)
-    deduped.unpersist(false)
-    gated.unpersist(false)
-    val n3 = sampled.count()
-
-    (sampled, Map("input" -> n0, "after_dedup" -> n1,
-                  "after_quality" -> n2, "after_quota" -> n3))
-  }
 
   // ---------------------------------------------------------------- mixture interleaving
   /** Deterministic weighted mixture: stride-schedule documents so any
@@ -314,111 +260,6 @@ object Curation {
       |            ORDER BY ((doc_id % 2147483647) * 48271 % 2147483647) * 48271 % 2147483647, doc_id) AS rn
       |        FROM documents) r) t
       |ORDER BY pos_key, source, rn LIMIT 100""".stripMargin
-
-  // ---------------------------------------------------------------- sequence packing
-  /** One packed training sequence: member docs + fill accounting. */
-  final case class Pack(pack_id: Long, doc_ids: Seq[Long], n_tokens: Long,
-                        fill: Double)
-
-  /** Greedy sequence packing: batch documents into fixed token budgets
-    * (the step that turns a curated corpus into trainer-shaped examples;
-    * greedy first-fit-on-sorted-stream is the standard approximation).
-    * Docs longer than the budget become single-doc packs (the trainer
-    * truncates).
-    *
-    * Determinism & scale: packing is order-dependent, so rows are
-    * partitioned by an explicit doc_id formula (hash-mod — NOT
-    * repartitionByRange, whose sampled boundaries vary run to run) and
-    * sorted by doc_id — the same corpus packs identically on any cluster
-    * size with fixed `numPartitions`. Packing itself is partition-local
-    * (mapPartitions, zero further shuffles); pack ids are
-    * partition-offset based, so they are stable too. */
-  def packSequences(docs: DataFrame, budget: Int, numPartitions: Int): Dataset[Pack] = {
-    import docs.sparkSession.implicits._
-    val perPartitionCap = 1L << 40
-    docs
-      .select(col("doc_id").cast("long"), size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .repartition(numPartitions, pmod(col("doc_id"), lit(numPartitions.toLong)))
-      .sortWithinPartitions(col("doc_id"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        // STREAMING greedy fold: state is only the one OPEN pack (current
-        // members + used budget) — buffering every pack of the partition
-        // before emitting would make task memory O(partition rows) and
-        // defeat the memory-bounded design the rest of this file claims
-        new Iterator[Pack] {
-          private val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-          private var packIdx = 0L
-          private var members = List.empty[Long]
-          private var used = 0L
-          private var pending: Pack = _
-
-          private def emit(): Pack = {
-            val p = Pack(pid * perPartitionCap + packIdx, members.reverse,
-              used, math.min(used.toDouble / budget, 1.0))
-            packIdx += 1; members = Nil; used = 0L
-            p
-          }
-          @annotation.tailrec
-          private def advance(): Unit =
-            if (pending == null && (it.hasNext || members.nonEmpty)) {
-              if (!it.hasNext) pending = emit() // final partial pack
-              else {
-                val (id, n) = it.next()
-                if (used > 0 && used + n > budget) {
-                  pending = emit(); members = id :: members; used = n
-                } else {
-                  members = id :: members; used += n
-                  if (used >= budget) pending = emit() // over-budget singleton or exact fit
-                  else advance()
-                }
-              }
-            }
-          override def hasNext: Boolean = { advance(); pending != null }
-          override def next(): Pack = {
-            advance()
-            val p = pending; pending = null; p
-          }
-        }
-      }
-  }
-
-  // ---------------------------------------------------------------- shard export
-  /** Materialize a curated corpus as row-bounded JSONL shards — the
-    * trainer-facing output format (each shard a standalone NDJSON file a
-    * loader can stream independently). The per-file row bound is enforced
-    * by the writer itself (`maxRecordsPerFile` splits files at the bound
-    * regardless of partitioning); the repartition merely spreads rows by
-    * doc_id hash so parallel writers stay busy and shard sizes even out.
-    * Returns the shard file count. */
-  def exportShards(docs: DataFrame, outDir: String, rowsPerShard: Long): Int = {
-    require(rowsPerShard > 0, s"rowsPerShard must be positive, got $rowsPerShard")
-    // persist across the two actions (count, write) so an expensive
-    // upstream pipeline (e.g. curateCorpus output) is not evaluated twice
-    // — but only if the CALLER has not already cached the frame: an
-    // unconditional persist/unpersist pair would silently destroy the
-    // caller's cache entry and force a full upstream recompute after we
-    // return
-    val ownCache = docs.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (ownCache) docs.persist()
-    try {
-      val n = docs.count()
-      val parts = math.max(1, math.ceil(n.toDouble / rowsPerShard).toInt)
-      docs
-        .repartition(parts, col("doc_id"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", rowsPerShard)
-        .json(outDir)
-    } finally if (ownCache) docs.unpersist(false)
-    // count shards through the Hadoop FS API — outDir may be a URI or a
-    // remote filesystem the writer accepted but java.io.File cannot see
-    val p = new org.apache.hadoop.fs.Path(outDir)
-    val fs = p.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).count { st =>
-      val name = st.getPath.getName
-      name.startsWith("part-") && !name.endsWith(".crc")
-    }
-  }
 
   // ------------------------------------------------------------ dataset card
   /** Dataset-card summary: per (source, lang) corpus cell — document count,

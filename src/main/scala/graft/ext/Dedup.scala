@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 import graft.functions.TextHash._
@@ -17,14 +17,6 @@ import graft.functions.TextHash._
   * oracle for the LSH path, not the scale path.
   */
 object Dedup {
-
-  /** Library operator: exact dedup keeping the lowest-id row per key.
-    * Deterministic, unlike dropDuplicates (which keeps an arbitrary row). */
-  def exactByKey(df: DataFrame, key: String, idCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col(idCol))
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
 
   // ---------------------------------------------------------------- C1
   /** Exact duplicate grouping by full text: one hash shuffle on the text
@@ -219,28 +211,14 @@ object Dedup {
     * sign of the per-bit contribution sum over the token array, bits
     * packed to a long. Runs through the native codegen expression
     * [[graft.functions.SimHashExpr]] — one compiled pass hashing each
-    * token once (the built-in formulation, kept as [[simhashHof]] for the
-    * equivalence spec, runs 16 interpreted aggregate lambdas per row).
+    * token once (the built-in formulation, which the equivalence spec
+    * keeps as its reference, runs 16 interpreted aggregate lambdas per row).
     * Map-only: SimHashes 100 TB at scan speed with zero shuffles. */
   def q27SimHash(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.simhash16(split(col("text"), " ")).as("simhash"))
       .orderBy(col("doc_id"))
-
-  /** The built-in (higher-order-function) SimHash formulation over a
-    * token-array column — the semantic reference [[q27SimHash]]'s native
-    * expression is spec-checked against (`PropertySpec`). */
-  def simhashHof(tk: Column): Column = {
-    val tvs = transform(tk, t => tokval(t))
-    (0 until 16).map { j =>
-      val csum = aggregate(
-        transform(tvs, tv =>
-          when((tv * (2 * j + 3)) % 65536 >= 32768, 1L).otherwise(-1L)),
-        lit(0L), (acc, x) => acc + x)
-      when(csum > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
 
   val q27Sql: String =
     s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),

@@ -18,10 +18,10 @@ import graft.tables.Tables
   * sample boundaries (oracle-gated via [[q204ContainerSample]] and
   * q202/q203/q205/q206). Only codec-level pixel/PCM DECODE of
   * video/compressed-audio has no JDK implementation and the container
-  * ships no codec, so [[decodeStub]] (features) and [[sampleFramesStub]]
-  * (unstructured blobs only) remain clearly-marked deterministic fakes —
-  * with their Spark-side plumbing (schema, batch shape, partition-local
-  * execution, feature output) real and tested.
+  * ships no codec, so [[sampleFramesStub]] (unstructured blobs only)
+  * remains a clearly-marked deterministic fake — with its Spark-side
+  * plumbing (schema, partition-local execution, frame output) real and
+  * tested.
   * At 100 TB the pattern is: binary column in parquet (so column pruning
   * skips the bytes unless referenced), `repartition` to bound task input
   * size, `mapPartitions` so any native decoder initializes once per
@@ -31,43 +31,6 @@ object Multimodal {
 
   /** Typed media row: payload + metadata, as it would land from ingestion. */
   case class MediaRow(media_id: Long, mime: String, payload: Array[Byte])
-
-  /** Fixed-shape decoded features (stand-in for image embeddings / audio
-    * frames). Deterministic fake: byte histogram moments. */
-  case class MediaFeatures(media_id: Long, mime: String, n_bytes: Int,
-                           feature: Array[Float])
-
-  /** STUB decode for the AUDIO/VIDEO mimes (images go through the real
-    * [[decodeImages]] path): a real build would call an FFI codec here —
-    * the container ships none and the JDK has no demuxer. Deterministic
-    * byte-level moments keep the pipeline testable end-to-end.
-    * Partition-local: one decoder init per partition, rows streamed —
-    * the shape a JNI/FFI codec needs. */
-  def decodeStub(rows: Iterator[MediaRow]): Iterator[MediaFeatures] = {
-    // decoder init would happen here, once per partition
-    rows.map { r =>
-      val bs = r.payload
-      // single pass, Long accumulator (an Int sum overflows past ~16 MB)
-      var sum = 0L; var mx = 0; var mn = 255
-      var i = 0
-      while (i < bs.length) {
-        val v = bs(i) & 0xff
-        sum += v; if (v > mx) mx = v; if (v < mn) mn = v
-        i += 1
-      }
-      val n = math.max(bs.length, 1)
-      val mean = (sum.toDouble / n).toFloat
-      val (fmn, fmx) = if (bs.isEmpty) (0f, 0f) else (mn.toFloat, mx.toFloat)
-      MediaFeatures(r.media_id, r.mime, bs.length, Array(mean, fmn, fmx, n.toFloat))
-    }
-  }
-
-  /** Full pipeline: DataFrame with a binary column → partition-local decode
-    * → typed features. */
-  def extractFeatures(df: Dataset[MediaRow]): Dataset[MediaFeatures] = {
-    import df.sparkSession.implicits._
-    df.mapPartitions(decodeStub)
-  }
 
   /** One sampled video frame: payload slice + position metadata. */
   case class MediaFrame(media_id: Long, frame_idx: Int, offset: Long,
@@ -168,26 +131,6 @@ object Multimodal {
                               everyNth: Int): Dataset[MediaFrame] = {
     import df.sparkSession.implicits._
     df.mapPartitions(rs => sampleFramesDispatch(rs, frameBytes, everyNth))
-  }
-
-  /** STUB resize: a real build decodes + rescales pixels; the stub scales
-    * the feature vector's shape metadata. Demonstrates the batched
-    * execution contract (the Scala analogue of a pandas-UDF batch): rows
-    * are processed `batchSize` at a time through one call, the shape a
-    * vectorized/FFI kernel needs, while the iterator keeps streaming —
-    * no whole-partition materialization. */
-  def resizeBatched(df: Dataset[MediaFeatures], targetDim: Int,
-                    batchSize: Int = 64): Dataset[MediaFeatures] = {
-    import df.sparkSession.implicits._
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // one vectorized kernel call per batch would happen here
-        batch.map { f =>
-          val out = java.util.Arrays.copyOf(f.feature, targetDim)
-          f.copy(feature = out)
-        }
-      }
-    }
   }
 
   // ---------------------------------------------------------------- real image codec path

@@ -257,8 +257,7 @@ object Similarity {
     * 2016-row arithmetic. The naive alternative — explode + self-join on
     * vec_id — shuffles n·d rows twice and is what this plan exists to
     * avoid. (At 10^9+ rows the integer numerator would overflow BIGINT:
-    * there the same pass accumulates mean-centered doubles instead —
-    * [[topComponents]] implements exactly that double-precision variant;
+    * there the same pass would accumulate mean-centered doubles instead;
     * the integer form is what makes the GATE exact.) */
   def q196DimCovariance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -339,102 +338,6 @@ object Similarity {
       |JOIN dims db ON db.i = p.dj
       |ORDER BY abs(nt.n * p.s_ij - da.s_i * db.s_i) DESC, p.di, p.dj
       |LIMIT 20""".stripMargin
-
-  /** Top-k principal components of the embedding matrix — the PCA half
-    * that q196's covariance SCREEN motivates (decorrelate/whiten before
-    * product quantization or dimension pruning). Scale split: the only
-    * corpus-sized work is ONE `mapPartitions` pass accumulating per-task
-    * (n, Σx, XᵀX) blocks (d + d² doubles per task, the dense twin of
-    * q196's integer triangle); everything after — combine, covariance,
-    * power iteration with deflation — is d²-bounded driver arithmetic
-    * (64×64 here; the classic big-data PCA recipe, valid while d² fits a
-    * driver core, i.e. up to d ≈ 10⁴). Deterministic: the start vector is
-    * the max-variance axis, not a random draw, so results are
-    * reproducible across runs/engines.
-    *
-    * Returns (components, eigenvalues, trace): `components(i)` is the
-    * i-th eigenvector (unit norm, sign fixed by its largest-|coord|
-    * entry being positive), `eigenvalues(i)` its variance share
-    * numerator; trace = total variance, so explained share =
-    * eigenvalue/trace. */
-  def topComponents(emb: DataFrame, k: Int, iters: Int = 100)
-      : (Array[Array[Double]], Array[Double], Double) = {
-    import emb.sparkSession.implicits._
-    val partials = emb.select(col("embedding")).as[Array[Float]]
-      .mapPartitions { rows =>
-        var d = 0; var n = 0L
-        var s: Array[Double] = null; var m: Array[Double] = null
-        rows.foreach { v =>
-          if (s == null) { d = v.length; s = new Array[Double](d); m = new Array[Double](d * d) }
-          n += 1
-          var i = 0
-          while (i < d) {
-            val vi = v(i).toDouble
-            s(i) += vi
-            var j = i
-            while (j < d) { m(i * d + j) += vi * v(j); j += 1 }
-            i += 1
-          }
-        }
-        if (s == null) Iterator.empty
-        else Iterator.single((n, s.toSeq, m.toSeq))
-      }.collect()
-    require(partials.nonEmpty, "empty embedding table")
-    val d = partials.head._2.length
-    val n = partials.map(_._1).sum.toDouble
-    val sum = new Array[Double](d)
-    val mom = new Array[Double](d * d)
-    partials.foreach { case (_, s, m) =>
-      var i = 0; while (i < d) { sum(i) += s(i); i += 1 }
-      var j = 0; while (j < d * d) { mom(j) += m(j); j += 1 }
-    }
-    // covariance (population): C = M/n − μμᵀ, symmetrized from the upper
-    // triangle the pass filled
-    val cov = Array.ofDim[Double](d, d)
-    for (i <- 0 until d; j <- i until d) {
-      val c = mom(i * d + j) / n - (sum(i) / n) * (sum(j) / n)
-      cov(i)(j) = c; cov(j)(i) = c
-    }
-    val trace = (0 until d).map(i => cov(i)(i)).sum
-    val comps = Array.ofDim[Double](k, d)
-    val eigs = new Array[Double](k)
-    val work = cov.map(_.clone())
-    for (c <- 0 until k) {
-      // deterministic start: axis of max remaining variance
-      val v = new Array[Double](d)
-      v((0 until d).maxBy(i => work(i)(i))) = 1.0
-      var it = 0
-      while (it < iters) {
-        val w = new Array[Double](d)
-        for (i <- 0 until d) { var acc = 0.0; var j = 0
-          while (j < d) { acc += work(i)(j) * v(j); j += 1 }; w(i) = acc }
-        val nrm = math.sqrt(w.map(x => x * x).sum)
-        if (nrm > 0) { for (i <- 0 until d) v(i) = w(i) / nrm }
-        it += 1
-      }
-      // sign convention: largest-|coord| entry positive
-      val pivot = (0 until d).maxBy(i => math.abs(v(i)))
-      if (v(pivot) < 0) for (i <- 0 until d) v(i) = -v(i)
-      var lam = 0.0
-      for (i <- 0 until d; j <- 0 until d) lam += v(i) * work(i)(j) * v(j)
-      comps(c) = v; eigs(c) = lam
-      // deflate: work −= λ v vᵀ
-      for (i <- 0 until d; j <- 0 until d) work(i)(j) -= lam * v(i) * v(j)
-    }
-    (comps, eigs, trace)
-  }
-
-  /** Project embeddings onto precomputed components: map-only, the
-    * apply step after [[topComponents]] (broadcast k×d matrix, fused
-    * per-row dot products — the corpus never shuffles). */
-  def projectComponents(emb: DataFrame, comps: Array[Array[Double]]): DataFrame = {
-    val exprs = comps.zipWithIndex.map { case (v, i) =>
-      val lits = array(v.map(x => lit(x.toFloat)): _*)
-      round(aggregate(zip_with(col("embedding"), lits, (a, b) => a * b),
-        lit(0.0), (acc, x) => acc + x), 5).as(s"pc${i + 1}")
-    }
-    emb.select((col("vec_id") +: exprs.toSeq): _*)
-  }
 
   val q31Sql: String =
     s"""WITH $lshCtes,
@@ -591,9 +494,9 @@ object Similarity {
        |SELECT d1, d2, round(c, 5) AS cos FROM cos WHERE c >= 0.25
        |ORDER BY d1, d2""".stripMargin
 
-  // ---------------------------------------------------------------- C3: centroid assignment + refinement
+  // ---------------------------------------------------------------- C3: centroid assignment
   /** Nearest-centroid cell assignment — the ONE definition shared by the
-    * IVF index (q46) and the k-means trainer, so the two can never
+    * IVF index (q46) and semantic dedup (q210), so the two can never
     * disagree on scoring or tie-breaking (max cosine, ties → min c_id).
     * The centroid set is broadcast-small by definition, so it is collected
     * once and baked into a literal; `NearestCellExpr` then scores all k
@@ -620,43 +523,6 @@ object Similarity {
         .withColumn("c_id", graft.functions.GraftFunctions.nearest_cell(
           col("embedding"), typedLit(cents)))
         .select(col("vec_id"), col("embedding"), col("c_id"))
-  }
-
-  /** One Lloyd iteration over the IVF coarse quantizer: [[assignCells]],
-    * then recompute each non-empty cell's centroid as the element-wise
-    * mean (posexplode → (cell, dim)-keyed partial aggregate → re-assembled
-    * array; each member contributes exactly one row per (cell, dim), so a
-    * plain count is the member count). Cells that attracted no vectors
-    * emit no row here — [[kmeansRefine]] carries their centroid forward.
-    * Returns (c_id, ce, n_members). */
-  def kmeansStep(emb: DataFrame, centroids: DataFrame): DataFrame =
-    assignCells(emb, centroids)
-      .select(col("c_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .groupBy(col("c_id"), col("d"))
-      .agg(avg(col("x")).as("m"), count(lit(1)).as("nm"))
-      .groupBy(col("c_id"))
-      .agg(
-        transform(array_sort(collect_list(struct(col("d"), col("m")))),
-          s => s.getField("m").cast("float")).as("ce"),
-        max(col("nm")).as("n_members"))
-
-  /** Driver-looped Lloyd refinement (the k-means training loop the IVF
-    * index needs): each round is one kmeansStep; the loop is bounded, and
-    * the (small) centroid set is localCheckpoint'ed per round so lineage
-    * does not stack across iterations. A centroid whose cell went empty
-    * keeps its previous position (standard Lloyd practice) — k never
-    * silently shrinks across rounds. */
-  def kmeansRefine(emb: DataFrame, initial: DataFrame, iters: Int): DataFrame = {
-    var cents = initial.select(col("c_id"), col("ce"))
-    (0 until iters).foreach { _ =>
-      val stepped = kmeansStep(emb, cents)
-        .select(col("c_id"), col("ce").as("ce_new"))
-      cents = cents.withColumnRenamed("ce", "ce_old")
-        .join(stepped, Seq("c_id"), "left")
-        .select(col("c_id"), coalesce(col("ce_new"), col("ce_old")).as("ce"))
-        .localCheckpoint(true)
-    }
-    cents
   }
 
   // ---------------------------------------------------------------- C3: contrastive hard-negative mining
@@ -926,17 +792,6 @@ object Similarity {
           .as(Seq("j", "y")))
       .select(col("vec_id"), col("j").cast("int").as("j"), round(col("y"), 4).as("y"))
       .orderBy(col("vec_id"), col("j"))
-
-  /** The built-in (higher-order-function) JL formulation — semantic
-    * reference for the fused [[graft.functions.JlProjectExpr]] kernel
-    * (`PropertySpec` pins bit-for-bit equivalence; the HOF runs 8×64
-    * interpreted lambdas per row). */
-  def jlProjectHof(v: Column): Column =
-    transform(sequence(lit(0), lit(7)), j =>
-      aggregate(sequence(lit(1), lit(64)), lit(0.0),
-        (acc, d) => acc + element_at(v, d).cast("double") *
-          when(((j * 64 + d).cast("long") * lit(2654435761L)) % lit(2000003L) >= lit(1000001L),
-            lit(1.0)).otherwise(lit(-1.0))))
 
   val q155Sql: String =
     """WITH dims AS (SELECT d FROM range(1, 65) t(d)),

@@ -1,11 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for shuffled equi-joins (builder prompt: "salting for
   * skew"; complements AQE's runtime skew-join splitting with a static
-  * technique that also works for aggregations).
+  * technique).
   *
   * A hot key (one machine emitting most trace events, one user owning most
   * events) funnels its entire partition through one task. Salting spreads
@@ -27,16 +27,4 @@ object Skew {
       explode(sequence(lit(0), lit(saltFactor - 1))))
     l.join(r, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Two-phase skew-tolerant aggregation: partial aggregate on
-    * (key, salt) — spreading a hot key over saltFactor reducers — then
-    * final aggregate on key. Equivalent to a plain groupBy-sum. */
-  def saltedSumCount(df: DataFrame, key: String, valueCol: String,
-                     saltFactor: Int, disc: String): DataFrame =
-    df.withColumn("__salt",
-        pmod(xxhash64(col(disc)), lit(saltFactor.toLong)).cast("int"))
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(col(valueCol)).as("__s"), count(lit(1)).as("__n"))
-      .groupBy(col(key))
-      .agg(sum(col("__s")).as("sum_value"), sum(col("__n")).as("n"))
 }

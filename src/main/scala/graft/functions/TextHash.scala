@@ -54,15 +54,10 @@ object TextHash {
     s"((((coalesce(list_sum(list_transform(range(1, length($t) + 1), " +
     s"i -> unicode($t[i]) * ($posWCase)))::BIGINT, 0)) % ${MinHashP}) * 2654435761) % ${MinHashP})"
 
-  /** MinHash permutation h: min over tokens of (a_h * tokval + b_h) mod P,
-    * with a_h/b_h derived from the permutation index by Knuth's
-    * multiplicative constant. */
-  def minhashTerm(tv: Column, h: Column): Column = {
-    val a = (h.cast("long") * lit(2654435761L) % lit(1000003L)) * lit(2L) + lit(1L)
-    val b = h.cast("long") * lit(40503L) + lit(17L)
-    (a * tv + b) % lit(MinHashP)
-  }
-
+  /** SQL fragment for MinHash permutation h of a token value: (a_h *
+    * tv + b_h) mod P, with a_h/b_h derived from the permutation index by
+    * Knuth's multiplicative constant; a signature row is its min over the
+    * document's tokens. */
   def minhashTermSql(tv: String, h: String): String =
     s"((((($h * 2654435761) % 1000003) * 2 + 1) * $tv + $h * 40503 + 17) % ${MinHashP})"
 

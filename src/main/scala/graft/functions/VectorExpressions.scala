@@ -39,7 +39,7 @@ object ExprKernels {
     ((polysum(s.toString, 0) % P) * 2654435761L) % P
 
   /** Token arrays with NULL ELEMENTS: skip them (the declared semantics
-    * everywhere else — ShingleGeneratorExpr, concat_ws, shingles3 — and
+    * everywhere else — concat_ws, shingles3 — and
     * these kernels are registered as session SQL functions, so arbitrary
     * arrays reach them). nullSafeEval guards only a null ARRAY; without
     * this, `minhash_sig(array('a', NULL))` NPEs the whole job. Fast path

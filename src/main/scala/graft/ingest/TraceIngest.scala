@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.TraceSchema
 
@@ -77,66 +77,4 @@ object TraceIngest {
   /** [[readBatch]] at an explicit time resolution (see [[normalize]]). */
   def readBatch(spark: SparkSession, path: String, res: TimeResolution): DataFrame =
     normalize(readRaw(spark, path), res)
-
-  /** Typed view for API consumers. */
-  def typed(df: DataFrame): Dataset[TraceSchema.TraceEvent] = {
-    import df.sparkSession.implicits._
-    df.as[TraceSchema.TraceEvent]
-  }
-
-  /** Diagnostic summary (A15 — the reference's data.info()):
-    * row count + per-column non-null counts, computed in one pass. */
-  def summary(df: DataFrame): DataFrame =
-    df.select(
-      count(lit(1)).as("n_rows") +:
-      df.columns.map(c => count(col(c)).as(s"nn_$c")): _*)
-
-  /** IPv4 `a.b.c.d[:port]` → numeric (for prefix/range matching). Null on
-    * anything that is not a well-formed dotted quad with octets 0-255
-    * (a 3-digit octet like 300 would otherwise alias a different valid
-    * address numerically). */
-  def ipv4ToLong(ipPort: Column): Column = {
-    val ip = split(ipPort, ":").getItem(0)
-    val parts = split(ip, "\\.")
-    def oct(i: Int): Column = parts.getItem(i).cast("long")
-    when(ip.rlike("^([0-9]{1,3}\\.){3}[0-9]{1,3}$") &&
-         oct(0) <= 255 && oct(1) <= 255 && oct(2) <= 255 && oct(3) <= 255,
-      oct(0) * 16777216L + oct(1) * 65536L + oct(2) * 256L + oct(3))
-      .otherwise(lit(null).cast("long"))
-  }
-
-  /** Dictionary enrichment by IP block — the reference's own TODO
-    * ("dictionaries, IP types", /root/reference/README.md:231-233) in
-    * Spark form. `blocks` rows are (cidr_start, cidr_end, payload…) with
-    * numeric inclusive bounds.
-    *
-    * Join shape: each block is exploded to its covering /16 prefixes and
-    * equi-joined on the trace IP's /16 with a residual range filter — a
-    * BroadcastHashJoin probing a handful of candidate blocks per row,
-    * not a nested-loop scan of the whole dictionary per event (with tens
-    * of thousands of CIDR blocks the BNLJ would be N×B comparisons).
-    * Nested dictionaries are legal: when blocks overlap, the MOST
-    * SPECIFIC (smallest) matching block wins, so row cardinality is
-    * always preserved. Rows with no matching block (or unparsable
-    * machines) keep null payloads. */
-  def enrichByIpBlock(traces: DataFrame, blocks: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pblocks = blocks
-      .withColumn("__p16", explode(sequence(
-        (col("cidr_start") / 65536L).cast("long"),
-        (col("cidr_end") / 65536L).cast("long"))))
-    val probe = traces
-      .withColumn("__ipn", ipv4ToLong(col("Machine")))
-      .withColumn("__rowid", monotonically_increasing_id())
-    val w = Window.partitionBy(col("__rowid"))
-      .orderBy((col("cidr_end") - col("cidr_start")).asc, col("cidr_start"))
-    probe
-      .join(broadcast(pblocks),
-        (col("__ipn") / 65536L).cast("long") === col("__p16") &&
-        col("__ipn") >= col("cidr_start") && col("__ipn") <= col("cidr_end"),
-        "left")
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("cidr_start", "cidr_end", "__p16", "__ipn", "__rowid", "__rn")
-  }
 }

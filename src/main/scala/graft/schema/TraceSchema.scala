@@ -45,11 +45,6 @@ object TraceSchema {
     StructField("ID", StringType),
   ))
 
-  /** Typed row at the API boundary. */
-  final case class TraceEvent(Severity: Int, Machine: String, LogGroup: String,
-                              Time: java.sql.Timestamp, Type: String,
-                              ID: Option[String])
-
   /** Partition column derived from Time (the reference's toYYYYMM,
     * trace-converter.py:23). */
   val PartitionCol = "ym"

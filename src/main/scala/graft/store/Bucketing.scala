@@ -45,12 +45,6 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  /** Join two bucketed tables on their bucket key — shuffle-free when both
-    * were written with the same bucket count on the join key. */
-  def colocatedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-                    key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
-
   /** Per-(session, dir) bucketed copies of lineitem/orders on the order
     * key — built once (the write is the co-location investment; every
     * subsequent fact-fact join on the key amortizes it), projected to

@@ -385,33 +385,6 @@ object TraceStore {
       stored, Seq(TraceSchema.PartitionCol))
   }
 
-  /** Catalog statistics for cost-based planning: register the store path
-    * as an external table (idempotent), recover its ym partitions, and
-    * ANALYZE — table rowCount/size plus per-column NDV/min/max/null
-    * counts land in the catalog, so with `spark.sql.cbo.enabled` the
-    * optimizer reorders joins and sizes broadcasts from REAL cardinality
-    * instead of file-size heuristics. At 100 TB this is what keeps a
-    * 12-way join from picking the worst order; re-run after compaction
-    * or large appends (stats are snapshots, not maintained). */
-  def analyze(spark: SparkSession, tablePath: String, table: String,
-              columns: Seq[String] = Nil): Unit = {
-    val scanTable = registerCatalog(spark, tablePath, table)
-    spark.sql(s"ANALYZE TABLE $scanTable COMPUTE STATISTICS")
-    // a renamed column's CURRENT name is also a physical column (new
-    // files carry it), but on an aliased store pre-rename files hold the
-    // column's history under its ALIAS names — analyzing only the current
-    // name would base null-count/NDV/min-max on post-rename files alone
-    // and skew CBO estimates through the view, so expand each requested
-    // logical column to itself plus its aliases (all physical on the
-    // files table)
-    if (columns.nonEmpty) {
-      val byName = storedSchema(tablePath).fields
-        .map(f => f.name -> aliasesOf(f)).toMap
-      val phys = columns.flatMap(c => c +: byName.getOrElse(c, Seq.empty))
-      spark.sql(s"ANALYZE TABLE $scanTable COMPUTE STATISTICS FOR COLUMNS ${phys.mkString(", ")}")
-    }
-  }
-
   /** Register the store in the session catalog under `table`, with the
     * SAME rename semantics as [[read]]. Without rename aliases this is
     * one external parquet table. With aliases, a catalog table that
@@ -579,9 +552,7 @@ object TraceStore {
     * WITHIN each leading-key run, so pure time-range row-group skipping
     * (B2) degrades on clustered months — choose the layout per table by
     * its dominant filter key, exactly the reference's `ORDER BY` design
-    * choice (/root/reference/trace-converter.py:24). For two equally-hot
-    * dimensions, feed [[Zorder.cell]]+[[Zorder.interleave]] through a
-    * computed column instead of a raw dim here.
+    * choice (the reference's `trace-converter.py:24`).
     *
     * CDC note: the chunk-slicing heuristic that pairs cancelling rewrite
     * halves by fractional file position assumes Time-ranged files; a

@@ -206,28 +206,6 @@ object TraceStream {
     q.awaitTermination()
   }
 
-  /** Stream-static dimension enrichment (B10 in streaming form — the
-    * reference's "dictionaries" TODO applied at ingest time): the
-    * normalized stream left-joined against a static broadcast dictionary
-    * inside the streaming query. Stateless — unlike stream-stream joins
-    * (StatefulOps.intervalJoin) no watermark or join state is held; the
-    * static side is re-resolved per micro-batch, so a dictionary loaded
-    * through a catalog view picks up refreshes on the next batch. */
-  def enrichedSource(spark: SparkSession, cfg: Config, dict: DataFrame,
-                     key: String): DataFrame =
-    TraceIngest.normalize(source(spark, cfg))
-      .join(broadcast(dict), Seq(key), "left")
-
-  /** Streaming hourly rollup with watermark (B7 streaming form): the
-    * materialized-view TODO of the reference
-    * (/root/reference/README.md:231-236) as a live windowed aggregate. */
-  def hourlyRollup(spark: SparkSession, cfg: Config): DataFrame =
-    TraceIngest.normalize(source(spark, cfg))
-      .withWatermark("Time", "1 hour")
-      .groupBy(window(col("Time"), "1 hour"), col("Type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("hour_start"), col("Type"), col("n"))
-
   // ------------------------------------------------------------------ persistent incremental rollup (B6, SummingMergeTree form)
   /** The maintained rollup's declared shape: (ym, Type) → row count +
     * severity sum — decomposable measures only, so increments merge by

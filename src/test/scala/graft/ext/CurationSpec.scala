@@ -133,61 +133,6 @@ class CurationSpec extends SparkSpec {
     assert(top1.getLong(4) == 1L)  // df: doc 1 only
   }
 
-  test("sequence packing covers every doc once within budget, deterministically") {
-    import spark.implicits._
-    // token counts 1..40 over 40 docs; budget 64
-    val rows = (1L to 40L).map(i => (i, (1 to i.toInt).map(j => s"t$j").mkString(" "), "s"))
-    val dir = docsDir(rows)
-    val docs = graft.tables.Tables.documents(spark, dir)
-    val packs = Curation.packSequences(docs, budget = 64, numPartitions = 4).collect()
-    val covered = packs.flatMap(_.doc_ids).sorted.toSeq
-    assert(covered == (1L to 40L).toSeq)                      // exactly once
-    packs.foreach { p =>
-      assert(p.n_tokens <= 64 || p.doc_ids.length == 1, p.toString)
-      assert(p.fill > 0.0 && p.fill <= 1.0)
-    }
-    assert(packs.map(_.pack_id).distinct.length == packs.length)
-    val again = Curation.packSequences(docs, budget = 64, numPartitions = 4).collect()
-    assert(again.map(p => (p.pack_id, p.doc_ids)).sortBy(_._1).toSeq ==
-           packs.map(p => (p.pack_id, p.doc_ids)).sortBy(_._1).toSeq)
-  }
-
-  test("curateCorpus composes dedup, gating and quotas with monotone survivor counts") {
-    val got = Curation.curateCorpus(spark, "/root/testdata/sf0.001", perSource = 3)
-    val (curated, stats) = got
-    assert(stats("input") >= stats("after_dedup"))
-    assert(stats("after_dedup") >= stats("after_quality"))
-    assert(stats("after_quality") >= stats("after_quota"))
-    assert(stats("after_quota") == curated.count())
-    // quota honored per source
-    val bySrc = curated.groupBy("source").count().collect()
-    assert(bySrc.forall(_.getLong(1) <= 3))
-    // deterministic end-to-end
-    val again = Curation.curateCorpus(spark, "/root/testdata/sf0.001", perSource = 3)
-    assert(again._1.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq ==
-           curated.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq)
-  }
-
-  test("shard export writes row-bounded JSONL files that round-trip") {
-    val rows = (1L to 100L).map(i => (i, s"text $i", s"src${i % 4}"))
-    val dir = docsDir(rows)
-    val out = tmpDir("shards")
-    val docs = graft.tables.Tables.documents(spark, dir)
-    val nShards = Curation.exportShards(docs, out, rowsPerShard = 25)
-    assert(nShards >= 4 && nShards <= 8, s"got $nShards shards")
-    // the writer-enforced bound holds for every file
-    new java.io.File(out).listFiles()
-      .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
-      .foreach { f =>
-        val lines = scala.util.Using.resource(scala.io.Source.fromFile(f))(_.getLines().size)
-        assert(lines <= 25, s"${f.getName} has $lines rows")
-      }
-    val back = spark.read.json(out)
-    assert(back.count() == 100)
-    assert(back.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq ==
-      (1L to 100L).toSeq)
-  }
-
   test("pii mask rewrites pattern classes and counts hits") {
     val dir = docsDir(Seq(
       (1L, "mail bob@example.com and 12345 for customer care", "s")))

@@ -107,13 +107,6 @@ class ExtSpec extends SparkSpec {
     assert(got.contains((1L, 2L)) && !got.keys.exists(p => p._1 == 5L || p._2 == 5L))
   }
 
-  test("exactByKey keeps the lowest id deterministically") {
-    import spark.implicits._
-    val df = Seq((3L, "a"), (1L, "a"), (2L, "b")).toDF("id", "k")
-    val got = Dedup.exactByKey(df, "k", "id").orderBy("id").collect()
-    assert(got.map(_.getLong(0)).toSeq == Seq(1L, 2L))
-  }
-
   /** Build an embeddings dir shaped like the driver's table. */
   private def vecsDir(rows: Seq[(Long, Seq[Float])]): String = {
     import spark.implicits._
@@ -153,76 +146,6 @@ class ExtSpec extends SparkSpec {
       .select("q_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (probe & exact).size.toDouble / exact.size
     assert(recall >= 0.5, s"multi-probe recall $recall too low on clustered data")
-  }
-
-  test("power-iteration PCA recovers a planted dominant direction") {
-    val rnd = new scala.util.Random(23)
-    val d = 16
-    // unit direction u; x = a·u + small isotropic noise → top PC ≈ u
-    val u0 = Array.fill(d)(rnd.nextGaussian())
-    val nrm = math.sqrt(u0.map(x => x * x).sum)
-    val u = u0.map(_ / nrm)
-    val rows = (0 until 300).map { i =>
-      val a = 3.0 * rnd.nextGaussian()
-      (i.toLong, u.toSeq.map(x => (a * x + 0.05 * rnd.nextGaussian()).toFloat))
-    }
-    val emb = graft.tables.Tables.embeddings(spark, vecsDir(rows))
-    val (comps, eigs, trace) = Similarity.topComponents(emb, k = 2)
-    val cosU = math.abs(comps(0).zip(u).map { case (a, b) => a * b }.sum)
-    assert(cosU > 0.99, s"top PC misaligned with planted direction: |cos|=$cosU")
-    // the planted axis carries ~σ²·9 of variance vs d·0.05² noise — the
-    // explained share must dominate, and eigenvalues must be ordered
-    assert(eigs(0) / trace > 0.9, s"explained share ${eigs(0) / trace} too low")
-    assert(eigs(0) > eigs(1) && eigs(1) >= 0)
-    // projection is map-only and reproduces the driver-side dot product
-    val pc = Similarity.projectComponents(emb, comps).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val byHand = rows.head._2.zip(comps(0)).map { case (x, c) => x * c }.sum
-    assert(math.abs(pc(0L) - byHand) < 1e-4)
-  }
-
-  test("kmeans refinement recovers planted cluster means from poor init") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    val centers = Array.fill(2)(Array.fill(8)(rnd.nextGaussian().toFloat * 3f))
-    val rows = (0 until 120).map { i =>
-      val c = centers(i % 2)
-      (i.toLong, c.toSeq.map(x => x + 0.1f * rnd.nextGaussian().toFloat))
-    }
-    val dir = vecsDir(rows)
-    val emb = graft.tables.Tables.embeddings(spark, dir)
-    // init = two arbitrary members of the SAME planted cluster 0: a
-    // useful refinement must still split the data into both clusters
-    val init = emb.filter(col("vec_id").isin(0L, 2L))
-      .select(col("vec_id").as("c_id"), col("embedding").as("ce"))
-    val refined = Similarity.kmeansRefine(emb, init, iters = 4)
-    val last = Similarity.kmeansStep(emb, refined).collect()
-    assert(last.length == 2)
-    val sizes = last.map(_.getAs[Long]("n_members")).sorted.toSeq
-    assert(sizes == Seq(60L, 60L), s"cells split unevenly: $sizes")
-    // each refined centroid sits on one planted mean (cosine ≈ 1)
-    def cos(a: scala.collection.Seq[Float], b: scala.collection.Seq[Float]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x.toDouble * y }.sum
-      dot / (math.sqrt(a.map(x => x.toDouble * x).sum) * math.sqrt(b.map(x => x.toDouble * x).sum))
-    }
-    val cents = last.map(_.getAs[scala.collection.Seq[Float]]("ce"))
-    centers.foreach { c =>
-      assert(cents.exists(ce => cos(ce, c.toSeq) > 0.995))
-    }
-  }
-
-  test("kmeans keeps an empty cell's centroid instead of shrinking k") {
-    import spark.implicits._
-    val v = Seq.tabulate(8)(i => (i + 1).toFloat)
-    val orth = Seq.tabulate(8)(i => if (i % 2 == 0) 1f else -1f)
-    // every vector sits on v; the orthogonal centroid attracts nothing
-    val dir = vecsDir((0 until 10).map(i => (i.toLong, v.map(x => x * (1f + 0.01f * i)))))
-    val emb = graft.tables.Tables.embeddings(spark, dir)
-    val init = Seq((0L, v), (1L, orth)).toDF("c_id", "ce")
-    val refined = Similarity.kmeansRefine(emb, init, iters = 3).collect()
-    assert(refined.length == 2, "k must not shrink when a cell goes empty")
-    val kept = refined.find(_.getLong(0) == 1L).get.getAs[scala.collection.Seq[Float]]("ce")
-    assert(kept == orth, "empty cell keeps its previous centroid")
   }
 
   test("exact kNN ranks an identical vector first with cosine 1") {

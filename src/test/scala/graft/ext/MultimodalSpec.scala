@@ -2,27 +2,11 @@ package graft.ext
 
 import graft.SparkSpec
 
-/** Multimodal binary plumbing: schema, partition-local decode, feature
-  * shape (decode itself is a documented deterministic stub — no codecs in
-  * the container). */
+/** Multimodal binary plumbing: partition-local frame sampling, container
+  * demux and real image/audio decode over typed media rows. */
 class MultimodalSpec extends SparkSpec {
 
   import Multimodal._
-
-  test("binary payloads flow through partition-local decode to features") {
-    import spark.implicits._
-    val rows = Seq(
-      MediaRow(1L, "image/png", Array[Byte](0, 10, 20, 30)),
-      MediaRow(2L, "audio/wav", Array[Byte](-1, -128)),
-      MediaRow(3L, "image/png", Array.emptyByteArray),
-    ).toDS().repartition(2)
-    val feats = extractFeatures(rows).collect().sortBy(_.media_id)
-    assert(feats.map(_.media_id).toSeq == Seq(1L, 2L, 3L))
-    assert(feats(0).n_bytes == 4 && feats(0).feature.length == 4)
-    assert(feats(0).feature(0) == 15.0f)              // mean byte value
-    assert(feats(1).feature(2) == 255.0f)             // max of unsigned bytes
-    assert(feats(2).n_bytes == 0)                     // empty payload safe
-  }
 
   test("frame sampling expands videos to every k-th frame with offsets") {
     import spark.implicits._
@@ -82,17 +66,6 @@ class MultimodalSpec extends SparkSpec {
     val none = sampleFrames(Seq(MediaRow(10L, "video/mp4", corrupt)).toDS(),
       frameBytes = 4, everyNth = 1, numPartitions = 1).collect()
     assert(none.isEmpty)
-  }
-
-  test("batched resize keeps ids and reshapes features") {
-    import spark.implicits._
-    val feats = (1L to 150L).map(i =>
-      MediaFeatures(i, "image/png", 4, Array(i.toFloat, 2f, 3f, 4f))).toDS()
-    val out = resizeBatched(feats, targetDim = 2, batchSize = 64)
-      .collect().sortBy(_.media_id)
-    assert(out.length == 150)
-    assert(out.forall(_.feature.length == 2))
-    assert(out(41).feature(0) == 42.0f)
   }
 
   test("real PNG decode recovers exact synthetic pixels, raster order included") {

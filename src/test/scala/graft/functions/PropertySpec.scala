@@ -3,6 +3,7 @@ package graft.functions
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import graft.functions.TextHash._
+import graft.functions.KernelReference._
 
 /** Property-style tests (SURVEY.md §5.2 item 3), seeded-random inputs:
   * the fused native kernels must equal the relational formulations that
@@ -55,7 +56,7 @@ class PropertySpec extends SparkSpec {
       (i.toLong, Seq.fill(64)((rnd.nextFloat() - 0.5f) * 4f))).toDF("vec_id", "v")
     val got = vecs.select(col("vec_id"),
         GraftFunctions.jl_project8(col("v")).as("k"),
-        graft.ext.Similarity.jlProjectHof(col("v")).as("h"))
+        jlProjectHof(col("v")).as("h"))
       .collect()
     got.foreach { r =>
       val k = r.getSeq[Double](1); val h = r.getSeq[Double](2)
@@ -70,7 +71,7 @@ class PropertySpec extends SparkSpec {
     val docs = randDocs(rnd, 200).toDF("doc_id", "tk")
     val got = docs.select(col("doc_id"),
         GraftFunctions.simhash16(col("tk")).as("k"),
-        graft.ext.Dedup.simhashHof(col("tk")).as("h"))
+        simhashHof(col("tk")).as("h"))
       .collect()
     got.foreach { r =>
       assert(r.getLong(1) == r.getLong(2),
@@ -158,15 +159,5 @@ class PropertySpec extends SparkSpec {
       .select(col("Time").cast("long").cast("timestamp").cast("long").as("sec"))
       .collect().map(_.getLong(0))
     ts.zip(got).foreach { case (t, s) => assert(s == t.toLong) }
-  }
-
-  test("exactByKey is idempotent") {
-    import spark.implicits._
-    val rnd = newRnd()
-    val df = (0 until 300).map(_ => (rnd.nextInt(1000).toLong, rnd.nextInt(20).toString))
-      .toDF("id", "k")
-    val once = graft.ext.Dedup.exactByKey(df, "k", "id")
-    val twice = graft.ext.Dedup.exactByKey(once, "k", "id")
-    assert(once.orderBy("id").collect().toSeq == twice.orderBy("id").collect().toSeq)
   }
 }

@@ -22,7 +22,7 @@ class TrigramBandKeysSpec extends SparkSpec {
     val tvs = transform(tris, g => TextHash.tokval(g))
     def sigH(h: Int) =
       aggregate(tvs, lit(TextHash.MinHashP),
-        (acc, tv) => least(acc, TextHash.minhashTerm(tv, lit(h))))
+        (acc, tv) => least(acc, KernelReference.minhashTerm(tv, lit(h))))
     val p = lit(TextHash.MinHashP)
     if (bands == 2) array(sigH(0) * p + sigH(1), sigH(2) * p + sigH(3))
     else array((0 until 4).map(i => sigH(i).cast("long")): _*)

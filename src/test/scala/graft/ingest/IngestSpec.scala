@@ -89,37 +89,4 @@ class IngestSpec extends SparkSpec {
     val rows = TraceIngest.readBatch(spark, dir).orderBy("Time").collect()
     assert(rows.map(_.getString(5)).toSeq == Seq("a", "b"))
   }
-
-  test("summary counts rows and non-nulls per column") {
-    val dir = tmpDir("ingest3")
-    writeFixture(dir)
-    val s = TraceIngest.summary(TraceIngest.readBatch(spark, dir)).collect()(0)
-    assert(s.getLong(s.fieldIndex("n_rows")) == 3)
-    assert(s.getLong(s.fieldIndex("nn_ID")) == 2)
-    assert(s.getLong(s.fieldIndex("nn_Machine")) == 3)
-  }
-
-  test("ip-block dictionary enrichment tags machines, leaves strays null") {
-    import spark.implicits._
-    val traces = Seq("10.0.1.5:4500", "10.0.2.9:4500", "192.168.0.1:1",
-      "not-an-ip", "10.0.2.300:1").toDF("Machine")
-    val base = 10L * 16777216
-    // nested dictionary: /16 dc + two /24 racks inside it
-    val blocks = Seq(
-      (base, base + 65535L, "dc-west"),
-      (base + 1 * 256L, base + 1 * 256L + 255L, "rack-a"),
-      (base + 2 * 256L, base + 2 * 256L + 255L, "rack-b"),
-    ).toDF("cidr_start", "cidr_end", "rack")
-    val enriched = TraceIngest.enrichByIpBlock(traces, blocks)
-    val got = enriched.collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
-    assert(enriched.count() == 5)                    // overlap must not duplicate rows
-    assert(got("10.0.1.5:4500") == Some("rack-a"))   // most specific wins over dc-west
-    assert(got("10.0.2.9:4500") == Some("rack-b"))
-    assert(got("192.168.0.1:1") == None)
-    assert(got("not-an-ip") == None)
-    assert(got("10.0.2.300:1") == None)              // octet > 255 must not alias 10.0.3.44
-    // the prefix equi-join keeps the dictionary probe a broadcast HASH join
-    val plan = enriched.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
-  }
 }

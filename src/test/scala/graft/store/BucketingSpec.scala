@@ -1,33 +1,10 @@
 package graft.store
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Bucketed co-located join: the SortMergeJoin over two tables bucketed on
   * the join key must run with no Exchange on either side. */
 class BucketingSpec extends SparkSpec {
-
-  test("join of two bucketed tables has no shuffle") {
-    val dir = "/root/testdata/sf0.001"
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      Bucketing.writeBucketed(
-        graft.tables.Tables.orders(spark, dir), "b_orders", "o_orderkey", 8)
-      Bucketing.writeBucketed(
-        graft.tables.Tables.lineitem(spark, dir)
-          .withColumnRenamed("l_orderkey", "o_orderkey"), "b_lineitem", "o_orderkey", 8)
-      val joined = Bucketing.colocatedJoin(spark, "b_orders", "b_lineitem", "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected shuffle-free bucketed join:\n$plan")
-      assert(joined.count() == graft.tables.Tables.lineitem(spark, dir).count())
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
-  }
 
   test("q184 joins the bucketed tables without shuffling either side") {
     val dir = "/root/testdata/sf0.001"

@@ -268,13 +268,13 @@ class SchemaEvolutionSpec extends SparkSpec {
     TraceStore.append(evolvedBatch(), path) // files carry the OLD physical name
     try {
       // register BEFORE the rename: a plain external table
-      TraceStore.analyze(spark, path, "evo_view_t")
+      TraceStore.registerCatalog(spark, path, "evo_view_t")
       assert(spark.catalog.getTable("evo_view_t").tableType != "VIEW")
       TraceStore.renameColumn(path, "Region", "Zone")
       // re-register: the shape must transition to files-table + view, and
       // pre-rename files' values must arrive through the coalesce — a
       // plain catalog table would silently read NULL for all history
-      TraceStore.analyze(spark, path, "evo_view_t")
+      TraceStore.registerCatalog(spark, path, "evo_view_t")
       val t = spark.table("evo_view_t")
       assert(spark.catalog.getTable("evo_view_t").tableType == "VIEW")
       assert(t.columns.contains("Zone") && !t.columns.contains("Region"))
@@ -284,7 +284,7 @@ class SchemaEvolutionSpec extends SparkSpec {
       graft.schema.Ddl.createSchema(spark, "evo_view_db", "t", Some(path))
       assert(spark.table("evo_view_db.t").filter(col("Zone") === "eu").count() == 1)
       // idempotent re-registration keeps the view shape
-      TraceStore.analyze(spark, path, "evo_view_t")
+      TraceStore.registerCatalog(spark, path, "evo_view_t")
       assert(spark.table("evo_view_t").filter(col("Zone") === "eu").count() == 1)
     } finally {
       spark.sql("DROP VIEW IF EXISTS evo_view_t")
@@ -425,12 +425,12 @@ class SchemaEvolutionSpec extends SparkSpec {
     val path = tmpDir("cat1")
     TraceStore.append(baseBatch(), path)
     try {
-      TraceStore.analyze(spark, path, "evo_cat_t")
+      TraceStore.registerCatalog(spark, path, "evo_cat_t")
       assert(!spark.table("evo_cat_t").columns.contains("Region"))
       TraceStore.evolveSchema(path, StructField("Region", StringType, nullable = true))
       // re-running the registration must surface the evolved column —
       // CREATE IF NOT EXISTS alone would keep the pre-evolution DDL
-      TraceStore.analyze(spark, path, "evo_cat_t")
+      TraceStore.registerCatalog(spark, path, "evo_cat_t")
       assert(spark.table("evo_cat_t").columns.contains("Region"))
       // same contract through the CLI bootstrap path
       graft.schema.Ddl.createSchema(spark, "evo_cat_db", "t", Some(path))

@@ -375,31 +375,4 @@ class StoreSpec extends SparkSpec {
     assert(!Files.exists(tmp) && !Files.exists(monthDir))
     assert(TraceStore.read(spark, path).count() == 1)   // 201906 untouched
   }
-
-  test("analyze publishes rowCount and column NDV stats to the optimizer") {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    val path = tmpDir("storestats")
-    TraceStore.append(mkBatch(), path)
-    TraceStore.analyze(spark, path, "trace_stats_t", Seq("Machine", "Severity"))
-    spark.conf.set("spark.sql.cbo.enabled", "true")  // stats-based estimation
-    try {
-      // table-level stats reach the optimizer's plan estimation
-      val stats = spark.table("trace_stats_t").queryExecution.optimizedPlan.stats
-      assert(stats.rowCount.contains(BigInt(3)), s"rowCount: ${stats.rowCount}")
-      // column-level stats (NDV) land in the catalog for CBO
-      val cat = spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier("trace_stats_t")).stats.get
-      val ndv = cat.colStats("Machine").distinctCount.get
-      assert(ndv == BigInt(2), s"Machine NDV: $ndv")         // m1, m2
-      assert(cat.colStats("Severity").max.isDefined)
-      // idempotent re-analyze after more data
-      TraceStore.append(mkBatch(), path)
-      TraceStore.analyze(spark, path, "trace_stats_t")
-      val stats2 = spark.table("trace_stats_t").queryExecution.optimizedPlan.stats
-      assert(stats2.rowCount.contains(BigInt(6)))
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.sql("DROP TABLE IF EXISTS trace_stats_t")
-    }
-  }
 }

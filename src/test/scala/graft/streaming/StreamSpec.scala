@@ -111,42 +111,6 @@ class StreamSpec extends SparkSpec {
     assert(TraceStore.read(spark, table).count() == 2)
   }
 
-  test("streaming hourly rollup aggregates per (hour, Type) with watermark") {
-    val watch = tmpDir("watch3"); val ckpt = tmpDir("ckpt3")
-    // 1557761852 ≈ 15:37 UTC; add events in two different hours
-    writeTrace(watch, "trace.1.json", 1557761852L, 4)        // hour 15
-    writeTrace(watch, "trace.2.json", 1557765452L, 6)        // hour 16
-    val cfg = TraceStream.Config(watch, tmpDir("unused"), ckpt)
-    val q = TraceStream.hourlyRollup(spark, cfg)
-      .writeStream.format("memory").queryName("rollup_out")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val rows = spark.table("rollup_out")
-      .orderBy("hour_start").collect()
-      .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2)))
-    assert(rows.toSeq == Seq(
-      ("2019-05-13 15:00:00.0", "Role", 4L),
-      ("2019-05-13 16:00:00.0", "Role", 6L)))
-  }
-
-  test("stream-static enrichment joins the broadcast dictionary per batch") {
-    import org.apache.spark.sql.functions._
-    val watch = tmpDir("watch5"); val ckpt = tmpDir("ckpt5")
-    writeTrace(watch, "trace.1.json", 1557761852L, 3)
-    val cfg = TraceStream.Config(watch, tmpDir("unused5"), ckpt)
-    import spark.implicits._
-    val dict = Seq(("Role", "control-plane"), ("MachineMetrics", "telemetry"))
-      .toDF("Type", "category")
-    val q = TraceStream.enrichedSource(spark, cfg, dict, "Type")
-      .writeStream.format("memory").queryName("enriched_out")
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val rows = spark.table("enriched_out")
-      .select(col("Type"), col("category")).distinct().collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    assert(rows.toSeq == Seq(("Role", "control-plane")))
-  }
-
   test("maintained rollup + store stay consistent across mid-stream rename/widen evolution") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, StringType, StructField}
