@@ -469,7 +469,7 @@ object Similarity {
     * corpus-linear hashing, pairwise work confined to bucket collisions.
     * Threshold 0.25 (the corpus is random so near-orthogonal; real corpora use ~0.95). */
   def q54EmbedNearDup(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.GraftFunctions.{cosine_sim, lsh_bucket}
+    import graft.functions.GraftFunctions.cosine_sim
     val withB = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
               graft.functions.GraftFunctions.lsh_bucket(col("embedding")).as("bucket"))

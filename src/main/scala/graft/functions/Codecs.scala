@@ -44,8 +44,8 @@ import org.apache.spark.sql.types._
   * `mapPartitions` over sorted-within-partition data — never a
   * per-unbounded-group `collect_list`, so executor memory per block is
   * constant regardless of corpus size. The Catalyst expressions below
-  * run the same kernels codegen'd for bounded array columns already in
-  * the plan.
+  * run the decode kernels codegen'd over encoded block columns already
+  * in the plan.
   */
 object CodecKernels {
 
@@ -249,28 +249,14 @@ object CodecKernels {
   }
 
   // ---------------------------------------------- ArrayData-facing kernels
-  // (called from both interpreted eval and generated code; inputs must be
-  // null-free arrays — encode what you store, not what you haven't)
+  // (called from both interpreted eval and generated code)
 
-  def deltaEnc(a: ArrayData): Array[Byte] = deltaEncodeLongs(a.toLongArray())
   def deltaDec(b: Array[Byte]): ArrayData = new GenericArrayData(deltaDecodeLongs(b))
-  def ddEnc(a: ArrayData): Array[Byte] = ddEncodeLongs(a.toLongArray())
   def ddDec(b: Array[Byte]): ArrayData = new GenericArrayData(ddDecodeLongs(b))
-  def gorillaEnc(a: ArrayData): Array[Byte] = gorillaEncodeDoubles(a.toDoubleArray())
   def gorillaDec(b: Array[Byte]): ArrayData = new GenericArrayData(gorillaDecodeDoubles(b))
 }
 
-/** `array<bigint> → binary`: Delta(zigzag varint) transform. */
-case class DeltaEncExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(v: Any): Any = CodecKernels.deltaEnc(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CodecKernels.deltaEnc($c)")
-  override protected def withNewChildInternal(c: Expression): DeltaEncExpr = copy(child = c)
-  override def prettyName: String = "delta_enc"
-}
-
-/** `binary → array<bigint>`: inverse of [[DeltaEncExpr]]. */
+/** `binary → array<bigint>`: inverse of [[CodecKernels.deltaEncodeLongs]]. */
 case class DeltaDecExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(v: Any): Any = CodecKernels.deltaDec(v.asInstanceOf[Array[Byte]])
@@ -280,17 +266,7 @@ case class DeltaDecExpr(child: Expression) extends UnaryExpression {
   override def prettyName: String = "delta_dec"
 }
 
-/** `array<bigint> → binary`: DoubleDelta transform. */
-case class DdEncExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(v: Any): Any = CodecKernels.ddEnc(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CodecKernels.ddEnc($c)")
-  override protected def withNewChildInternal(c: Expression): DdEncExpr = copy(child = c)
-  override def prettyName: String = "dd_enc"
-}
-
-/** `binary → array<bigint>`: inverse of [[DdEncExpr]]. */
+/** `binary → array<bigint>`: inverse of [[CodecKernels.ddEncodeLongs]]. */
 case class DdDecExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(v: Any): Any = CodecKernels.ddDec(v.asInstanceOf[Array[Byte]])
@@ -300,17 +276,7 @@ case class DdDecExpr(child: Expression) extends UnaryExpression {
   override def prettyName: String = "dd_dec"
 }
 
-/** `array<double> → binary`: Gorilla XOR float codec. */
-case class GorillaEncExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(v: Any): Any = CodecKernels.gorillaEnc(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CodecKernels.gorillaEnc($c)")
-  override protected def withNewChildInternal(c: Expression): GorillaEncExpr = copy(child = c)
-  override def prettyName: String = "gorilla_enc"
-}
-
-/** `binary → array<double>`: inverse of [[GorillaEncExpr]]. */
+/** `binary → array<double>`: inverse of [[CodecKernels.gorillaEncodeDoubles]]. */
 case class GorillaDecExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullSafeEval(v: Any): Any = CodecKernels.gorillaDec(v.asInstanceOf[Array[Byte]])
@@ -323,10 +289,7 @@ case class GorillaDecExpr(child: Expression) extends UnaryExpression {
 /** Column-API surface for the codec expressions. */
 object Codecs {
   import org.apache.spark.sql.graftshim.Shim.{column, expression}
-  def delta_enc(c: Column): Column = column(DeltaEncExpr(expression(c)))
   def delta_dec(c: Column): Column = column(DeltaDecExpr(expression(c)))
-  def dd_enc(c: Column): Column = column(DdEncExpr(expression(c)))
   def dd_dec(c: Column): Column = column(DdDecExpr(expression(c)))
-  def gorilla_enc(c: Column): Column = column(GorillaEncExpr(expression(c)))
   def gorilla_dec(c: Column): Column = column(GorillaDecExpr(expression(c)))
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -646,23 +645,32 @@ object GraftFunctions {
   def nearest_cell(v: Column, cents: Column): Column =
     column(NearestCellExpr(expression(v), expression(cents)))
 
+  /** The SQL name, expression class and builder of every native
+    * function: the one list [[register]] and [[GraftExtensions]] install. */
+  val sqlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    fn("minhash_sig")(es => MinHashSigExpr(es.head)),
+    fn("cdc_chunks")(es => CdcChunksExpr(es.head)),
+    fn("minhash_shingle_sig")(es => MinHashShingleSigExpr(es.head)),
+    fn("jaccard_shingles")(es => JaccardShinglesExpr(es(0), es(1))),
+    fn("jaccard_sorted_longs")(es => JaccardSortedLongsExpr(es(0), es(1))),
+    fn("nfc_normalize")(es => NfcNormalizeExpr(es.head)),
+    fn("nfkc_normalize")(es => NfkcNormalizeExpr(es.head)),
+    fn("cosine_sim")(es => CosineSimExpr(es(0), es(1))),
+    fn("lsh_bucket")(es => LshBucketExpr(es.head)),
+    fn("simhash16")(es => SimHashExpr(es.head)),
+    fn("simhash60")(es => SimHash60Expr(es.head)),
+    fn("jl_project8")(es => JlProjectExpr(es.head)),
+    fn("nearest_cell")(es => NearestCellExpr(es(0), es(1))))
+
+  private def fn[E <: Expression](name: String)(b: Seq[Expression] => E)(
+      implicit cls: scala.reflect.ClassTag[E]): (String, Class[_], Seq[Expression] => Expression) =
+    (name, cls.runtimeClass, b)
+
   /** Register SQL names in a session (for spark.sql users). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_sig", es => MinHashSigExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cdc_chunks", es => CdcChunksExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_shingle_sig", es => MinHashShingleSigExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("jaccard_shingles", es => JaccardShinglesExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaccard_sorted_longs", es => JaccardSortedLongsExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize", es => NfcNormalizeExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("nfkc_normalize", es => NfkcNormalizeExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSimExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_bucket", es => LshBucketExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash16", es => SimHashExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash60", es => SimHash60Expr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("jl_project8", es => JlProjectExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("nearest_cell", es => NearestCellExpr(es(0), es(1)), "scala_udf")
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    sqlFunctions.foreach { case (name, _, b) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "scala_udf")
+    }
 }
 
 /** spark.sql.extensions entry point: injects the native functions into any
@@ -672,25 +680,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    def inject(name: String, cls: Class[_], b: Seq[Expression] => Expression): Unit =
-      e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name), b))
-    inject("minhash_sig", classOf[MinHashSigExpr], es => MinHashSigExpr(es.head))
-    inject("cdc_chunks", classOf[CdcChunksExpr], es => CdcChunksExpr(es.head))
-    inject("minhash_shingle_sig", classOf[MinHashShingleSigExpr],
-      es => MinHashShingleSigExpr(es.head))
-    inject("jaccard_shingles", classOf[JaccardShinglesExpr],
-      es => JaccardShinglesExpr(es(0), es(1)))
-    inject("jaccard_sorted_longs", classOf[JaccardSortedLongsExpr],
-      es => JaccardSortedLongsExpr(es(0), es(1)))
-    inject("nfc_normalize", classOf[NfcNormalizeExpr], es => NfcNormalizeExpr(es.head))
-    inject("nfkc_normalize", classOf[NfkcNormalizeExpr], es => NfkcNormalizeExpr(es.head))
-    inject("cosine_sim", classOf[CosineSimExpr], es => CosineSimExpr(es(0), es(1)))
-    inject("lsh_bucket", classOf[LshBucketExpr], es => LshBucketExpr(es.head))
-    inject("simhash16", classOf[SimHashExpr], es => SimHashExpr(es.head))
-    inject("simhash60", classOf[SimHash60Expr], es => SimHash60Expr(es.head))
-    inject("jl_project8", classOf[JlProjectExpr], es => JlProjectExpr(es.head))
-    inject("nearest_cell", classOf[NearestCellExpr], es => NearestCellExpr(es(0), es(1)))
+    GraftFunctions.sqlFunctions.foreach { case (name, cls, b) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), b))
+    }
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.RangeBandRewrite)
     e.injectOptimizerRule(_ => graft.plans.RollupRoute)

@@ -97,7 +97,6 @@ final class CdcSource(
     metadataPath: String,
     startingSnapshot: Option[String],
     initialLoad: Boolean,
-    cleanupCommitted: Boolean,
     maxFilesPerTrigger: Option[Int],
     maxBytesPerTrigger: Option[Long] = None,
     months: Option[String] = None)
@@ -220,18 +219,17 @@ final class CdcSource(
   private val diffSizes: ((String, String)) => IndexedSeq[Long] =
     CdcSource.lastOf(t => TraceStore.keyBytes(path, diffKeys(t).map(_._1)))
 
-  /** Worklist index where the chunk starting at `from` ends, and the
-    * bytes the chunk admitted: admit files until the files or bytes
-    * budget would be exceeded — always at least one, so an oversized
-    * file arrives alone (FileStreamSource's maxBytesPerTrigger contract;
-    * the batch is then bounded by the store's own file-size policy,
-    * which ingest and maintenance both honor). `sizeAt` is only
-    * consulted under a bytes budget, so the per-file stat pass is never
-    * paid for pure file-count admission (the byte sum is then 0). */
+  /** Worklist index where the chunk starting at `from` ends: admit files
+    * until the files or bytes budget would be exceeded — always at least
+    * one, so an oversized file arrives alone (FileStreamSource's
+    * maxBytesPerTrigger contract; the batch is then bounded by the
+    * store's own file-size policy, which ingest and maintenance both
+    * honor). `sizeAt` is only consulted under a bytes budget, so the
+    * per-file stat pass is never paid for pure file-count admission. */
   private def admit(count: Int, sizeAt: Int => Long, from: Int,
-                    limit: ReadLimit): (Int, Long) = {
+                    limit: ReadLimit): Int = {
     val (mf, mb) = CdcSource.budgets(limit)
-    if (mf.isEmpty && mb.isEmpty) (count, 0L)
+    if (mf.isEmpty && mb.isEmpty) count
     else {
       var k = from
       var bytes = 0L
@@ -244,7 +242,7 @@ final class CdcSource(
           if (!fits) stop = true // oversized lone file admitted by itself
         } else stop = true
       }
-      (k, bytes)
+      k
     }
   }
 
@@ -259,46 +257,37 @@ final class CdcSource(
   }
 
   override def getDefaultReadLimit: ReadLimit =
-    CdcSource.readLimit(maxFilesPerTrigger, maxBytesPerTrigger)
+    (maxFilesPerTrigger, maxBytesPerTrigger) match {
+      case (Some(f), Some(b)) =>
+        ReadLimit.compositeLimit(Array(ReadLimit.maxFiles(f), ReadLimit.maxBytes(b)))
+      case (Some(f), None) => ReadLimit.maxFiles(f)
+      case (None, Some(b)) => ReadLimit.maxBytes(b)
+      case _ => ReadLimit.allAvailable()
+    }
 
   override def initialOffset(): OffsetV2 = CdcOffset.Start
 
-  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 =
-    step(start, limit)._1
-
-  /** The next offset after `start` — at most one bounded step — with
-    * the files and bytes [[admit]] admitted to reach it (bytes only
-    * under a bytes budget). Fresh streams pin the current state (first
-    * chunk of it when chunking applies); mid-bootstrap advances one
-    * chunk of the SAME pin; mid-diff advances one slice of the SAME
-    * frozen worklist (the final slice lands as the complete offset,
-    * releasing the diff's base pin to commit-GC); complete offsets step
-    * toward change only when the live file set moved — as a bounded
-    * chunked diff under `maxFilesPerTrigger` — else echo `start`
-    * verbatim (idle = no batch, no pin). The fleet source
-    * ([[CdcMultiSource]]) charges each child's admitted files and bytes
-    * to its shared budget. */
-  private[sources] def step(start: OffsetV2, limit: ReadLimit): (CdcOffset, Int, Long) = {
+  /** The next offset after `start` — at most one bounded step. Fresh
+    * streams pin the current state (first chunk of it when chunking
+    * applies); mid-bootstrap advances one chunk of the SAME pin;
+    * mid-diff advances one slice of the SAME frozen worklist (the final
+    * slice lands as the complete offset, releasing the diff's base pin
+    * to commit-GC); complete offsets step toward change only when the
+    * live file set moved — as a bounded chunked diff under
+    * `maxFilesPerTrigger` — else echo `start` verbatim (idle = no
+    * batch, no pin). */
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): CdcOffset = {
     // the engine passes null (not initialOffset) before the first batch
     val s = Option(start).map(CdcOffset.of).getOrElse(CdcOffset.Start)
-    var files = 0
-    var bytes = 0L
-    // one admission-controlled chunk of a `count`-file worklist from
-    // index k, recording what it admitted
-    def chunkEnd(count: Int, sizeAt: Int => Long, k: Int): Int = {
-      val (end, b) = admit(count, sizeAt, k, limit)
-      files = end - k; bytes = b
-      end
-    }
     def bootStep(id: String, k: Int): Int =
-      chunkEnd(keysOf(id).size, i => bootSizes(id)(i), k)
+      admit(keysOf(id).size, i => bootSizes(id)(i), k, limit)
     // one admission-controlled slice of the fromId → toId worklist from
     // index k: a small diff arrives whole; a table-scale one (retention
     // sweep, mass erase) arrives as bounded slices, the last of which
     // lands as the complete offset
     def diffStep(fromId: String, toId: String, k: Int = 0): CdcOffset = {
       val t = (fromId, toId)
-      val n = chunkEnd(diffKeys(t).size, i => diffSizes(t)(i), k)
+      val n = admit(diffKeys(t).size, i => diffSizes(t)(i), k, limit)
       if (n >= diffKeys(t).size) CdcOffset(toId)
       else CdcOffset(toId, Some(n), Some(fromId))
     }
@@ -346,7 +335,7 @@ final class CdcSource(
       availableNowTarget = Some(CdcOffset(endId))
       availableNowPending = false
     }
-    (next, files, bytes)
+    next
   }
 
   override def getOffset: Option[OffsetV1] =
@@ -440,7 +429,7 @@ final class CdcSource(
     }
   }
 
-  override def commit(end: OffsetV1): Unit = if (cleanupCommitted) {
+  override def commit(end: OffsetV1): Unit = {
     val e = CdcOffset.of(end)
     // a mid-diff chunk still replays against BOTH manifests: GC below
     // the diff's base until the complete offset closes the sequence
@@ -471,7 +460,7 @@ object CdcSource {
 
   /** The files/bytes budgets a ReadLimit carries (composite = tightest
     * of each kind); (None, None) = unbounded. */
-  private[sources] def budgets(limit: ReadLimit): (Option[Int], Option[Long]) = limit match {
+  private def budgets(limit: ReadLimit): (Option[Int], Option[Long]) = limit match {
     case f: ReadMaxFiles => (Some(f.maxFiles()), None)
     case b: ReadMaxBytes => (None, Some(b.maxBytes()))
     case c: CompositeReadLimit =>
@@ -482,18 +471,6 @@ object CdcSource {
       }
     case _ => (None, None)
   }
-
-  /** Files/bytes budgets → the ReadLimit carrying them: a stream's
-    * default limit, and the remaining shared budget [[CdcMultiSource]]
-    * hands its next child. */
-  private[sources] def readLimit(files: Option[Int], bytes: Option[Long]): ReadLimit =
-    (files, bytes) match {
-      case (Some(f), Some(b)) =>
-        ReadLimit.compositeLimit(Array(ReadLimit.maxFiles(f), ReadLimit.maxBytes(b)))
-      case (Some(f), None) => ReadLimit.maxFiles(f)
-      case (None, Some(b)) => ReadLimit.maxBytes(b)
-      case _ => ReadLimit.allAvailable()
-    }
 }
 
 /** Offset = the id of a snapshot pin this stream created; during an
@@ -537,24 +514,23 @@ object CdcOffset {
 }
 
 /** One checkpoint over N stores — the fleet form of [[CdcSource]]: the
-  * reference's multi-cluster story is one table per cluster
-  * (/root/reference/README.md:55-62; `TraceStore.readMulti` is the batch
-  * union), and a fleet-wide replication consumer wants ONE offset log,
-  * not N checkpoints to keep consistent. The composite offset carries a
-  * per-store pin (`{"next":k,"stores":[…]}` — one embedded [[CdcOffset]]
-  * per configured path, positional), and every delivered row is tagged
-  * with its origin store (`_store` = the configured path), the
-  * `readMulti` cluster-tag analogue.
+  * reference's multi-cluster story is one table per cluster (its
+  * README.md:55-62), and a fleet-wide replication
+  * consumer wants ONE offset log, not N checkpoints to keep consistent.
+  * The composite offset carries a per-store pin
+  * (`{"next":k,"stores":[…]}` — one embedded [[CdcOffset]] per
+  * configured path, positional), and every delivered row is tagged with
+  * its origin store (`_store` = the configured path).
   *
   * Semantics = each child [[CdcSource]]'s, unchanged: per-store pins
   * under per-store metadata subdirs, admission control, chunked
-  * bootstraps/diffs, commit-GC, AvailableNow — all delegate. Up to
-  * `maxStoresPerTrigger` children (default 1) advance per trigger under
-  * ONE shared files/bytes budget (so `maxFilesPerTrigger`/
-  * `maxBytesPerTrigger` bound the BATCH, not the batch times N; see
-  * [[latestOffset]]), scanned round-robin from the offset's own `next`
-  * cursor — deterministic, restart-safe, and fair when several stores
-  * mutate continuously.
+  * bootstraps/diffs, commit-GC, AvailableNow — all delegate. ONE child
+  * advances per trigger under the whole read limit (so
+  * `maxFilesPerTrigger`/`maxBytesPerTrigger` bound the BATCH, as for a
+  * single store; see [[latestOffset]]), the first that moves in a
+  * round-robin scan from the offset's own `next` cursor —
+  * deterministic, restart-safe, and fair when several stores mutate
+  * continuously.
   *
   * The path LIST is part of the checkpoint contract, with ONE supported
   * evolution: APPEND-ONLY growth (the reference's clusters come and go,
@@ -574,17 +550,13 @@ final class CdcMultiSource(
     paths: Seq[String],
     metadataPath: String,
     initialLoad: Boolean,
-    cleanupCommitted: Boolean,
     maxFilesPerTrigger: Option[Int],
     maxBytesPerTrigger: Option[Long],
-    maxStoresPerTrigger: Int = 1,
-    months: Option[String] = None,
-    startingSnapshots: Option[Seq[String]] = None)
+    months: Option[String],
+    startingSnapshots: Option[Seq[String]])
   extends Source with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
   require(paths.nonEmpty, "graft-cdc multi-store read needs at least one path")
-  require(maxStoresPerTrigger >= 1,
-    s"maxStoresPerTrigger must be positive, got $maxStoresPerTrigger")
   // the fleet seed handoff: one pin PER STORE, positional like the path
   // list — each child follows changes from its own pin instead of
   // bootstrapping (the fleet twin of the single-store startingSnapshot)
@@ -637,7 +609,7 @@ final class CdcMultiSource(
     .map { case (p, i) =>
       new CdcSource(sqlContext, p, s"$metadataPath/store-$i",
         startingSnapshots.map(_(i)), initialLoad,
-        cleanupCommitted, maxFilesPerTrigger, maxBytesPerTrigger, months)
+        maxFilesPerTrigger, maxBytesPerTrigger, months)
     }
 
   override val schema: StructType = {
@@ -676,54 +648,26 @@ final class CdcMultiSource(
       IndexedSeq.fill(children.size - o.parts.size)(CdcOffset.Start))
   }
 
-  /** One admission-bounded step of up to `maxStoresPerTrigger` children
-    * per trigger, scanning round-robin from the offset's `next` cursor
-    * under ONE shared files/bytes budget — the batch stays bounded by
-    * the configured budgets no matter how many children move, while a
-    * large-N fleet of trickle changes drains in N/k triggers instead of
-    * N. Each advanced child's admitted files and bytes, returned by the
-    * same [[CdcSource.step]] call that chose its offset, shrink the
-    * budget handed to the next candidate; the scan stops at k advances,
-    * an exhausted budget, or one full lap. A child whose part is the
+  /** One admission-bounded step of ONE child per trigger: scanning
+    * round-robin from the offset's `next` cursor, the first child whose
+    * own [[CdcSource.latestOffset]] moves under the whole read limit
+    * advances, and the cursor lands after it. A child whose part is the
     * Start sentinel has never run — it is handed `null`, the engine's
     * before-first-batch convention. Idle fleet ⇒ every child echoes ⇒
-    * the composite echoes `start` verbatim (no batch, no pins). The
-    * cursor lands after the LAST advanced child, so fairness is
-    * preserved across triggers at any k. */
+    * the composite echoes `start` verbatim (no batch, no pins). */
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val s = Option(start).map(o => grown(CdcMultiOffset.of(o)))
-      .getOrElse(CdcMultiOffset(0, IndexedSeq.fill(children.size)(CdcOffset.Start)))
+    val from = Option(start).getOrElse(initialOffset())
+    val s = grown(CdcMultiOffset.of(from))
     val order = (s.next until children.size) ++ (0 until s.next)
-    val parts = Array(s.parts: _*)
-    var (remFiles, remBytes) = CdcSource.budgets(limit)
-    var advanced = 0
-    var lastAdvanced = -1
-    var exhausted = false
     order.iterator
-      .takeWhile(_ => advanced < maxStoresPerTrigger && !exhausted)
-      .foreach { i =>
-        val prev = parts(i)
-        val engineStart: OffsetV2 = if (prev == CdcOffset.Start) null else prev
-        val (next, files, bytes) =
-          children(i).step(engineStart, CdcSource.readLimit(remFiles, remBytes))
-        if (advanced > 0 && remBytes.exists(_ < bytes)) {
-          // only the child that opens the batch may bring one oversized
-          // file; a later child's lone file past the remaining bytes
-          // waits for a trigger it opens (a pin its step took is an own
-          // pin, so commit-GC drops it)
-          exhausted = true
-        } else if (next != prev) {
-          parts(i) = next; advanced += 1; lastAdvanced = i
-          remFiles = remFiles.map(_ - files)
-          remBytes = remBytes.map(_ - bytes)
-          // the opening child's oversized file may overdraw — both floors
-          // stop the scan (the next child would get a zero or negative
-          // budget)
-          exhausted = remFiles.exists(_ <= 0) || remBytes.exists(_ <= 0L)
-        }
+      .map { i =>
+        val prev = s.parts(i)
+        (i, children(i).latestOffset(if (prev == CdcOffset.Start) null else prev, limit))
       }
-    if (advanced == 0) if (start != null) start else initialOffset()
-    else CdcMultiOffset((lastAdvanced + 1) % children.size, parts.toIndexedSeq)
+      .find { case (i, next) => next != s.parts(i) }
+      .fold(from) { case (i, next) =>
+        CdcMultiOffset((i + 1) % children.size, s.parts.updated(i, next))
+      }
   }
 
   override def getOffset: Option[OffsetV1] =
@@ -801,10 +745,10 @@ object CdcMultiOffset {
   * Streaming options:
   *  - `path` (required): the trace-store root. OR `paths`: a
   *    comma-separated LIST of store roots — one checkpoint over a fleet
-  *    ([[CdcMultiSource]]): per-store pins in one composite offset, up
-  *    to `maxStoresPerTrigger` stores advance per trigger (round-robin,
-  *    one shared budget), rows tagged `_store`; the list is positional —
-  *    append-only growth is the one supported reshape.
+  *    ([[CdcMultiSource]]): per-store pins in one composite offset, one
+  *    store advances per trigger (round-robin, under the whole budget),
+  *    rows tagged `_store`; the list is positional — append-only growth
+  *    is the one supported reshape.
   *  - `initialLoad` (default false): bootstrap — the full table at the
   *    stream's first pinned snapshot, as inserts. Overrides
   *    `startingSnapshot`.
@@ -816,8 +760,6 @@ object CdcMultiOffset {
   *    replay against it, so drop it only after the stream's offset
   *    reaches a complete `{"snapshot":…}` form, not after the first
   *    batch).
-  *  - `cleanupCommitted` (default true): on commit, drop the pins this
-  *    stream created below the committed offset and vacuum.
   *  - `maxFilesPerTrigger` (default unbounded): admission control for
   *    EVERY batch — the `initialLoad` bootstrap arrives as
   *    sorted-manifest slices, and post-bootstrap diffs arrive as slices
@@ -844,10 +786,9 @@ object CdcMultiOffset {
   *    `ym`-filter pruning. The spec is fixed per checkpoint (chunk
   *    offsets index the filtered worklist); changes wholly outside the
   *    scope advance the offset as EMPTY batches.
-  *  - `maxStoresPerTrigger` (fleet form only; default 1): advance up to
-  *    k stores per trigger under ONE shared files/bytes budget — the
-  *    batch stays budget-bounded, but a large-N fleet of trickle
-  *    changes drains in N/k triggers instead of N.
+  *
+  * On commit, the source drops the pins it created below the committed
+  * offset and vacuums.
   */
 final class CdcStreamProvider extends StreamSourceProvider
     with org.apache.spark.sql.sources.RelationProvider with DataSourceRegister {
@@ -924,18 +865,11 @@ final class CdcStreamProvider extends StreamSourceProvider
         }
         new CdcMultiSource(sqlContext, ps, metadataPath,
           parameters.get("initialLoad").exists(_.toBoolean),
-          parameters.get("cleanupCommitted").forall(_.toBoolean),
-          maxFiles, maxBytes,
-          numeric("maxStoresPerTrigger", _.toIntOption)(_ > 0).getOrElse(1),
-          months, startPins)
+          maxFiles, maxBytes, months, startPins)
       case None =>
-        require(!parameters.contains("maxStoresPerTrigger"),
-          "graft-cdc option 'maxStoresPerTrigger' applies to the fleet form " +
-            "('paths') only")
         new CdcSource(sqlContext, pathOf(parameters), metadataPath,
           parameters.get("startingSnapshot").filterNot(_ == "latest"),
           parameters.get("initialLoad").exists(_.toBoolean),
-          parameters.get("cleanupCommitted").forall(_.toBoolean),
           maxFiles, maxBytes, months)
     }
   }

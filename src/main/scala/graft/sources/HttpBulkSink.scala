@@ -26,8 +26,8 @@ import org.apache.spark.sql.graftshim.Shim
   * partition grain, which is what a 1000-executor cluster needs (the
   * driver never sees the data; a failed POST throws, the task retries,
   * and at-least-once delivery matches the reference's semantics, whose
-  * store dedups on merge). `partitions` (default: leave as-is) lets a
-  * caller coalesce first when the remote prefers fewer, larger inserts.
+  * store dedups on merge). A caller that wants fewer, larger inserts
+  * coalesces `df` first.
   *
   * Streaming: pass [[append]] inside `writeStream.foreachBatch` — one
   * micro-batch = one logical insert, the A11 batch-at-once contract.
@@ -113,10 +113,9 @@ object HttpBulkSink {
     * a byte-identical replay dedups (effectively-once) while a
     * reordered replay gets fresh ids and is stored (at-least-once:
     * possible duplicates, never loss — the reference's contract). */
-  def append(df: DataFrame, c: Config, partitions: Option[Int] = None,
-             batchId: Option[String] = None): Unit = {
+  def append(df: DataFrame, c: Config, batchId: Option[String] = None): Unit = {
     val insertBatch = batchId.getOrElse(java.util.UUID.randomUUID().toString)
-    val json = partitions.fold(df)(n => df.coalesce(n)).select(to_json(struct(col("*"))))
+    val json = df.select(to_json(struct(col("*"))))
     Shim.toInternalRdd(json).foreachPartition { rows =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val buf = new Chunk(1 << 20)

@@ -474,19 +474,6 @@ object TraceStore {
               col("Time") >= lit(from) && col("Time") < lit(to))
   }
 
-  /** Union view over per-cluster tables — the reference runs one
-    * converter per FDB cluster, each writing its own table
-    * (`CLICKHOUSE_TABLE`, /root/reference/README.md:55-62); fleet-wide
-    * queries are a UNION ALL of those tables. Here: one store path per
-    * cluster, read with a cluster tag. Partition pruning still applies
-    * per branch (each union leg keeps its own ym directory filters). */
-  def readMulti(spark: SparkSession, clusters: Map[String, String]): DataFrame = {
-    require(clusters.nonEmpty, "readMulti needs at least one cluster -> path mapping")
-    clusters.toSeq.sortBy(_._1).map { case (cluster, path) =>
-      read(spark, path).withColumn("cluster", lit(cluster))
-    }.reduce(_.unionAll(_))
-  }
-
   /** Incremental rollup maintenance — the SummingMergeTree / materialized-
     * view analogue (the reference's rollup TODO, README.md:231-236): merge
     * a pre-aggregated rollup with the rollup of a new micro-batch by
@@ -537,36 +524,6 @@ object TraceStore {
     rewriteMonths(spark, tablePath, (_, old) => old.size > maxFilesPerMonth,
       identity, splitsPerMonth, "compacted")
 
-  /** Re-layout every month on a chosen clustering key — the
-    * `ALTER TABLE … ORDER BY` / OPTIMIZE-ZORDER analogue: each month is
-    * rewritten range-partitioned and sorted by `by` (append the
-    * tiebreaker dims you still scan on — e.g. `Seq("Machine", "Time")`),
-    * under the same crash-safe manifest protocol as [[compact]]. After
-    * it, point/range predicates on the LEADING key skip whole files and
-    * row groups via ordinary parquet min/max stats (and the footer
-    * blooms stop being saturated — a hash-scattered layout puts every
-    * value in every row group, so blooms never exclude anything), which
-    * is what makes a `Machine`-scoped consumer of the store — or of its
-    * CDC feed, whose candidate sides are these same files — read ~1/K of
-    * the bytes instead of all of them. The price: `Time` is only sorted
-    * WITHIN each leading-key run, so pure time-range row-group skipping
-    * (B2) degrades on clustered months — choose the layout per table by
-    * its dominant filter key, exactly the reference's `ORDER BY` design
-    * choice (the reference's `trace-converter.py:24`).
-    *
-    * CDC note: the chunk-slicing heuristic that pairs cancelling rewrite
-    * halves by fractional file position assumes Time-ranged files; a
-    * clustered month still diffs EXACTLY (the signed algebra never
-    * depended on layout), but a chunked consumer may see transient
-    * insert/delete pairs across slices — the structural ≤2× bound, not a
-    * correctness change. Returns the rewritten ym values. */
-  def clusterMonths(spark: SparkSession, tablePath: String,
-                    by: Seq[String], splitsPerMonth: Int = 4): Seq[String] = {
-    require(by.nonEmpty, "clusterMonths needs at least one layout column")
-    rewriteMonths(spark, tablePath, (_, old) => old.nonEmpty, identity, splitsPerMonth,
-      "clustered", layoutBy = by)
-  }
-
   /** Predicate erasure — the `ALTER TABLE … DELETE WHERE` / GDPR-redaction
     * analogue (ClickHouse runs it as a background mutation rewriting
     * parts; a parquet store must rewrite files the same way). Months with
@@ -579,18 +536,13 @@ object TraceStore {
     * call). Returns the ym values that were rewritten. */
   def deleteWhere(spark: SparkSession, tablePath: String,
                   cond: org.apache.spark.sql.Column,
-                  splitsPerMonth: Int = 4,
-                  layoutBy: Seq[String] = Seq("Time")): Seq[String] =
+                  splitsPerMonth: Int = 4): Seq[String] =
     // SQL DELETE semantics: only cond=TRUE rows go. A bare !cond maps
     // NULL→NULL and filter would drop every row where the predicate
     // is merely UNKNOWN (e.g. ID === "x" on a NULL ID) — silent
     // over-erasure the match probe never counted.
-    // layoutBy lets maintenance on a [[clusterMonths]]-laid-out store
-    // PRESERVE the clustering instead of silently reverting rewritten
-    // months to the Time layout.
     rewriteMonths(spark, tablePath, (_, old) => anyRow(spark, tablePath, old, cond),
-      _.filter(!coalesce(cond, lit(false))), splitsPerMonth, "redacted",
-      layoutBy = layoutBy)
+      _.filter(!coalesce(cond, lit(false))), splitsPerMonth, "redacted")
 
   /** Month-partition retention — the MergeTree `TTL … DELETE` /
     * `ALTER TABLE DROP PARTITION` analogue, the standard trace-log
@@ -1369,8 +1321,8 @@ object TraceStore {
     files.nonEmpty && readFiles(spark, java.nio.file.Paths.get(tablePath), files)
       .filter(cond).limit(1).count() > 0
 
-  /** The month-rewrite loop of [[compact]], [[clusterMonths]],
-    * [[deleteWhere]] and [[thinExpired]]: resolve pending attempts,
+  /** The month-rewrite loop of [[compact]], [[deleteWhere]] and
+    * [[thinExpired]]: resolve pending attempts,
     * capture each month's parquet file set FIRST (only those files are
     * read and later retired — a concurrent append is never touched), and
     * [[rewriteMonth]] the months `pick(ym, files)` selects. Returns the
@@ -1378,15 +1330,14 @@ object TraceStore {
   private def rewriteMonths(spark: SparkSession, tablePath: String,
                             pick: (String, Seq[java.nio.file.Path]) => Boolean,
                             transform: DataFrame => DataFrame,
-                            splitsPerMonth: Int, tag: String,
-                            layoutBy: Seq[String] = Seq("Time")): Seq[String] = {
+                            splitsPerMonth: Int, tag: String): Seq[String] = {
     val root = java.nio.file.Paths.get(tablePath)
     if (!java.nio.file.Files.exists(root)) return Seq.empty
     recoverAttempts(root)
     monthDirs(root).map(d => (d, parquetFiles(d)))
       .filter { case (d, old) => pick(monthOf(d.getFileName.toString), old) }
       .map { case (d, old) =>
-        rewriteMonth(spark, d, old, transform, splitsPerMonth, tag, layoutBy)
+        rewriteMonth(spark, d, old, transform, splitsPerMonth, tag)
       }
   }
 
@@ -1398,8 +1349,7 @@ object TraceStore {
                            old: Seq[java.nio.file.Path],
                            transform: DataFrame => DataFrame,
                            splitsPerMonth: Int,
-                           tag: String,
-                           layoutBy: Seq[String] = Seq("Time")): String = {
+                           tag: String): String = {
     import java.nio.file.{Files, StandardCopyOption}
     import FsMaint.deleteTree
     val ym = monthOf(monthDir.getFileName.toString)
@@ -1413,11 +1363,10 @@ object TraceStore {
     // out a renamed column's pre-rename history. Side effect worth
     // having: the rewrite writes CURRENT physical names, so compaction
     // physically migrates old files to the post-rename layout.
-    val layout = layoutBy.map(col)
     withBloomOptions(
       transform(readFiles(spark, monthDir.getParent, old)) // exactly the captured files
-        .repartitionByRange(splitsPerMonth, layout: _*)
-        .sortWithinPartitions(layout: _*)
+        .repartitionByRange(splitsPerMonth, col("Time"))
+        .sortWithinPartitions("Time")
         .write.mode("overwrite").option("compression", "zstd"),
       storedSchema(monthDir.getParent))
       .parquet(tmp.toString)

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.Dataset
 
 /** Kernel-parallelism floor for heavy per-row map stages.
   *

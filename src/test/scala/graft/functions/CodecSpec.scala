@@ -97,24 +97,25 @@ class CodecSpec extends SparkSpec {
 
   test("catalyst expressions run the codecs inside a codegen'd plan") {
     import spark.implicits._
-    val df = Seq(
-      (1L, Seq(10L, 20L, 35L, 35L, 60L), Seq(1.0, 1.0, 2.5, -0.0, 1.0 / 3.0)),
-      (2L, Seq.empty[Long], Seq.empty[Double]),
-      (3L, Seq(Long.MaxValue, Long.MinValue), Seq(Double.NaN, Double.NegativeInfinity)),
-    ).toDF("id", "ls", "ds")
+    val in = Seq(
+      (1L, Array(10L, 20L, 35L, 35L, 60L), Array(1.0, 1.0, 2.5, -0.0, 1.0 / 3.0)),
+      (2L, Array.empty[Long], Array.empty[Double]),
+      (3L, Array(Long.MaxValue, Long.MinValue), Array(Double.NaN, Double.NegativeInfinity)),
+    )
+    val df = in.map { case (id, ls, ds) =>
+      (id, CodecKernels.deltaEncodeLongs(ls), CodecKernels.ddEncodeLongs(ls),
+        CodecKernels.gorillaEncodeDoubles(ds))
+    }.toDF("id", "de", "dd", "ge")
     val rt = df.select(col("id"),
-        Codecs.delta_dec(Codecs.delta_enc(col("ls"))).as("ls1"),
-        Codecs.dd_dec(Codecs.dd_enc(col("ls"))).as("ls2"),
-        Codecs.gorilla_dec(Codecs.gorilla_enc(col("ds"))).as("ds1"))
+        Codecs.delta_dec(col("de")).as("ls1"),
+        Codecs.dd_dec(col("dd")).as("ls2"),
+        Codecs.gorilla_dec(col("ge")).as("ds1"))
       .orderBy("id")
       .collect()
-    val in = df.orderBy("id").collect()
     for (i <- in.indices) {
-      assert(rt(i).getSeq[Long](1) == in(i).getSeq[Long](1), "delta expr")
-      assert(rt(i).getSeq[Long](2) == in(i).getSeq[Long](1), "dd expr")
-      val got = rt(i).getSeq[Double](3).toArray
-      val exp = in(i).getSeq[Double](2).toArray
-      assert(bitsEq(got, exp), "gorilla expr")
+      assert(rt(i).getSeq[Long](1) == in(i)._2.toSeq, "delta expr")
+      assert(rt(i).getSeq[Long](2) == in(i)._2.toSeq, "dd expr")
+      assert(bitsEq(rt(i).getSeq[Double](3).toArray, in(i)._3), "gorilla expr")
     }
   }
 }

@@ -43,7 +43,7 @@ class HttpSinkSpec extends SparkSpec {
       val cfg = HttpBulkSink.Config(url, "fdb", "trace",
         user = Some("u"), pass = Some("p s"))
       val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
-      HttpBulkSink.append(df, cfg, partitions = Some(1))
+      HttpBulkSink.append(df.coalesce(1), cfg)
       assert(got.size == 1)
       val c = got.peek()
       // Basic base64("u:p s")
@@ -77,7 +77,7 @@ class HttpSinkSpec extends SparkSpec {
       val cfg = HttpBulkSink.Config(url, "db", "t")
       val df = Seq((1L, "a")).toDF("id", "v")
       val e = intercept[org.apache.spark.SparkException] {
-        HttpBulkSink.append(df, cfg, partitions = Some(1))
+        HttpBulkSink.append(df.coalesce(1), cfg)
       }
       assert(e.getMessage.contains("bulk insert") ||
         Option(e.getCause).exists(_.getMessage.contains("bulk insert")))
@@ -149,7 +149,7 @@ class HttpSinkSpec extends SparkSpec {
       // the byte budget must split at 8 MiB into exactly two.
       val payload = "é" * 500
       val df = Seq.tabulate(9000)(i => (i.toLong, payload)).toDF("id", "v")
-      HttpBulkSink.append(df, cfg, partitions = Some(1), batchId = Some("bb"))
+      HttpBulkSink.append(df.coalesce(1), cfg, batchId = Some("bb"))
       val reqs = got.toArray(Array.empty[AnyRef]).map(_.asInstanceOf[Captured])
       assert(reqs.length == 2)
       assert(reqs.map(_.insertId.split("/").take(3).mkString("/")).toSet
@@ -169,7 +169,7 @@ class HttpSinkSpec extends SparkSpec {
       // toJSON's would break dedup for a replay that straddles the change
       def check(df: org.apache.spark.sql.DataFrame): Unit = {
         got.clear()
-        HttpBulkSink.append(df, cfg, partitions = Some(1), batchId = Some("id"))
+        HttpBulkSink.append(df.coalesce(1), cfg, batchId = Some("id"))
         val want = df.coalesce(1).toJSON.collect().mkString("", "\n", "\n")
         val sha = java.security.MessageDigest.getInstance("SHA-256")
           .digest(want.getBytes(StandardCharsets.UTF_8))
@@ -383,7 +383,7 @@ class HttpSinkSpec extends SparkSpec {
         .foreachBatch((batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           // the streaming batch id IS the idempotency scope: a restarted
           // query replaying micro-batch N re-sends under the same keys
-          HttpBulkSink.append(batch, cfg, partitions = Some(1),
+          HttpBulkSink.append(batch.coalesce(1), cfg,
             batchId = Some(s"stream-$bid")))
         .start()
       try {

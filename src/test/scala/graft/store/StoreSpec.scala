@@ -101,20 +101,6 @@ class StoreSpec extends SparkSpec {
     assert(TraceStore.read(spark, path).count() == 6)
   }
 
-  test("readMulti unions per-cluster tables with a cluster tag") {
-    val p1 = tmpDir("cl1"); val p2 = tmpDir("cl2")
-    TraceStore.append(mkBatch(), p1)
-    TraceStore.append(mkBatch().limit(1), p2)
-    val all = TraceStore.readMulti(spark, Map("prod" -> p1, "staging" -> p2))
-    assert(all.count() == 4)
-    val byCluster = all.groupBy("cluster").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byCluster == Map("prod" -> 3L, "staging" -> 1L))
-    // month pruning still works through the union
-    val may = all.filter(col("ym") === "201905")
-    assert(may.count() == 3)
-  }
-
   test("compact merges many micro-batch files, preserves rows, skips small months") {
     val path = tmpDir("store4")
     (1 to 20).foreach(_ => TraceStore.append(mkBatch(), path))   // 20 files/month
@@ -133,48 +119,6 @@ class StoreSpec extends SparkSpec {
     assert(after.toSeq == before.toSeq)        // lossless rewrite
     // second run is a no-op: both months are now under the threshold
     assert(TraceStore.compact(spark, path, maxFilesPerMonth = 16).isEmpty)
-  }
-
-  test("clusterMonths re-lays each month on the chosen key; maintenance preserves it") {
-    import spark.implicits._
-    val path = tmpDir("store-cluster")
-    // 4 machines interleaved in time, many appends → every file holds
-    // every machine (the hash-scattered shape that defeats skipping)
-    (0 until 8).foreach { i =>
-      val rows = (0 until 40).map { j =>
-        (i * 100 + j, s"m${j % 4}", "default",
-          Timestamp.valueOf(f"2019-05-${(j % 27) + 1}%02d 10:00:00"), "Role",
-          Option(s"id$i-$j"))
-      }
-      TraceStore.append(rows.toDF("Severity", "Machine", "LogGroup", "Time", "Type", "ID"),
-        path, splitsPerMonth = 2)
-    }
-    val before = TraceStore.read(spark, path).orderBy("Severity")
-      .collect().map(_.toSeq)
-    def fileMachineRanges(): Seq[Set[String]] =
-      new java.io.File(s"$path/ym=201905").listFiles()
-        .filter(_.getName.endsWith(".parquet")).toSeq
-        .map(f => spark.read.parquet(f.getPath)
-          .select("Machine").distinct().collect().map(_.getString(0)).toSet)
-    assert(fileMachineRanges().count(_.size > 1) > 2, "fixture must start scattered")
-    val done = TraceStore.clusterMonths(spark, path, Seq("Machine", "Time"),
-      splitsPerMonth = 4)
-    assert(done.sorted == Seq("201905"))
-    // lossless, and each file now holds a narrow Machine range (4
-    // machines over 4 range splits → mostly single-machine files)
-    assert(TraceStore.read(spark, path).orderBy("Severity")
-      .collect().map(_.toSeq).toSeq == before.toSeq)
-    val ranges = fileMachineRanges()
-    assert(ranges.count(_.size == 1) >= ranges.size / 2,
-      s"clustered files must hold narrow Machine ranges: $ranges")
-    // layout-preserving maintenance: a DELETE WHERE with layoutBy keeps
-    // the clustering instead of reverting the rewritten month to Time
-    TraceStore.deleteWhere(spark, path, col("Machine") === "m3",
-      splitsPerMonth = 3, layoutBy = Seq("Machine", "Time"))
-    val ranges2 = fileMachineRanges()
-    assert(ranges2.count(_.size == 1) >= ranges2.size / 2,
-      s"post-maintenance layout must stay clustered: $ranges2")
-    assert(TraceStore.read(spark, path).filter(col("Machine") === "m3").count() == 0)
   }
 
   test("re-compacting a regrown month keeps every row (no name collisions)") {

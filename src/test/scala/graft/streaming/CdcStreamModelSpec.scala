@@ -136,10 +136,6 @@ class CdcStreamModelSpec extends SparkSpec {
     def drain(): Unit = {
       val reader = spark.readStream.format("graft-cdc")
         .option("paths", stores.mkString(",")).option("initialLoad", "true")
-        // k-advance is NOT part of the offset contract (unlike months):
-        // the cursor + per-store parts mean any k sequence over one
-        // checkpoint must reconstruct identically — randomize per drain
-        .option("maxStoresPerTrigger", (1 + rnd.nextInt(3)).toString)
       rnd.nextInt(3) match {
         case 0 =>
         case 1 => reader.option("maxFilesPerTrigger", (1 + rnd.nextInt(3)).toString)

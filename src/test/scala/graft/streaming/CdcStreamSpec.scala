@@ -833,7 +833,7 @@ class CdcStreamSpec extends SparkSpec {
     val store = tmpDir("cdcidle"); val meta = tmpDir("cdcidle-meta")
     TraceStore.append(mk((10, "m1", "ok", "2019-05-13 10:00:00")), store)
     val src = new graft.sources.CdcSource(
-      spark.sqlContext, store, meta, None, true, true, None)
+      spark.sqlContext, store, meta, None, true, None)
     val all = ReadLimit.allAvailable()
     val o1 = CdcOffset.of(src.latestOffset(null, all))
     assert(src.latestOffset(o1, all) == o1, "idle store echoes the offset")
@@ -1191,93 +1191,6 @@ class CdcStreamSpec extends SparkSpec {
         Map("path" -> store, "months" -> "May"))
     }
     assert(exl.getMessage.contains("months"))
-  }
-
-  test("maxStoresPerTrigger advances several stores per trigger under ONE shared budget") {
-    val a = tmpDir("cdck-a"); val b = tmpDir("cdck-b"); val c = tmpDir("cdck-c")
-    def drainMulti(ck: String, opts: Map[String, String],
-                   paths: Seq[String] = Seq(a, b, c)): Seq[(Long, Seq[(Int, String)])] = {
-      val buf = scala.collection.mutable.ArrayBuffer[(Long, Seq[(Int, String)])]()
-      val fn: (DataFrame, Long) => Unit = (df, id) => {
-        buf += ((id, df.select("Severity", "_store").collect()
-          .map((r: Row) => (r.getInt(0), r.getString(1))).toSeq.sorted))
-        ()
-      }
-      val q = spark.readStream.format("graft-cdc")
-        .option("paths", paths.mkString(",")).options(opts)
-        .load()
-        .writeStream.option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).foreachBatch(fn).start()
-      q.awaitTermination()
-      buf.toSeq
-    }
-    Seq(a, b, c).zipWithIndex.foreach { case (p, i) =>
-      TraceStore.append(mk((10 * (i + 1), s"m$i", "ok", "2019-05-13 10:00:00")), p)
-    }
-    // k=3, generous file budget: all three 1-file bootstraps fit ONE
-    // trigger — the composite batch carries all three stores
-    val ck1 = tmpDir("cdck-ck1")
-    val boot = drainMulti(ck1,
-      Map("initialLoad" -> "true", "maxFilesPerTrigger" -> "8",
-        "maxStoresPerTrigger" -> "3"))
-    assert(boot.size == 1, s"3 trickle bootstraps under k=3 must be one trigger: $boot")
-    assert(boot.head._2.map(_._2).distinct.size == 3)
-    assert(boot.head._2.map(_._1).sorted == Seq(10, 20, 30))
-    // same fleet, k=2: two stores per trigger → 2 triggers (2 + 1)
-    val ck2 = tmpDir("cdck-ck2")
-    val boot2 = drainMulti(ck2,
-      Map("initialLoad" -> "true", "maxFilesPerTrigger" -> "8",
-        "maxStoresPerTrigger" -> "2"))
-    assert(boot2.size == 2, s"3 stores at k=2 should drain in 2 triggers: $boot2")
-    assert(boot2.flatMap(_._2.map(_._1)).sorted == Seq(10, 20, 30))
-    // the budget is SHARED, not per-store: k=3 with a 1-file budget still
-    // admits one store per trigger (budget exhausts before the next child)
-    val ck3 = tmpDir("cdck-ck3")
-    val boot3 = drainMulti(ck3,
-      Map("initialLoad" -> "true", "maxFilesPerTrigger" -> "1",
-        "maxStoresPerTrigger" -> "3"))
-    assert(boot3.size == 3, s"shared 1-file budget must split the drain: $boot3")
-    boot3.foreach { case (id, rows) =>
-      assert(rows.map(_._2).distinct.size == 1, s"batch $id mixes stores under a 1-file budget")
-    }
-    // a shared BYTES budget: d holds two files, e and f one each, one row
-    // per file. The budget fits d's two files plus one byte, so d fills
-    // the first batch and e's file (bigger than the byte left) waits:
-    // only the store that opens a batch may bring one oversized file
-    val d = tmpDir("cdck-d"); val e = tmpDir("cdck-e"); val f = tmpDir("cdck-f")
-    TraceStore.append(mk(
-      (41, "m4", "ok", "2019-05-13 10:00:00"),
-      (42, "m4", "ok", "2019-06-13 10:00:00")), d, splitsPerMonth = 1)
-    TraceStore.append(mk((51, "m5", "ok", "2019-05-13 10:00:00")), e)
-    TraceStore.append(mk((61, "m6", "ok", "2019-05-13 10:00:00")), f)
-    val sizeOf: Map[Int, Long] = Seq(d, e, f).flatMap { p =>
-      val ws = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(ws.iterator()).asScala.filter { x =>
-        x.toString.endsWith(".parquet") && x.getParent.getFileName.toString.startsWith("ym=")
-      }.map { x =>
-        spark.read.parquet(x.toString).select("Severity").head().getInt(0) ->
-          java.nio.file.Files.size(x)
-      }.toList finally ws.close()
-    }.toMap
-    assert(sizeOf.keySet == Set(41, 42, 51, 61), s"one data file per row: $sizeOf")
-    val budget = sizeOf(41) + sizeOf(42) + 1
-    val byBytes = drainMulti(tmpDir("cdck-ck4"),
-      Map("initialLoad" -> "true", "maxBytesPerTrigger" -> budget.toString,
-        "maxStoresPerTrigger" -> "3"), Seq(d, e, f))
-    assert(byBytes.flatMap(_._2.map(_._1)).sorted == Seq(41, 42, 51, 61))
-    assert(byBytes.head._2.map(_._1) == Seq(41, 42), s"d's two files fill batch 1: $byBytes")
-    byBytes.foreach { case (id, rows) =>
-      val bytes = rows.map(r => sizeOf(r._1)).sum
-      assert(bytes <= budget || rows.size == 1,
-        s"batch $id admitted $bytes bytes past the $budget-byte budget: $rows")
-    }
-    // the option is fleet-only
-    val exs = intercept[IllegalArgumentException] {
-      new graft.sources.CdcStreamProvider().createSource(spark.sqlContext,
-        tmpDir("cdck-meta"), None, "graft-cdc",
-        Map("path" -> a, "maxStoresPerTrigger" -> "2"))
-    }
-    assert(exs.getMessage.contains("maxStoresPerTrigger"))
   }
 
   test("followFleetIndex: per-store attribution in one shared index, restart-safe") {
