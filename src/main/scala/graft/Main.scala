@@ -57,6 +57,13 @@ object Main {
     def fleet: Boolean
     require(fleet || tablePaths.size == 1,
       s"more than one store is a fleet: ${tablePaths.mkString(",")}")
+    /** The stores as the maintainers take them, with the pins a seeded
+      * table follows from. */
+    def stores: TraceStream.Stores = TraceStream.Stores(tablePaths, fleet, this match {
+      case f: FollowRollup => f.startingSnapshot.map(Seq(_))
+      case f: FollowIndex => f.startingSnapshots.orElse(f.startingSnapshot.map(Seq(_)))
+      case _ => None
+    })
   }
   final case class FollowRollup(tablePaths: Seq[String], rollupPath: String,
                                 checkpointDir: String,
@@ -642,55 +649,30 @@ object Main {
       if (per.isEmpty) out(s"no changes since $id")
       else per.foreach(r =>
         out(s"${r.getString(0)} ${r.getString(1)} ${r.getLong(2)}"))
-    case FollowRollup(stores, rollupPath, ck, maxFiles, maxBytes, months, startPin, fleet) =>
+    case a @ FollowRollup(paths, rollupPath, ck, maxFiles, maxBytes, months, _, _) =>
       // one catch-up pass on the operational cadence: between (never
       // concurrent with) store maintenance, per the CDC reader contract.
       // --table-paths is the FLEET form: one checkpoint maintains the
       // union rollup of every listed store.
-      val q =
-        if (fleet)
-          TraceStream.followFleetRollup(session(), stores, rollupPath, ck,
-            maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes,
-            months = months)
-        else TraceStream.followRollup(session(), stores.head, rollupPath, ck,
-          maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes,
-          months = months, startingSnapshot = startPin)
-      q.awaitTermination()
-      out(s"rollup at $rollupPath caught up with ${stores.mkString(", ")}")
-    case FollowIndex(stores, indexPath, ck, maxFiles, maxBytes, startPin, months,
-                     startPins, fleet) =>
-      val q =
-        if (fleet)
-          TraceStream.followFleetIndex(session(), stores, indexPath, ck,
-            maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes,
-            months = months, startingSnapshots = startPins)
-        else TraceStream.followIndex(session(), stores.head, indexPath, ck,
-          maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes,
-          startingSnapshot = startPin, months = months)
-      q.awaitTermination()
-      out(s"index at $indexPath caught up with ${stores.mkString(", ")}")
-    case SeedIndex(stores, indexPath, months, fleet) =>
+      TraceStream.followRollup(session(), a.stores, rollupPath, ck,
+        maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes,
+        months = months).awaitTermination()
+      out(s"rollup at $rollupPath caught up with ${paths.mkString(", ")}")
+    case a @ FollowIndex(paths, indexPath, ck, maxFiles, maxBytes, _, months, _, _) =>
+      TraceStream.followIndex(session(), a.stores, indexPath, ck,
+        maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes,
+        months = months).awaitTermination()
+      out(s"index at $indexPath caught up with ${paths.mkString(", ")}")
+    case a @ SeedIndex(_, indexPath, months, _) =>
       // corpus-scale bootstrap: pin FIRST (so the follow stream's first
       // diff has an immutable base), then one parallel batch census;
       // --table-paths seeds the FLEET index ((_store, band, bkey) keys)
-      if (fleet) {
-        val pins = TraceStream.seedFleetIndex(session(), stores, indexPath,
-          months = months)
-        pins.foreach { case (p, pin) => out(s"pinned $pin ($p)") }
-        out(s"seeded fleet index at $indexPath from ${stores.size} stores")
-        out(s"next: --follow-index $indexPath --table-paths ${stores.mkString(",")} " +
-          s"--starting-snapshots ${pins.map(_._2).mkString(",")} (drop each pin " +
-          "only after its store's offset part reaches a complete form)")
-      } else {
-        val pin = store.TraceStore.snapshot(stores.head)
-        TraceStream.seedIndex(session(), stores.head, pin, indexPath,
-          months = months)
-        out(s"pinned $pin")
-        out(s"seeded index at $indexPath from ${stores.head}@$pin")
-        out(s"next: --follow-index $indexPath --table-path ${stores.head} " +
-          s"--starting-snapshot $pin (drop the pin with --drop-snapshot only " +
-          "after the stream's offset reaches a complete {\"snapshot\":...} form)")
-      }
+      val seeded = TraceStream.seedIndex(session(), a.stores, indexPath, months = months)
+      seeded.paths.zip(seeded.pins.get).foreach { case (p, pin) => out(s"pinned $pin ($p)") }
+      out(s"seeded index at $indexPath from ${seeded.paths.mkString(", ")}")
+      out(s"next: --follow-index $indexPath ${storeFlags(seeded)} (drop each pin " +
+        "with --drop-snapshot only after its store's offset part reaches a " +
+        "complete {\"snapshot\":...} form)")
     case MigrateMonths(tablePath, from, to, spec) =>
       // rolling month scope: quiesce the old maintainer FIRST (drain it
       // to current and stop it) — the seed is only the scoped truth if
@@ -704,14 +686,10 @@ object Main {
         "retire the old rollup/checkpoint and drop the pin with " +
         "--drop-snapshot once the stream's offset passes its first " +
         "complete form)")
-    case Replicate(tablePaths, tables, http, ck, maxFiles, maxBytes, fleet) =>
-      val q =
-        if (fleet)
-          TraceStream.replicateFleetChanges(session(), tablePaths, tables,
-            http, ck, maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes)
-        else TraceStream.replicateChanges(session(), tablePaths.head, http, ck,
-          maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes)
-      q.awaitTermination()
+    case a @ Replicate(tablePaths, tables, http, ck, maxFiles, maxBytes, _) =>
+      TraceStream.replicateChanges(session(), a.stores, http, ck,
+        maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes,
+        tables = tables).awaitTermination()
       out(s"replicated changes of ${tablePaths.mkString(", ")} to ${http.addr}")
     case EvolveSchema(tablePath, op) =>
       val msg = op match {
@@ -744,6 +722,14 @@ object Main {
           out(s"NOTE: found completion file; exiting...")
         case None => q.awaitTermination()
       }
+  }
+
+  /** The CLI flags that name `stores` and their pins: the seed's
+    * handoff to `--follow-index`. */
+  private def storeFlags(stores: TraceStream.Stores): String = {
+    val s = if (stores.fleet) "s" else ""
+    s"--table-path$s ${stores.paths.mkString(",")}" +
+      stores.pins.fold("")(ps => s" --starting-snapshot$s ${ps.mkString(",")}")
   }
 
   private def defaultSession(): SparkSession = {

@@ -98,8 +98,8 @@ final class CdcSource(
     startingSnapshot: Option[String],
     initialLoad: Boolean,
     maxFilesPerTrigger: Option[Int],
-    maxBytesPerTrigger: Option[Long] = None,
-    months: Option[String] = None)
+    maxBytesPerTrigger: Option[Long],
+    months: Option[String])
   extends Source with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
   private val spark: SparkSession = sqlContext.sparkSession

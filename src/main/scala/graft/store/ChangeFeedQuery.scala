@@ -3,6 +3,7 @@ package graft.store
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
+import graft.streaming.TraceStream.Stores
 
 /** q226 — the rewrite-surviving change feed proven end to end through a
   * REAL store lifecycle, oracle-gated (the reference's whole framing is
@@ -703,8 +704,8 @@ object ChangeFeedQuery {
   private val fleetRolled = new graft.util.SessionDirCache[String]
 
   /** q237 — the FLEET rollup: `followRollup` over TWO stores through
-    * one checkpoint (`followFleetRollup`, composing the multi-store
-    * source with the segment-store rollup upsert). The fixture bootstraps
+    * one checkpoint (fleet `Stores`, composing the multi-store source
+    * with the segment-store rollup upsert). The fixture bootstraps
     * both stores, erases `error` rows from store A only, compacts
     * store B (must contribute nothing), then appends to B — draining
     * between every mutation, each drain a restart. The graded read is
@@ -724,8 +725,8 @@ object ChangeFeedQuery {
       val ev = graft.tables.Tables.events(sess, d)
       val half = pmod(col("event_id"), lit(2L))
       def drain(): Unit = {
-        val q = graft.streaming.TraceStream.followFleetRollup(
-          sess, Seq(a, b), rp, ck, maxFilesPerTrigger = Some(4))
+        val q = graft.streaming.TraceStream.followRollup(
+          sess, Stores(Seq(a, b), fleet = true), rp, ck, maxFilesPerTrigger = Some(4))
         q.awaitTermination()
       }
       TraceStore.append(asTrace(ev.filter(half === 0)), a, splitsPerMonth = 2)
@@ -841,7 +842,7 @@ object ChangeFeedQuery {
 
   private val fleetIndexed = new graft.util.SessionDirCache[(String, String, String)]
 
-  /** q239 — the FLEET near-dup index: `followFleetIndex` over two stores
+  /** q239 — the FLEET near-dup index: `followIndex` over two stores
     * through one checkpoint, keys = (_store, band, bkey) so per-store
     * ATTRIBUTION rides the shared index. The fixture bootstraps both
     * stores (chunked, interleaved batches), erases `error` rows from
@@ -865,8 +866,8 @@ object ChangeFeedQuery {
       val ev = graft.tables.Tables.events(sess, d)
       val half = pmod(col("event_id"), lit(2L))
       def drain(): Unit = {
-        val q = graft.streaming.TraceStream.followFleetIndex(
-          sess, Seq(a, b), ix, ck, maxFilesPerTrigger = Some(4))
+        val q = graft.streaming.TraceStream.followIndex(
+          sess, Stores(Seq(a, b), fleet = true), ix, ck, maxFilesPerTrigger = Some(4))
         q.awaitTermination()
       }
       TraceStore.append(asTrace(ev.filter(half === 0)), a, splitsPerMonth = 2)
@@ -1023,7 +1024,7 @@ object ChangeFeedQuery {
   private val fleetMonthRolled = new graft.util.SessionDirCache[String]
 
   /** q242 — the MONTHS × FLEET composition gated end to end: a fleet
-    * rollup (`followFleetRollup`, one checkpoint over two stores)
+    * rollup (`followRollup` over two fleet `Stores`, one checkpoint)
     * scoped to the last two months of a spread calendar, while store
     * A's DELETE WHERE rewrites every month (in- and out-of-scope) and
     * store B compacts. Each child source month-prunes its own
@@ -1048,7 +1049,7 @@ object ChangeFeedQuery {
         .collect()(0).getString(0)
       val half = pmod(col("event_id"), lit(2L))
       def drain(): Unit = {
-        val q = graft.streaming.TraceStream.followFleetRollup(sess, Seq(a, b),
+        val q = graft.streaming.TraceStream.followRollup(sess, Stores(Seq(a, b), fleet = true),
           rp, ck, maxFilesPerTrigger = Some(4), months = Some(s">=$ym1"))
         q.awaitTermination()
       }
@@ -1105,8 +1106,8 @@ object ChangeFeedQuery {
       val ev = graft.tables.Tables.events(sess, d)
       val third = pmod(col("event_id"), lit(3L))
       def drain(paths: Seq[String]): Unit = {
-        val q = graft.streaming.TraceStream.followFleetRollup(
-          sess, paths, rp, ck, maxFilesPerTrigger = Some(4))
+        val q = graft.streaming.TraceStream.followRollup(
+          sess, Stores(paths, fleet = true), rp, ck, maxFilesPerTrigger = Some(4))
         q.awaitTermination()
       }
       TraceStore.append(asTrace(ev.filter(third === 0)), a, splitsPerMonth = 2)
@@ -1257,11 +1258,11 @@ object ChangeFeedQuery {
     * census as a planner ("the bands are mis-calibrated — too many
     * mega-buckets"); here the system ACTS on that signal. The store
     * lives through its first two appends under the default 2×2 banding,
-    * then recalibrates: pin the store, seed a NEW index at the 4×1
-    * banding (higher recall — each minhash its own band) in one batch
-    * job, and keep FOLLOWING at the new parameters while the store
+    * then recalibrates: seed a NEW index at the 4×1 banding (higher
+    * recall — each minhash its own band) in one batch job that pins the
+    * store, and keep FOLLOWING at the new parameters while the store
     * keeps changing (DELETE WHERE + a post-recalibration append ride
-    * the new index through `startingSnapshot`). The band configuration
+    * the new index from the seed's pin). The band configuration
     * is pinned per index (`_bands`), so the old and new keys can never
     * silently mix. The oracle rebuilds the 4-band census from scratch
     * over the final state — a mixed-banding key, a seed/follow scope
@@ -1276,13 +1277,12 @@ object ChangeFeedQuery {
       TraceStore.append(asTrace(ev.filter(batch === 0)), store, splitsPerMonth = 2)
       TraceStore.append(asTrace(ev.filter(batch === 1)), store, splitsPerMonth = 2)
       // recalibration decision point (q241's read): pin + seed at 4 bands
-      val pin = TraceStore.snapshot(store)
-      graft.streaming.TraceStream.seedIndex(sess, store, pin, newIdx, bands = 4)
+      val seeded = graft.streaming.TraceStream.seedIndex(sess, store, newIdx, bands = 4)
       // the store keeps changing AFTER the recalibration pin
       TraceStore.deleteWhere(sess, store, col("Type") === "error", splitsPerMonth = 2)
       TraceStore.append(asTrace(ev.filter(batch === 2)), store, splitsPerMonth = 2)
-      val q = graft.streaming.TraceStream.followIndex(sess, store, newIdx, newCk,
-        maxFilesPerTrigger = Some(2), startingSnapshot = Some(pin), bands = 4)
+      val q = graft.streaming.TraceStream.followIndex(sess, seeded, newIdx, newCk,
+        maxFilesPerTrigger = Some(2), bands = 4)
       q.awaitTermination()
       newIdx
     }
@@ -1320,11 +1320,12 @@ object ChangeFeedQuery {
   /** q246 — the FLEET × SUB-SECOND composition, across a MEMBERSHIP
     * change: two micros-time stores bootstrap a shared 250 ms slot
     * rollup under one checkpoint
-    * ([[graft.streaming.TraceStream.followFleetSlotRollup]] — the slot
-    * twin of the fleet rollup, storage in the segment family so every
-    * trickle batch stays O(delta) at fleet scale too), then the fleet
-    * GROWS (store C appended) while store A retracts its `error` rows
-    * and store B's compaction rewrites at micros resolution (a slot
+    * ([[graft.streaming.TraceStream.followSlotRollup]] over fleet
+    * `Stores` — the slot form of the fleet rollup, storage in the
+    * segment family so every trickle batch stays O(delta) at fleet
+    * scale too), then the fleet GROWS (store C appended) while store A
+    * retracts its `error` rows and store B's compaction rewrites at
+    * micros resolution (a slot
     * collapse anywhere — §1.4 truncation, a disturbed pin, a signed
     * error in any child — shifts a 250 ms slot and fails the hash).
     * The oracle recomputes the final three-store union slot aggregate. */
@@ -1338,7 +1339,7 @@ object ChangeFeedQuery {
       val ev = graft.tables.Tables.events(sess, d)
       val third = pmod(col("event_id"), lit(3L))
       def drain(paths: Seq[String]): Unit = {
-        val q = graft.streaming.TraceStream.followFleetSlotRollup(sess, paths,
+        val q = graft.streaming.TraceStream.followSlotRollup(sess, Stores(paths, fleet = true),
           rp, ck, slotMicros = 250000L, maxFilesPerTrigger = Some(4),
           compactOver = 3)
         q.awaitTermination()

@@ -254,8 +254,8 @@ object TraceStream {
     *     `ym` is part of the rollup key, the new scope's content is
     *     PURE SUBTRACTION of the aged-out months from the old rollup — a
     *     filter of the maintained table; the store is never recomputed;
-    *  3. start a NEW checkpoint: `followRollup(…, months =
-    *     Some(newMonths), startingSnapshot = Some(returnedPin))` — the
+    *  3. start a NEW checkpoint: `followRollup(Stores(Seq(storePath),
+    *     pins = Some(Seq(returnedPin))), …, months = Some(newMonths))` — the
     *     seed serves as the base for the first batch and the stream
     *     follows month-pruned changes after the pin;
     *  4. verify ([[readRollup]] equals the scoped recompute), then
@@ -300,9 +300,20 @@ object TraceStream {
     * maintenance: DELETE WHERE / retention arrive as negative
     * increments, compaction arrives as an empty batch, and a group whose
     * count reaches zero leaves the rollup. The first batch is the full
-    * table as inserts (`initialLoad`); a `startingSnapshot` instead
-    * follows changes after that pin over a seeded table
+    * table as inserts (`initialLoad`); pinned [[Stores]] instead follow
+    * changes after the pins over a seeded table
     * ([[migrateRollupMonths]]).
+    *
+    * A fleet ([[Stores]] with `fleet`) is read through ONE checkpoint
+    * ([[graft.sources.CdcMultiSource]]) — the reference's
+    * one-table-per-cluster shape rolled up ACROSS the fleet. Each
+    * micro-batch carries one store's signed changes; the (ym, Type)
+    * delta ignores the `_store` tag, so the maintained rollup is the
+    * union rollup, and one store's DELETE WHERE arrives as negative
+    * increments without touching the others' contributions (signed
+    * summation is associative across stores — the same algebra that
+    * makes chunk slices composable makes store interleavings
+    * composable).
     *
     * Same crash/replay story as every follower ([[follow]]): the CDC
     * source replays a batch as the IDENTICAL snapshot diff (pins are
@@ -311,39 +322,13 @@ object TraceStream {
     * never the accumulated table, which is what makes maintaining a
     * 100 TB store's rollup a trickle job rather than a recurring full
     * scan. */
-  def followRollup(spark: SparkSession, storePath: String, rollupPath: String,
+  def followRollup(spark: SparkSession, stores: Stores, rollupPath: String,
                    checkpointDir: String,
                    trigger: Trigger = Trigger.AvailableNow(),
                    maxFilesPerTrigger: Option[Int] = None,
                    maxBytesPerTrigger: Option[Long] = None,
-                   months: Option[String] = None,
-                   startingSnapshot: Option[String] = None): StreamingQuery =
-    follow(spark, Feed(Seq(storePath), fleet = false, startingSnapshot.map(Seq(_)),
-        months, maxFilesPerTrigger, maxBytesPerTrigger),
-      "rollup", rollupPath, checkpointDir, trigger, RollupKeys, RollupMeasures) {
-      (batch, sign) => rollRows(batch, col("ym"), sign)
-    }
-
-  /** FLEET-wide rollup maintenance: [[followRollup]] over N stores
-    * through ONE checkpoint (the multi-store `paths` source,
-    * [[graft.sources.CdcMultiSource]]) — the reference's
-    * one-table-per-cluster shape rolled up ACROSS the fleet. Each
-    * micro-batch carries one store's signed changes; the (ym, Type)
-    * delta ignores the `_store` tag, so the maintained rollup is the
-    * union rollup, and one store's DELETE WHERE arrives as negative
-    * increments without touching the others' contributions (signed
-    * summation is associative across stores — the same algebra that
-    * makes chunk slices composable makes store interleavings
-    * composable). Per-store pins, admission control, and crash/replay
-    * semantics all delegate to the fleet source. */
-  def followFleetRollup(spark: SparkSession, storePaths: Seq[String],
-                        rollupPath: String, checkpointDir: String,
-                        trigger: Trigger = Trigger.AvailableNow(),
-                        maxFilesPerTrigger: Option[Int] = None,
-                        maxBytesPerTrigger: Option[Long] = None,
-                        months: Option[String] = None): StreamingQuery =
-    follow(spark, Feed(storePaths, fleet = true, None, months,
-        maxFilesPerTrigger, maxBytesPerTrigger),
+                   months: Option[String] = None): StreamingQuery =
+    follow(spark, Feed(stores, months, maxFilesPerTrigger, maxBytesPerTrigger),
       "rollup", rollupPath, checkpointDir, trigger, RollupKeys, RollupMeasures) {
       (batch, sign) => rollRows(batch, col("ym"), sign)
     }
@@ -371,8 +356,14 @@ object TraceStream {
     * every `compactOver`-th state change folds base+segments into a
     * size-targeted multi-file base — amortized O(delta +
     * slots/compactOver) per batch. Read it back with [[readSlotRollup]]
-    * (merge-on-read, bounded segment count). */
-  def followSlotRollup(spark: SparkSession, storePath: String, rollupPath: String,
+    * (merge-on-read, bounded segment count).
+    *
+    * Over a fleet the (slot, Type) delta ignores the `_store` tag, so the
+    * maintained table is the UNION slot aggregate (signed summation is
+    * associative across stores exactly as across chunk slices), and
+    * membership growth (appended stores) applies unchanged — newcomers
+    * bootstrap their slots through the feed. */
+  def followSlotRollup(spark: SparkSession, stores: Stores, rollupPath: String,
                        checkpointDir: String,
                        slotMicros: Long = 250000L,
                        trigger: Trigger = Trigger.AvailableNow(),
@@ -381,8 +372,7 @@ object TraceStream {
                        months: Option[String] = None,
                        compactOver: Int = DefaultCompactOver): StreamingQuery = {
     require(slotMicros > 0, s"slotMicros must be positive, got $slotMicros")
-    follow(spark, Feed(Seq(storePath), fleet = false, None, months,
-        maxFilesPerTrigger, maxBytesPerTrigger),
+    follow(spark, Feed(stores, months, maxFilesPerTrigger, maxBytesPerTrigger),
       "slot-rollup", rollupPath, checkpointDir, trigger, SlotKeys, RollupMeasures,
       compactOver) {
       (batch, sign) => rollRows(batch, slotOf(slotMicros), sign)
@@ -394,32 +384,6 @@ object TraceStream {
     * with the slot family's declared shape). */
   def readSlotRollup(spark: SparkSession, rollupPath: String): DataFrame =
     readIndex(spark, rollupPath, SlotKeys, RollupMeasures)
-
-  /** FLEET-wide sub-second rollup: [[followSlotRollup]] over N stores
-    * through ONE checkpoint — the slot twin of [[followFleetRollup]].
-    * The (slot, Type) delta ignores the `_store` tag, so the maintained
-    * table is the UNION slot aggregate (signed summation is associative
-    * across stores exactly as across chunk slices), each micro-batch
-    * carries one store's changes under the shared admission budget, and
-    * the segment store keeps every trickle batch O(delta) no matter how
-    * many stores feed it. Membership growth (appended stores) applies
-    * unchanged — newcomers bootstrap their slots through the feed. */
-  def followFleetSlotRollup(spark: SparkSession, storePaths: Seq[String],
-                            rollupPath: String, checkpointDir: String,
-                            slotMicros: Long = 250000L,
-                            trigger: Trigger = Trigger.AvailableNow(),
-                            maxFilesPerTrigger: Option[Int] = None,
-                            maxBytesPerTrigger: Option[Long] = None,
-                            months: Option[String] = None,
-                            compactOver: Int = DefaultCompactOver): StreamingQuery = {
-    require(slotMicros > 0, s"slotMicros must be positive, got $slotMicros")
-    follow(spark, Feed(storePaths, fleet = true, None, months,
-        maxFilesPerTrigger, maxBytesPerTrigger),
-      "fleet-slot-rollup", rollupPath, checkpointDir, trigger, SlotKeys, RollupMeasures,
-      compactOver) {
-      (batch, sign) => rollRows(batch, slotOf(slotMicros), sign)
-    }
-  }
 
   /** CDC-DRIVEN near-dup-index maintenance as a running stream — q231's
     * signed bucket algebra made operational, the index-family twin of
@@ -455,29 +419,36 @@ object TraceStream {
     * compaction's inputs — the prior base + segments — survive pruning
     * until the next batch commits), a crash mid-write leaves an
     * invisible dir, and batch ids are lineage-pinned against wiped
-    * checkpoints. */
-  def followIndex(spark: SparkSession, storePath: String, indexPath: String,
+    * checkpoints.
+    *
+    * Over a fleet the index keys are `(_store, band, bkey)`: per-store
+    * ATTRIBUTION rides the shared index, so one store's DELETE WHERE
+    * retracts exactly its own bucket rows (signed summation is per-key,
+    * and the origin store is part of the key) while a fleet-wide
+    * candidate query just aggregates the `_store` dimension away — the
+    * reference's one-table-per-cluster story (its README.md:55-62) for
+    * the dedup surface.
+    *
+    * Corpus-scale bootstrap: streaming the initial load through the
+    * chunked path re-folds the GROWING index every compactOver-th batch
+    * (Σ over compactions of the index-so-far — super-linear in the
+    * corpus). The production shape is [[seedIndex]]: build the base in
+    * ONE batch job over pinned snapshots, then follow the [[Stores]] it
+    * returns — their pins switch the source to changes-after-pin and the
+    * seed serves as the pre-batch-0 base. */
+  def followIndex(spark: SparkSession, stores: Stores, indexPath: String,
                   checkpointDir: String,
                   trigger: Trigger = Trigger.AvailableNow(),
                   maxFilesPerTrigger: Option[Int] = None,
                   maxBytesPerTrigger: Option[Long] = None,
                   compactOver: Int = DefaultCompactOver,
-                  startingSnapshot: Option[String] = None,
                   months: Option[String] = None,
                   bands: Int = 2): StreamingQuery =
-    // Corpus-scale bootstrap: streaming the initial load through the
-    // chunked path re-folds the GROWING index every compactOver-th batch
-    // (Σ over compactions of the index-so-far — super-linear in the
-    // corpus). The production shape is [[seedIndex]]: build the base in
-    // ONE batch job over a pinned snapshot, then follow from that pin —
-    // `startingSnapshot` switches the source to changes-after-pin and
-    // the seed serves as the pre-batch-0 base.
-    follow(spark, Feed(Seq(storePath), fleet = false, startingSnapshot.map(Seq(_)),
-        months, maxFilesPerTrigger, maxBytesPerTrigger),
-      "index", indexPath, checkpointDir, trigger, Seq("band", "bkey"), Seq("n"),
+    follow(spark, Feed(stores, months, maxFilesPerTrigger, maxBytesPerTrigger),
+      "index", indexPath, checkpointDir, trigger, stores.tag ++ Seq("band", "bkey"), Seq("n"),
       compactOver, onFirstBatch = s => pinBands(s, indexPath, bands)) {
       (batch, sign) => graft.store.ChangeFeedQuery
-        .bucketRows(batch.withColumn("n", sign), carry = Seq("n"), bands = bands)
+        .bucketRows(batch.withColumn("n", sign), carry = Seq("n") ++ stores.tag, bands = bands)
     }
 
   /** CDC-driven maintenance of the index's MEMBERSHIP table — the
@@ -507,7 +478,7 @@ object TraceStream {
                         compactOver: Int = DefaultCompactOver,
                         startingSnapshot: Option[String] = None,
                         months: Option[String] = None): StreamingQuery =
-    follow(spark, Feed(Seq(storePath), fleet = false, startingSnapshot.map(Seq(_)),
+    follow(spark, Feed(Stores(Seq(storePath), pins = startingSnapshot.map(Seq(_))),
         months, maxFilesPerTrigger, maxBytesPerTrigger),
       "members", indexPath, checkpointDir, trigger, Seq("band", "bkey", "doc"), Seq("n"),
       compactOver) {
@@ -547,6 +518,12 @@ object TraceStream {
     // subtrees never reuse their exchange across the broadcast build).
     // Lazy localCheckpoint: index-sized (bounded by the maintainer's
     // fold cadence), materialized once inside the first consuming job.
+    // Not persist: that registers the frame in the session's
+    // CacheManager, and nothing unpersists the frame returned here, so
+    // the membership would stay pinned for the rest of the session;
+    // local-checkpoint blocks are freed once the RDD is collected. The
+    // cost: lineage is truncated, so losing an executor that holds a
+    // block fails the query — acceptable under the local-mode driver.
     val m = readIndex(spark, indexPath,
       keys = Seq("band", "bkey", "doc"), measures = Seq("n"))
       .select(col("band"), col("bkey"), col("doc"))
@@ -574,58 +551,50 @@ object TraceStream {
       .distinct()
   }
 
-  /** FLEET-wide near-dup-index maintenance: [[followIndex]] over N
-    * stores through ONE checkpoint ([[graft.sources.CdcMultiSource]]) —
-    * the index-family twin of [[followFleetRollup]], completing the
-    * reference's one-table-per-cluster story
-    * (/root/reference/README.md:55-62) for the dedup surface. The index
-    * keys are `(_store, band, bkey)`: per-store ATTRIBUTION rides the
-    * shared index, so one store's DELETE WHERE retracts exactly its own
-    * bucket rows (signed summation is per-key, and the origin store is
-    * part of the key) while a fleet-wide candidate query just aggregates
-    * the `_store` dimension away. Admission control, per-store pins,
-    * crash/replay, and the segment algebra all delegate to the fleet
-    * source and [[upsertSegment]] unchanged — each micro-batch carries
-    * one store's signed changes, which land as one O(delta) segment. */
-  def followFleetIndex(spark: SparkSession, storePaths: Seq[String],
-                       indexPath: String, checkpointDir: String,
-                       trigger: Trigger = Trigger.AvailableNow(),
-                       maxFilesPerTrigger: Option[Int] = None,
-                       maxBytesPerTrigger: Option[Long] = None,
-                       compactOver: Int = DefaultCompactOver,
-                       months: Option[String] = None,
-                       startingSnapshots: Option[Seq[String]] = None): StreamingQuery =
-    // corpus-scale fleet bootstrap: [[seedFleetIndex]] pins every store
-    // and builds the shared census in ONE batch job; `startingSnapshots`
-    // (positional, one pin per store) switches every child source to
-    // changes-after-its-pin, so no streaming bootstrap runs
-    follow(spark, Feed(storePaths, fleet = true, startingSnapshots, months,
-        maxFilesPerTrigger, maxBytesPerTrigger),
-      "fleet-index", indexPath, checkpointDir, trigger, Seq("_store", "band", "bkey"),
-      Seq("n"), compactOver) {
-      (batch, sign) => graft.store.ChangeFeedQuery
-        .bucketRows(batch.withColumn("n", sign), carry = Seq("n", "_store"))
-    }
-
   // ------------------------------------------------------------------ the follow loop
-  /** What a follower reads: one store (`path`,
-    * [[graft.sources.CdcSource]]) or a fleet through one checkpoint
-    * (`paths`, [[graft.sources.CdcMultiSource]]); the pin(s) a seeded
-    * table follows from (positional, one per store, for a fleet); the
-    * month scope; and the admission limits. */
-  private final case class Feed(stores: Seq[String], fleet: Boolean,
-                                pins: Option[Seq[String]], months: Option[String],
+  /** The stores a maintainer reads: ONE store (the `path` source,
+    * [[graft.sources.CdcSource]]) or a FLEET through one checkpoint (the
+    * `paths` source, [[graft.sources.CdcMultiSource]]; a one-store fleet
+    * keeps the fleet checkpoint, so it can later grow), and the pins a
+    * seeded table follows from (positional, one per store). Only this
+    * value knows single from fleet: every maintainer takes it, and a
+    * plain store path converts to it. */
+  final case class Stores(paths: Seq[String], fleet: Boolean = false,
+                          pins: Option[Seq[String]] = None) {
+    require(paths.nonEmpty, "no store to read")
+    require(fleet || paths.size == 1,
+      s"more than one store is a fleet: ${paths.mkString(",")}")
+
+    /** The fleet feed's origin-store column, which a per-store table
+      * keys on; a single store's feed has none. */
+    private[streaming] def tag: Seq[String] = if (fleet) Seq("_store") else Nil
+
+    /** `trace-cdc-[fleet-]<family>-<hash of what>`. */
+    private[streaming] def queryName(family: String, what: String): String =
+      s"trace-cdc-${if (fleet) "fleet-" else ""}$family-${incarnationOf(what)}"
+  }
+
+  object Stores {
+    import scala.language.implicitConversions
+    /** One store, followed from the start. */
+    implicit def one(path: String): Stores = Stores(Seq(path))
+  }
+
+  /** What a follower reads: the stores, the month scope and the
+    * admission limits. */
+  private final case class Feed(stores: Stores, months: Option[String],
                                 maxFiles: Option[Int], maxBytes: Option[Long])
 
   /** The `graft-cdc` reader over a [[Feed]]. With `initialLoad` the
     * first batch is the whole table as inserts. */
   private def cdcReader(spark: SparkSession, feed: Feed,
                         initialLoad: Boolean): DataStreamReader = {
+    val st = feed.stores
     val r = spark.readStream.format("graft-cdc")
-      .option(if (feed.fleet) "paths" else "path", feed.stores.mkString(","))
+      .option(if (st.fleet) "paths" else "path", st.paths.mkString(","))
       .option("initialLoad", initialLoad.toString)
-    feed.pins.foreach(ps =>
-      r.option(if (feed.fleet) "startingSnapshots" else "startingSnapshot", ps.mkString(",")))
+    st.pins.foreach(ps =>
+      r.option(if (st.fleet) "startingSnapshots" else "startingSnapshot", ps.mkString(",")))
     feed.months.foreach(m => r.option("months", m))
     feed.maxFiles.foreach(n => r.option("maxFilesPerTrigger", n.toString))
     feed.maxBytes.foreach(n => r.option("maxBytesPerTrigger", n.toString))
@@ -643,7 +612,7 @@ object TraceStream {
     * [[upsertSegment]]. The source replays a batch as the identical
     * snapshot diff, and the segment store skips a batch id it already
     * holds, so replay never double-counts. The query is named
-    * `trace-cdc-<name>-<hash of table>`. */
+    * `trace-cdc-[fleet-]<name>-<hash of table>`. */
   private def follow(spark: SparkSession, feed: Feed, name: String, table: String,
                      checkpointDir: String, trigger: Trigger,
                      keys: Seq[String], measures: Seq[String],
@@ -651,10 +620,10 @@ object TraceStream {
                      onFirstBatch: SparkSession => Unit = _ => ())(
                      rows: (DataFrame, Column) => DataFrame): StreamingQuery = {
     var inc: String = null
-    cdcReader(spark, feed, initialLoad = feed.pins.isEmpty)
+    cdcReader(spark, feed, initialLoad = feed.stores.pins.isEmpty)
       .load()
       .writeStream
-      .queryName(s"trace-cdc-$name-${incarnationOf(table)}")
+      .queryName(feed.stores.queryName(name, table))
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -670,38 +639,75 @@ object TraceStream {
       .start()
   }
 
-  /** Build the index BASE in one batch job over a pinned snapshot — the
-    * corpus-scale bootstrap (see [[followIndex]]): one map-only
-    * signature pass + one aggregation over the snapshot, written as the
-    * `seed-0` part that every later segment and compaction merges from
-    * (it resolves as a base older than batch 0). Pin the snapshot
-    * FIRST, seed, then start `followIndex(…, startingSnapshot =
-    * Some(pin))` — the pin is the caller's to drop once the stream's
-    * offset passes its first complete form. Refuses a non-empty index
-    * (seeding under live parts would double-count).
+  /** Build the index BASE in one batch job over pinned snapshots — the
+    * corpus-scale bootstrap (see [[followIndex]]): pin EVERY store
+    * FIRST (so each store's first diff has an immutable base even if it
+    * mutates mid-census), then one map-only signature pass + one
+    * aggregation over the pins, written as the `seed-0` part that every
+    * later segment and compaction merges from (it resolves as a base
+    * older than batch 0). Returns the stores with their pins — the
+    * handoff `followIndex` follows from; the pins are the caller's to
+    * drop once each store's offset passes its first complete form.
+    * Refuses a non-empty index (seeding under live parts would
+    * double-count); completeness is `_SUCCESS`-gated, so a crashed seed
+    * job just re-runs. A fleet census keys on `_store`, like the fleet
+    * follow.
     *
     * `months` MUST equal the follow's scope: the follow's increments are
     * month-pruned at the source, so an unscoped seed under a scoped
     * follow (or vice versa) is equal to NEITHER rebuild — the seed
-    * census filters its snapshot to the same `ym` scope, file-pruned at
-    * the manifest like the stream's worklists. */
-  def seedIndex(spark: SparkSession, storePath: String, snapshotId: String,
-                indexPath: String, months: Option[String] = None,
-                bands: Int = 2): Unit = {
+    * census filters its snapshots to the same `ym` scope, file-pruned at
+    * the manifest like the stream's worklists.
+    *
+    * The census is built in CHUNKS of `censusChunk` stores: a single
+    * N-way union would grow one Spark plan linearly in fleet size (fine
+    * at N≈10², an analyzer wall at 10³+), so each chunk's partial
+    * census materializes under `_seed-census/` and one bounded final
+    * plan merges the ⌈N/chunk⌉ partials into `seed-0`. `_store` is part
+    * of the census key and each store lands in exactly one chunk, so
+    * the partials are disjoint and the merge is a plain re-aggregation.
+    * Only `seed-0/_SUCCESS` makes the seed visible; a re-run clears the
+    * scratch dir and overwrites. */
+  def seedIndex(spark: SparkSession, stores: Stores, indexPath: String,
+                months: Option[String] = None, bands: Int = 2,
+                censusChunk: Int = 16): Stores = {
+    require(stores.pins.isEmpty, "seedIndex pins every store itself; pass the stores unpinned")
+    require(censusChunk >= 1, s"censusChunk must be positive, got $censusChunk")
     val (fs, root) = fsOf(spark, indexPath)
-    // completeness is _SUCCESS-gated like every other part: a seed job
-    // that crashed mid-write leaves an incomplete dir no reader sees,
-    // and a RE-RUN overwrites it instead of wedging on "already has parts"
     val (bases, segs) = partsOf(fs, root, indexPath)
     require(bases.isEmpty && segs.isEmpty,
       s"index at $indexPath already has parts — seedIndex is for an empty index")
     pinBands(spark, indexPath, bands)
-    graft.store.ChangeFeedQuery
-      .bucketRows(snapshotRows(spark, storePath, snapshotId, months), bands = bands)
-      .groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n"))
-      .write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(root, "seed-0").toString)
+    val pins = stores.paths.map(TraceStore.snapshot)
+    val keys = stores.tag ++ Seq("band", "bkey")
+    def censusOf(group: Seq[(String, String)]): DataFrame =
+      group.map { case (p, pin) =>
+        val rows = snapshotRows(spark, p, pin, months)
+        graft.store.ChangeFeedQuery.bucketRows(
+          if (stores.fleet) rows.withColumn("_store", lit(p)) else rows,
+          carry = stores.tag, bands = bands)
+      }.reduce(_ unionByName _)
+        .groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("n"))
+    val seedDir = new org.apache.hadoop.fs.Path(root, "seed-0").toString
+    val groups = stores.paths.zip(pins).grouped(censusChunk).toSeq
+    if (groups.size == 1) censusOf(groups.head).write.mode("overwrite").parquet(seedDir)
+    else {
+      val scratch = new org.apache.hadoop.fs.Path(root, "_seed-census")
+      fs.delete(scratch, true)
+      val chunkDirs = groups.zipWithIndex.map { case (g, i) =>
+        val d = new org.apache.hadoop.fs.Path(scratch, s"chunk-$i").toString
+        censusOf(g).write.mode("overwrite").parquet(d)
+        d
+      }
+      spark.read.parquet(chunkDirs: _*)
+        .groupBy(keys.map(col): _*)
+        .agg(sum(col("n")).as("n"))
+        .write.mode("overwrite").parquet(seedDir)
+      fs.delete(scratch, true)
+      ()
+    }
+    stores.copy(pins = Some(pins))
   }
 
   /** Pin the LSH band configuration durably under the index root: the
@@ -736,66 +742,6 @@ object TraceStream {
       .filter(k => ok.forall(_(TraceStore.monthOf(k))))
     TraceStore.readKeys(spark, storePath, keys,
       s"snapshot $snapshotId" + months.fold("")(m => s" (months=$m)"))
-  }
-
-  /** The fleet form of [[seedIndex]]: pin EVERY store, build the shared
-    * `(_store, band, bkey)` census over all the pins in one parallel
-    * batch job, and return the (storePath → pin) handoff for
-    * `followFleetIndex(…, startingSnapshots = Some(pins))`. Same
-    * contract as the single-store seed: the pins are the caller's to
-    * drop once each child's offset passes its first complete form, a
-    * non-empty index refuses (completeness is `_SUCCESS`-gated, so a
-    * crashed seed job just re-runs), and `months` must equal the
-    * follow's scope (see [[seedIndex]]).
-    *
-    * The census is built in CHUNKS of `censusChunk` stores: a single
-    * N-way union would grow one Spark plan linearly in fleet size (fine
-    * at N≈10², an analyzer wall at 10³+), so each chunk's partial
-    * census materializes under `_seed-census/` and one bounded final
-    * plan merges the ⌈N/chunk⌉ partials into `seed-0`. `_store` is part
-    * of the census key and each store lands in exactly one chunk, so
-    * the partials are disjoint and the merge is a plain re-aggregation.
-    * Crash-safe: only `seed-0/_SUCCESS` makes the seed visible; a
-    * re-run clears the scratch dir and overwrites. */
-  def seedFleetIndex(spark: SparkSession, storePaths: Seq[String],
-                     indexPath: String, months: Option[String] = None,
-                     censusChunk: Int = 16): Seq[(String, String)] = {
-    require(storePaths.nonEmpty, "seedFleetIndex needs at least one store")
-    require(censusChunk >= 1, s"censusChunk must be positive, got $censusChunk")
-    val (fs, root) = fsOf(spark, indexPath)
-    val (bases, segs) = partsOf(fs, root, indexPath)
-    require(bases.isEmpty && segs.isEmpty,
-      s"index at $indexPath already has parts — seedFleetIndex is for an empty index")
-    // pin FIRST (all stores), then census: each child's first diff has
-    // an immutable base even if a store mutates mid-census
-    val pins = storePaths.map(p => p -> TraceStore.snapshot(p))
-    def censusOf(group: Seq[(String, String)]): DataFrame =
-      group.map { case (p, pin) =>
-        graft.store.ChangeFeedQuery.bucketRows(
-          snapshotRows(spark, p, pin, months).withColumn("_store", lit(p)),
-          carry = Seq("_store"))
-      }.reduce(_ unionByName _)
-        .groupBy(col("_store"), col("band"), col("bkey"))
-        .agg(count(lit(1)).as("n"))
-    val seedDir = new org.apache.hadoop.fs.Path(root, "seed-0").toString
-    val groups = pins.grouped(censusChunk).toSeq
-    if (groups.size == 1) censusOf(groups.head).write.mode("overwrite").parquet(seedDir)
-    else {
-      val scratch = new org.apache.hadoop.fs.Path(root, "_seed-census")
-      fs.delete(scratch, true)
-      val chunkDirs = groups.zipWithIndex.map { case (g, i) =>
-        val d = new org.apache.hadoop.fs.Path(scratch, s"chunk-$i").toString
-        censusOf(g).write.mode("overwrite").parquet(d)
-        d
-      }
-      spark.read.parquet(chunkDirs: _*)
-        .groupBy(col("_store"), col("band"), col("bkey"))
-        .agg(sum(col("n")).as("n"))
-        .write.mode("overwrite").parquet(seedDir)
-      fs.delete(scratch, true)
-      ()
-    }
-    pins
   }
 
   // ------------------------------------------------------------------ the segment store
@@ -1000,87 +946,61 @@ object TraceStream {
     * same at-least-once-never-loss contract as the ingest transport;
     * a compaction between offsets diffs to nothing and posts nothing.
     * Scale: each batch posts only the CHANGES (file-set-pruned), so
-    * replicating a 100 TB store costs its change rate, not its size. */
-  def replicateChanges(spark: SparkSession, storePath: String,
+    * replicating a 100 TB store costs its change rate, not its size.
+    *
+    * A fleet is the reference's actual multi-cluster deployment: one
+    * receiving table per cluster (`CLICKHOUSE_TABLE` per converter
+    * instance, the reference's README.md:55-62), here one table per
+    * STORE with a single checkpoint. `tables` is positional, one per
+    * store (the same contract as the fleet source's pins — appended
+    * stores extend it at the end; empty means `http.table` for a single
+    * store); each row routes to its origin store's table via the
+    * `_store` tag, and idempotency ids are scoped `cdc-<batchId>-<storeIdx>`
+    * so a restarted checkpoint replays the identical rows under the
+    * identical keys — receiver-side insert dedup yields exactly-once
+    * PER TABLE, and a store's DELETE WHERE lands as −1 signs only on its
+    * own table. */
+  def replicateChanges(spark: SparkSession, stores: Stores,
                        http: graft.sources.HttpBulkSink.Config,
                        checkpointDir: String,
                        initialLoad: Boolean = true,
                        trigger: Trigger = Trigger.AvailableNow(),
                        maxFilesPerTrigger: Option[Int] = None,
-                       maxBytesPerTrigger: Option[Long] = None): StreamingQuery = {
+                       maxBytesPerTrigger: Option[Long] = None,
+                       tables: Seq[String] = Nil): StreamingQuery = {
+    val receivers = if (tables.isEmpty && !stores.fleet) Seq(http.table) else tables
+    require(receivers.size == stores.paths.size,
+      s"tables names ${tables.size} receiving tables for ${stores.paths.size} " +
+        "stores — the list is positional, one table per store")
+    // the wire payload is the replica table's columns + _sign; the feed's
+    // commit metadata is reader-side bookkeeping, not data. Empty diffs
+    // post nothing (append() only flushes non-empty partition buffers),
+    // so maintenance noise never reaches the wire
+    def post(changes: DataFrame, i: Int, id: String): Unit =
+      graft.sources.HttpBulkSink.append(
+        changes.withColumn("_sign",
+            when(col("_change") === "insert", lit(1)).otherwise(lit(-1)))
+          .drop("_change", "_commit_snapshot", "_commit_ts"),
+        http.copy(table = receivers(i)), batchId = Some(id))
     // at scale the bootstrap must ride the bounded-chunk path — one
     // table-sized POST loop would defeat the admission control
-    cdcReader(spark, Feed(Seq(storePath), fleet = false, None, None,
-        maxFilesPerTrigger, maxBytesPerTrigger), initialLoad)
+    cdcReader(spark, Feed(stores, None, maxFilesPerTrigger, maxBytesPerTrigger), initialLoad)
       .load()
       .writeStream
-      .queryName(s"trace-cdc-replicate-${incarnationOf(checkpointDir)}")
+      .queryName(stores.queryName("replicate", checkpointDir))
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val signed = batch
-          .withColumn("_sign",
-            when(col("_change") === "insert", lit(1)).otherwise(lit(-1)))
-          // the wire payload is the replica table's columns + _sign; the
-          // feed's commit metadata is reader-side bookkeeping, not data
-          .drop("_change", "_commit_snapshot", "_commit_ts")
-        // empty diffs post nothing (append() only flushes non-empty
-        // partition buffers), so maintenance noise never reaches the wire
-        graft.sources.HttpBulkSink.append(signed, http,
-          batchId = Some(s"cdc-$batchId"))
-      }
-      .start()
-  }
-
-  /** FLEET replication — the reference's actual multi-cluster
-    * deployment: one receiving table per cluster (`CLICKHOUSE_TABLE`
-    * per converter instance, /root/reference/README.md:55-62), here one
-    * table per STORE with a single checkpoint
-    * ([[graft.sources.CdcMultiSource]]) instead of N loose consumers.
-    * `tables` is positional, one per store (the same contract as the
-    * fleet source's pins — appended stores extend it at the end); each
-    * row routes to its origin store's table via the `_store` tag, and
-    * idempotency ids are scoped `cdc-<batchId>-<storeIdx>` so a
-    * restarted checkpoint replays the identical rows under the
-    * identical keys — receiver-side insert dedup yields exactly-once
-    * PER TABLE. Admission control bounds the batch (default: one store
-    * advances per trigger), maintenance noise diffs to nothing, and a
-    * store's DELETE WHERE lands as −1 signs only on its own table. */
-  def replicateFleetChanges(spark: SparkSession, storePaths: Seq[String],
-                            tables: Seq[String],
-                            http: graft.sources.HttpBulkSink.Config,
-                            checkpointDir: String,
-                            initialLoad: Boolean = true,
-                            trigger: Trigger = Trigger.AvailableNow(),
-                            maxFilesPerTrigger: Option[Int] = None,
-                            maxBytesPerTrigger: Option[Long] = None): StreamingQuery = {
-    require(storePaths.nonEmpty, "replicateFleetChanges needs at least one store")
-    require(tables.size == storePaths.size,
-      s"tables names ${tables.size} receiving tables for ${storePaths.size} " +
-        "stores — the list is positional, one table per store")
-    val tableOf = storePaths.zip(tables).toMap
-    cdcReader(spark, Feed(storePaths, fleet = true, None, None,
-        maxFilesPerTrigger, maxBytesPerTrigger), initialLoad)
-      .load()
-      .writeStream
-      .queryName(s"trace-cdc-fleet-replicate-${incarnationOf(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // route by origin store: under the default admission (one store
-        // per trigger) this is ONE slice; the distinct is a driver-side
-        // peek at ≤ N store tags, never data-sized
-        val present = batch.select("_store").distinct()
-          .collect().map(_.getString(0)).sorted
-        present.foreach { p =>
-          val i = storePaths.indexOf(p)
-          val signed = batch.filter(col("_store") === p)
-            .withColumn("_sign",
-              when(col("_change") === "insert", lit(1)).otherwise(lit(-1)))
-            .drop("_change", "_commit_snapshot", "_commit_ts", "_store")
-          graft.sources.HttpBulkSink.append(signed,
-            http.copy(table = tableOf(p)),
-            batchId = Some(s"cdc-$batchId-$i"))
+        if (!stores.fleet) post(batch, 0, s"cdc-$batchId")
+        else {
+          // route by origin store: under the default admission (one store
+          // per trigger) this is ONE slice; the distinct is a driver-side
+          // peek at ≤ N store tags, never data-sized
+          batch.select("_store").distinct().collect().map(_.getString(0)).sorted
+            .foreach { p =>
+              val i = stores.paths.indexOf(p)
+              post(batch.filter(col("_store") === p).drop("_store"), i, s"cdc-$batchId-$i")
+            }
         }
       }
       .start()

@@ -331,8 +331,9 @@ class HttpSinkSpec extends SparkSpec {
         }.toDF("Severity", "Machine", "LogGroup", "Time", "Type", "ID")
       }
       def drain(): Unit = {
-        val q = graft.streaming.TraceStream.replicateFleetChanges(spark,
-          Seq(a, b), Seq("trace_a", "trace_b"), cfg, ck)
+        val q = graft.streaming.TraceStream.replicateChanges(spark,
+          graft.streaming.TraceStream.Stores(Seq(a, b), fleet = true), cfg, ck,
+          tables = Seq("trace_a", "trace_b"))
         q.awaitTermination()
       }
       // (table, Severity, _sign) across all bodies — per-table routing

@@ -667,8 +667,7 @@ class CdcStreamSpec extends SparkSpec {
       (20, "m2", "bad", "2019-06-01 10:00:00"),
       (30, "m3", "ok", "2019-07-01 10:00:00")), store, splitsPerMonth = 1)
     // corpus-scale shape: pin, build the base in ONE batch job…
-    val pin = TraceStore.snapshot(store)
-    TraceStream.seedIndex(spark, store, pin, idx)
+    val seeded = TraceStream.seedIndex(spark, store, idx)
     def rebuilt(): Set[(Int, Long, Long)] =
       ChangeFeedQuery.bucketRows(TraceStore.read(spark, store))
         .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("n"))
@@ -679,8 +678,8 @@ class CdcStreamSpec extends SparkSpec {
     assert(current() == rebuilt(), "the seed alone must equal the pinned state's census")
     // …then follow CHANGES from the pin — no streaming bootstrap runs
     def catchUp(): Unit = {
-      val q = TraceStream.followIndex(spark, store, idx, ck,
-        maxFilesPerTrigger = Some(1), startingSnapshot = Some(pin))
+      val q = TraceStream.followIndex(spark, seeded, idx, ck,
+        maxFilesPerTrigger = Some(1))
       q.awaitTermination()
     }
     TraceStore.append(mk((40, "m4", "ok", "2019-08-01 10:00:00")), store)
@@ -693,7 +692,7 @@ class CdcStreamSpec extends SparkSpec {
     assert(current() == rebuilt())
     // seeding refuses a live index — it would double-count
     val ex = intercept[IllegalArgumentException] {
-      TraceStream.seedIndex(spark, store, pin, idx)
+      TraceStream.seedIndex(spark, store, idx)
     }
     assert(ex.getMessage.contains("already has parts"))
   }
@@ -833,7 +832,8 @@ class CdcStreamSpec extends SparkSpec {
     val store = tmpDir("cdcidle"); val meta = tmpDir("cdcidle-meta")
     TraceStore.append(mk((10, "m1", "ok", "2019-05-13 10:00:00")), store)
     val src = new graft.sources.CdcSource(
-      spark.sqlContext, store, meta, None, true, None)
+      spark.sqlContext, store, meta, None, true, None,
+      maxBytesPerTrigger = None, months = None)
     val all = ReadLimit.allAvailable()
     val o1 = CdcOffset.of(src.latestOffset(null, all))
     assert(src.latestOffset(o1, all) == o1, "idle store echoes the offset")
@@ -1129,8 +1129,8 @@ class CdcStreamSpec extends SparkSpec {
     val r2 = tmpDir("mig-r2"); val ck2 = tmpDir("mig-ck2")
     def follow(roll: String, ck: String, months: Option[String],
                pin: Option[String] = None): Unit = {
-      val q = TraceStream.followRollup(spark, store, roll, ck,
-        months = months, startingSnapshot = pin)
+      val q = TraceStream.followRollup(spark,
+        TraceStream.Stores(Seq(store), pins = pin.map(Seq(_))), roll, ck, months = months)
       q.awaitTermination()
     }
     def state(roll: String): Map[(String, String), (Long, Long)] =
@@ -1198,8 +1198,8 @@ class CdcStreamSpec extends SparkSpec {
     val a = tmpDir("fleetidx-a"); val b = tmpDir("fleetidx-b")
     val idx = tmpDir("fleetidx-idx"); val ck = tmpDir("fleetidx-ck")
     def catchUp(): Unit = {
-      val q = TraceStream.followFleetIndex(spark, Seq(a, b), idx, ck,
-        maxFilesPerTrigger = Some(1))
+      val q = TraceStream.followIndex(spark, TraceStream.Stores(Seq(a, b), fleet = true),
+        idx, ck, maxFilesPerTrigger = Some(1))
       q.awaitTermination()
     }
     def rebuilt(): Set[(String, Int, Long, Long)] =
@@ -1264,8 +1264,8 @@ class CdcStreamSpec extends SparkSpec {
     TraceStore.append(mk((10, "m1", "ok", "2019-05-13 10:00:00")), a)
     TraceStore.append(mk((20, "m2", "ok", "2019-05-13 10:00:00")), b)
     def catchUp(paths: Seq[String]): Unit = {
-      val q = TraceStream.followFleetIndex(spark, paths, idx, ck,
-        maxFilesPerTrigger = Some(1))
+      val q = TraceStream.followIndex(spark, TraceStream.Stores(paths, fleet = true),
+        idx, ck, maxFilesPerTrigger = Some(1))
       q.awaitTermination()
     }
     def rebuilt(paths: Seq[String]): Set[(String, Int, Long, Long)] =
@@ -1305,8 +1305,10 @@ class CdcStreamSpec extends SparkSpec {
     }
     val chunked = tmpDir("chseed-idx-chunked")
     val oneShot = tmpDir("chseed-idx-oneshot")
-    TraceStream.seedFleetIndex(spark, stores, chunked, censusChunk = 4)
-    TraceStream.seedFleetIndex(spark, stores, oneShot, censusChunk = 1000)
+    TraceStream.seedIndex(spark, TraceStream.Stores(stores, fleet = true), chunked,
+      censusChunk = 4)
+    TraceStream.seedIndex(spark, TraceStream.Stores(stores, fleet = true), oneShot,
+      censusChunk = 1000)
     def stateOf(idx: String): Set[(String, Int, Long, Long)] =
       TraceStream.readIndex(spark, idx, keys = Seq("_store", "band", "bkey"))
         .collect()
@@ -1328,8 +1330,7 @@ class CdcStreamSpec extends SparkSpec {
       (20, "m2", "ok", "2019-06-01 10:00:00")), store, splitsPerMonth = 1)
     // the seed census carries the SAME scope as the follow — an
     // unscoped seed under a scoped follow would equal neither rebuild
-    val pin = TraceStore.snapshot(store)
-    TraceStream.seedIndex(spark, store, pin, idx, months = Some(">=201906"))
+    val seeded = TraceStream.seedIndex(spark, store, idx, months = Some(">=201906"))
     def scopedRebuild(): Set[(Int, Long, Long)] =
       ChangeFeedQuery.bucketRows(
         TraceStore.read(spark, store).filter(col("ym") >= "201906"))
@@ -1343,9 +1344,8 @@ class CdcStreamSpec extends SparkSpec {
     TraceStore.append(mk(
       (30, "m3", "ok", "2019-05-20 10:00:00"),
       (40, "m4", "ok", "2019-06-20 10:00:00")), store, splitsPerMonth = 1)
-    val q = TraceStream.followIndex(spark, store, idx, ck,
-      maxFilesPerTrigger = Some(1), startingSnapshot = Some(pin),
-      months = Some(">=201906"))
+    val q = TraceStream.followIndex(spark, seeded, idx, ck,
+      maxFilesPerTrigger = Some(1), months = Some(">=201906"))
     q.awaitTermination()
     assert(current() == scopedRebuild(),
       "scoped seed + scoped increments must equal the scoped rebuild")
@@ -1360,7 +1360,8 @@ class CdcStreamSpec extends SparkSpec {
       (20, "m2", "bad", "2019-06-01 10:00:00")), a, splitsPerMonth = 1)
     TraceStore.append(mk((30, "m3", "ok", "2019-05-13 10:00:00")), b)
     // corpus-scale fleet bootstrap: pin every store, ONE parallel census
-    val pins = TraceStream.seedFleetIndex(spark, Seq(a, b), idx)
+    val seeded = TraceStream.seedIndex(spark, TraceStream.Stores(Seq(a, b), fleet = true), idx)
+    val pins = seeded.paths.zip(seeded.pins.get)
     assert(pins.map(_._1) == Seq(a, b))
     def rebuilt(): Set[(String, Int, Long, Long)] =
       ChangeFeedQuery.bucketRows(
@@ -1380,8 +1381,8 @@ class CdcStreamSpec extends SparkSpec {
     TraceStore.append(mk((40, "m4", "ok", "2019-07-01 10:00:00")), a)
     TraceStore.deleteWhere(spark, a, col("Type") === "bad", splitsPerMonth = 1)
     def catchUp(): Unit = {
-      val q = TraceStream.followFleetIndex(spark, Seq(a, b), idx, ck,
-        maxFilesPerTrigger = Some(1), startingSnapshots = Some(pins.map(_._2)))
+      val q = TraceStream.followIndex(spark, seeded, idx, ck,
+        maxFilesPerTrigger = Some(1))
       q.awaitTermination()
     }
     catchUp()
@@ -1392,7 +1393,7 @@ class CdcStreamSpec extends SparkSpec {
     assert(current() == rebuilt())
     // re-seeding a live index refuses
     val ex = intercept[IllegalArgumentException] {
-      TraceStream.seedFleetIndex(spark, Seq(a, b), idx)
+      TraceStream.seedIndex(spark, TraceStream.Stores(Seq(a, b), fleet = true), idx)
     }
     assert(ex.getMessage.contains("already has parts"))
     // the pin list is positional — a count mismatch fails at construction
@@ -1402,6 +1403,25 @@ class CdcStreamSpec extends SparkSpec {
         Map("paths" -> s"$a,$b", "startingSnapshots" -> pins.head._2))
     }
     assert(ex2.getMessage.contains("positional"))
+  }
+
+  test("fleet index pins its bands: a follow at other bands is refused") {
+    val a = tmpDir("fbands-a"); val b = tmpDir("fbands-b")
+    val idx = tmpDir("fbands-idx"); val ck = tmpDir("fbands-ck")
+    val fleet = TraceStream.Stores(Seq(a, b), fleet = true)
+    TraceStore.append(mk((10, "m1", "ok", "2019-05-13 10:00:00")), a)
+    TraceStore.append(mk((20, "m2", "ok", "2019-05-13 10:00:00")), b)
+    TraceStream.followIndex(spark, fleet, idx, ck).awaitTermination()
+    assert(new java.io.File(idx, "_bands").exists(), "the fleet follow pins its bands")
+    // a change gives the next run a batch, whose first step checks the pin
+    TraceStore.append(mk((30, "m3", "ok", "2019-05-13 10:00:00")), a)
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      TraceStream.followIndex(spark, fleet, idx, ck, bands = 4).awaitTermination()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(ex).exists(m => m.contains("bands=2") && m.contains("bands=4") &&
+      m.contains("incomparable")), messages(ex))
   }
 
   test("multi offset json round-trips") {
