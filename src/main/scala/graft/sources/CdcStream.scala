@@ -85,6 +85,29 @@ import graft.store.TraceStore
   *    from the checkpointed offset under the evolved schema (the feed
   *    reads old files through rename aliases, so replay is lossless).
   *
+  * '''One source, N ≥ 1 stores.''' The reference runs one converter per
+  * cluster, each with its own table (its README.md:55-62), so a single
+  * store is a fleet of one. Each store keeps everything above on its own
+  * ([[CdcSource.Store]]); this class owns the engine plumbing once, and
+  * `fleet` decides, here only, what differs on disk and in the schema:
+  * a single store logs its own [[CdcOffset]], keeps its pins in the
+  * checkpoint's `sources/<n>/` and has no `_store`; a fleet (`paths`, at
+  * any length, so a one-path fleet can grow) logs a [[CdcMultiOffset]]
+  * (`{"next":k,"stores":[…]}`, one part per path, positional), keeps
+  * store `i`'s pins under `sources/<n>/store-<i>/`, pins its path list
+  * and tags every row with its origin store (`_store`). ONE store
+  * advances per trigger under the whole read limit, the first that moves
+  * in a round-robin scan from the offset's `next` cursor (see
+  * [[latestOffset]]).
+  *
+  * A fleet's path list may only GROW by appending at the END (the
+  * reference's clusters come and go): newcomers' parts start at the
+  * Start sentinel and bootstrap (or follow a positional
+  * `startingSnapshots` pin) while existing pins are untouched; removal or
+  * reorder would re-bind positional pins and fails loudly. To retire a
+  * store, DELETE WHERE its rows, then start a new checkpoint without it.
+  * All stores must share the core schema.
+  *
   * Maintenance cadence contract: polling (`latestOffset`) runs
   * recoverAttempts-guarded manifest listings, which is the same
   * single-maintenance-writer contract every store reader documents —
@@ -93,168 +116,98 @@ import graft.store.TraceStore
   */
 final class CdcSource(
     sqlContext: SQLContext,
-    path: String,
+    paths: Seq[String],
+    fleet: Boolean,
+    pins: Option[Seq[String]],
     metadataPath: String,
-    startingSnapshot: Option[String],
     initialLoad: Boolean,
     maxFilesPerTrigger: Option[Int],
     maxBytesPerTrigger: Option[Long],
     months: Option[String])
   extends Source with SupportsAdmissionControl with SupportsTriggerAvailableNow {
+  import CdcSource.Store
 
-  private val spark: SparkSession = sqlContext.sparkSession
-
-  // month-scoped stream (option `months`): the partition-level worklist
-  // pruning the BATCH relation compiles from `ym` filters (q234), carried
-  // to the streaming surface — every worklist (bootstrap manifest slices,
-  // diff slices, whole diffs) drops non-matching months BEFORE any file
-  // is scheduled or opened, so a month-scoped derived table's maintainer
-  // pays O(that month's changes) even when the store rewrites at table
-  // scale. Sound for the same reason as the batch prune: files never mix
-  // months. Changes wholly outside the window still move the offset —
-  // they surface as EMPTY batches (the pin advances; nothing is read).
-  private val monthOk: Option[String => Boolean] =
-    months.map(CdcStreamProvider.monthsPredicate)
-  private def inScope(key: String): Boolean = monthOk.forall(_(TraceStore.monthOf(key)))
-
-  override val schema: StructType = CdcStreamProvider.feedSchema(path)
-
-  // the store-derived part of the feed (everything before the commit
-  // metadata columns) — what evolution-detection compares against
-  private val coreSchema: StructType =
-    StructType(schema.fields.dropRight(CdcStreamProvider.commitFields.length))
-
-  // ---- durable record of the pins THIS stream created, under the
-  // stream's own checkpoint metadata dir (per-stream by construction,
-  // survives restarts, shares the checkpoint's filesystem)
-  private val fs = new org.apache.hadoop.fs.Path(metadataPath)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private val pinsDir = new org.apache.hadoop.fs.Path(metadataPath, "pins")
-
-  // a startingSnapshot is only consumed by the stream's FIRST batch; once
-  // this stream has ever pinned an offset, the starting pin may have been
-  // legitimately dropped and its absence must not block restarts
-  startingSnapshot.filter(_ => !fs.exists(pinsDir)).foreach { id =>
-    require(TraceStore.listSnapshots(path).contains(id),
-      s"startingSnapshot '$id' is not a pinned snapshot of $path")
+  require(paths.nonEmpty, "graft-cdc read needs at least one store")
+  // the seed handoff: one pin PER STORE, positional like the path list —
+  // each store follows changes from its own pin instead of bootstrapping
+  pins.foreach { ps =>
+    require(ps.size == paths.size,
+      s"startingSnapshots names ${ps.size} pins for ${paths.size} stores — " +
+        "the list is positional, one pin per configured path")
+    // a single store lets initialLoad override its startingSnapshot
+    require(!fleet || !initialLoad,
+      "startingSnapshots and initialLoad are exclusive: follow from the pins " +
+        "OR bootstrap, not both")
   }
 
-  // the months spec is part of the OFFSET CONTRACT: chunk offsets index
-  // into the FILTERED worklist, so resuming a checkpoint under a
-  // different spec would silently re-slice an in-flight diff (rows
-  // skipped or double-read). Pin it durably like the fleet source pins
-  // its path list: first run writes the spec, every restart must match.
-  locally {
-    val f = new org.apache.hadoop.fs.Path(metadataPath, "months")
-    val cur = months.getOrElse("(all)")
-    CdcStreamProvider.readPinFile(fs, f) match {
-      case Some(prev) =>
-        require(prev == cur,
-          s"this checkpoint was created with months='$prev' but the stream now " +
-            s"declares months='$cur' — the spec is fixed per checkpoint because " +
-            "chunk offsets index the filtered worklist; start a new checkpoint " +
-            "for a different month scope")
+  // a fleet pins its PATH LIST: offset parts are positional, so a
+  // checkpoint resumed with the stores REORDERED (same count) would
+  // silently re-bind each store to another store's pin. First run writes
+  // the list; every restart must present it, possibly grown at the end.
+  if (fleet) {
+    val fs = new org.apache.hadoop.fs.Path(metadataPath)
+      .getFileSystem(sqlContext.sparkSession.sparkContext.hadoopConfiguration)
+    val pathsFile = new org.apache.hadoop.fs.Path(metadataPath, "paths")
+    CdcStreamProvider.readPinFile(fs, pathsFile) match {
+      case Some(prev0) =>
+        val prev = prev0.linesIterator.toList
+        if (prev != paths.toList) {
+          require(paths.toList.startsWith(prev),
+            s"this checkpoint follows the store list [${prev.mkString(", ")}] but " +
+              s"'paths' names [${paths.mkString(", ")}] — offset pins are " +
+              "positional, so existing entries can neither move nor leave; a " +
+              "fleet may only GROW by appending new stores at the end (to " +
+              "retire a store, DELETE WHERE its rows so the feed retracts " +
+              "them, then start a new checkpoint without it)")
+          CdcStreamProvider.writePinFile(fs, pathsFile, paths.mkString("\n"))
+        }
       case None =>
-        // no pin but the stream HAS history (offset pins exist): a
-        // checkpoint created before month scoping, whose committed chunk
-        // offsets index the UNFILTERED worklist. Adopting a scope now
-        // would silently re-slice an in-flight diff (rows skipped or
-        // double-read; a mid-bootstrap upTo can even exceed the filtered
-        // list and read as complete). Unscoped resume is the old
-        // behavior — pin it; a scoped resume must refuse.
-        require(cur == "(all)" || !fs.exists(pinsDir),
-          s"this checkpoint has committed offsets but no recorded month scope " +
-            s"(created before month scoping) — resuming it with months='$cur' " +
-            "would re-slice in-flight chunk offsets against a differently " +
-            "filtered worklist; start a new checkpoint for a month-scoped stream")
         fs.mkdirs(new org.apache.hadoop.fs.Path(metadataPath))
-        CdcStreamProvider.writePinFile(fs, f, cur)
+        CdcStreamProvider.writePinFile(fs, pathsFile, paths.mkString("\n"))
     }
   }
 
-  private def markCreated(id: String): Unit = {
-    fs.mkdirs(pinsDir)
-    fs.create(new org.apache.hadoop.fs.Path(pinsDir, id), true).close()
+  private val stores: IndexedSeq[Store] = paths.toIndexedSeq.zipWithIndex.map { case (p, i) =>
+    new Store(sqlContext.sparkSession, p,
+      if (fleet) s"$metadataPath/store-$i" else metadataPath,
+      pins.map(_(i)), initialLoad, months)
   }
 
-  private def ownPins(): Seq[String] =
-    if (!fs.exists(pinsDir)) Seq.empty
-    else fs.listStatus(pinsDir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("s\\d{6,}"))
-
-  private def num(id: String): Long = id.drop(1).toLong
-
-  /** Pin the current state as an OWN snapshot (marked for commit-GC).
-    * MARKER-FIRST via the snapshot pre-install hook: the ownership marker
-    * (and the operator-facing `.owner-` note) land after the id claim but
-    * before the manifest, so a crash anywhere in the window leaves a
-    * marker with NO pin — inert (commit-GC treats a markered id without a
-    * manifest as already dropped and just clears the marker) — never a
-    * pin with no marker that no GC would claim. */
-  private def pinOwn(): CdcOffset = {
-    val id = TraceStore.snapshot(path, { candidate =>
-      markCreated(candidate)
-      TraceStore.annotateSnapshotOwner(path, candidate,
-        s"graft-cdc stream offset pin (checkpoint: $metadataPath) — " +
-          "dropping it breaks the stream's next batch; GC'd automatically on commit")
-    })
-    CdcOffset(id)
-  }
-
-  // worklist caches, one entry each: a pin's bootstrap list, a
-  // transition's diff list, and their file sizes (stat'd only under a
-  // bytes budget) are pure functions of immutable manifests, so every
-  // chunk of one bootstrap or diff — and the getBatch after the step that
-  // chose it — reads them once. Month-scoped streams cache the FILTERED
-  // lists: chunk offsets index into them, and the spec is fixed per
-  // checkpoint, so replays slice identically.
-  private val keysOf: String => IndexedSeq[String] =
-    CdcSource.lastOf(id => TraceStore.snapshotKeys(path, id).filter(inScope))
-  private val diffKeys: ((String, String)) => IndexedSeq[(String, Boolean)] =
-    CdcSource.lastOf { case (fromId, toId) =>
-      TraceStore.changedKeysBetween(path, fromId, toId).filter(e => inScope(e._1))
+  override val schema: StructType = {
+    val first = stores.head.schema
+    stores.zip(paths).foreach { case (st, p) =>
+      require(st.schema == first,
+        s"graft-cdc multi-store read needs one shared schema; ${paths.head} has " +
+          s"${first.fieldNames.mkString(",")} but $p has " +
+          s"${st.schema.fieldNames.mkString(",")} — evolve the straggler first")
     }
-  private val bootSizes: String => IndexedSeq[Long] =
-    CdcSource.lastOf(id => TraceStore.keyBytes(path, keysOf(id)))
-  private val diffSizes: ((String, String)) => IndexedSeq[Long] =
-    CdcSource.lastOf(t => TraceStore.keyBytes(path, diffKeys(t).map(_._1)))
+    CdcSource.streamSchema(first, fleet)
+  }
 
-  /** Worklist index where the chunk starting at `from` ends: admit files
-    * until the files or bytes budget would be exceeded — always at least
-    * one, so an oversized file arrives alone (FileStreamSource's
-    * maxBytesPerTrigger contract; the batch is then bounded by the
-    * store's own file-size policy, which ingest and maintenance both
-    * honor). `sizeAt` is only consulted under a bytes budget, so the
-    * per-file stat pass is never paid for pure file-count admission. */
-  private def admit(count: Int, sizeAt: Int => Long, from: Int,
-                    limit: ReadLimit): Int = {
-    val (mf, mb) = CdcSource.budgets(limit)
-    if (mf.isEmpty && mb.isEmpty) count
+  /** The engine's offset as per-store parts plus the round-robin cursor
+    * (`null`, the engine's before-first-batch start, is every store at
+    * the Start sentinel). A fleet's logged offset is grown to the
+    * CURRENT fleet width: a checkpoint written before stores were
+    * appended carries fewer parts, and the missing tail is exactly the
+    * newcomers. An offset WIDER than the fleet is a removal, refused
+    * here as well as at the paths pin (defense in depth: the pin file
+    * could have been hand-edited). */
+  private def decode(o: OffsetV2): CdcMultiOffset =
+    if (o == null) CdcMultiOffset(0, IndexedSeq.fill(stores.size)(CdcOffset.Start))
+    else if (!fleet) CdcMultiOffset(0, IndexedSeq(CdcOffset.of(o)))
     else {
-      var k = from
-      var bytes = 0L
-      var stop = false
-      while (k < count && !stop) {
-        val sz = if (mb.isDefined) sizeAt(k) else 0L
-        val fits = mf.forall(k - from + 1 <= _) && mb.forall(bytes + sz <= _)
-        if (fits || k == from) {
-          bytes += sz; k += 1
-          if (!fits) stop = true // oversized lone file admitted by itself
-        } else stop = true
-      }
-      k
+      val m = CdcMultiOffset.of(o)
+      require(m.parts.size <= stores.size,
+        s"checkpoint offset carries ${m.parts.size} store pins but only " +
+          s"${stores.size} paths are configured — stores can only be APPENDED " +
+          "to a checkpointed fleet, never removed; start a new checkpoint for a " +
+          "shrunken fleet")
+      m.copy(parts = m.parts.padTo(stores.size, CdcOffset.Start))
     }
-  }
 
-  // Trigger.AvailableNow: the run's end state, frozen at the first
-  // latestOffset call (start-aware, so an idle run pins nothing)
-  @volatile private var availableNowPending = false
-  @volatile private var availableNowTarget: Option[CdcOffset] = None
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    availableNowPending = true
-    availableNowTarget = None
-  }
+  /** The offset the engine logs: a single store's own, or the fleet's
+    * composite. */
+  private def encode(o: CdcMultiOffset): OffsetV1 = if (fleet) o else o.parts.head
 
   override def getDefaultReadLimit: ReadLimit =
     (maxFilesPerTrigger, maxBytesPerTrigger) match {
@@ -265,77 +218,24 @@ final class CdcSource(
       case _ => ReadLimit.allAvailable()
     }
 
-  override def initialOffset(): OffsetV2 = CdcOffset.Start
+  override def prepareForTriggerAvailableNow(): Unit = stores.foreach(_.prepareAvailableNow())
 
-  /** The next offset after `start` — at most one bounded step. Fresh
-    * streams pin the current state (first chunk of it when chunking
-    * applies); mid-bootstrap advances one chunk of the SAME pin;
-    * mid-diff advances one slice of the SAME frozen worklist (the final
-    * slice lands as the complete offset, releasing the diff's base pin
-    * to commit-GC); complete offsets step toward change only when the
-    * live file set moved — as a bounded chunked diff under
-    * `maxFilesPerTrigger` — else echo `start` verbatim (idle = no
-    * batch, no pin). */
-  override def latestOffset(start: OffsetV2, limit: ReadLimit): CdcOffset = {
-    // the engine passes null (not initialOffset) before the first batch
-    val s = Option(start).map(CdcOffset.of).getOrElse(CdcOffset.Start)
-    def bootStep(id: String, k: Int): Int =
-      admit(keysOf(id).size, i => bootSizes(id)(i), k, limit)
-    // one admission-controlled slice of the fromId → toId worklist from
-    // index k: a small diff arrives whole; a table-scale one (retention
-    // sweep, mass erase) arrives as bounded slices, the last of which
-    // lands as the complete offset
-    def diffStep(fromId: String, toId: String, k: Int = 0): CdcOffset = {
-      val t = (fromId, toId)
-      val n = admit(diffKeys(t).size, i => diffSizes(t)(i), k, limit)
-      if (n >= diffKeys(t).size) CdcOffset(toId)
-      else CdcOffset(toId, Some(n), Some(fromId))
-    }
-    def firstChunkOf(o: CdcOffset): CdcOffset =
-      if (initialLoad) {
-        val n = bootStep(o.snapshotId, 0)
-        if (n >= keysOf(o.snapshotId).size) o else CdcOffset(o.snapshotId, Some(n))
-      } else startingSnapshot match {
-        case Some(f) => diffStep(f, o.snapshotId)
-        case None => o
+  override def initialOffset(): OffsetV2 = encode(decode(null))
+
+  /** One admission-bounded step of ONE store per trigger: scanning
+    * round-robin from the offset's `next` cursor, the first store whose
+    * own [[CdcSource.Store.latestOffset]] moves under the whole read
+    * limit advances, and the cursor lands after it. Idle stores ⇒ every
+    * store echoes ⇒ `start` comes back verbatim (no batch, no pins). */
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
+    val s = decode(start)
+    val order = (s.next until stores.size) ++ (0 until s.next)
+    order.iterator
+      .map(i => (i, stores(i).latestOffset(s.parts(i), limit)))
+      .find { case (i, next) => next != s.parts(i) }
+      .fold(Option(start).getOrElse(initialOffset())) { case (i, next) =>
+        encode(CdcMultiOffset((i + 1) % stores.size, s.parts.updated(i, next)))
       }
-    val target = availableNowTarget
-    val next: CdcOffset = s match {
-      // fresh stream: pin the current state (or serve the frozen target)
-      case CdcOffset(id0, _, _) if num(id0) == 0 =>
-        firstChunkOf(target.getOrElse(pinOwn()))
-      // mid-bootstrap: one more chunk of the same immutable manifest
-      case CdcOffset(id, Some(k), None) if k < keysOf(id).size =>
-        CdcOffset(id, Some(bootStep(id, k)))
-      // mid-diff: one more slice of the same frozen worklist
-      case CdcOffset(id, Some(k), Some(f)) if k < diffKeys((f, id)).size =>
-        diffStep(f, id, k)
-      // complete (chunked-complete or plain): advance only on change
-      case CdcOffset(id, _, _) => target match {
-        case Some(t) => if (t.snapshotId == id) s else diffStep(id, t.snapshotId)
-        case None =>
-          if (TraceStore.snapshotMatchesLive(path, id)) s
-          else diffStep(id, pinOwn().snapshotId)
-      }
-    }
-    if (availableNowPending && target.isEmpty) {
-      // freeze the run's end state: the complete form of the offset the
-      // first poll produced (chunks of it still flow batch by batch).
-      // Resuming a chunked bootstrap (or chunked diff) whose end pin no
-      // longer matches the live set freezes a FRESH pin instead, so one
-      // run finishes the in-flight chunk sequence AND delivers the
-      // accumulated diff — otherwise the CLI would report "caught up"
-      // with available changes undelivered until the next invocation.
-      val endId = next match {
-        case CdcOffset(id, Some(_), _)
-            if num(s.snapshotId) > 0 && !TraceStore.snapshotMatchesLive(path, id) =>
-          pinOwn().snapshotId
-        case o => o.snapshotId
-      }
-      availableNowTarget = Some(CdcOffset(endId))
-      availableNowPending = false
-    }
-    next
   }
 
   override def getOffset: Option[OffsetV1] =
@@ -343,114 +243,43 @@ final class CdcSource(
       "graft-cdc implements SupportsAdmissionControl; the engine calls " +
         "latestOffset(start, limit) instead of getOffset")
 
-  /** One batch = one slice `[j, k)` of one immutable worklist: the
-    * end pin's month-scoped sorted manifest read as inserts (`base` =
-    * None: a bootstrap), or the signed changed-file list `base → end`
-    * (a diff). A whole bootstrap or diff is the slice `[0, size)`; a
-    * chunk runs from the start offset's index to the end offset's. Any
-    * partition of a diff worklist sums to exactly the whole diff (signed
-    * row algebra is additive over file sets); a rewrite's cancelling
-    * pair split across slices surfaces as insert+delete of the same row
-    * in different batches — net zero for every signed consumer (rollup
-    * maintenance, `_sign` replication). */
+  /** The union of the slices of the stores whose part moved between
+    * `start` and `end` (one, as the engine steps; a fleet's rows tagged
+    * with their store). */
   override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
-    val endOff = CdcOffset.of(end)
-    val endId = endOff.snapshotId
-    // the engine may hand initialOffset back as a real start; it means
-    // "nothing delivered yet", i.e. the same thing as None
-    val from = start.map(CdcOffset.of).filter(o => num(o.snapshotId) > 0)
-    def sizeOf(base: Option[String]): Int =
-      base.fold(keysOf(endId).size)(b => diffKeys((b, endId)).size)
-    def whole(base: Option[String], j: Int = 0) = Some((base, j, sizeOf(base)))
-    val slice: Option[(Option[String], Int, Int)] =
-      (from, endOff.upTo, endOff.fromSnapshot) match {
-        // diff chunk: worklist slice between the diff's base and endId
-        case (f, Some(k), Some(base)) =>
-          val j = f match {
-            case Some(CdcOffset(`endId`, Some(prev), Some(`base`))) => prev
-            case Some(CdcOffset(`base`, _, _)) => 0 // complete at the base
-            case None => 0 // fresh stream chunking from startingSnapshot
-            case Some(other) => throw new IllegalStateException(
-              s"graft-cdc: diff chunk $base..$endId cannot follow offset ${other.json}")
-          }
-          Some((Some(base), j, k))
-        // bootstrap chunk: sorted-manifest slice of the pinned snapshot
-        case (f, Some(k), None) =>
-          val j = f match {
-            case Some(CdcOffset(`endId`, Some(prev), None)) => prev
-            case None => 0
-            case Some(other) => throw new IllegalStateException(
-              s"graft-cdc: bootstrap chunk of $endId cannot follow offset ${other.json}")
-          }
-          Some((None, j, k))
-        // the complete offset closes a chunked diff with its final slice
-        case (Some(s), None, None) if s.snapshotId == endId =>
-          s.fromSnapshot.flatMap(base => whole(Some(base), s.upTo.getOrElse(0)))
-        case (Some(s), None, None) =>
-          if (s.fromSnapshot.isDefined) throw new IllegalStateException(
-            s"graft-cdc: complete offset $endId cannot follow a mid-diff " +
-              s"offset of another snapshot (${s.json})")
-          whole(Some(s.snapshotId))
-        // CDC bootstrap in one piece: the consumer materializes state
-        // from one full load, then follows increments
-        case (None, None, None) if initialLoad => whole(None)
-        case (None, None, None) => startingSnapshot.flatMap(base => whole(Some(base)))
-        // a diff-marked end without a chunk index is never constructed
-        case (f, _, _) => throw new IllegalStateException(
-          s"graft-cdc: unrecognized offset pair start=${f.map(_.json)} end=${endOff.json}")
+    val e = decode(end)
+    val s = start.map(decode)
+    val frames = stores.indices.flatMap { i =>
+      val ePart = e.parts(i)
+      val sPart = s.map(_.parts(i)).filterNot(_ == CdcOffset.Start)
+      if (ePart == CdcOffset.Start || sPart.contains(ePart)) None
+      else {
+        val df = stores(i).slice(sPart, ePart)
+        Some(if (fleet) df.withColumn("_store", lit(paths(i))) else df)
       }
-    val df = slice.collect {
-      case (None, j, k) if j < k =>
-        TraceStore.readKeys(spark, path, keysOf(endId).slice(j, k), s"snapshot $endId")
-          .withColumn("_change", lit("insert"))
-      case (Some(base), j, k) if j < k =>
-        TraceStore.readChangedKeys(spark, path,
-          diffKeys((base, endId)).slice(j, k), s"changes $base..$endId")
-    }.orNull
-    if (df == null) Shim.emptyStreaming(spark, schema)
-    else {
-      val got = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val want = coreSchema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want)
-        throw new IllegalStateException(
-          s"graft-cdc: store schema evolved mid-stream (stream declared " +
-            s"${want.map(_._1).mkString(",")}; feed now produces " +
-            s"${got.map(_._1).mkString(",")}). Restart the stream to adopt " +
-            "the evolved schema — it resumes from the checkpointed offset " +
-            "with no loss (old files read through rename aliases).")
-      // commit metadata: which pin produced this batch and when it was
-      // captured (manifest install time — stable across replays), the
-      // Delta-CDF _commit_version/_commit_timestamp analogue, so a
-      // windowed or late-data consumer can reason about change time
-      // without the batch-id side channel
-      Shim.streamingOfRows(spark, df
-        .withColumn("_commit_snapshot", lit(endId))
-        .withColumn("_commit_ts", lit(TraceStore.snapshotTimestamp(path, endId))))
     }
+    if (frames.isEmpty) Shim.emptyStreaming(sqlContext.sparkSession, schema)
+    else frames.reduce(_ unionByName _)
   }
 
   override def commit(end: OffsetV1): Unit = {
-    val e = CdcOffset.of(end)
-    // a mid-diff chunk still replays against BOTH manifests: GC below
-    // the diff's base until the complete offset closes the sequence
-    val floor = e.fromSnapshot match {
-      case Some(base) if e.upTo.isDefined => num(base)
-      case _ => num(e.snapshotId)
+    val e = decode(end)
+    stores.indices.foreach { i =>
+      if (e.parts(i) != CdcOffset.Start) stores(i).commit(e.parts(i))
     }
-    val dropped = ownPins().filter(num(_) < floor)
-    dropped.foreach { id =>
-      TraceStore.dropSnapshot(path, id)
-      fs.delete(new org.apache.hadoop.fs.Path(pinsDir, id), false)
-    }
-    if (dropped.nonEmpty) TraceStore.vacuumSnapshots(path)
   }
 
   override def stop(): Unit = ()
 
-  override def toString: String = s"CdcSource[$path]"
+  override def toString: String = s"CdcSource[${paths.mkString(",")}]"
 }
 
 object CdcSource {
+  /** The stream's schema over the stores' shared feed schema: a fleet
+    * appends the origin-store column `_store`. */
+  private[sources] def streamSchema(feed: StructType, fleet: Boolean): StructType =
+    if (fleet) StructType(feed.fields :+ StructField("_store", StringType)) else feed
+
   /** `f` memoized for its most recent argument (one entry, replaced
     * atomically). */
   private def lastOf[K, V](f: K => V): K => V = {
@@ -471,12 +300,352 @@ object CdcSource {
       }
     case _ => (None, None)
   }
+
+  /** One store's feed — the per-store state behind [[CdcSource]]: its own
+    * pins and their commit-GC under `metadataPath`, the month-scope pin,
+    * the worklist caches, admission, the AvailableNow target and the
+    * slice read. `startingSnapshot` is the store's seed pin, if any. */
+  private final class Store(
+      spark: SparkSession,
+      path: String,
+      metadataPath: String,
+      startingSnapshot: Option[String],
+      initialLoad: Boolean,
+      months: Option[String]) {
+
+    // month-scoped stream (option `months`): the partition-level
+    // worklist pruning the BATCH relation compiles from `ym` filters
+    // (q234), carried to the streaming surface — every worklist
+    // (bootstrap manifest slices, diff slices, whole diffs) drops
+    // non-matching months BEFORE any file is scheduled or opened, so a
+    // month-scoped derived table's maintainer pays O(that month's
+    // changes) even when the store rewrites at table scale. Sound for
+    // the same reason as the batch prune: files never mix months.
+    // Changes wholly outside the window still move the offset — they
+    // surface as EMPTY batches (the pin advances; nothing is read).
+    private val monthOk: Option[String => Boolean] =
+      months.map(CdcStreamProvider.monthsPredicate)
+    private def inScope(key: String): Boolean = monthOk.forall(_(TraceStore.monthOf(key)))
+
+    val schema: StructType = CdcStreamProvider.feedSchema(path)
+
+    // the store-derived part of the feed (everything before the commit
+    // metadata columns) — what evolution-detection compares against
+    private val coreSchema: StructType =
+      StructType(schema.fields.dropRight(CdcStreamProvider.commitFields.length))
+
+    // ---- durable record of the pins THIS stream created, under the
+    // stream's own checkpoint metadata dir (per-stream by construction,
+    // survives restarts, shares the checkpoint's filesystem)
+    private val fs = new org.apache.hadoop.fs.Path(metadataPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private val pinsDir = new org.apache.hadoop.fs.Path(metadataPath, "pins")
+
+    // a startingSnapshot is only consumed by the stream's FIRST batch;
+    // once this stream has ever pinned an offset, the starting pin may
+    // have been legitimately dropped and its absence must not block
+    // restarts
+    startingSnapshot.filter(_ => !fs.exists(pinsDir)).foreach { id =>
+      require(TraceStore.listSnapshots(path).contains(id),
+        s"startingSnapshot '$id' is not a pinned snapshot of $path")
+    }
+
+    // the months spec is part of the OFFSET CONTRACT: chunk offsets
+    // index into the FILTERED worklist, so resuming a checkpoint under a
+    // different spec would silently re-slice an in-flight diff (rows
+    // skipped or double-read). Pin it durably like a fleet pins its path
+    // list: first run writes the spec, every restart must match.
+    locally {
+      val f = new org.apache.hadoop.fs.Path(metadataPath, "months")
+      val cur = months.getOrElse("(all)")
+      CdcStreamProvider.readPinFile(fs, f) match {
+        case Some(prev) =>
+          require(prev == cur,
+            s"this checkpoint was created with months='$prev' but the stream now " +
+              s"declares months='$cur' — the spec is fixed per checkpoint because " +
+              "chunk offsets index the filtered worklist; start a new checkpoint " +
+              "for a different month scope")
+        case None =>
+          // no pin but the stream HAS history (offset pins exist): a
+          // checkpoint created before month scoping, whose committed
+          // chunk offsets index the UNFILTERED worklist. Adopting a scope
+          // now would silently re-slice an in-flight diff (rows skipped
+          // or double-read; a mid-bootstrap upTo can even exceed the
+          // filtered list and read as complete). Unscoped resume is the
+          // old behavior — pin it; a scoped resume must refuse.
+          require(cur == "(all)" || !fs.exists(pinsDir),
+            s"this checkpoint has committed offsets but no recorded month scope " +
+              s"(created before month scoping) — resuming it with months='$cur' " +
+              "would re-slice in-flight chunk offsets against a differently " +
+              "filtered worklist; start a new checkpoint for a month-scoped stream")
+          fs.mkdirs(new org.apache.hadoop.fs.Path(metadataPath))
+          CdcStreamProvider.writePinFile(fs, f, cur)
+      }
+    }
+
+    private def markCreated(id: String): Unit = {
+      fs.mkdirs(pinsDir)
+      fs.create(new org.apache.hadoop.fs.Path(pinsDir, id), true).close()
+    }
+
+    private def ownPins(): Seq[String] =
+      if (!fs.exists(pinsDir)) Seq.empty
+      else fs.listStatus(pinsDir).toSeq.map(_.getPath.getName)
+        .filter(_.matches("s\\d{6,}"))
+
+    private def num(id: String): Long = id.drop(1).toLong
+
+    /** Pin the current state as an OWN snapshot (marked for commit-GC).
+      * MARKER-FIRST via the snapshot pre-install hook: the ownership
+      * marker (and the operator-facing `.owner-` note) land after the id
+      * claim but before the manifest, so a crash anywhere in the window
+      * leaves a marker with NO pin — inert (commit-GC treats a markered
+      * id without a manifest as already dropped and just clears the
+      * marker) — never a pin with no marker that no GC would claim. */
+    private def pinOwn(): CdcOffset = {
+      val id = TraceStore.snapshot(path, { candidate =>
+        markCreated(candidate)
+        TraceStore.annotateSnapshotOwner(path, candidate,
+          s"graft-cdc stream offset pin (checkpoint: $metadataPath) — " +
+            "dropping it breaks the stream's next batch; GC'd automatically on commit")
+      })
+      CdcOffset(id)
+    }
+
+    // worklist caches, one entry each: a pin's bootstrap list, a
+    // transition's diff list, and their file sizes (stat'd only under a
+    // bytes budget) are pure functions of immutable manifests, so every
+    // chunk of one bootstrap or diff — and the slice read after the step
+    // that chose it — reads them once. Month-scoped streams cache the
+    // FILTERED lists: chunk offsets index into them, and the spec is
+    // fixed per checkpoint, so replays slice identically.
+    private val keysOf: String => IndexedSeq[String] =
+      lastOf(id => TraceStore.snapshotKeys(path, id).filter(inScope))
+    private val diffKeys: ((String, String)) => IndexedSeq[(String, Boolean)] =
+      lastOf { case (fromId, toId) =>
+        TraceStore.changedKeysBetween(path, fromId, toId).filter(e => inScope(e._1))
+      }
+    private val bootSizes: String => IndexedSeq[Long] =
+      lastOf(id => TraceStore.keyBytes(path, keysOf(id)))
+    private val diffSizes: ((String, String)) => IndexedSeq[Long] =
+      lastOf(t => TraceStore.keyBytes(path, diffKeys(t).map(_._1)))
+
+    /** Worklist index where the chunk starting at `from` ends: admit
+      * files until the files or bytes budget would be exceeded — always
+      * at least one, so an oversized file arrives alone
+      * (FileStreamSource's maxBytesPerTrigger contract; the batch is then
+      * bounded by the store's own file-size policy, which ingest and
+      * maintenance both honor). `sizeAt` is only consulted under a bytes
+      * budget, so the per-file stat pass is never paid for pure
+      * file-count admission. */
+    private def admit(count: Int, sizeAt: Int => Long, from: Int,
+                      limit: ReadLimit): Int = {
+      val (mf, mb) = budgets(limit)
+      if (mf.isEmpty && mb.isEmpty) count
+      else {
+        var k = from
+        var bytes = 0L
+        var stop = false
+        while (k < count && !stop) {
+          val sz = if (mb.isDefined) sizeAt(k) else 0L
+          val fits = mf.forall(k - from + 1 <= _) && mb.forall(bytes + sz <= _)
+          if (fits || k == from) {
+            bytes += sz; k += 1
+            if (!fits) stop = true // oversized lone file admitted by itself
+          } else stop = true
+        }
+        k
+      }
+    }
+
+    // Trigger.AvailableNow: the run's end state, frozen at the first
+    // latestOffset call (start-aware, so an idle run pins nothing)
+    @volatile private var availableNowPending = false
+    @volatile private var availableNowTarget: Option[CdcOffset] = None
+
+    def prepareAvailableNow(): Unit = {
+      availableNowPending = true
+      availableNowTarget = None
+    }
+
+    /** The next offset after `s` (the Start sentinel on a fresh stream)
+      * — at most one bounded step. Fresh streams pin the current state
+      * (first chunk of it when chunking applies); mid-bootstrap advances
+      * one chunk of the SAME pin; mid-diff advances one slice of the SAME
+      * frozen worklist (the final slice lands as the complete offset,
+      * releasing the diff's base pin to commit-GC); complete offsets step
+      * toward change only when the live file set moved — as a bounded
+      * chunked diff under `maxFilesPerTrigger` — else echo `s` (idle =
+      * no batch, no pin). */
+    def latestOffset(s: CdcOffset, limit: ReadLimit): CdcOffset = {
+      def bootStep(id: String, k: Int): Int =
+        admit(keysOf(id).size, i => bootSizes(id)(i), k, limit)
+      // one admission-controlled slice of the fromId → toId worklist
+      // from index k: a small diff arrives whole; a table-scale one
+      // (retention sweep, mass erase) arrives as bounded slices, the
+      // last of which lands as the complete offset
+      def diffStep(fromId: String, toId: String, k: Int = 0): CdcOffset = {
+        val t = (fromId, toId)
+        val n = admit(diffKeys(t).size, i => diffSizes(t)(i), k, limit)
+        if (n >= diffKeys(t).size) CdcOffset(toId)
+        else CdcOffset(toId, Some(n), Some(fromId))
+      }
+      def firstChunkOf(o: CdcOffset): CdcOffset =
+        if (initialLoad) {
+          val n = bootStep(o.snapshotId, 0)
+          if (n >= keysOf(o.snapshotId).size) o else CdcOffset(o.snapshotId, Some(n))
+        } else startingSnapshot match {
+          case Some(f) => diffStep(f, o.snapshotId)
+          case None => o
+        }
+      val target = availableNowTarget
+      val next: CdcOffset = s match {
+        // fresh stream: pin the current state (or serve the frozen target)
+        case CdcOffset(id0, _, _) if num(id0) == 0 =>
+          firstChunkOf(target.getOrElse(pinOwn()))
+        // mid-bootstrap: one more chunk of the same immutable manifest
+        case CdcOffset(id, Some(k), None) if k < keysOf(id).size =>
+          CdcOffset(id, Some(bootStep(id, k)))
+        // mid-diff: one more slice of the same frozen worklist
+        case CdcOffset(id, Some(k), Some(f)) if k < diffKeys((f, id)).size =>
+          diffStep(f, id, k)
+        // complete (chunked-complete or plain): advance only on change
+        case CdcOffset(id, _, _) => target match {
+          case Some(t) => if (t.snapshotId == id) s else diffStep(id, t.snapshotId)
+          case None =>
+            if (TraceStore.snapshotMatchesLive(path, id)) s
+            else diffStep(id, pinOwn().snapshotId)
+        }
+      }
+      if (availableNowPending && target.isEmpty) {
+        // freeze the run's end state: the complete form of the offset
+        // the first poll produced (chunks of it still flow batch by
+        // batch). Resuming a chunked bootstrap (or chunked diff) whose
+        // end pin no longer matches the live set freezes a FRESH pin
+        // instead, so one run finishes the in-flight chunk sequence AND
+        // delivers the accumulated diff — otherwise the CLI would report
+        // "caught up" with available changes undelivered until the next
+        // invocation.
+        val endId = next match {
+          case CdcOffset(id, Some(_), _)
+              if num(s.snapshotId) > 0 && !TraceStore.snapshotMatchesLive(path, id) =>
+            pinOwn().snapshotId
+          case o => o.snapshotId
+        }
+        availableNowTarget = Some(CdcOffset(endId))
+        availableNowPending = false
+      }
+      next
+    }
+
+    /** One slice `[j, k)` of one immutable worklist, from `from` (None:
+      * nothing delivered yet) to `endOff`: the end pin's month-scoped
+      * sorted manifest read as inserts (`base` = None: a bootstrap), or
+      * the signed changed-file list `base → end` (a diff). A whole
+      * bootstrap or diff is the slice `[0, size)`; a chunk runs from the
+      * start offset's index to the end offset's. Any partition of a diff
+      * worklist sums to exactly the whole diff (signed row algebra is
+      * additive over file sets); a rewrite's cancelling pair split across
+      * slices surfaces as insert+delete of the same row in different
+      * batches — net zero for every signed consumer (rollup maintenance,
+      * `_sign` replication). */
+    def slice(from: Option[CdcOffset], endOff: CdcOffset): DataFrame = {
+      val endId = endOff.snapshotId
+      def sizeOf(base: Option[String]): Int =
+        base.fold(keysOf(endId).size)(b => diffKeys((b, endId)).size)
+      def whole(base: Option[String], j: Int = 0) = Some((base, j, sizeOf(base)))
+      val span: Option[(Option[String], Int, Int)] =
+        (from, endOff.upTo, endOff.fromSnapshot) match {
+          // diff chunk: worklist slice between the diff's base and endId
+          case (f, Some(k), Some(base)) =>
+            val j = f match {
+              case Some(CdcOffset(`endId`, Some(prev), Some(`base`))) => prev
+              case Some(CdcOffset(`base`, _, _)) => 0 // complete at the base
+              case None => 0 // fresh stream chunking from startingSnapshot
+              case Some(other) => throw new IllegalStateException(
+                s"graft-cdc: diff chunk $base..$endId cannot follow offset ${other.json}")
+            }
+            Some((Some(base), j, k))
+          // bootstrap chunk: sorted-manifest slice of the pinned snapshot
+          case (f, Some(k), None) =>
+            val j = f match {
+              case Some(CdcOffset(`endId`, Some(prev), None)) => prev
+              case None => 0
+              case Some(other) => throw new IllegalStateException(
+                s"graft-cdc: bootstrap chunk of $endId cannot follow offset ${other.json}")
+            }
+            Some((None, j, k))
+          // the complete offset closes a chunked diff with its final slice
+          case (Some(s), None, None) if s.snapshotId == endId =>
+            s.fromSnapshot.flatMap(base => whole(Some(base), s.upTo.getOrElse(0)))
+          case (Some(s), None, None) =>
+            if (s.fromSnapshot.isDefined) throw new IllegalStateException(
+              s"graft-cdc: complete offset $endId cannot follow a mid-diff " +
+                s"offset of another snapshot (${s.json})")
+            whole(Some(s.snapshotId))
+          // CDC bootstrap in one piece: the consumer materializes state
+          // from one full load, then follows increments
+          case (None, None, None) if initialLoad => whole(None)
+          case (None, None, None) => startingSnapshot.flatMap(base => whole(Some(base)))
+          // a diff-marked end without a chunk index is never constructed
+          case (f, _, _) => throw new IllegalStateException(
+            s"graft-cdc: unrecognized offset pair start=${f.map(_.json)} end=${endOff.json}")
+        }
+      val df = span.collect {
+        case (None, j, k) if j < k =>
+          TraceStore.readKeys(spark, path, keysOf(endId).slice(j, k), s"snapshot $endId")
+            .withColumn("_change", lit("insert"))
+        case (Some(base), j, k) if j < k =>
+          TraceStore.readChangedKeys(spark, path,
+            diffKeys((base, endId)).slice(j, k), s"changes $base..$endId")
+      }.orNull
+      if (df == null) Shim.emptyStreaming(spark, schema)
+      else {
+        val got = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+        val want = coreSchema.fields.map(f => (f.name, f.dataType)).toSeq
+        if (got != want)
+          throw new IllegalStateException(
+            s"graft-cdc: store schema evolved mid-stream (stream declared " +
+              s"${want.map(_._1).mkString(",")}; feed now produces " +
+              s"${got.map(_._1).mkString(",")}). Restart the stream to adopt " +
+              "the evolved schema — it resumes from the checkpointed offset " +
+              "with no loss (old files read through rename aliases).")
+        // commit metadata: which pin produced this batch and when it was
+        // captured (manifest install time — stable across replays), the
+        // Delta-CDF _commit_version/_commit_timestamp analogue, so a
+        // windowed or late-data consumer can reason about change time
+        // without the batch-id side channel
+        Shim.streamingOfRows(spark, df
+          .withColumn("_commit_snapshot", lit(endId))
+          .withColumn("_commit_ts", lit(TraceStore.snapshotTimestamp(path, endId))))
+      }
+    }
+
+    /** Drop this stream's own pins below the committed offset `e` and
+      * vacuum. */
+    def commit(e: CdcOffset): Unit = {
+      // a mid-diff chunk still replays against BOTH manifests: GC below
+      // the diff's base until the complete offset closes the sequence
+      val floor = e.fromSnapshot match {
+        case Some(base) if e.upTo.isDefined => num(base)
+        case _ => num(e.snapshotId)
+      }
+      val dropped = ownPins().filter(num(_) < floor)
+      dropped.foreach { id =>
+        TraceStore.dropSnapshot(path, id)
+        fs.delete(new org.apache.hadoop.fs.Path(pinsDir, id), false)
+      }
+      if (dropped.nonEmpty) TraceStore.vacuumSnapshots(path)
+    }
+  }
 }
 
-/** Offset = the id of a snapshot pin this stream created; during an
-  * admission-controlled bootstrap, `upTo` marks how many of the pinned
-  * manifest's sorted files have been delivered so far (see
-  * [[CdcSource]]). */
+/** Offset = the id of a snapshot pin this stream created. `upTo` marks
+  * how far a chunked read has got in its worklist: alone, how many of
+  * the pinned manifest's sorted files a bootstrap has delivered; with
+  * `fromSnapshot`, how many entries of the signed changed-file list from
+  * that base pin a diff has delivered (see [[CdcSource]]). A fleet logs
+  * one per store inside a [[CdcMultiOffset]]. */
 final case class CdcOffset(snapshotId: String, upTo: Option[Int] = None,
                            fromSnapshot: Option[String] = None)
     extends OffsetV1 {
@@ -511,194 +680,6 @@ object CdcOffset {
     case c: CdcOffset => c
     case other => parse(other.json())
   }
-}
-
-/** One checkpoint over N stores — the fleet form of [[CdcSource]]: the
-  * reference's multi-cluster story is one table per cluster (its
-  * README.md:55-62), and a fleet-wide replication
-  * consumer wants ONE offset log, not N checkpoints to keep consistent.
-  * The composite offset carries a per-store pin
-  * (`{"next":k,"stores":[…]}` — one embedded [[CdcOffset]] per
-  * configured path, positional), and every delivered row is tagged with
-  * its origin store (`_store` = the configured path).
-  *
-  * Semantics = each child [[CdcSource]]'s, unchanged: per-store pins
-  * under per-store metadata subdirs, admission control, chunked
-  * bootstraps/diffs, commit-GC, AvailableNow — all delegate. ONE child
-  * advances per trigger under the whole read limit (so
-  * `maxFilesPerTrigger`/`maxBytesPerTrigger` bound the BATCH, as for a
-  * single store; see [[latestOffset]]), the first that moves in a
-  * round-robin scan from the offset's own `next` cursor —
-  * deterministic, restart-safe, and fair when several stores mutate
-  * continuously.
-  *
-  * The path LIST is part of the checkpoint contract, with ONE supported
-  * evolution: APPEND-ONLY growth (the reference's clusters come and go,
-  * README.md:55-62). Offset parts are positional, so existing entries
-  * can neither move nor leave — removal/reorder fails loudly against
-  * the durable paths pin — but new stores appended at the END extend
-  * the pin in place: an older logged offset (fewer parts) grows with
-  * Start sentinels for the newcomers, which bootstrap through the feed
-  * (or follow from a seeded pin via positional `startingSnapshots`)
-  * while every existing store's pin is untouched. To retire a store,
-  * DELETE WHERE its rows (the feed retracts them fleet-wide), then
-  * start a new checkpoint without it. All stores must share the core
-  * schema (the fleet IS one logical table there; an evolved straggler
-  * fails at construction with both schemas named). */
-final class CdcMultiSource(
-    sqlContext: SQLContext,
-    paths: Seq[String],
-    metadataPath: String,
-    initialLoad: Boolean,
-    maxFilesPerTrigger: Option[Int],
-    maxBytesPerTrigger: Option[Long],
-    months: Option[String],
-    startingSnapshots: Option[Seq[String]])
-  extends Source with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-
-  require(paths.nonEmpty, "graft-cdc multi-store read needs at least one path")
-  // the fleet seed handoff: one pin PER STORE, positional like the path
-  // list — each child follows changes from its own pin instead of
-  // bootstrapping (the fleet twin of the single-store startingSnapshot)
-  startingSnapshots.foreach { pins =>
-    require(pins.size == paths.size,
-      s"startingSnapshots names ${pins.size} pins for ${paths.size} stores — " +
-        "the list is positional, one pin per configured path")
-    require(!initialLoad,
-      "startingSnapshots and initialLoad are exclusive: follow from the pins " +
-        "OR bootstrap, not both")
-  }
-
-  // Pin the PATH LIST durably under the stream's metadata: offset parts
-  // are positional, so a checkpoint resumed with the stores REORDERED
-  // (same count) would silently re-bind each store to another store's
-  // pin — not a crash, a misattributed feed. First run writes the list;
-  // every restart must present the identical sequence.
-  locally {
-    val fs0 = new org.apache.hadoop.fs.Path(metadataPath)
-      .getFileSystem(sqlContext.sparkSession.sparkContext.hadoopConfiguration)
-    val pathsFile = new org.apache.hadoop.fs.Path(metadataPath, "paths")
-    CdcStreamProvider.readPinFile(fs0, pathsFile) match {
-      case Some(prev0) =>
-        val prev = prev0.linesIterator.toList
-        if (prev != paths.toList) {
-          // membership EVOLUTION: appending stores at the END is the one
-          // supported reshape — existing positions (and so their offset
-          // pins) are untouched, newcomers get fresh positions and start
-          // at the Start sentinel (bootstrap or follow-from-now per the
-          // fleet's configuration; a seeded newcomer rides positional
-          // startingSnapshots). Removal and reorder still fail loudly:
-          // dropping a position would re-bind every later store to
-          // another store's pin (misattributed feeds, not a crash).
-          require(paths.toList.startsWith(prev),
-            s"this checkpoint follows the store list [${prev.mkString(", ")}] but " +
-              s"'paths' names [${paths.mkString(", ")}] — offset pins are " +
-              "positional, so existing entries can neither move nor leave; a " +
-              "fleet may only GROW by appending new stores at the end (to " +
-              "retire a store, DELETE WHERE its rows so the feed retracts " +
-              "them, then start a new checkpoint without it)")
-          CdcStreamProvider.writePinFile(fs0, pathsFile, paths.mkString("\n"))
-        }
-      case None =>
-        fs0.mkdirs(new org.apache.hadoop.fs.Path(metadataPath))
-        CdcStreamProvider.writePinFile(fs0, pathsFile, paths.mkString("\n"))
-    }
-  }
-
-  private val children: IndexedSeq[CdcSource] = paths.toIndexedSeq.zipWithIndex
-    .map { case (p, i) =>
-      new CdcSource(sqlContext, p, s"$metadataPath/store-$i",
-        startingSnapshots.map(_(i)), initialLoad,
-        maxFilesPerTrigger, maxBytesPerTrigger, months)
-    }
-
-  override val schema: StructType = {
-    val first = children.head.schema
-    children.zip(paths).foreach { case (c, p) =>
-      require(c.schema == first,
-        s"graft-cdc multi-store read needs one shared schema; ${paths.head} has " +
-          s"${first.fieldNames.mkString(",")} but $p has " +
-          s"${c.schema.fieldNames.mkString(",")} — evolve the straggler first")
-    }
-    StructType(first.fields :+ StructField("_store", StringType))
-  }
-
-  override def getDefaultReadLimit: ReadLimit = children.head.getDefaultReadLimit
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    children.foreach(_.prepareForTriggerAvailableNow())
-
-  override def initialOffset(): OffsetV2 =
-    CdcMultiOffset(0, IndexedSeq.fill(children.size)(CdcOffset.Start))
-
-  /** A logged composite offset grown to the CURRENT fleet width: a
-    * checkpoint written before stores were appended carries fewer parts,
-    * and the missing tail is exactly the newcomers — which start at the
-    * Start sentinel. An offset WIDER than the fleet is a removal,
-    * refused here as well as at the paths pin (defense in depth: the
-    * pin file could have been hand-edited). */
-  private def grown(o: CdcMultiOffset): CdcMultiOffset = {
-    require(o.parts.size <= children.size,
-      s"checkpoint offset carries ${o.parts.size} store pins but only " +
-        s"${children.size} paths are configured — stores can only be APPENDED " +
-        "to a checkpointed fleet, never removed; start a new checkpoint for a " +
-        "shrunken fleet")
-    if (o.parts.size == children.size) o
-    else o.copy(parts = o.parts ++
-      IndexedSeq.fill(children.size - o.parts.size)(CdcOffset.Start))
-  }
-
-  /** One admission-bounded step of ONE child per trigger: scanning
-    * round-robin from the offset's `next` cursor, the first child whose
-    * own [[CdcSource.latestOffset]] moves under the whole read limit
-    * advances, and the cursor lands after it. A child whose part is the
-    * Start sentinel has never run — it is handed `null`, the engine's
-    * before-first-batch convention. Idle fleet ⇒ every child echoes ⇒
-    * the composite echoes `start` verbatim (no batch, no pins). */
-  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val from = Option(start).getOrElse(initialOffset())
-    val s = grown(CdcMultiOffset.of(from))
-    val order = (s.next until children.size) ++ (0 until s.next)
-    order.iterator
-      .map { i =>
-        val prev = s.parts(i)
-        (i, children(i).latestOffset(if (prev == CdcOffset.Start) null else prev, limit))
-      }
-      .find { case (i, next) => next != s.parts(i) }
-      .fold(from) { case (i, next) =>
-        CdcMultiOffset((i + 1) % children.size, s.parts.updated(i, next))
-      }
-  }
-
-  override def getOffset: Option[OffsetV1] =
-    throw new UnsupportedOperationException(
-      "graft-cdc implements SupportsAdmissionControl; the engine calls " +
-        "latestOffset(start, limit) instead of getOffset")
-
-  override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
-    val e = grown(CdcMultiOffset.of(end))
-    val s = start.map(o => grown(CdcMultiOffset.of(o)))
-    val frames = children.indices.flatMap { i =>
-      val ePart = e.parts(i)
-      val sPart = s.map(_.parts(i)).filterNot(_ == CdcOffset.Start)
-      if (ePart == CdcOffset.Start || sPart.contains(ePart)) None
-      else Some(children(i).getBatch(sPart, ePart)
-        .withColumn("_store", lit(paths(i))))
-    }
-    if (frames.isEmpty) Shim.emptyStreaming(sqlContext.sparkSession, schema)
-    else frames.reduce(_ unionByName _)
-  }
-
-  override def commit(end: OffsetV1): Unit = {
-    val e = grown(CdcMultiOffset.of(end))
-    children.indices.foreach { i =>
-      if (e.parts(i) != CdcOffset.Start) children(i).commit(e.parts(i))
-    }
-  }
-
-  override def stop(): Unit = children.foreach(_.stop())
-
-  override def toString: String = s"CdcMultiSource[${paths.mkString(",")}]"
 }
 
 /** Composite offset: a per-store [[CdcOffset]] (positional, option
@@ -745,7 +726,7 @@ object CdcMultiOffset {
   * Streaming options:
   *  - `path` (required): the trace-store root. OR `paths`: a
   *    comma-separated LIST of store roots — one checkpoint over a fleet
-  *    ([[CdcMultiSource]]): per-store pins in one composite offset, one
+  *    (see [[CdcSource]]): per-store pins in one composite offset, one
   *    store advances per trigger (round-robin, under the whole budget),
   *    rows tagged `_store`; the list is positional — append-only growth
   *    is the one supported reshape.
@@ -823,10 +804,8 @@ final class CdcStreamProvider extends StreamSourceProvider
       schema: Option[StructType],
       providerName: String,
       parameters: Map[String, String]): (String, StructType) =
-    (shortName(), multiPaths(parameters) match {
-      case Some(ps) =>
-        StructType(feedSchema(ps.head).fields :+ StructField("_store", StringType))
-      case None => feedSchema(pathOf(parameters))
+    (shortName(), storesOf(parameters) match {
+      case (paths, fleet, _) => CdcSource.streamSchema(feedSchema(paths.head), fleet)
     })
 
   override def createSource(
@@ -851,27 +830,9 @@ final class CdcStreamProvider extends StreamSourceProvider
     // load(), not inside the first micro-batch's worklist assembly
     val months = parameters.get("months")
     months.foreach(CdcStreamProvider.monthsPredicate)
-    multiPaths(parameters) match {
-      case Some(ps) =>
-        require(!parameters.contains("startingSnapshot"),
-          "graft-cdc multi-store read manages one pin PER STORE; " +
-            "startingSnapshot names a single pin and cannot apply — use " +
-            "startingSnapshots (one pin per path) or initialLoad")
-        val startPins = parameters.get("startingSnapshots").map { raw =>
-          val pins = raw.split(",").map(_.trim).toSeq
-          pins.foreach(p => require(p.matches("s\\d{6,}"),
-            s"startingSnapshots entries must be snapshot ids like s000001, got '$p'"))
-          pins
-        }
-        new CdcMultiSource(sqlContext, ps, metadataPath,
-          parameters.get("initialLoad").exists(_.toBoolean),
-          maxFiles, maxBytes, months, startPins)
-      case None =>
-        new CdcSource(sqlContext, pathOf(parameters), metadataPath,
-          parameters.get("startingSnapshot").filterNot(_ == "latest"),
-          parameters.get("initialLoad").exists(_.toBoolean),
-          maxFiles, maxBytes, months)
-    }
+    val (paths, fleet, pins) = storesOf(parameters)
+    new CdcSource(sqlContext, paths, fleet, pins, metadataPath,
+      parameters.get("initialLoad").exists(_.toBoolean), maxFiles, maxBytes, months)
   }
 }
 
@@ -1030,18 +991,34 @@ object CdcStreamProvider {
       throw new IllegalArgumentException(
         "graft-cdc requires option 'path' (or 'paths' for a multi-store stream)"))
 
-  /** The `paths` option (comma-separated store roots) → Some(list) for
-    * the multi-store streaming form ([[CdcMultiSource]]); exclusive
-    * with `path`. */
-  private def multiPaths(parameters: Map[String, String]): Option[Seq[String]] =
-    parameters.get("paths").map { raw =>
-      require(!parameters.contains("path"),
-        "graft-cdc takes 'path' (single store) OR 'paths' (fleet), not both")
-      val ps = raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      require(ps.nonEmpty, "graft-cdc option 'paths' names no store")
-      require(ps.distinct.size == ps.size,
-        s"graft-cdc option 'paths' repeats a store: $raw")
-      ps
+  /** The stores a stream reads, as `(paths, fleet, pins)`: `path` (with
+    * an optional `startingSnapshot`) is one store; `paths` (a
+    * comma-separated list, with optional positional `startingSnapshots`)
+    * is a fleet at any length, so a one-path fleet can later grow. */
+  private def storesOf(parameters: Map[String, String])
+      : (Seq[String], Boolean, Option[Seq[String]]) =
+    parameters.get("paths") match {
+      case None =>
+        (Seq(pathOf(parameters)), false,
+          parameters.get("startingSnapshot").filterNot(_ == "latest").map(Seq(_)))
+      case Some(raw) =>
+        require(!parameters.contains("path"),
+          "graft-cdc takes 'path' (single store) OR 'paths' (fleet), not both")
+        val ps = raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        require(ps.nonEmpty, "graft-cdc option 'paths' names no store")
+        require(ps.distinct.size == ps.size,
+          s"graft-cdc option 'paths' repeats a store: $raw")
+        require(!parameters.contains("startingSnapshot"),
+          "graft-cdc multi-store read manages one pin PER STORE; " +
+            "startingSnapshot names a single pin and cannot apply — use " +
+            "startingSnapshots (one pin per path) or initialLoad")
+        val pins = parameters.get("startingSnapshots").map { raw =>
+          val ids = raw.split(",").map(_.trim).toSeq
+          ids.foreach(p => require(p.matches("s\\d{6,}"),
+            s"startingSnapshots entries must be snapshot ids like s000001, got '$p'"))
+          ids
+        }
+        (ps, true, pins)
     }
 
   /** Durable one-shot pin files (the months spec, the fleet path list)
@@ -1076,13 +1053,6 @@ object CdcStreamProvider {
       if (s.isEmpty) None else Some(s)
     }
 
-  /** Parse the streaming `months` option: comma-separated conjuncts over
-    * the `ym` partition VALUE — `>=202401`, `<=202403`, `>`/`<` forms,
-    * and `202402` / `=202402` (several equality tokens form an IN-set,
-    * OR'd together, AND'd with the range conjuncts). `yyyyMM` is
-    * fixed-width, so string order is chronological order and ranges
-    * evaluate directly — the same evaluation discipline as the batch
-    * relation's [[CdcBatchRelation.monthPredicate]]. */
   /** The parsed months grammar: the IN-set of equality tokens plus the
     * range conjuncts, shared by the closure and Column compilations. */
   private def parseMonths(spec: String): (Set[String], Seq[(String, String)]) = {
@@ -1098,6 +1068,13 @@ object CdcStreamProvider {
     (parsed.collect { case ("=", m) => m }.toSet, parsed.filterNot(_._1 == "="))
   }
 
+  /** Parse the streaming `months` option: comma-separated conjuncts over
+    * the `ym` partition VALUE — `>=202401`, `<=202403`, `>`/`<` forms,
+    * and `202402` / `=202402` (several equality tokens form an IN-set,
+    * OR'd together, AND'd with the range conjuncts). `yyyyMM` is
+    * fixed-width, so string order is chronological order and ranges
+    * evaluate directly — the same evaluation discipline as the batch
+    * relation's [[CdcBatchRelation.monthPredicate]]. */
   private[graft] def monthsPredicate(spec: String): String => Boolean = {
     val (eqs, ranges) = parseMonths(spec)
     (m: String) =>

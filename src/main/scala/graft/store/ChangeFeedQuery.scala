@@ -119,18 +119,18 @@ object ChangeFeedQuery {
   private val streamed = new graft.util.SessionDirCache[String]
 
   /** q228 — the change feed consumed through the ACTUAL `graft-cdc`
-    * Structured Streaming source (graft.sources.CdcSource), end to end
-    * and oracle-gated: the store lives through the same lifecycle as
-    * q226 (append A → append B → DELETE WHERE → compact), but here each
-    * mutation is delivered as its own MICRO-BATCH by a
-    * Trigger.AvailableNow run resuming from the shared checkpoint — so
-    * the gate pins, per batch id, exactly what the streaming offset
-    * machinery delivered: batch 0 = the initial load (A as inserts,
-    * `initialLoad=true`), batch 1 = B's inserts, batch 2 = the erased
-    * rows as deletes, batch 3 = the compaction, which must cancel to
-    * ZERO rows (it contributes no group). Every drain is also a restart
-    * from the checkpointed offset, so offset replay is on the graded
-    * path, not just in the spec.
+    * Structured Streaming source (graft.sources.CdcSource over one
+    * store), end to end and oracle-gated: the store lives through the
+    * same lifecycle as q226 (append A → append B → DELETE WHERE →
+    * compact), but here each mutation is delivered as its own
+    * MICRO-BATCH by a Trigger.AvailableNow run resuming from the shared
+    * checkpoint — so the gate pins, per batch id, exactly what the
+    * streaming offset machinery delivered: batch 0 = the initial load
+    * (A as inserts, `initialLoad=true`), batch 1 = B's inserts, batch 2
+    * = the erased rows as deletes, batch 3 = the compaction, which must
+    * cancel to ZERO rows (it contributes no group). Every drain is also
+    * a restart from the checkpointed offset, so offset replay is on the
+    * graded path, not just in the spec.
     *
     * Scale: each micro-batch's plan scans only the files that changed
     * since its start offset (the same file-set pruning as q226); the
@@ -635,16 +635,16 @@ object ChangeFeedQuery {
 
   /** q235 — the FLEET feed: two stores (the reference's one-table-per-
     * cluster shape, README.md:55-62) followed through ONE checkpoint via
-    * `option("paths", "a,b")` ([[graft.sources.CdcMultiSource]]): per-
-    * store pins ride one composite offset, each trigger advances one
-    * store round-robin, and every row carries its origin as `_store`.
-    * The fixture bootstraps both stores (initial loads interleave as
-    * separate batches), then erases `error` rows from store A ONLY and
-    * drains again — so the gate pins per-store attribution (store B must
-    * see NO deletes), the signed algebra per store, and that one store's
-    * maintenance never leaks into the other's feed. Every drain is a
-    * restart from the shared checkpoint — composite-offset replay is on
-    * the graded path.
+    * `option("paths", "a,b")` ([[graft.sources.CdcSource]] over a
+    * fleet): per-store pins ride one composite offset, each trigger
+    * advances one store round-robin, and every row carries its origin
+    * as `_store`. The fixture bootstraps both stores (initial loads
+    * interleave as separate batches), then erases `error` rows from
+    * store A ONLY and drains again — so the gate pins per-store
+    * attribution (store B must see NO deletes), the signed algebra per
+    * store, and that one store's maintenance never leaks into the
+    * other's feed. Every drain is a restart from the shared checkpoint
+    * — composite-offset replay is on the graded path.
     *
     * Scale: one checkpoint for N stores costs what N single streams
     * cost (per-store file-set-pruned diffs, one advancing per trigger)
@@ -768,19 +768,19 @@ object ChangeFeedQuery {
   /** q238 — a MONTH-SCOPED rollup maintained as a stream: `followRollup`
     * with the `months` option, which carries q234's partition-level
     * worklist pruning from the batch relation into the `graft-cdc`
-    * STREAM itself ([[graft.sources.CdcSource]] month-filters every
-    * worklist — bootstrap slices, diff slices, whole diffs — before any
-    * file is scheduled or opened). The fixture spreads the single-month
-    * events calendar across three months (batch b's rows shift +b
-    * months, the retention-shaped calendar a real store has), scopes the
-    * maintainer to the LAST TWO, then runs a DELETE WHERE that rewrites
-    * every month — the out-of-scope month's rewrite must cross the
-    * stream as pruned worklist entries (and its physical files as
-    * never-opened; `CdcStreamSpec` pins that half with the poisoned-
-    * month trick). The graded read is the maintained rollup; the oracle
-    * recomputes the scoped months from raw events, so a pruned-away
-    * in-scope change, a leaked out-of-scope group, or a signed error
-    * fails the hash gate.
+    * STREAM itself (each store of [[graft.sources.CdcSource]]
+    * month-filters every worklist — bootstrap slices, diff slices,
+    * whole diffs — before any file is scheduled or opened). The fixture
+    * spreads the single-month events calendar across three months
+    * (batch b's rows shift +b months, the retention-shaped calendar a
+    * real store has), scopes the maintainer to the LAST TWO, then runs
+    * a DELETE WHERE that rewrites every month — the out-of-scope
+    * month's rewrite must cross the stream as pruned worklist entries
+    * (and its physical files as never-opened; `CdcStreamSpec` pins that
+    * half with the poisoned-month trick). The graded read is the
+    * maintained rollup; the oracle recomputes the scoped months from
+    * raw events, so a pruned-away in-scope change, a leaked
+    * out-of-scope group, or a signed error fails the hash gate.
     *
     * Scale: a month-scoped consumer of a 100 TB store's table-scale
     * rewrite pays O(that month's changes) in metadata AND I/O — the
@@ -1086,7 +1086,7 @@ object ChangeFeedQuery {
   /** q243 — fleet MEMBERSHIP EVOLUTION gated end to end: a two-store
     * fleet rollup bootstraps under one checkpoint, then the fleet GROWS
     * (store C appended at the end of the pinned path list —
-    * [[graft.sources.CdcMultiSource]]'s one supported reshape) while
+    * the one reshape [[graft.sources.CdcSource]] allows a fleet) while
     * store A simultaneously retracts its `error` rows. The newcomer
     * bootstraps through the feed under the same admission budget, the
     * existing stores' positional pins are untouched (they deliver ONLY

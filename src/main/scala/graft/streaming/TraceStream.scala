@@ -243,9 +243,9 @@ object TraceStream {
 
   /** ROLLING month-scope migration for a maintained rollup — the
     * production "last N months" that ADVANCES. The months spec is part
-    * of the offset contract and therefore pinned per checkpoint
-    * ([[graft.sources.CdcSource]]), so a scope change is a documented
-    * MIGRATION, not a mutable option:
+    * of the offset contract and therefore pinned per checkpoint (per
+    * store, by [[graft.sources.CdcSource]]), so a scope change is a
+    * documented MIGRATION, not a mutable option:
     *
     *  1. quiesce the old maintainer (drain it to current, stop it);
     *  2. call this — it pins the store's state and writes the NEW
@@ -305,7 +305,7 @@ object TraceStream {
     * ([[migrateRollupMonths]]).
     *
     * A fleet ([[Stores]] with `fleet`) is read through ONE checkpoint
-    * ([[graft.sources.CdcMultiSource]]) — the reference's
+    * of the same [[graft.sources.CdcSource]] — the reference's
     * one-table-per-cluster shape rolled up ACROSS the fleet. Each
     * micro-batch carries one store's signed changes; the (ym, Type)
     * delta ignores the `_store` tag, so the maintained rollup is the
@@ -472,16 +472,10 @@ object TraceStream {
     * membership GC. */
   def followMemberIndex(spark: SparkSession, storePath: String, indexPath: String,
                         checkpointDir: String,
-                        trigger: Trigger = Trigger.AvailableNow(),
-                        maxFilesPerTrigger: Option[Int] = None,
-                        maxBytesPerTrigger: Option[Long] = None,
-                        compactOver: Int = DefaultCompactOver,
-                        startingSnapshot: Option[String] = None,
-                        months: Option[String] = None): StreamingQuery =
-    follow(spark, Feed(Stores(Seq(storePath), pins = startingSnapshot.map(Seq(_))),
-        months, maxFilesPerTrigger, maxBytesPerTrigger),
-      "members", indexPath, checkpointDir, trigger, Seq("band", "bkey", "doc"), Seq("n"),
-      compactOver) {
+                        maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    follow(spark, Feed(storePath, None, maxFilesPerTrigger, None),
+      "members", indexPath, checkpointDir, Trigger.AvailableNow(),
+      Seq("band", "bkey", "doc"), Seq("n")) {
       (batch, sign) => graft.store.ChangeFeedQuery.bucketRows(
         batch.withColumn("n", sign).withColumn("doc",
           concat(col("Machine"), lit("/"), col("Type"), lit("/"), col("ID"))),
@@ -552,13 +546,13 @@ object TraceStream {
   }
 
   // ------------------------------------------------------------------ the follow loop
-  /** The stores a maintainer reads: ONE store (the `path` source,
-    * [[graft.sources.CdcSource]]) or a FLEET through one checkpoint (the
-    * `paths` source, [[graft.sources.CdcMultiSource]]; a one-store fleet
-    * keeps the fleet checkpoint, so it can later grow), and the pins a
-    * seeded table follows from (positional, one per store). Only this
-    * value knows single from fleet: every maintainer takes it, and a
-    * plain store path converts to it. */
+  /** The stores a maintainer reads: ONE store (`graft-cdc`'s `path`
+    * option) or a FLEET through one checkpoint (`paths`; a one-store
+    * fleet keeps the fleet checkpoint, so it can later grow), and the
+    * pins a seeded table follows from (positional, one per store). One
+    * [[graft.sources.CdcSource]] reads either form. Only this value
+    * knows single from fleet on the maintainer side: every maintainer
+    * takes it, and a plain store path converts to it. */
   final case class Stores(paths: Seq[String], fleet: Boolean = false,
                           pins: Option[Seq[String]] = None) {
     require(paths.nonEmpty, "no store to read")

@@ -832,7 +832,7 @@ class CdcStreamSpec extends SparkSpec {
     val store = tmpDir("cdcidle"); val meta = tmpDir("cdcidle-meta")
     TraceStore.append(mk((10, "m1", "ok", "2019-05-13 10:00:00")), store)
     val src = new graft.sources.CdcSource(
-      spark.sqlContext, store, meta, None, true, None,
+      spark.sqlContext, Seq(store), false, None, meta, true, None,
       maxBytesPerTrigger = None, months = None)
     val all = ReadLimit.allAvailable()
     val o1 = CdcOffset.of(src.latestOffset(null, all))
@@ -1443,5 +1443,71 @@ class CdcStreamSpec extends SparkSpec {
     val d = CdcOffset("s000042", Some(128), Some("s000040"))
     assert(CdcOffset.parse(d.json) == d)
     intercept[IllegalArgumentException] { CdcOffset.parse("""{"file":"x"}""") }
+  }
+
+  test("checkpoint contract: offset log lines and source metadata layout, one store and a fleet") {
+    // the engine's offset log is `v1`, the batch metadata, then one line
+    // per source; a restart parses these lines, so their shape (and the
+    // source's metadata dir layout) must survive any refactor unchanged
+    def sourceLines(ck: String): Seq[String] = {
+      val dir = new java.io.File(ck, "offsets")
+      dir.listFiles.toSeq.map(_.getName).filter(_.matches("\\d+"))
+        .sortBy(_.toLong).map { n =>
+          val src = scala.io.Source.fromFile(new java.io.File(dir, n), "UTF-8")
+          try src.getLines().toIndexedSeq(2) finally src.close()
+        }
+    }
+    def exists(root: String, rel: String) = new java.io.File(root, rel).exists
+
+    // one store: a chunked bootstrap, then a chunked diff
+    val store = tmpDir("cdccontract"); val ck = tmpDir("cdccontract-ck")
+    TraceStore.append(mk(
+      (10, "m1", "ok", "2019-05-13 10:00:00"),
+      (20, "m2", "ok", "2019-06-01 10:00:00")), store, splitsPerMonth = 1)
+    val opts = Map("initialLoad" -> "true", "maxFilesPerTrigger" -> "1")
+    drain(store, ck, opts)
+    TraceStore.append(mk(
+      (30, "m1", "ok", "2019-07-13 10:00:00"),
+      (40, "m2", "ok", "2019-08-01 10:00:00")), store, splitsPerMonth = 1)
+    drain(store, ck, opts)
+    val single = sourceLines(ck)
+    val ids = """s\d{6,}""".r
+    val a = ids.findFirstIn(single.head).get
+    val b = ids.findFirstIn(single(2)).get
+    assert(single == Seq(
+      s"""{"snapshot":"$a","upto":1}""",
+      s"""{"snapshot":"$a","upto":2}""",
+      s"""{"snapshot":"$b","from":"$a","upto":1}""",
+      s"""{"snapshot":"$b"}"""), single)
+    val meta = s"$ck/sources/0"
+    assert(exists(meta, "pins") && exists(meta, "months"))
+    assert(!exists(meta, "paths") && !exists(meta, "store-0"))
+    val oneSchema = spark.readStream.format("graft-cdc").option("path", store).load().schema
+    assert(!oneSchema.fieldNames.contains("_store"), oneSchema)
+
+    // a fleet: one composite offset per batch, one metadata subdir per store
+    val fa = tmpDir("cdccontract-a"); val fb = tmpDir("cdccontract-b")
+    val fck = tmpDir("cdccontract-fck")
+    TraceStore.append(mk((50, "m1", "ok", "2019-05-13 10:00:00")), fa)
+    TraceStore.append(mk((60, "m2", "ok", "2019-05-13 10:00:00")), fb)
+    val q = spark.readStream.format("graft-cdc")
+      .option("paths", s"$fa,$fb").option("initialLoad", "true").load()
+      .writeStream.option("checkpointLocation", fck)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch((_: DataFrame, _: Long) => ()).start()
+    q.awaitTermination()
+    val fleet = sourceLines(fck)
+    val pa = ids.findFirstIn(fleet.head).get
+    val pb = ids.findAllIn(fleet(1)).toSeq(1)
+    assert(fleet == Seq(
+      s"""{"next":1,"stores":[{"snapshot":"$pa"},${CdcOffset.Start.json}]}""",
+      s"""{"next":0,"stores":[{"snapshot":"$pa"},{"snapshot":"$pb"}]}"""), fleet)
+    val fmeta = s"$fck/sources/0"
+    assert(exists(fmeta, "paths"))
+    for (i <- 0 to 1; f <- Seq("pins", "months"))
+      assert(exists(fmeta, s"store-$i/$f"), s"store-$i/$f")
+    val fleetSchema = spark.readStream.format("graft-cdc")
+      .option("paths", s"$fa,$fb").load().schema
+    assert(fleetSchema.fieldNames.last == "_store", fleetSchema)
   }
 }
